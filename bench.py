@@ -461,8 +461,8 @@ def bench_text_longdoc(spark, timings, shuffle_b, input_b) -> None:
     warm = corpus(50).localCheckpoint()
     dedup.minhash_signatures_relational(warm, "doc_id", "text", 16, 3).count()
     warm.select(
-        textstats.lang_pred_expr(F.col("text")).alias("lang"),
-        textstats.quality_expr(F.col("text")).alias("q"),
+        textstats.lang_pred_expr("text").alias("lang"),
+        textstats.quality_expr("text").alias("q"),
     ).groupBy("lang").count().count()
 
     for label, n_tokens in (("text_longdoc_1x", 200), ("text_longdoc_10x", 2_000)):
@@ -474,8 +474,8 @@ def bench_text_longdoc(spark, timings, shuffle_b, input_b) -> None:
         ).count()
         n_langs = (
             docs.select(
-                textstats.lang_pred_expr(F.col("text")).alias("lang"),
-                textstats.quality_expr(F.col("text")).alias("q"),
+                textstats.lang_pred_expr("text").alias("lang"),
+                textstats.quality_expr("text").alias("q"),
             )
             .groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n"), F.avg("q").alias("avg_q"))
@@ -505,7 +505,7 @@ def bench_simhash_longdoc(spark, timings, shuffle_b, input_b) -> None:
     bench_text_longdoc: 2,000 generated docs at ~200 tokens (1x) and
     ~2,000 tokens (10x) through the relational explode->vote
     simhash_signatures(60). Expected curve: wall ~linear in doc length
-    (tokenize once per doc after the r10 _pad_empty fix — the naive
+    (tokenize once per doc after the r10 pad_empty_sql fix — the naive
     padding was a 2x constant, the quadratic HOF class would be 100x);
     shuffle ~linear in text bytes (the one exchange carries doc TEXT,
     explode+vote run partition-local). Generation outside the timed

@@ -67,16 +67,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view; return the frames."""
-    out = {}
-    for name in TABLES:
-        df = load(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def listing(sf_dir: str = DEFAULT_SF_DIR) -> list[dict]:
     """FsShell-style thin catalog listing (the `ls/du/count` subset of
     core/fs/FsShell.java:1424-1472 that a catalog needs): per table, file

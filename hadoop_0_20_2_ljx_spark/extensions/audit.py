@@ -81,21 +81,6 @@ def referential_check(
     )
 
 
-def predicate_check(df: DataFrame, name: str, cond: F.Column, min_ppm: int) -> DataFrame:
-    """Generic row-predicate compliance (range / accepted-values / regex):
-    ppm of rows satisfying `cond`, one partial-agg scan."""
-    agg = df.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias("_ok"),
-    )
-    metric = _ppm(F.col("_ok"), F.col("_n"))
-    return agg.select(
-        F.lit(name).alias("check_name"),
-        metric.alias("metric_ppm"),
-        (metric >= min_ppm).alias("passed"),
-    )
-
-
 def zscore_outliers(
     df: DataFrame,
     group_col: str,

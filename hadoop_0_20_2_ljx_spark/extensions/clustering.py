@@ -59,18 +59,6 @@ def _argmin_sql(vec_sql: str, book: dict[int, list[float]]) -> str:
     return f"least({pairs})"
 
 
-def sq_dist(vec: Column, cent: list[float]) -> Column:
-    """Squared L2 distance between an array<double> column and a literal
-    centroid, as a left-to-right fold (index order — matches list_sum of a
-    list_transform in DuckDB)."""
-    lit = F.array(*[F.lit(float(x)) for x in cent])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def assign_clusters(
     df: DataFrame, vec_col: str, centroids: dict[int, list[float]], out_col: str = "cluster"
 ) -> DataFrame:

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens as _tokens
+from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens_sql
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
@@ -34,54 +34,64 @@ def exact_dedup(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return df.dropDuplicates(key_cols)
 
 
-def _pad_empty(arr: Column) -> Column:
-    """Replace an empty array with the one-element sentinel [''], with
-    `arr` bound ONCE as a lambda variable. The naive
-    ``F.when(F.size(arr) > 0, arr).otherwise(...)`` references `arr`
-    twice inside one expression; Catalyst performs no CSE through
-    higher-order-function trees and the gram builders feeding this are
-    HOF-rooted (CodegenFallback — no codegen subexpression rescue), so
-    the whole gram build evaluated twice per document (r8 ADVICE).
-    Same bind-once idiom as word_shingles."""
-    return F.element_at(
-        F.transform(
-            F.array(arr),
-            lambda a: F.when(F.size(a) > 0, a).otherwise(F.array(F.lit(""))),
-        ),
-        1,
-    )
+# The shared text expressions below are SQL text, one builder each; a
+# caller that needs a Column wraps the text in F.expr. Every Column
+# operator is a py4j round-trip, and the seed/bit fan-outs stamped
+# hundreds of them per query — the r6 literal-tree lesson, measured again
+# in r14 at 5,388 py4j sends = 1.36 s of q_dedup_incremental's 1.8 s
+# driver build. One parse per expression is milliseconds, and the parsed
+# tree is the one the Column form built (pinned in
+# tests/test_minhash_build.py, test_simhash_lanes.py, test_hof_binding.py).
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-grams of a text column (the shingle set).
-    Tokenization is the ONE shared corpus tokenizer (textstats.tokens) —
-    every text family (dedup, contamination, BM25, logprob) and the
+def word_shingles_sql(text_sql: str, k: int = 3) -> str:
+    """Distinct word k-grams of a text expression (the shingle set).
+    Tokenization is the ONE shared corpus tokenizer (textstats.tokens_sql)
+    — every text family (dedup, contamination, BM25, logprob) and the
     _WORDS SQL rendering in queries/ext.py must stay bit-identical.
 
     The token array is bound ONCE as a lambda variable (wrap in a
     1-element array, transform over it): Catalyst performs no common-
     subexpression elimination inside higher-order-function lambdas, so
-    referencing the `words` expression directly from the per-index gram
+    referencing the token expression directly from the per-index gram
     lambda re-ran the regexp split once per shingle — O(tokens^2) work
     per document. Invisible on the short fixture texts, 57x slower on a
     2000-token document (the shape of real web pages); measured r8,
-    output bitwise identical (pinned in tests/test_dedup.py)."""
-
-    def _grams(ws: Column) -> Column:
-        n = F.size(ws)
-        grams = F.transform(
-            F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-            lambda i: F.array_join(F.slice(ws, i + 1, k), " "),
-        )
-        return F.when(n >= k, F.array_distinct(grams)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return F.element_at(F.transform(F.array(_tokens(text)), _grams), 1)
+    output bitwise identical (pinned in tests/test_hof_binding.py). The
+    size >= k guard returns the empty set for docs shorter than a gram."""
+    grams = (
+        f"array_distinct(transform(sequence(0, greatest((size(ws) - {k}), 0)), "
+        f"i -> array_join(slice(ws, (i + 1), {k}), ' ')))"
+    )
+    body = (
+        f"CASE WHEN (size(ws) >= {k}) THEN {grams} "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+    return f"element_at(transform(array({tokens_sql(text_sql)}), ws -> {body}), 1)"
 
 
-def _h32(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+def pad_empty_sql(arr_sql: str) -> str:
+    """Replace an empty array with the one-element sentinel [''], with
+    the array bound ONCE as a lambda variable. The naive
+    ``CASE WHEN size(arr) > 0 THEN arr ELSE array('') END`` references
+    `arr` twice inside one expression; Catalyst performs no CSE through
+    higher-order-function trees and the gram builders feeding this are
+    HOF-rooted (CodegenFallback — no codegen subexpression rescue), so
+    the whole gram build evaluated twice per document (r8 ADVICE). Same
+    bind-once idiom as word_shingles_sql."""
+    return (
+        f"element_at(transform(array({arr_sql}), "
+        "a -> CASE WHEN (size(a) > 0) THEN a ELSE array('') END), 1)"
+    )
+
+
+def md5_base_sql(x_sql: str, hex_digits: int = 15) -> str:
+    """md5-derived non-negative BIGINT of a string expression: its first
+    `hex_digits` md5 hex digits. 15 digits (60 bits) is the base hash of
+    the minhash family and of the simhash token votes; 8 digits (32 bits)
+    is the LSH band bucket. md5 hex is bit-identical in DuckDB, so the
+    oracles reproduce every value."""
+    return f"CAST(conv(substring(md5({x_sql}), 1, {hex_digits}), 16, 10) AS BIGINT)"
 
 
 # Double-hashing (Kirsch-Mitzenmacher) minhash family: ONE md5 per shingle,
@@ -94,101 +104,33 @@ def _h32(col: Column) -> Column:
 _MH_MOD = 1 << 30
 
 
-def _mh_base(g: Column) -> Column:
-    """60-bit md5-derived base value for the double-hash family."""
-    return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-
-
-def _mh_hash(v: Column, s: int) -> Column:
-    """Seed-s member of the family, from the shared base value."""
-    return (F.shiftright(v, 30) + F.lit(s) * v.bitwiseAND(F.lit(_MH_MOD - 1))) % F.lit(
-        _MH_MOD
-    )
-
-
-def _tokens_sql(text_sql: str) -> str:
-    """textstats.tokens as SQL text (whitespace tokens, empties dropped)
-    — parses to the identical filter(split(...)) tree; see _mh_hash_sql
-    for why the SQL-text twins exist."""
-    return f"filter(split({text_sql}, '\\\\s+'), w -> w != '')"
-
-
-def _word_shingles_sql(text_sql: str, k: int) -> str:
-    """word_shingles as SQL text: the same bind-once element_at(
-    transform(array(tokens), ws -> grams)) tree (r8: no CSE inside HOF
-    lambdas, so the token array must be a lambda variable), with the
-    identical gram build (sequence + slice + array_join, array_distinct
-    behind the size >= k guard)."""
-    grams = (
-        f"array_distinct(transform(sequence(0, greatest((size(ws) - {k}), 0)), "
-        f"i -> array_join(slice(ws, (i + 1), {k}), ' ')))"
-    )
-    body = (
-        f"CASE WHEN (size(ws) >= {k}) THEN {grams} "
-        "ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
-    return f"element_at(transform(array({_tokens_sql(text_sql)}), ws -> {body}), 1)"
-
-
-def _pad_empty_sql(arr_sql: str) -> str:
-    """_pad_empty as SQL text (same bind-once sentinel padding)."""
-    return (
-        f"element_at(transform(array({arr_sql}), "
-        "a -> CASE WHEN (size(a) > 0) THEN a ELSE array('') END), 1)"
-    )
-
-
-def _mh_hash_sql(v_sql: str, s: int) -> str:
-    """_mh_hash as SQL text — parses to the IDENTICAL expression tree
-    (shiftright/&/%/int literals), so plans and results are unchanged;
-    what changes is the build cost: every Column operator is a py4j
-    round-trip, and the seed fan-out stamped ~12 of them per seed — the
-    r6 literal-tree lesson, measured again in r14 at 5,388 py4j
-    send_commands = 1.36 s of q_dedup_incremental's 1.8 s driver build
-    (two minhash_band_buckets calls). One F.expr parse per aggregate
-    column is milliseconds."""
+def mh_hash_sql(v_sql: str, s: int | str) -> str:
+    """Seed-`s` member of the double-hash family from the shared base
+    value `v_sql` (md5_base_sql); `s` is a seed constant or the name of
+    an integer lambda variable."""
     return (
         f"((shiftright({v_sql}, 30) + {s} * ({v_sql} & {_MH_MOD - 1})) % {_MH_MOD})"
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_k: int = 3) -> Column:
+def minhash_signature(text_col: str, num_hashes: int = 16, shingle_k: int = 3) -> Column:
     """MinHash signature: for each of num_hashes seeded hash functions,
     the min hash over the shingle set. array<long> of length num_hashes.
 
-    Entirely higher-order-function expressions — whole-stage codegen, no
-    Python in the loop. One md5 per shingle (double-hash family; the md5
-    subexpression is eliminated by codegen CSE across the seed loop).
+    Entirely higher-order-function expressions — no Python in the loop.
+    One md5 base value per shingle feeds every seed (double-hash family).
     Docs shorter than one shingle hash the sentinel empty gram, matching
-    minhash_band_buckets (all short docs share one signature).
+    minhash_band_buckets (all short docs share one signature). The padded
+    shingle set is bound once as `sh` (see word_shingles_sql: no CSE
+    inside HOF lambdas — referencing the shingle expression from the
+    per-seed lambda re-built it num_hashes times per document).
     """
-    raw = word_shingles(text, shingle_k)
-
-    # bind the shingle set once (see word_shingles: no CSE inside HOF
-    # lambdas — referencing `sh` from the per-seed lambda re-built the
-    # whole shingle array num_hashes times per document). The empty-doc
-    # padding also happens INSIDE the binding: `sh0` is already a bound
-    # lambda variable, so the when/otherwise's two references cost two
-    # array-variable reads, not two gram builds (r9: was
-    # F.when(F.size(raw) > 0, raw) over the raw gram expression — a 2x
-    # per-document gram build, the r8-ADVICE double-eval).
-    def _sig(sh0: Column) -> Column:
-        sh = F.when(F.size(sh0) > 0, sh0).otherwise(F.array(F.lit("")))
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda s: F.array_min(
-                F.transform(
-                    sh,
-                    lambda g: (
-                        F.shiftright(_mh_base(g), 30)
-                        + s.cast("long") * _mh_base(g).bitwiseAND(F.lit(_MH_MOD - 1))
-                    )
-                    % F.lit(_MH_MOD),
-                )
-            ),
-        )
-
-    return F.element_at(F.transform(F.array(raw), _sig), 1)
+    padded = pad_empty_sql(word_shingles_sql(f"`{text_col}`", shingle_k))
+    h = mh_hash_sql(md5_base_sql("g"), "s")
+    return F.expr(
+        f"element_at(transform(array({padded}), sh -> transform("
+        f"sequence(0, {num_hashes - 1}), s -> array_min(transform(sh, g -> {h})))), 1)"
+    )
 
 
 def minhash_signatures_relational(
@@ -225,22 +167,13 @@ def minhash_signatures_relational(
     # signature did.
     # One md5 per (doc, shingle) row (double-hash family), materialized
     # BEFORE the seed fan-out so the num_hashes partial-agg expressions
-    # share it. The shingle/pad/hash projection is built as SQL text
-    # (one selectExpr parse each) instead of the Column/HOF-lambda
-    # builders — identical parsed trees (pinned, with the Column forms
-    # kept verbatim, in tests/test_minhash_build.py), ~0.2 s less py4j
-    # chatter per call site (see _mh_hash_sql).
-    padded_sql = _pad_empty_sql(_word_shingles_sql("_text", shingle_k))
+    # share it.
+    padded_sql = pad_empty_sql(word_shingles_sql("_text", shingle_k))
     hashed = spread.selectExpr("doc", f"explode({padded_sql}) AS g").selectExpr(
-        "doc", "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT) AS v"
+        "doc", f"{md5_base_sql('g')} AS v"
     )
-    # One F.expr parse per seed column instead of ~12 py4j Column calls
-    # (see _mh_hash_sql): parsed trees identical, build cost collapses.
     return hashed.groupBy("doc").agg(
-        *[
-            F.expr(f"min({_mh_hash_sql('v', s)}) AS h{s}")
-            for s in range(num_hashes)
-        ]
+        *[F.expr(f"min({mh_hash_sql('v', s)}) AS h{s}") for s in range(num_hashes)]
     )
 
 
@@ -253,21 +186,17 @@ def band_buckets_from_signatures(
     them once instead of re-deriving from raw text per consumer."""
     rows_per_band = num_hashes // bands
     # The whole banded-struct array as ONE parsed expression: the Column
-    # form stamped ~25 py4j round-trips per band (struct/lit/concat_ws/
-    # md5/conv/casts — 0.37 s of driver build per call site at bands=4;
-    # the r6 lesson, same fix as the seed aggregates above). The parsed
-    # tree is identical: CAST(conv(substring(md5(concat_ws(',',
-    # CAST(hN AS STRING)...)), 1, 8), 16, 10) AS BIGINT) is exactly _h32.
-    structs = ", ".join(
-        "struct({b} AS band, CAST(conv(substring(md5(concat_ws(',', {cols})), 1, 8),"
-        " 16, 10) AS BIGINT) AS bucket)".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(h{b * rows_per_band + i} AS STRING)"
-                for i in range(rows_per_band)
-            ),
+    # form stamped ~25 py4j round-trips per band (0.37 s of driver build
+    # per call site at bands=4). Bucket = 32-bit md5 of the band's
+    # comma-joined signature slice.
+    def _bucket(b: int) -> str:
+        cols = ", ".join(
+            f"CAST(h{b * rows_per_band + i} AS STRING)" for i in range(rows_per_band)
         )
-        for b in range(bands)
+        return md5_base_sql(f"concat_ws(',', {cols})", 8)
+
+    structs = ", ".join(
+        f"struct({b} AS band, {_bucket(b)} AS bucket)" for b in range(bands)
     )
     banded = sigd.select(
         "doc", F.expr(f"explode(array({structs}))").alias("bb")
@@ -419,10 +348,9 @@ def group_similarity_matrix(
     ga < gb by construction. The weighted groupBy(ga, gb) partial-aggs
     map-side exactly as the join form did.
     """
-    sh = word_shingles(F.col(text_col), shingle_k)
-    padded = _pad_empty(sh)
+    padded = pad_empty_sql(word_shingles_sql(f"`{text_col}`", shingle_k))
     gs = (
-        df.select(F.col(group_col).alias("grp"), F.explode(padded).alias("g"))
+        df.select(F.col(group_col).alias("grp"), F.explode(F.expr(padded)).alias("g"))
         .distinct()
         .transform(pin)
     )
@@ -434,10 +362,10 @@ def group_similarity_matrix(
     # (2x sa/sb + 2x na/nb); now the vocabulary is aggregated once and
     # the O(groups)-row result replays from the pin (r13 optimization).
     stats = pin(
-        gs.select("grp", _mh_base(F.col("g")).alias("v"))
+        gs.selectExpr("grp", f"{md5_base_sql('g')} AS v")
         .groupBy("grp")
         .agg(
-            *[F.min(_mh_hash(F.col("v"), s)).alias(f"h{s}") for s in range(num_hashes)],
+            *[F.expr(f"min({mh_hash_sql('v', s)}) AS h{s}") for s in range(num_hashes)],
             F.count(F.lit(1)).cast("long").alias("n"),
         )
     )
@@ -494,42 +422,28 @@ def group_similarity_matrix(
     )
 
 
-def simhash64(text: Column, bits: int = 60) -> Column:
+def simhash64(text_col: str, bits: int = 60) -> Column:
     """SimHash of the token stream (60 bits: the md5-derived hash width).
 
     Each token votes its hash bitwise (+1/-1); the signature takes the
     sign of each bit's tally. The bit loop is unrolled in Python (Spark's
     shift functions take only literal shift amounts), testing each bit
-    with bitwiseAND against a literal mask — still pure JVM expressions.
+    with & against a literal mask — still pure JVM expressions.
     Token-less docs vote the sentinel empty token (matching
-    simhash_signatures).
+    simhash_signatures). The token-hash array is bound ONCE as `hs`: the
+    pre-r9 form referenced the hash expression from every bit's
+    aggregate — no CSE through HOF trees, so tokenize+md5 re-ran once
+    per bit (60x per document).
     """
-    raw = F.filter(F.split(text, r"\s+"), lambda w: w != "")
-    hashed = F.transform(
-        _pad_empty(raw),
-        lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"),
+    padded = pad_empty_sql(tokens_sql(f"`{text_col}`"))
+    hashed = f"transform({padded}, w -> {md5_base_sql('w')})"
+    votes = " + ".join(
+        "CASE WHEN (aggregate(hs, CAST(0 AS BIGINT), (acc, h) -> acc + "
+        f"CASE WHEN ((h & {1 << j}) != 0) THEN 1 ELSE -1 END) > 0) "
+        f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for j in range(bits)
     )
-
-    # Bind the token-hash array ONCE: the pre-r9 form referenced the
-    # `hashes` expression from every bit's F.aggregate — no CSE through
-    # HOF trees, so tokenize+md5 re-ran once per bit (60x per document).
-    def _vote(hs: Column) -> Column:
-        def bit_contrib(j: int) -> Column:
-            mask = F.lit(1 << j).cast("long")
-            votes = F.aggregate(
-                hs,
-                F.lit(0).cast("long"),
-                lambda acc, h: acc
-                + F.when(h.bitwiseAND(mask) != 0, F.lit(1)).otherwise(F.lit(-1)),
-            )
-            return F.when(votes > 0, mask).otherwise(F.lit(0).cast("long"))
-
-        out = F.lit(0).cast("long")
-        for j in range(bits):
-            out = out + bit_contrib(j)
-        return out.cast("long")
-
-    return F.element_at(F.transform(F.array(hashed), _vote), 1)
+    return F.expr(f"element_at(transform(array({hashed}), hs -> ({votes})), 1)")
 
 
 def simhash_signatures(
@@ -566,26 +480,18 @@ def simhash_signatures(
     # build side was the whole signature table — a full extra shuffle at
     # scale). A one-token doc's signature is its token's hash, so the
     # sentinel doc signature is md5('')'s 60-bit value.
-    # The padding binds the token array ONCE (_pad_empty_sql — the same
-    # bind-once tree as _pad_empty): the naive F.when(F.size(words) > 0,
-    # ...) form referenced the filter(split(text)) tree twice,
-    # re-tokenizing every document (no CSE through HOF trees; fixed r10,
-    # bitwise-pinned in tests/test_hof_binding.py, doc-length stress
-    # pair simhash_longdoc_1x/10x in bench.py).
-    # Built as SQL text (one selectExpr parse each) — identical parsed
-    # trees to the Column/HOF-lambda builders, without their py4j
-    # round-trip cost (see _mh_hash_sql; the whole simhash builder was
-    # 8,815 py4j sends = ~1.5 s of driver build per query, r14). The
-    # Column forms are kept verbatim in tests/test_simhash_lanes.py's
-    # plan- and row-parity pins.
-    padded_sql = _pad_empty_sql(_tokens_sql("_text"))
+    # The padding binds the token array ONCE (pad_empty_sql): the naive
+    # CASE WHEN size(words) > 0 form referenced the filter(split(text))
+    # tree twice, re-tokenizing every document (no CSE through HOF trees;
+    # fixed r10, bitwise-pinned in tests/test_hof_binding.py, doc-length
+    # stress pair simhash_longdoc_1x/10x in bench.py). Built as SQL text,
+    # one selectExpr parse each (the Column form of this builder was
+    # 8,815 py4j sends = ~1.5 s of driver build per query, r14).
+    padded_sql = pad_empty_sql(tokens_sql("_text"))
     tok = (
         ids.repartition(sc.defaultParallelism, id_col)
         .selectExpr(f"`{id_col}`", f"explode({padded_sql}) AS w")
-        .selectExpr(
-            f"`{id_col}`",
-            "CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT) AS h",
-        )
+        .selectExpr(f"`{id_col}`", f"{md5_base_sql('w')} AS h")
     )
     # Per-bit +1/-1 vote sum v_j = 2*s_j - n where s_j = count of set bits.
     # Bit-sliced lane packing (r14): the previous form kept one SUM buffer
@@ -846,7 +752,8 @@ def ngram_jaccard_pairs(
     # bm25 / source_sim lesson). The tiny O(docs) size table pins too so
     # its two join entries share one aggregation pass.
     sh = spread(df).select(
-        F.col(id_col).alias("doc"), F.explode(word_shingles(F.col(text_col), shingle_k)).alias("sh")
+        F.col(id_col).alias("doc"),
+        F.explode(F.expr(word_shingles_sql(f"`{text_col}`", shingle_k))).alias("sh"),
     ).transform(pin)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh")).transform(pin)
     if max_shingle_freq is not None:
@@ -932,8 +839,8 @@ def duplicate_substring_spans(
     from hadoop_0_20_2_ljx_spark.extensions.pipeline_ops import word_ngrams
     from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash64
 
-    toks = _tokens(F.lower(F.col(text_col)))
-    grams = word_ngrams(F.col(text_col), n)
+    toks = F.expr(tokens_sql(f"lower(`{text_col}`)"))
+    grams = word_ngrams(text_col, n)
     # Pin the windowed position table (it feeds the dup-vocabulary agg
     # AND the join-back) and the surviving dup windows (they feed the
     # coverage explode AND the per-doc count): without the pins each
@@ -1039,7 +946,7 @@ def chunk_first_occurrence_dedup(
     """
     if chunk_tokens <= 0:
         raise ValueError("chunk_tokens must be positive")
-    toks = _tokens(F.col(text_col))
+    toks = F.expr(tokens_sql(f"`{text_col}`"))
     n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
     exploded = df.select(
         F.col(id_col).alias("doc"),
@@ -1048,12 +955,8 @@ def chunk_first_occurrence_dedup(
             "pos", "_i"
         ),
     )
-    chunk = F.array_join(
-        F.slice(F.col("_toks"), F.col("pos") * chunk_tokens + 1, chunk_tokens), " "
-    )
-    chunks = exploded.select(
-        "doc", "pos", F.conv(F.substring(F.md5(chunk), 1, 15), 16, 10).cast("long").alias("ch")
-    )
+    chunk = f"array_join(slice(_toks, ((pos * {chunk_tokens}) + 1), {chunk_tokens}), ' ')"
+    chunks = exploded.selectExpr("doc", "pos", f"{md5_base_sql(chunk)} AS ch")
     winners = chunks.groupBy("ch").agg(
         F.min(F.struct(F.col("doc"), F.col("pos"))).alias("w")
     )

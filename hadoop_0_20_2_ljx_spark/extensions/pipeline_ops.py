@@ -23,17 +23,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens
+from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens_sql
 from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
-def word_ngrams(text: Column, n: int) -> Column:
+def word_ngrams(text_col: str, n: int) -> Column:
     """Space-joined word n-grams of the lowercased text; [] when the doc
     has fewer than n words.
 
     The token array is bound once as a lambda variable (the
-    dedup.word_shingles pattern): Catalyst does no CSE inside
+    dedup.word_shingles_sql pattern): Catalyst does no CSE inside
     higher-order-function lambdas, so referencing `toks` from the
     per-index lambda re-ran the regexp split per gram — O(tokens^2)
     per document, fixed r8 (output bitwise identical)."""
@@ -45,7 +45,8 @@ def word_ngrams(text: Column, n: int) -> Column:
             F.array().cast("array<string>")
         )
 
-    return F.element_at(F.transform(F.array(tokens(F.lower(text))), _grams), 1)
+    toks = F.expr(tokens_sql(f"lower(`{text_col}`)"))
+    return F.element_at(F.transform(F.array(toks), _grams), 1)
 
 
 def repetition_score(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -56,7 +57,7 @@ def repetition_score(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> D
     Emits the exact integer numerator/denominator alongside the float
     fraction so downstream aggregation (and the cross-engine oracle) can
     stay in integer arithmetic."""
-    grams = word_ngrams(F.col(text_col), n)
+    grams = word_ngrams(text_col, n)
     total = F.size(grams).cast("long")
     dup = total - F.size(F.array_distinct(grams)).cast("long")
     rep = F.when(total > 0, dup / total.cast("double")).otherwise(F.lit(0.0))
@@ -89,7 +90,7 @@ def chunk_documents(
     """
     if stride <= 0 or chunk_tokens <= 0 or stride > chunk_tokens:
         raise ValueError("need 0 < stride <= chunk_tokens")
-    toks = tokens(F.col(text_col))
+    toks = F.expr(tokens_sql(f"`{text_col}`"))
     n = F.size(toks)
     # number of chunks: 1 + ceil(max(0, n - chunk_tokens) / stride)
     n_chunks = (
@@ -159,12 +160,12 @@ def ngram_contamination(
     """
     bench_grams = (
         bench.select(
-            F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("gram")
+            F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("gram")
         ).distinct()
     )
     train_grams = train.select(
         F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("gram"),
+        F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("gram"),
     )
     return (
         train_grams.join(bench_grams, "gram")
@@ -410,19 +411,19 @@ def decontaminate_spans(
     """
     bench_grams = (
         bench.select(
-            F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("gram")
+            F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("gram")
         ).distinct()
     )
     hits = (
         train.select(
             F.col(id_col),
-            F.posexplode(word_ngrams(F.col(text_col), n)).alias("_pos", "gram"),
+            F.posexplode(word_ngrams(text_col, n)).alias("_pos", "gram"),
         )
         .join(bench_grams, "gram")
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_set("_pos")).alias("_ps"))
     )
-    tr = train.withColumn("_w", tokens(F.lower(F.col(text_col))))
+    tr = train.withColumn("_w", F.expr(tokens_sql(f"lower(`{text_col}`)")))
     joined = tr.join(hits, id_col, "left")
     ps = F.coalesce(F.col("_ps"), F.array().cast("array<int>"))
     kept = F.filter(
@@ -474,20 +475,17 @@ def domain_reweight(
     if target_bp is None:
         tgt_sql = "_tot DIV _k"
     else:
-        # group keys are arbitrary strings interpolated into SQL — escape
-        # backslashes FIRST (Spark's default literal parser treats \ as an
-        # escape; an unescaped trailing '\' breaks the parse and any
-        # embedded one diverges from DuckDB's literal rendering — r6
-        # ADVICE), then double embedded quotes ("o'brien" would otherwise
-        # end the literal early)
-        def _lit(g: str) -> str:
-            return g.replace("\\", "\\\\").replace("'", "''")
-
-        whens = " ".join(
-            f"WHEN '{_lit(g)}' THEN {int(bp)}L"
-            for g, bp in sorted(target_bp.items())
-        )
-        tgt_sql = f"(_tot * (CASE {group_col} {whens} ELSE 0L END)) DIV 10000"
+        # group keys are arbitrary strings: they enter as F.lit values, never
+        # as SQL text, so no key passes through the SQL parser (whose
+        # backslash and quote handling depends on the session's
+        # escapedStringLiterals mode)
+        bp_of = F.lit(0).cast("long")
+        for g, bp in target_bp.items():
+            bp_of = F.when(
+                F.col(group_col) == F.lit(g), F.lit(int(bp)).cast("long")
+            ).otherwise(bp_of)
+        cur = cur.withColumn("_tbp", bp_of)
+        tgt_sql = "(_tot * _tbp) DIV 10000"
     rates = cur.join(F.broadcast(tot)).selectExpr(
         f"{group_col} AS _rg",
         f"least(10000L, (10000L * ({tgt_sql})) DIV _cur) AS {rate_col}",

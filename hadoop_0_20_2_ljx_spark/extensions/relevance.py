@@ -17,15 +17,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens
+from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens_sql
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
 def _words(col: str):
-    # the ONE corpus tokenizer (textstats.tokens) — BM25/logprob must stay
-    # bit-identical with the dedup/contamination family and the _WORDS SQL
-    # rendering in queries/ext.py
-    return tokens(F.col(col))
+    # the ONE corpus tokenizer (textstats.tokens_sql) — BM25/logprob must
+    # stay bit-identical with the dedup/contamination family and the
+    # _WORDS SQL rendering in queries/ext.py
+    return F.expr(tokens_sql(f"`{col}`"))
 
 
 def term_frequencies(

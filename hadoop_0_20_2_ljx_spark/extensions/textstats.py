@@ -9,7 +9,7 @@ arithmetic chosen to be bit-identical in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # tiny per-language stopword anchors for the n-gram/stopword heuristic
@@ -21,9 +21,23 @@ STOPWORDS = {
 }
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokens, empties dropped."""
-    return F.filter(F.split(text, r"\s+"), lambda w: w != "")
+def tokens_sql(text_sql: str) -> str:
+    """The ONE corpus tokenizer, as SQL text: whitespace tokens of the
+    SQL expression `text_sql`, empties dropped. Every text family (dedup,
+    contamination, BM25, logprob, lang/quality) tokenizes through here —
+    Column callers wrap it in F.expr — and the _WORDS DuckDB rendering in
+    queries/ext.py mirrors it bit-for-bit.
+
+    The regex \\s+ is a SQL string literal written for the ACTIVE
+    session's parser. The default parser unescapes backslashes, so the
+    literal doubles them; with spark.sql.parser.escapedStringLiterals on,
+    backslashes are kept verbatim and a doubled one would match a literal
+    backslash then 's' (every document silently one token)."""
+    escaped = SparkSession.active().conf.get(
+        "spark.sql.parser.escapedStringLiterals", "false"
+    )
+    ws = r"'\s+'" if escaped.lower() == "true" else r"'\\s+'"
+    return f"filter(split({text_sql}, {ws}), w -> w != '')"
 
 
 def bpe_ish_tokens(text: Column) -> Column:
@@ -32,30 +46,20 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
 
 
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-doc token counts: whitespace tokens + BPE-ish tokens + chars."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        F.size(tokens(t)).alias("n_words"),
-        F.size(bpe_ish_tokens(t)).alias("n_tokens"),
-        F.length(t).alias("n_chars"),
-    )
-
-
-def lang_pred_expr(text: Column, min_ratio: float = 0.01) -> Column:
+def lang_pred_expr(text_col: str, min_ratio: float = 0.01) -> Column:
     """Language-ID heuristic as a COLUMN expression: argmax stopword-hit
     ratio, 'und' when no language clears min_ratio. Deterministic
     tie-break by language code.
 
     The token array is bound ONCE as a lambda variable and the per-
-    language score vector ONCE more (the word_shingles pattern: Catalyst
-    performs no CSE through higher-order-function trees, so the original
-    formulation — one `toks` Column object referenced from every score,
-    every score referenced three times by the argmax when-chain — stamped
-    24 copies of filter(split(lower(text))) into the projection, i.e.
-    24 redundant tokenizations per document; measured 1.7x end-to-end on
-    500-token docs, growing with doc length. Identity pinned in
+    language score vector ONCE more (the dedup.word_shingles_sql
+    pattern: Catalyst performs no CSE through higher-order-function
+    trees, so the original formulation — one `toks` Column object
+    referenced from every score, every score referenced three times by
+    the argmax when-chain — stamped 24 copies of
+    filter(split(lower(text))) into the projection, i.e. 24 redundant
+    tokenizations per document; measured 1.7x end-to-end on 500-token
+    docs, growing with doc length. Identity pinned in
     tests/test_hof_binding.py)."""
     langs = sorted(STOPWORDS)
 
@@ -81,18 +85,19 @@ def lang_pred_expr(text: Column, min_ratio: float = 0.01) -> Column:
             pred = F.when((sc >= min_ratio) & (sc == best), F.lit(lang)).otherwise(pred)
         return pred
 
-    scores = F.element_at(F.transform(F.array(tokens(F.lower(text))), _scores), 1)
+    toks = F.expr(tokens_sql(f"lower(`{text_col}`)"))
+    scores = F.element_at(F.transform(F.array(toks), _scores), 1)
     return F.element_at(F.transform(F.array(scores), _pred), 1)
 
 
 def lang_id(df: DataFrame, id_col: str, text_col: str, min_ratio: float = 0.01) -> DataFrame:
     """lang_pred_expr projected to (id, lang_pred)."""
     return df.select(
-        F.col(id_col), lang_pred_expr(F.col(text_col), min_ratio).alias("lang_pred")
+        F.col(id_col), lang_pred_expr(text_col, min_ratio).alias("lang_pred")
     )
 
 
-def quality_expr(t: Column) -> Column:
+def quality_expr(text_col: str) -> Column:
     """Heuristic document quality in [0,1] as a COLUMN expression (so
     callers can compute it alongside other per-doc features in one
     projection — one corpus scan, not a per-feature self-join): rewards
@@ -103,13 +108,14 @@ def quality_expr(t: Column) -> Column:
           + 0.25*min(1, 10*stopword_ratio)
 
     The token array and the word-length fold are each bound ONCE as
-    lambda variables (the word_shingles pattern — no CSE through HOF
-    trees): the original formulation referenced `toks` from the fold,
-    the stopword filter, and both sides of the avg-word-length range
-    check, stamping three tokenizations and two O(tokens) folds per
-    document into the projection. Identity pinned in
+    lambda variables (the dedup.word_shingles_sql pattern — no CSE
+    through HOF trees): the original formulation referenced `toks` from
+    the fold, the stopword filter, and both sides of the avg-word-length
+    range check, stamping three tokenizations and two O(tokens) folds
+    per document into the projection. Identity pinned in
     tests/test_hof_binding.py.
     """
+    t = F.col(text_col)
     n_chars = F.greatest(F.length(t), F.lit(1))
     punct = F.size(F.regexp_extract_all(t, F.lit(r"[^A-Za-z0-9\s]"), 0))
     punct_ratio = punct / n_chars
@@ -132,12 +138,13 @@ def quality_expr(t: Column) -> Column:
 
         return F.element_at(F.transform(F.array(sum_wlen / n_words), _with_avg), 1)
 
-    return F.round(F.element_at(F.transform(F.array(tokens(t)), _score), 1), 6)
+    toks = F.expr(tokens_sql(f"`{text_col}`"))
+    return F.round(F.element_at(F.transform(F.array(toks), _score), 1), 6)
 
 
 def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """quality_expr projected to (id, quality)."""
-    return df.select(F.col(id_col), quality_expr(F.col(text_col)).alias("quality"))
+    return df.select(F.col(id_col), quality_expr(text_col).alias("quality"))
 
 
 # PII patterns chosen to parse identically under Java regex (Spark) and
@@ -164,24 +171,20 @@ def doc_fingerprint(df: DataFrame, id_col: str, text_col: str, window_k: int = 5
     """Winnowing-style rolling fingerprint: min md5-hash over word
     `window_k`-grams of the lowercased text — robust to whitespace-only
     edits; equal fingerprints flag near-identical prefixes/contents."""
-    # token array bound once (the dedup.word_shingles pattern: no CSE
-    # inside HOF lambdas — a direct `toks` reference in the per-index
-    # lambda re-ran the regexp split per gram, O(tokens^2) per doc)
-    def _minhash(ws: Column) -> Column:
-        n = F.size(ws)
-        grams = F.transform(
-            F.sequence(F.lit(0), F.greatest(n - window_k, F.lit(0))),
-            lambda i: F.array_join(F.slice(ws, i + 1, window_k), " "),
-        )
-        return F.array_min(
-            F.transform(
-                grams,
-                lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-            )
-        )
+    from hadoop_0_20_2_ljx_spark.extensions.dedup import md5_base_sql
 
-    h = F.element_at(
-        F.transform(F.array(tokens(F.lower(F.col(text_col)))), _minhash), 1
+    # token array bound once as `ws` (the dedup.word_shingles_sql pattern:
+    # no CSE inside HOF lambdas — a direct token reference in the
+    # per-index lambda re-ran the regexp split per gram, O(tokens^2) per
+    # doc)
+    toks = tokens_sql(f"lower(`{text_col}`)")
+    grams = (
+        f"transform(sequence(0, greatest((size(ws) - {window_k}), 0)), "
+        f"i -> array_join(slice(ws, (i + 1), {window_k}), ' '))"
+    )
+    h = F.expr(
+        f"element_at(transform(array({toks}), "
+        f"ws -> array_min(transform({grams}, g -> {md5_base_sql('g')}))), 1)"
     )
     return df.select(
         F.col(id_col), F.coalesce(h, F.lit(-1).cast("long")).alias("fingerprint")
@@ -203,10 +206,12 @@ def boilerplate_ngrams(
     hitters only; at 100 TB the result stays small by construction
     (bounded by 1/min_doc_frac · distinct heavy grams).
     """
-    from hadoop_0_20_2_ljx_spark.extensions.dedup import word_shingles
+    from hadoop_0_20_2_ljx_spark.extensions.dedup import word_shingles_sql
 
     total = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    grams = df.select(F.explode(word_shingles(F.col(text_col), k)).alias("gram"))
+    grams = df.select(
+        F.explode(F.expr(word_shingles_sql(f"`{text_col}`", k))).alias("gram")
+    )
     dfreq = grams.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("df"))
     return (
         dfreq.join(F.broadcast(total))
@@ -247,7 +252,7 @@ def hashed_linear_classifier(
     coalesces the token array so both engines agree bit-for-bit.
     """
     toks = F.coalesce(
-        tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
+        F.expr(tokens_sql(f"lower(`{text_col}`)")), F.array().cast("array<string>")
     )
 
     def _weight(tok: Column) -> Column:

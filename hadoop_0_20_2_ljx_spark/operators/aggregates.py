@@ -8,7 +8,6 @@ automatically, so every helper here is a plain groupBy().agg() whose
 physical plan already contains the map-side combine the reference made
 users opt into.
 
-  - LongSumReducer / IntSumReducer     (mapred/lib/LongSumReducer.java:36)
   - LongValueSum/Max/Min, DoubleValueSum, StringValueMax/Min
                                        (mapred/lib/aggregate/*.java)
   - UniqValueCount                     (mapred/lib/aggregate/UniqValueCount.java:30)
@@ -21,12 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from hadoop_0_20_2_ljx_spark.pinning import pin
-
-
-def sum_by_key(df: DataFrame, key: str | list[str], value: str, alias: str = "sum_value") -> DataFrame:
-    """LongSumReducer: sum(value) per key — with automatic partial agg."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return df.groupBy(*keys).agg(F.sum(value).alias(alias))
 
 
 def word_count(df: DataFrame, text_col: str = "text") -> DataFrame:

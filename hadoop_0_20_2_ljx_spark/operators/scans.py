@@ -4,10 +4,9 @@ Reference counterparts (see SURVEY.md §2.1):
   - TextInputFormat / LineRecordReader  (mapred/TextInputFormat.java:35)
   - KeyValueTextInputFormat             (mapred/KeyValueTextInputFormat.java:34,
                                          KeyValueLineRecordReader.java:59-87)
-  - SequenceFileInputFilter: RegexFilter / PercentFilter / MD5Filter
+  - SequenceFileInputFilter: MD5Filter
                                         (mapred/SequenceFileInputFilter.java:93-280)
   - MultipleInputs + DelegatingMapper   (mapred/lib/MultipleInputs.java:34)
-  - NLineInputFormat                    (mapred/lib/NLineInputFormat.java:59)
 
 All are declarative DataFrame ops so Catalyst pushes filters/pruning into
 the parquet scan — at 100 TB the sampling filters below run inside the
@@ -55,20 +54,6 @@ def kv_split(df: DataFrame, text_col: str, sep: str = "\t") -> DataFrame:
     return df.select(key.alias("key"), value.alias("value"))
 
 
-def regex_filter(df: DataFrame, col: str, pattern: str) -> DataFrame:
-    """SequenceFileInputFilter.RegexFilter (:103): keep rows whose key
-    matches the regex. rlike is pushed toward the scan by Catalyst."""
-    return df.filter(F.col(col).rlike(pattern))
-
-
-def percent_filter(df: DataFrame, col: str, freq: int) -> DataFrame:
-    """SequenceFileInputFilter.PercentFilter (:146): keep every freq-th
-    record. The reference keys on record ordinal; a distributed engine has
-    no stable ordinal, so (like MD5Filter) we key on a deterministic hash
-    of the record key — same selectivity, stable under parallelism."""
-    return df.filter(portable_hash32(F.col(col)) % freq == 0)
-
-
 def md5_filter(df: DataFrame, col: str, freq: int) -> DataFrame:
     """SequenceFileInputFilter.MD5Filter (:195): keep records whose
     MD5(key) % freq == 0. Bit-identical to the DuckDB oracle via the
@@ -102,10 +87,3 @@ def multi_input_union(*tagged: tuple[DataFrame, Column | None]) -> DataFrame:
     for o in outs[1:]:
         result = result.unionByName(o)
     return result
-
-
-def nline_repartition(df: DataFrame, num_splits: int) -> DataFrame:
-    """NLineInputFormat (mapred/lib/NLineInputFormat.java:59): control
-    rows-per-task. Spark analog: explicit repartition — used when a
-    downstream per-row cost dominates (e.g. a heavy Pandas UDF)."""
-    return df.repartition(num_splits)

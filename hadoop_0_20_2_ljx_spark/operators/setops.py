@@ -1,10 +1,9 @@
-"""Set / dedup / sampling operators.
+"""Set / dedup operators.
 
 Reference counterparts (SURVEY.md §2.7): union = multi-path input
 (mapred/FileInputFormat.java:282-327); dedup = reduce emitting each key
-once (mapred/lib/aggregate/UniqValueCount.java:30); sampling = the
-scan-time filters (mapred/SequenceFileInputFilter.java:146,195) and
-InputSampler (mapred/lib/InputSampler.java:89-418). intersect/except are
+once (mapred/lib/aggregate/UniqValueCount.java:30). Sampling is the
+scan-time MD5Filter (operators/scans.md5_filter). intersect/except are
 engine extras (only hand patterns in the reference).
 """
 
@@ -36,10 +35,3 @@ def intersect_all_keys(a: DataFrame, b: DataFrame) -> DataFrame:
 def except_keys(a: DataFrame, b: DataFrame) -> DataFrame:
     """EXCEPT (set semantics)."""
     return a.subtract(b)
-
-
-def deterministic_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """InputSampler.RandomSampler-style seeded sampling — reproducible
-    given identical partitioning (Spark's sample is per-partition
-    Bernoulli with a seed)."""
-    return df.sample(fraction=fraction, seed=seed)

@@ -6,7 +6,6 @@ Reference counterparts (SURVEY.md §2.2):
   - MapFileOutputFormat             (mapred/MapFileOutputFormat.java:39)
   - MultipleOutputFormat            (mapred/lib/MultipleOutputFormat.java:51)
   - MultipleOutputs named outputs   (mapred/lib/MultipleOutputs.java:70-104)
-  - NullOutputFormat                (mapred/lib/NullOutputFormat.java:34)
 
 All writes go through Spark's committer (the reference's
 FileOutputCommitter _temporary staging protocol is literally the ancestor
@@ -91,13 +90,6 @@ def write_named_outputs(df: DataFrame, base_path: str, routes: dict[str, F.Colum
     ).drop("_tags")
     routed.write.mode("overwrite").partitionBy("_named_output").parquet(base_path)
     return {name: f"{base_path}/_named_output={name}" for name in routes}
-
-
-def write_noop(df: DataFrame) -> int:
-    """NullOutputFormat: consume and discard — returns the row count so
-    the pipeline still materializes (the reference used it for
-    side-effect-only jobs)."""
-    return df.count()
 
 
 def zorder_value_expr(

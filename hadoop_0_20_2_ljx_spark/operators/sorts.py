@@ -200,26 +200,6 @@ def with_global_row_number(df: DataFrame, order: list[Column], rn_col: str = "rn
     ).drop("_pid")
 
 
-def secondary_sort_agg(
-    df: DataFrame, group_key: str, order_col: Column, emit_col: str, desc: bool = False
-) -> DataFrame:
-    """Secondary sort, aggregate form: per group, the list of `emit_col`
-    ordered by `order_col` (ties broken by emit_col for determinism — the
-    reference achieves a total order by making the comparator see the full
-    composite key, SecondarySort.java:133).
-
-    Implemented as sort_array(collect_list(struct(...))) — a single
-    shuffle, partial-aggregated; the struct's first field drives the
-    order. Returns (group_key, ordered: array).
-    """
-    key = F.col(order_col) if isinstance(order_col, str) else order_col
-    sort_key = (-key) if desc else key
-    packed = F.struct(sort_key.alias("sk"), F.col(emit_col).alias("v"))
-    return df.groupBy(group_key).agg(
-        F.transform(F.sort_array(F.collect_list(packed)), lambda s: s["v"]).alias("ordered")
-    )
-
-
 def secondary_sort_stream(df: DataFrame, group_key: str, *order_cols: Column) -> DataFrame:
     """Secondary sort, streaming form: hash-partition by group key, sort
     within partitions by (key, value) — byte-for-byte the reference's

@@ -627,12 +627,12 @@ def _pipeline_funnel(spark: SparkSession, sf: str) -> DataFrame:
     )
     bench_grams = (
         docs.where(F.col("doc_id") % 97 == 0)
-        .select(F.explode(F.array_distinct(pipeline_ops.word_ngrams(F.col("text"), 8))).alias("gram"))
+        .select(F.explode(F.array_distinct(pipeline_ops.word_ngrams("text", 8))).alias("gram"))
         .distinct()
     )
     doc_grams = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(pipeline_ops.word_ngrams(F.col("text"), 8))).alias("gram"),
+        F.explode(F.array_distinct(pipeline_ops.word_ngrams("text", 8))).alias("gram"),
     )
     contaminated = (
         doc_grams.join(bench_grams, "gram").select("doc_id").distinct()
@@ -713,7 +713,7 @@ def _dedup_jaccard_est(spark: SparkSession, sf: str) -> DataFrame:
     sigs = dedup.minhash_signatures_relational(docs, "doc_id", "text", 16, 3)
     sig_arr = F.array(*[F.col(f"h{s}") for s in range(16)])
     shingles = docs.select(
-        F.col("doc_id").alias("doc"), dedup.word_shingles(F.col("text"), 3).alias("sh")
+        F.col("doc_id").alias("doc"), F.expr(dedup.word_shingles_sql("text", 3)).alias("sh")
     )
     # materialize the signature table ONCE: it feeds three consumers
     # (pair side A, pair side B, band buckets) whose differing projections
@@ -1226,8 +1226,8 @@ def _sample_token_budget(spark: SparkSession, sf: str) -> DataFrame:
     # extra shuffle at 100 TB)
     scored = T(spark, sf, "documents").select(
         "doc_id",
-        F.size(textstats.tokens(F.col("text"))).cast("long").alias("n_tokens"),
-        textstats.quality_expr(F.col("text")).alias("quality"),
+        F.size(F.expr(textstats.tokens_sql("text"))).cast("long").alias("n_tokens"),
+        textstats.quality_expr("text").alias("quality"),
     )
     sel = pipeline_ops.select_token_budget(
         scored,
@@ -1408,7 +1408,7 @@ def _corpus_dataset_card(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_0_20_2_ljx_spark.extensions import textstats
 
     t = F.col("text")
-    toks = textstats.tokens(t)
+    toks = F.expr(textstats.tokens_sql("text"))
     per = T(spark, sf, "documents").select(
         "source",
         "lang",
@@ -1482,7 +1482,7 @@ def _sample_domain_reweight(spark: SparkSession, sf: str) -> DataFrame:
     tok = T(spark, sf, "documents").select(
         "source",
         "doc_id",
-        F.size(textstats.tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        F.size(F.expr(textstats.tokens_sql("text"))).cast("long").alias("n_tokens"),
     )
     kept = pipeline_ops.domain_reweight(tok, "source", "n_tokens", "doc_id")
     return kept.groupBy("source").agg(

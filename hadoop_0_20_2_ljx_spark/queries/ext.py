@@ -23,7 +23,7 @@ from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
 from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, h64_sql
 
 # DuckDB renderings of the shared text primitives (word list / shingles),
-# kept in lockstep with extensions.dedup.word_shingles semantics.
+# kept in lockstep with textstats.tokens_sql / dedup.word_shingles_sql.
 _WORDS = "list_filter(regexp_split_to_array({col}, '\\s+'), w -> w <> '')"
 
 
@@ -53,7 +53,7 @@ def _dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _minhash_sig_elem_sql() -> str:
-    """DuckDB rendering of dedup._mh_hash over dedup._mh_base: the
+    """DuckDB rendering of dedup.mh_hash_sql over dedup.md5_base_sql: the
     double-hash minhash family ((v>>30) + s*(v & 2^30-1)) % 2^30 from one
     60-bit md5-derived base value per shingle. Shingle-less docs hash the
     sentinel empty gram (matching minhash_band_buckets' padding)."""
@@ -399,7 +399,7 @@ def _text_langid(spark: SparkSession, sf: str) -> DataFrame:
     # deduplicate common subplans)
     docs = T(spark, sf, "documents")
     pred = docs.select(
-        "lang", textstats.lang_pred_expr(F.col("text"), min_ratio=0.01).alias("lang_pred")
+        "lang", textstats.lang_pred_expr("text", min_ratio=0.01).alias("lang_pred")
     )
     return pred.groupBy("lang", "lang_pred").agg(F.count("*").alias("n"))
 
@@ -457,7 +457,7 @@ def _text_tokens(spark: SparkSession, sf: str) -> DataFrame:
     t = F.col("text")
     per_doc = docs.select(
         "lang",
-        F.size(textstats.tokens(t)).cast("long").alias("n_words"),
+        F.size(F.expr(textstats.tokens_sql("text"))).cast("long").alias("n_words"),
         F.size(textstats.bpe_ish_tokens(t)).cast("long").alias("n_tokens"),
         F.length(t).cast("long").alias("n_chars"),
     )
@@ -563,9 +563,9 @@ def _pipeline_training(spark: SparkSession, sf: str) -> DataFrame:
     dd = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     feats = dd.select(
         "doc_id",
-        textstats.lang_pred_expr(F.col("text"), min_ratio=0.01).alias("lang_pred"),
-        textstats.quality_expr(F.col("text")).alias("quality"),
-        F.size(textstats.tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        textstats.lang_pred_expr("text", min_ratio=0.01).alias("lang_pred"),
+        textstats.quality_expr("text").alias("quality"),
+        F.size(F.expr(textstats.tokens_sql("text"))).cast("long").alias("n_tokens"),
     )
     kept = feats.filter((F.col("lang_pred") != "und") & (F.col("quality") >= 0.5))
     return kept.groupBy("lang_pred").agg(
@@ -718,7 +718,7 @@ def _pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     assignment hash pins every doc's bin, not just the bin count."""
     docs = T(spark, sf, "documents")
     tok = docs.select(
-        "doc_id", F.size(textstats.tokens(F.col("text"))).cast("long").alias("n_tokens")
+        "doc_id", F.size(F.expr(textstats.tokens_sql("text"))).cast("long").alias("n_tokens")
     )
     packed = pipeline_ops.pack_sequences(tok, "doc_id", "n_tokens", ctx=2048)
     return packed.agg(
@@ -1360,7 +1360,7 @@ def _text_bigram_lm(spark: SparkSession, sf: str) -> DataFrame:
     tokenization; extends the unigram-LM scorer (textstats) one order up."""
     docs = T(spark, sf, "documents")
     grams = docs.select(
-        F.explode(pipeline_ops.word_ngrams(F.col("text"), 2)).alias("g")
+        F.explode(pipeline_ops.word_ngrams("text", 2)).alias("g")
     )
     bi = grams.select(
         F.split_part(F.col("g"), F.lit(" "), F.lit(1)).alias("w1"),
@@ -1458,7 +1458,7 @@ def _agg_domain_mix(spark: SparkSession, sf: str) -> DataFrame:
     per = docs.select(
         "source",
         "lang",
-        F.size(textstats.tokens(F.col("text"))).cast("long").alias("nw"),
+        F.size(F.expr(textstats.tokens_sql("text"))).cast("long").alias("nw"),
     )
     g = per.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -190,7 +190,7 @@ def _udf_tokenize_udtf(spark: SparkSession, sf: str) -> DataFrame:
 
     @udtf(returnType="pos int, token string")
     class Tokenize:
-        # the ONE corpus tokenizer contract (textstats.tokens =
+        # the ONE corpus tokenizer contract (textstats.tokens_sql =
         # Java-regex \s+, i.e. [ \t\n\x0b\f\r]+): Python str.split()
         # splits on UNICODE whitespace (NBSP, ideographic space, ...),
         # which silently diverged from every relational text op on

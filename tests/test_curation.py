@@ -71,12 +71,12 @@ def test_blocklist_plan_is_broadcast_anti_join(spark):
 
 def test_minhash_double_hash_family_matches_array_form(spark):
     """The relational min-agg path and the array-expression path must
-    produce identical signatures (shared _mh_base/_mh_hash family)."""
+    produce identical signatures (shared md5_base_sql/mh_hash_sql family)."""
     df = spark.createDataFrame(
         [(1, "a b c d e f g h"), (2, "x y")], "doc_id long, text string"
     )
     sig = df.select(
-        "doc_id", dedup.minhash_signature(F.col("text"), 8, 3).alias("sig")
+        "doc_id", dedup.minhash_signature("text", 8, 3).alias("sig")
     ).collect()
     arr = {r["doc_id"]: r["sig"] for r in sig}
     banded = dedup.minhash_band_buckets(df, "doc_id", "text", num_hashes=8, bands=1)

@@ -1,5 +1,5 @@
 """Bitwise-identity pins for the r8 lambda-binding rewrite of the gram
-builders (dedup.word_shingles, pipeline_ops.word_ngrams,
+builders (dedup.word_shingles_sql, pipeline_ops.word_ngrams,
 textstats.doc_fingerprint's window minhash, dedup.minhash_signature).
 
 Catalyst performs no common-subexpression elimination inside
@@ -15,7 +15,9 @@ gram — plus the parquet fixture corpus, and that the linear plan really
 evaluates the split once (growth guard on a long synthetic doc).
 
 Reference semantics under test mirror the pre-r8 code verbatim (the
-`_old_*` builders below), so a regression in either direction fails.
+`_old_*` builders below, with the Column helpers they call copied here so
+each reference stays independent of the code under test), so a
+regression in either direction fails.
 """
 
 from __future__ import annotations
@@ -32,9 +34,23 @@ from hadoop_0_20_2_ljx_spark.extensions import dedup
 from tests.conftest import SF_SMOKE
 
 
+# --- Column helpers the references call, kept verbatim -----------------------
+def _tokens(text: Column) -> Column:
+    """Whitespace tokens, empties dropped."""
+    return F.filter(F.split(text, r"\s+"), lambda w: w != "")
+
+
+_MH_MOD = 1 << 30
+
+
+def _mh_base(g: Column) -> Column:
+    """60-bit md5-derived base value for the double-hash family."""
+    return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
+
+
 # --- pre-r8 formulations, kept verbatim as the identity reference ------------
 def _old_word_shingles(text: Column, k: int = 3) -> Column:
-    words = dedup._tokens(text)
+    words = _tokens(text)
     n = F.size(words)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
@@ -46,14 +62,14 @@ def _old_word_shingles(text: Column, k: int = 3) -> Column:
 
 
 def _old_word_ngrams(text: Column, n: int) -> Column:
-    toks = textstats.tokens(F.lower(text))
+    toks = _tokens(F.lower(text))
     idx = F.sequence(F.lit(0), F.size(toks) - n)
     grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
     return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
 def _old_fingerprint_hash(text: Column, window_k: int = 5) -> Column:
-    toks = textstats.tokens(F.lower(text))
+    toks = _tokens(F.lower(text))
     n = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(n - window_k, F.lit(0))),
@@ -64,24 +80,6 @@ def _old_fingerprint_hash(text: Column, window_k: int = 5) -> Column:
             grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
         )
     )
-
-
-def _new_fingerprint_hash(text: Column, window_k: int = 5) -> Column:
-    # doc_fingerprint's rewritten hash, extracted the same way
-    def _minhash(ws: Column) -> Column:
-        n = F.size(ws)
-        grams = F.transform(
-            F.sequence(F.lit(0), F.greatest(n - window_k, F.lit(0))),
-            lambda i: F.array_join(F.slice(ws, i + 1, window_k), " "),
-        )
-        return F.array_min(
-            F.transform(
-                grams,
-                lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-            )
-        )
-
-    return F.element_at(F.transform(F.array(textstats.tokens(F.lower(text))), _minhash), 1)
 
 
 def _random_texts(n_rows: int, seed: int) -> list[str]:
@@ -110,7 +108,7 @@ def test_word_shingles_binding_is_bitwise_identical(spark):
     for k in (1, 2, 3, 5):
         _assert_bitwise_equal(
             spark, texts, _old_word_shingles(F.col("text"), k),
-            dedup.word_shingles(F.col("text"), k),
+            F.expr(dedup.word_shingles_sql("text", k)),
         )
 
 
@@ -119,16 +117,27 @@ def test_word_ngrams_binding_is_bitwise_identical(spark):
     for n in (1, 2, 3, 8):
         _assert_bitwise_equal(
             spark, texts, _old_word_ngrams(F.col("text"), n),
-            pipeline_ops.word_ngrams(F.col("text"), n),
+            pipeline_ops.word_ngrams("text", n),
         )
+
+
+def _assert_fingerprints_equal(docs, id_col: str) -> None:
+    """textstats.doc_fingerprint vs the pre-r8 window minhash (same -1
+    fallback for docs without a window), row for row."""
+    old = docs.select(
+        F.col(id_col),
+        F.coalesce(_old_fingerprint_hash(F.col("text"), 5), F.lit(-1).cast("long"))
+        .alias("fingerprint"),
+    )
+    new = textstats.doc_fingerprint(docs, id_col, "text", 5)
+    assert old.exceptAll(new).count() == 0
+    assert new.exceptAll(old).count() == 0
 
 
 def test_fingerprint_binding_is_bitwise_identical(spark):
     texts = _random_texts(400, seed=83)
-    _assert_bitwise_equal(
-        spark, texts, _old_fingerprint_hash(F.col("text"), 5),
-        _new_fingerprint_hash(F.col("text"), 5),
-    )
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    _assert_fingerprints_equal(df, "id")
 
 
 def test_minhash_signature_binding_is_bitwise_identical(spark):
@@ -142,34 +151,34 @@ def test_minhash_signature_binding_is_bitwise_identical(spark):
             F.transform(
                 sh,
                 lambda g: (
-                    F.shiftright(dedup._mh_base(g), 30)
-                    + s.cast("long") * dedup._mh_base(g).bitwiseAND(F.lit(dedup._MH_MOD - 1))
+                    F.shiftright(_mh_base(g), 30)
+                    + s.cast("long") * _mh_base(g).bitwiseAND(F.lit(_MH_MOD - 1))
                 )
-                % F.lit(dedup._MH_MOD),
+                % F.lit(_MH_MOD),
             )
         ),
     )
     _assert_bitwise_equal(
-        spark, texts, old, dedup.minhash_signature(F.col("text"), 8, 3)
+        spark, texts, old, dedup.minhash_signature("text", 8, 3)
     )
 
 
 def test_shingles_match_on_fixture_corpus(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     for old, new in (
-        (_old_word_shingles(F.col("text"), 3), dedup.word_shingles(F.col("text"), 3)),
-        (_old_word_ngrams(F.col("text"), 8), pipeline_ops.word_ngrams(F.col("text"), 8)),
-        (_old_fingerprint_hash(F.col("text"), 5), _new_fingerprint_hash(F.col("text"), 5)),
+        (_old_word_shingles(F.col("text"), 3), F.expr(dedup.word_shingles_sql("text", 3))),
+        (_old_word_ngrams(F.col("text"), 8), pipeline_ops.word_ngrams("text", 8)),
     ):
         bad = docs.select(
             F.when(old.eqNullSafe(new), 0).otherwise(1).alias("x")
         ).agg(F.sum("x")).first()[0]
         assert bad == 0
+    _assert_fingerprints_equal(docs, "doc_id")
 
 
 # --- pre-r8.2 formulations: lang_id / quality_expr score duplication ---------
 def _old_quality_expr(t: Column) -> Column:
-    toks = textstats.tokens(t)
+    toks = _tokens(t)
     n_words = F.greatest(F.size(toks), F.lit(1))
     n_chars = F.greatest(F.length(t), F.lit(1))
     avg_wlen = (
@@ -191,7 +200,7 @@ def _old_quality_expr(t: Column) -> Column:
 
 
 def _old_lang_pred_expr(text: Column, min_ratio: float = 0.01) -> Column:
-    toks = textstats.tokens(F.lower(text))
+    toks = _tokens(F.lower(text))
     n = F.greatest(F.size(toks), F.lit(1))
     def _hits(words):
         return lambda w: w.isin(*words)
@@ -228,7 +237,7 @@ def test_quality_expr_binding_is_bitwise_identical(spark):
     texts = _en_texts(400, seed=85) + [None]  # NULL propagates identically
     _assert_bitwise_equal(
         spark, texts, _old_quality_expr(F.col("text")),
-        textstats.quality_expr(F.col("text")),
+        textstats.quality_expr("text"),
     )
 
 
@@ -237,15 +246,15 @@ def test_lang_pred_binding_is_bitwise_identical(spark):
     for min_ratio in (0.01, 0.25):
         _assert_bitwise_equal(
             spark, texts, _old_lang_pred_expr(F.col("text"), min_ratio),
-            textstats.lang_pred_expr(F.col("text"), min_ratio),
+            textstats.lang_pred_expr("text", min_ratio),
         )
 
 
 def test_lang_and_quality_match_on_fixture_corpus(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     for old, new in (
-        (_old_quality_expr(F.col("text")), textstats.quality_expr(F.col("text"))),
-        (_old_lang_pred_expr(F.col("text")), textstats.lang_pred_expr(F.col("text"))),
+        (_old_quality_expr(F.col("text")), textstats.quality_expr("text")),
+        (_old_lang_pred_expr(F.col("text")), textstats.lang_pred_expr("text")),
     ):
         bad = docs.select(
             F.when(old.eqNullSafe(new), 0).otherwise(1).alias("x")
@@ -259,8 +268,8 @@ def test_lang_and_quality_tokenize_once_in_plan(spark):
     formulations stamped 24 (lang argmax) / 3+ (quality) copies."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     for col in (
-        textstats.lang_pred_expr(F.col("text")),
-        textstats.quality_expr(F.col("text")),
+        textstats.lang_pred_expr("text"),
+        textstats.quality_expr("text"),
     ):
         plan = docs.select(col.alias("y"))._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("split(") == 1, plan
@@ -286,7 +295,7 @@ def test_long_doc_shingle_build_is_not_quadratic(spark):
 
     def build_secs(n_tokens: int) -> float:
         df = corpus(n_tokens).select(
-            F.explode(dedup.word_shingles(F.col("text"), 3)).alias("g")
+            F.explode(F.expr(dedup.word_shingles_sql("text", 3))).alias("g")
         )
         t = time.time()
         df.count()
@@ -301,7 +310,7 @@ def test_long_doc_shingle_build_is_not_quadratic(spark):
     )
 
 
-# --- r9: the r8-ADVICE padding double-eval (dedup._pad_empty) -----------------
+# --- r9: the r8-ADVICE padding double-eval (dedup.pad_empty_sql) -------------
 def _old_pad_empty(arr: Column) -> Column:
     """Pre-r9 sentinel padding, kept verbatim: references `arr` twice in
     one expression — with an HOF-rooted (CodegenFallback) gram build
@@ -341,7 +350,7 @@ def test_pad_empty_binding_is_bitwise_identical(spark):
         _assert_bitwise_equal(
             spark, texts,
             _old_pad_empty(sh_old),
-            dedup._pad_empty(dedup.word_shingles(F.col("text"), k)),
+            F.expr(dedup.pad_empty_sql(dedup.word_shingles_sql("text", k))),
         )
 
 
@@ -351,7 +360,7 @@ def test_simhash64_binding_is_bitwise_identical(spark):
         _assert_bitwise_equal(
             spark, texts,
             _old_simhash64(F.col("text"), bits),
-            dedup.simhash64(F.col("text"), bits),
+            dedup.simhash64("text", bits),
         )
 
 
@@ -361,16 +370,16 @@ def test_padded_builders_tokenize_once_in_plan(spark):
     simhash64 stamped bits+1 tokenizations (one per bit's aggregate)."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     cases = [
-        F.explode(dedup._pad_empty(dedup.word_shingles(F.col("text"), 3))).alias("g"),
-        dedup.minhash_signature(F.col("text"), 8, 3).alias("sig"),
-        dedup.simhash64(F.col("text"), 8).alias("sh"),
+        F.explode(F.expr(dedup.pad_empty_sql(dedup.word_shingles_sql("text", 3)))).alias("g"),
+        dedup.minhash_signature("text", 8, 3).alias("sig"),
+        dedup.simhash64("text", 8).alias("sh"),
     ]
     for col in cases:
         plan = docs.select(col)._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("split(") == 1, plan
     # and the old forms really did stamp copies (guards the guard)
     old_pad = docs.select(
-        F.explode(_old_pad_empty(dedup.word_shingles(F.col("text"), 3))).alias("g")
+        F.explode(_old_pad_empty(F.expr(dedup.word_shingles_sql("text", 3)))).alias("g")
     )._jdf.queryExecution().optimizedPlan().toString()
     assert old_pad.count("split(") == 2, old_pad
     old_sh = docs.select(
@@ -450,7 +459,7 @@ def test_simhash_signatures_on_fixture_matches_old(spark):
 
 def test_simhash_signatures_tokenize_once_in_plan(spark):
     """The explode-feeding projection must carry ONE split( after the
-    _pad_empty rewrite; the old padding stamped two."""
+    pad_empty_sql rewrite; the old padding stamped two."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     plan = (
         dedup.simhash_signatures(docs, "doc_id", "text", 8)

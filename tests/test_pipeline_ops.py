@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark import catalog
 from hadoop_0_20_2_ljx_spark.extensions import pipeline_ops
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, parser_escapes
 
 
 def plan_of(df) -> str:
@@ -368,32 +368,40 @@ def test_domain_reweight_explicit_target_drops_unlisted_groups(spark):
 
 
 def test_domain_reweight_quotes_in_group_keys(spark):
+    """Under both string-literal parse modes (a key that went through
+    the SQL parser would read o''brien with escapedStringLiterals on)."""
     tok = spark.createDataFrame(
         [("o'brien", i, 10) for i in range(50)] + [("plain", 50 + i, 10) for i in range(50)],
         "source string, doc_id long, w long",
     )
-    kept = pipeline_ops.domain_reweight(
-        tok, "source", "w", "doc_id", target_bp={"o'brien": 10000}
-    )
-    got = {r["source"] for r in kept.select("source").distinct().collect()}
-    assert got == {"o'brien"}
+    for escaped in (False, True):
+        with parser_escapes(spark, escaped):
+            kept = pipeline_ops.domain_reweight(
+                tok, "source", "w", "doc_id", target_bp={"o'brien": 10000}
+            )
+            got = {r["source"] for r in kept.select("source").distinct().collect()}
+        assert got == {"o'brien"}, escaped
 
 
 def test_domain_reweight_backslashes_in_group_keys(spark):
-    """Keys with embedded and trailing backslashes must survive the
-    generated-CASE interpolation (Spark parses \\ as an escape in string
-    literals — r6 ADVICE): the literal must match the raw key bytes,
-    and a trailing backslash must not break the parse."""
+    """Keys with embedded and trailing backslashes must match the raw key
+    bytes under both string-literal parse modes (r6 ADVICE: the default
+    parser reads \\ as an escape; with escapedStringLiterals on it does
+    not, and a key passed through SQL text either diverged or, with a
+    trailing backslash, broke the parse)."""
     keys = ["c:\\data\\", "a\\'b", "plain"]
     rows = [(k, i * 10 + j, 10) for i, k in enumerate(keys) for j in range(10)]
     tok = spark.createDataFrame(rows, "source string, doc_id long, w long")
-    kept = pipeline_ops.domain_reweight(
-        tok, "source", "w", "doc_id", target_bp={"c:\\data\\": 5000, "a\\'b": 5000}
-    )
-    got = {r["source"] for r in kept.select("source").distinct().collect()}
-    # 'plain' is unlisted (rate 0); both backslash keys keep everything
-    # (rate caps at 10000 since each holds 1/3 of the mass > 50% target)
-    assert got == {"c:\\data\\", "a\\'b"}
+    for escaped in (False, True):
+        with parser_escapes(spark, escaped):
+            kept = pipeline_ops.domain_reweight(
+                tok, "source", "w", "doc_id",
+                target_bp={"c:\\data\\": 5000, "a\\'b": 5000},
+            )
+            got = {r["source"] for r in kept.select("source").distinct().collect()}
+        # 'plain' is unlisted (rate 0); both backslash keys keep everything
+        # (rate caps at 10000 since each holds 1/3 of the mass > 50% target)
+        assert got == {"c:\\data\\", "a\\'b"}, escaped
 
 
 def test_decontaminate_randomized_vs_python_reference(spark):

@@ -78,6 +78,18 @@ def test_aggregate_is_20_packed_buffers(spark):
     assert plan.count(str(lane_mask)) == 20, plan
 
 
+def _pad_empty(arr):
+    """The Column sentinel padding the r14 lane form used, kept verbatim
+    so the reference does not depend on the code under test."""
+    return F.element_at(
+        F.transform(
+            F.array(arr),
+            lambda a: F.when(F.size(a) > 0, a).otherwise(F.array(F.lit(""))),
+        ),
+        1,
+    )
+
+
 def _column_form_lane_signatures(df, id_col, text_col, bits=60):
     """The r14 Column-built lane form, kept verbatim: the SQL-text
     builder in simhash_signatures must parse to THIS tree (modulo
@@ -88,7 +100,7 @@ def _column_form_lane_signatures(df, id_col, text_col, bits=60):
     ids = df.select(F.col(id_col).alias(id_col), F.col(text_col).alias("_text"))
     sc = df.sparkSession.sparkContext
     words = F.filter(F.split(F.col("_text"), r"\s+"), lambda w: w != "")
-    padded = dedup._pad_empty(words)
+    padded = _pad_empty(words)
     tok = (
         ids.repartition(sc.defaultParallelism, id_col)
         .select(id_col, F.explode(padded).alias("w"))

@@ -48,7 +48,7 @@ VTAB_TOKEN = "x\x0by"  # THE divergent case: Java \s has \x0B, RE2 does not
 def _spark_tokens(spark, text: str) -> list[str]:
     df = spark.createDataFrame([(text,)], "text string")
     return df.select(
-        textstats.tokens(F.lower(F.col("text"))).alias("t")
+        F.expr(textstats.tokens_sql("lower(text)")).alias("t")
     ).first()["t"]
 
 
@@ -92,7 +92,7 @@ def test_trim_divergence_is_named(spark):
 
 
 def test_udtf_tokenizer_matches_relational_contract(spark):
-    """The UDTF path must tokenize exactly like textstats.tokens on
+    """The UDTF path must tokenize exactly like textstats.tokens_sql on
     unicode text (pre-r8 it used Python str.split(), which also splits
     NBSP and ideographic space)."""
     text = "alpha " + " ".join(SALTS) + f" {VTAB_TOKEN} omega"
@@ -101,7 +101,7 @@ def test_udtf_tokenizer_matches_relational_contract(spark):
     spark_side = [
         r[0]
         for r in spark.createDataFrame([(text,)], "text string")
-        .select(F.explode(textstats.tokens(F.col("text"))))
+        .select(F.explode(F.expr(textstats.tokens_sql("text"))))
         .collect()
     ]
     assert python_side == spark_side

@@ -25,19 +25,22 @@ produced real r8 scale bugs; run after adding or reshaping queries.
    in one select or by pinning the shared table (extensions/dedup.py
    ngram_jaccard_pairs / duplicate_substring_spans).
 
-Usage:  python tools/plan_audit.py [sf_dir]        (default sf0.001)
-Output is a report to eyeball, not a pass/fail gate: known-intentional
-shapes are listed in _ACCEPTED with the reason the audit keeps showing
-them.
+Usage:  python tools/plan_audit.py [sf_dir] [--snapshot]   (default sf0.001)
+A gate: exits 1 when a query raises while building, when a flag has no
+reviewed reason in _ACCEPTED (known-intentional shapes are listed there
+with the reason the audit keeps showing them), or when a plan shape
+differs from tools/plan_shapes.json. --snapshot rewrites the snapshot, so
+shape diffs are then the intended refresh and do not fail the run.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # name -> why its flag is intentional (reviewed r8)
 _ACCEPTED = {
@@ -125,6 +128,7 @@ def main() -> int:
         # (every shape reported as new) instead of aborting (r8 ADVICE)
         print(f"WARN snapshot unreadable ({e}); auditing against empty baseline")
         prior = {}
+    errors = 0
     flagged = 0
     shape_diffs = 0
     shapes: dict[str, dict[str, int]] = {}
@@ -133,6 +137,7 @@ def main() -> int:
             plan = fn(spark, sf)._jdf.queryExecution().optimizedPlan().toString()
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name}: {str(e)[:100]}")
+            errors += 1
             continue
         shapes[name] = _shape(plan)
         if name in prior and prior[name] != shapes[name]:
@@ -162,7 +167,8 @@ def main() -> int:
             print(f"   {v:4d}x {k[:120]}")
         if rescans:
             print(f"   rescans: {dict(rescans)}")
-    print(f"\nunaccepted flags: {flagged} (0 = every flag has a reviewed reason)")
+    print(f"\nbuild errors: {errors}")
+    print(f"unaccepted flags: {flagged} (0 = every flag has a reviewed reason)")
     if prior:
         print(
             f"plan-shape diffs vs snapshot: {shape_diffs} "
@@ -173,7 +179,9 @@ def main() -> int:
             json.dump(shapes, fh, indent=0, sort_keys=True)
         print(f"snapshot written: {_SNAPSHOT} ({len(shapes)} queries)")
     spark.stop()
-    return 0
+    failed = errors or flagged or (shape_diffs and not snapshot_mode)
+    print("PLAN AUDIT: FAIL" if failed else "PLAN AUDIT: OK")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
