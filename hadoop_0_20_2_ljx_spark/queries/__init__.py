@@ -15,7 +15,8 @@ from hadoop_0_20_2_ljx_spark.queries.base import QueryDef  # noqa: F401
 # external row (newest: 50 r6 / 49 r5 / 45 r4 / 39 r3 — recomputed from
 # CORRECTNESS_r01..06; the r6-era "11 remaining r3 names" note was a
 # miscount the r6 verdict corrected). Local pytest and
-# tools/driver_sim.py re-prove ALL queries at sf0.01 every gate run
+# tools/driver_sim.py re-prove ALL queries at sf0.01 every gate run, and
+# tools/sweep.py re-proves them under every invariance axis,
 # regardless — the driver rows are the hard external signal, not the
 # only signal. Correctness itself is order-independent (each query is
 # self-contained).

@@ -118,7 +118,7 @@ def get_spark(
         # 60 s lag, mapred/TaskInProgress.java:866-874). Safe here
         # BECAUSE every operator is retry-deterministic (hash salts not
         # rand(), integer sums, tie-broken windows — see SCALE.md), a
-        # claim gated mechanically by tools/retry_sweep.py: the whole
+        # claim gated mechanically by tools/sweep.py's retry axis: the whole
         # registry replayed with every scan/result task's first attempt
         # force-failed is bit-identical to the clean run (r13: 187/187,
         # 758 real retries). Pointless (and a timing perturbation)

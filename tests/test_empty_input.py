@@ -5,8 +5,8 @@ with no rows, a language gate that drops everything, a dedup that
 leaves nothing new — and it must FLOW THROUGH the two-pass prefix-sum /
 rank helpers and the ANN routing as zero rows, not crash the job.
 Found by replaying the whole registry against schema-identical empty
-tables (149/186 passed before these fixes, 155 after; driver_sim
-against an empty sf dir is the repro).
+tables (149/186 passed before these fixes, 155 after; the empty axis
+of tools/sweep.py is the repro).
 
 The strict side is pinned too: TRAINERS (kmeans, PQ) raise a clear
 ValueError on empty input — a codebook learned from nothing is a bug

@@ -1,5 +1,5 @@
 """Unit pins for the r9 NULL-boundary contracts (queries/base.py's
-NULL-ordering note; end-to-end re-proven by tools/null_sweep.py).
+NULL-ordering note; end-to-end re-proven by the null axis of tools/sweep.py).
 
 Each op declares an explicit contract for null inputs instead of riding
 Spark-vs-DuckDB null-ordering defaults:

@@ -19,6 +19,9 @@ rows rendered to strings and sorted, numeric values normalized so that
 BIGINT/HUGEINT/DECIMAL/DOUBLE renderings of the same number compare
 equal (queries are required to round floats identically on both sides —
 see queries/base.py — so any residual float mismatch is a real bug).
+
+``replay`` is the one registry loop: ``main`` runs it on one plain
+session, and tools/sweep.py runs it under every invariance axis.
 """
 
 from __future__ import annotations
@@ -74,22 +77,13 @@ def fingerprint(cols: list[str], rows: list) -> tuple[int, tuple, str]:
     return len(rows), tuple(sorted(cols)), h
 
 
-# failed-query names from the most recent main() call, for callers that
-# embed the sim (tools/null_sweep.py diffs them against an expected set)
-LAST_FAILED: set[str] = set()
-
-
 def main() -> int:
-    LAST_FAILED.clear()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # optional argv[2]: comma-separated query names — iterate on a few
     # queries fast. The COMMIT GATE is the full run (no second arg).
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
-    import duckdb
     from pyspark.sql import SparkSession
-
-    import __spark_entry__ as entry_mod
 
     spark = (
         SparkSession.builder.master("local[32]")
@@ -98,23 +92,41 @@ def main() -> int:
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
+    t_all = time.time()
+    outcomes = replay(spark, sf_dir, only)
+    n_fail = sum(1 for why in outcomes.values() if why)
+    print(f"total wall: {time.time() - t_all:.0f}s")
+    if n_fail == 0:
+        print(f"ALL PASS of {len(outcomes)}")
+        return 0
+    print(f"FAILURES {n_fail} of {len(outcomes)}")
+    return 1
+
+
+def replay(spark, sf_dir: str, only=None, collect=None) -> dict:
+    """Run every registry query (or the names in ``only``) on ``spark``
+    and compare each with its DuckDB oracle over the same parquet.
+
+    Returns ``{name: outcome}``: None for a pass, else a one-line reason.
+    ``collect(name, df)``, when given, replaces ``df.collect()`` — the
+    retry sweep collects through a task-failure injector this way."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+
+    qs = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
+    if only is not None:
+        # a typo'd name would otherwise match nothing and pass vacuously
+        unknown = sorted(set(only) - qs.keys())
+        if unknown:
+            raise ValueError(f"unknown query name(s): {', '.join(unknown)}")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    if only is not None:
-        # a typo'd name would otherwise match nothing and print a
-        # vacuous "ALL PASS of 0" with exit 0
-        unknown = sorted(only - qs.keys())
-        if unknown:
-            print(f"FAIL unknown query name(s): {', '.join(unknown)}")
-            return 1
-    n_pass = n_fail = 0
-    t_all = time.time()
+    outcomes: dict[str, str | None] = {}
     for name, fn in qs.items():
         if only is not None and name not in only:
             continue
@@ -122,11 +134,12 @@ def main() -> int:
         try:
             df = fn(spark, sf_dir)
             cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            got = collect(name, df) if collect else df.collect()
+            rows = [tuple(r) for r in got]
             if name not in oracles:
                 print(f"PASS {name} (rows-only: {len(rows)} rows, "
                       f"{time.time() - t0:.1f}s)")
-                n_pass += 1
+                outcomes[name] = None
                 continue
             s_cnt, s_cols, s_hash = fingerprint(cols, rows)
             cur = con.execute(oracles[name])
@@ -136,27 +149,19 @@ def main() -> int:
             ok = (s_cnt == o_cnt) and (s_cols == o_cols_s) and (s_hash == o_hash)
             if ok:
                 print(f"PASS {name} ({s_cnt} rows, {time.time() - t0:.1f}s)")
-                n_pass += 1
+                outcomes[name] = None
             else:
-                print(
-                    f"FAIL {name}: rows {s_cnt}/{o_cnt} "
+                outcomes[name] = (
+                    f"rows {s_cnt}/{o_cnt} "
                     f"cols {s_cols}/{o_cols_s} hash {s_hash}/{o_hash}"
                 )
-                LAST_FAILED.add(name)
-                n_fail += 1
-        except Exception:
+                print(f"FAIL {name}: {outcomes[name]}")
+        except Exception as ex:  # noqa: BLE001 — report and keep replaying
             print(f"FAIL {name}: EXCEPTION")
             traceback.print_exc()
-            LAST_FAILED.add(name)
-            n_fail += 1
+            outcomes[name] = f"EXCEPTION {ex!r}"[:300]
         sys.stdout.flush()
-    total = n_pass + n_fail
-    print(f"total wall: {time.time() - t_all:.0f}s")
-    if n_fail == 0:
-        print(f"ALL PASS of {total}")
-        return 0
-    print(f"FAILURES {n_fail} of {total}")
-    return 1
+    return outcomes
 
 
 if __name__ == "__main__":

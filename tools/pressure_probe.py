@@ -8,8 +8,8 @@ threshold told them to.
     python tools/pressure_probe.py              # all four, ~15 min
     python tools/pressure_probe.py sort agg     # just the named ops
 
-Complements tools/spill_sweep.py from the other side: the sweep proves
-all 186 registry results survive the spill PATH (forced deterministically
+Complements tools/sweep.py's spill axis from the other side: the axis
+proves all 186 registry results survive the spill PATH (forced deterministically
 at small data), this proves each operator class survives real PRESSURE.
 Every op carries exact result asserts (order+checksum for the sort,
 integer count/sum identities for join and agg) and FAILS unless its own

@@ -1,6 +1,7 @@
-"""Interior-stage task-retry probe — the one regime tools/retry_sweep.py
-documents as uncovered: a task of a MIDDLE stage (reads shuffle, writes
-shuffle) re-executed after its first attempt dies mid-flight.
+"""Interior-stage task-retry probe — the one regime tools/sweep.py's
+retry axis documents as uncovered: a task of a MIDDLE stage (reads
+shuffle, writes shuffle) re-executed after its first attempt dies
+mid-flight.
 
 Run (one-off scale evidence, ~2 min):
 
