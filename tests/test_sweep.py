@@ -62,6 +62,26 @@ def test_judge_fails_a_crash_or_an_empty_replay(sweep):
     assert sweep.judge(0, _result({"a": None}, ["conf x"]), set())["problems"] == ["conf x"]
 
 
+def test_a_raising_check_fails_the_axis_and_keeps_the_outcomes(sweep):
+    def check(spark, data):
+        raise OSError("no UI")
+
+    axis = sweep.AXES["spill"]._replace(check=check)
+    problem = sweep.run_check(axis, None, SF_SMOKE)
+    assert problem == "check raised OSError('no UI')"
+    v = sweep.judge(0, _result({"a": None}, [problem]), set())
+    assert v["problems"] == [problem] and v["pass"] == 1
+    assert sweep.run_check(sweep.AXES["durable"], None, SF_SMOKE) is None
+
+
+def test_conf_axes_default_to_the_gate_fixture(sweep):
+    # the mutated-fixture axes' expected sets are measured at sf0.001;
+    # every other axis replays the driver gate's sf0.01 unless --sf says so
+    mutated = {"null", "nonfinite", "unicode", "epoch", "empty"}
+    for axis, row in sweep.AXES.items():
+        assert row.sf == (SF_SMOKE if axis in mutated else SF_T2), axis
+
+
 def test_expected_names_are_registry_queries(sweep):
     import __spark_entry__
 
@@ -87,6 +107,38 @@ def test_fixture_builder_deterministic_schema_keeping_and_applied(sweep, axis, t
         assert pq.read_schema(dirs[0] / f"{t}.parquet").equals(src, check_metadata=True), t
     assert row.check(None, str(dirs[0])) is None
     assert row.check(None, SF_SMOKE) is not None, f"{axis}: check passes unmutated input"
+
+
+def test_split_fixture_keeps_rows_in_many_row_groups(sweep, tmp_path):
+    import pyarrow.parquet as pq
+
+    row = sweep.AXES["split"]
+    dirs = [tmp_path / "a", tmp_path / "b"]
+    for d in dirs:
+        d.mkdir()
+        sweep.build_fixture(row.fixture, SF_T2, str(d), row.row_group_rows)
+    for t in sweep.driver_sim.TABLES:
+        a, b = ((d / f"{t}.parquet").read_bytes() for d in dirs)
+        assert a == b, f"{t} differs between two builds"
+        src = pq.read_table(f"{SF_T2}/{t}.parquet")
+        out = pq.read_table(dirs[0] / f"{t}.parquet")
+        assert out.equals(src) and out.schema.equals(src.schema, check_metadata=True), t
+    meta = pq.read_metadata(dirs[0] / "lineitem.parquet")
+    assert meta.num_row_groups == meta.num_rows // row.row_group_rows
+    assert pq.read_metadata(f"{SF_T2}/lineitem.parquet").num_row_groups == 1
+
+
+def test_split_check_needs_a_table_scanned_as_many_splits(sweep, spark, tmp_path):
+    row = sweep.AXES["split"]
+    sweep.build_fixture(row.fixture, SF_T2, str(tmp_path), row.row_group_rows)
+    try:
+        for k, v in row.conf.items():
+            spark.conf.set(k, v)
+        assert sweep._check_split(spark, str(tmp_path)) is None
+        assert "vacuous" in sweep._check_split(spark, SF_T2)
+    finally:
+        for k in row.conf:
+            spark.conf.unset(k)
 
 
 def test_spill_threshold_follows_lineitem_rows(sweep):

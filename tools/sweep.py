@@ -7,8 +7,8 @@ failures against the axis's expected set.
 
 With no AXIS every row of ``AXES`` runs. A full run (no AXIS, no --only)
 also writes SWEEPS.json at the repo root: pass, fail and expected counts,
-failing names and wall time per axis, plus host cores, git HEAD, Spark
-version and the fixture dir. Exit code 0 means every axis held.
+failing names, wall time and fixture dir per axis, plus host cores, git
+HEAD and Spark version. Exit code 0 means every axis held.
 
 Each axis runs in its own spawned child process, because static confs
 (spark.driver.memory, the force-spill threshold, default.parallelism)
@@ -20,9 +20,11 @@ An axis fails when its child exits non-zero or replays zero queries, when
 a conf of its row does not read back from the live session, when its
 vacuity check fails, when a query outside its expected set diverges, or
 when a query inside it now passes (an improvement must be recorded on
-purpose: shrink the set, and the queries/base.py note with it). The
-expected sets are measured on sf0.001, the default --sf; the conf-only
-axes expect zero divergences at any scale.
+purpose: shrink the set, and the queries/base.py note with it). Each
+axis replays its own default fixture unless --sf names another: sf0.01
+for the conf axes, which expect zero divergences at any scale, and
+sf0.001 for the mutated-fixture axes, whose expected sets are measured
+there.
 """
 
 from __future__ import annotations
@@ -50,6 +52,9 @@ sys.path[:0] = [REPO, TOOLS]
 import driver_sim  # noqa: E402 — needs TOOLS on sys.path
 from hadoop_0_20_2_ljx_spark.jobs import DEFAULT_SF  # noqa: E402 — sf0.001
 
+# the driver gate's scale: the conf axes' default fixture
+GATE_SF = os.path.join(os.path.dirname(DEFAULT_SF), "sf0.01")
+
 
 class Axis(NamedTuple):
     master: str
@@ -65,6 +70,10 @@ class Axis(NamedTuple):
     check: Callable | None = None
     # replaces driver_sim.replay (the two-pass retry axis)
     replay: Callable | None = None
+    # default fixture dir (--sf overrides it)
+    sf: str = GATE_SF
+    # rows per parquet row group of a rewritten fixture (None: one group)
+    row_group_rows: int | None = None
 
 
 # ---------------------------------------------------------------- fixtures
@@ -79,14 +88,15 @@ def _replace(tab, name: str, arr):
     return pa.Table.from_arrays(cols, schema=tab.schema)
 
 
-def build_fixture(fixture: Callable, src: str, dst: str) -> None:
+def build_fixture(fixture: Callable, src: str, dst: str,
+                  row_group_rows: int | None = None) -> None:
     """Write every fixture table of ``src`` to ``dst`` through ``fixture``."""
     for t in driver_sim.TABLES:
         out = fixture(t, pq.read_table(f"{src}/{t}.parquet"))
         if out is None:
             shutil.copyfile(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
         else:
-            pq.write_table(out, f"{dst}/{t}.parquet")
+            pq.write_table(out, f"{dst}/{t}.parquet", row_group_size=row_group_rows)
 
 
 # columns that keep their non-null fixture contract (keys: nulling them
@@ -191,6 +201,11 @@ def _emptied(t: str, tab):
     return tab.schema.empty_table()
 
 
+def _as_is(t: str, tab):
+    """Every table rewritten unchanged (in the axis's row groups)."""
+    return tab
+
+
 # ------------------------------------------------------ checks and confs
 
 
@@ -227,6 +242,23 @@ def _check_fixture(table: str, column: str, mutated: Callable, what: str):
         col = pq.read_table(f"{data}/{table}.parquet", columns=[column])[column]
         return None if mutated(col) else f"fixture has no {what}"
     return check
+
+
+def _check_split(spark, data):
+    """Fail unless some table scans as more non-empty splits than files.
+    Spark splits parquet at row-group midpoints, so a one-group file reads
+    as one non-empty split whatever maxPartitionBytes says."""
+    from pyspark.sql import functions as F
+
+    from hadoop_0_20_2_ljx_spark import catalog
+
+    splits = {t: catalog.load(spark, data, t).select(F.spark_partition_id())
+              .distinct().count() for t in driver_sim.TABLES}
+    print("split check: non-empty scan splits per table: "
+          + ", ".join(f"{t} {n}" for t, n in splits.items()))
+    if sum(splits.values()) > len(splits):
+        return None
+    return "every table scanned as one split: the axis is vacuous"
 
 
 def _check_empty(spark, data):
@@ -521,10 +553,17 @@ AXES: dict[str, Axis] = {
         why="256 KiB input splits: the scan-side twin of the partition axis, "
         "and the contract of the reference's FileInputFormat.getSplits / "
         "LineRecordReader split model (mapred/FileInputFormat.java:199-253, "
-        "skip the first partial line). Every multi-megabyte scan (parquet "
-        "tables, the text/CSV/JSON/KV roundtrips inside the sink queries) "
-        "reads as many splits, so a line counted twice or dropped at a split "
-        "boundary, or an order taken from one scan task, diverges here.",
+        "skip the first partial line). Spark splits parquet only between row "
+        "groups and the fixtures hold one group per table, so the tables are "
+        "rewritten unchanged in 1,000-row groups; then every scan past 256 "
+        "KiB (orders, lineitem and events at sf0.01, and the text/CSV/JSON/KV "
+        "roundtrips inside the sink queries) reads as many splits, so a row "
+        "counted twice or dropped at a split boundary, or an order taken "
+        "from one scan task, diverges here. The check fails the axis when "
+        "no table scanned as more than one non-empty split.",
+        fixture=_as_is,
+        row_group_rows=1000,
+        check=_check_split,
     ),
     "parquet": Axis(
         "local[13]",
@@ -597,6 +636,7 @@ AXES: dict[str, Axis] = {
         "and embedding math fed null vectors and (2) text/format roundtrips "
         "whose wire form cannot carry NULL.",
         fixture=_nulled,
+        sf=DEFAULT_SF,
         expected=NULL_DIVERGENT,
         check=_check_fixture("lineitem", "l_returnflag",
                              lambda c: c.null_count > 0, "NULLs"),
@@ -611,6 +651,7 @@ AXES: dict[str, Axis] = {
         "sum silently). q_agg_profile renders non-finite min/max as explicit "
         "tokens and q_sort_secondary ranks NaN greatest, on both sides.",
         fixture=_nonfinite,
+        sf=DEFAULT_SF,
         expected=NONFINITE_DIVERGENT,
         check=_check_fixture("lineitem", "l_extendedprice",
                              lambda c: pc.any(pc.is_nan(c)).as_py(), "NaN"),
@@ -626,6 +667,7 @@ AXES: dict[str, Axis] = {
         "(q_text_bpe_encode on NBSP/ideographic space), and the "
         "codepoint-for-byte oracle stand-in of q_multimodal_features.",
         fixture=_unicode,
+        sf=DEFAULT_SF,
         expected=UNICODE_DIVERGENT,
         check=_check_fixture("documents", "text",
                              lambda c: pc.any(pc.match_substring(c, "\x0b")).as_py(),
@@ -641,6 +683,7 @@ AXES: dict[str, Axis] = {
         "(queries/base.py) is the contract a new query can break silently. "
         "Expects zero divergences.",
         fixture=_pre1970,
+        sf=DEFAULT_SF,
         check=_check_fixture("events", "ts",
                              lambda c: pc.max(c).as_py().year < 1970,
                              "pre-1970 timestamps"),
@@ -657,6 +700,7 @@ AXES: dict[str, Axis] = {
         "it is an empty-input bug: fix the operator, or add the name WITH "
         "its reason if refusal is right.",
         fixture=_emptied,
+        sf=DEFAULT_SF,
         expected=STRICT,
         check=_check_empty,
     ),
@@ -703,6 +747,15 @@ def judge(exitcode, result, expected) -> dict:
             "problems": problems}
 
 
+def run_check(axis: Axis, spark, data) -> str | None:
+    """The axis's vacuity check; an exception fails the axis but keeps
+    the replayed outcomes."""
+    try:
+        return axis.check and axis.check(spark, data)
+    except Exception as ex:  # noqa: BLE001 — report it as the axis's problem
+        return f"check raised {ex!r}"
+
+
 def _child(name: str, sf: str, only, conn) -> None:
     from pyspark.sql import SparkSession
 
@@ -710,7 +763,7 @@ def _child(name: str, sf: str, only, conn) -> None:
     with tempfile.TemporaryDirectory(prefix=f"sweep-{name}-") as tmp:
         data = sf
         if axis.fixture is not None:
-            build_fixture(axis.fixture, sf, tmp)
+            build_fixture(axis.fixture, sf, tmp, axis.row_group_rows)
             data = tmp
         conf = {"spark.driver.memory": "8g", **axis.conf}
         conf = {k: v(data) if callable(v) else v for k, v in conf.items()}
@@ -727,7 +780,7 @@ def _child(name: str, sf: str, only, conn) -> None:
         outcomes = {}
         if not problems:
             outcomes = (axis.replay or driver_sim.replay)(spark, data, only)
-            problem = axis.check and axis.check(spark, data)
+            problem = run_check(axis, spark, data)
             if problem:
                 problems.append(problem)
         conn.send({"outcomes": outcomes, "problems": problems})
@@ -767,7 +820,8 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("axes", nargs="*", metavar="AXIS",
                    help=f"axes to run (default: all): {' '.join(AXES)}")
-    p.add_argument("--sf", default=DEFAULT_SF, help=f"fixture dir (default {DEFAULT_SF})")
+    p.add_argument("--sf", help=f"fixture dir for every axis (default: {GATE_SF}, "
+                   f"or {DEFAULT_SF} for the mutated-fixture axes)")
     p.add_argument("--only", help="comma-separated query names")
     args = p.parse_args(argv)
     unknown = sorted(set(args.axes) - AXES.keys())
@@ -784,7 +838,9 @@ def main(argv=None) -> int:
     report = {}
     for name in args.axes or AXES:
         print(f"=== {name}", flush=True)
-        v = run_axis(name, args.sf, only)
+        sf = args.sf or AXES[name].sf
+        v = run_axis(name, sf, only)
+        v["sf_dir"] = sf
         report[name] = v
         print(f"{name}: {v['pass']} pass, {v['fail']} fail of {v['pass'] + v['fail']}"
               f" ({v['expected']} expected) in {v['wall_s']:.0f}s: "
@@ -800,7 +856,7 @@ def main(argv=None) -> int:
 
         with open(os.path.join(REPO, "SWEEPS.json"), "w") as f:
             json.dump({"host_cores": os.cpu_count(), "git_head": _git_head(),
-                       "spark_version": pyspark.__version__, "sf_dir": args.sf,
+                       "spark_version": pyspark.__version__,
                        "axes": report}, f, indent=1)
             f.write("\n")
     return 1 if bad else 0
