@@ -1,10 +1,12 @@
 """The invariance-sweep harness (tools/sweep.py): its diff rule, its
-expected sets and its fixture builders need no Spark; one smoke test
-runs a real axis on two queries in a child process."""
+expected sets and its fixture builders need no Spark; the split axis's
+check runs on the test session, and one smoke test runs a real axis on
+two queries in a child process."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import subprocess
 import sys
@@ -72,6 +74,23 @@ def test_a_raising_check_fails_the_axis_and_keeps_the_outcomes(sweep):
     v = sweep.judge(0, _result({"a": None}, [problem]), set())
     assert v["problems"] == [problem] and v["pass"] == 1
     assert sweep.run_check(sweep.AXES["durable"], None, SF_SMOKE) is None
+
+
+def test_full_run_records_the_clean_head(sweep, tmp_path, monkeypatch):
+    def git(*args):
+        subprocess.run(["git", *args], cwd=tmp_path, check=True, capture_output=True)
+
+    (tmp_path / "SWEEPS.json").write_text("{}\n")
+    git("init", "-q")
+    git("add", "SWEEPS.json")
+    git("-c", "user.name=t", "-c", "user.email=t@t", "commit", "-qm", "init")
+    monkeypatch.setattr(sweep, "REPO", str(tmp_path))
+    monkeypatch.setattr(sweep, "run_axis", lambda name, sf, only: {
+        **sweep.judge(0, _result({"a": None}), set()), "wall_s": 0.0})
+    assert sweep.main([]) == 0
+    record = json.loads((tmp_path / "SWEEPS.json").read_text())
+    assert record["git_head"] and not record["git_head"].endswith("-dirty")
+    assert record["axes"].keys() == sweep.AXES.keys()
 
 
 def test_conf_axes_default_to_the_gate_fixture(sweep):

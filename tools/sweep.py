@@ -854,10 +854,11 @@ def main(argv=None) -> int:
     if not args.axes and only is None:
         import pyspark
 
+        # read HEAD before opening the file: truncating it dirties the tree
+        record = {"host_cores": os.cpu_count(), "git_head": _git_head(),
+                  "spark_version": pyspark.__version__, "axes": report}
         with open(os.path.join(REPO, "SWEEPS.json"), "w") as f:
-            json.dump({"host_cores": os.cpu_count(), "git_head": _git_head(),
-                       "spark_version": pyspark.__version__,
-                       "axes": report}, f, indent=1)
+            json.dump(record, f, indent=1)
             f.write("\n")
     return 1 if bad else 0
 
