@@ -11,7 +11,9 @@ Workloads map to BASELINE.md "Local BENCH anchor":
   join_3way    — Q-join-4 lineitem><orders><customer      (target <= 45 s)
   wordcount    — Q-agg-1 over documents.text              (target <= 30 s)
 Plus representative extension workloads (dedup_minhash, embed_knn) so the
-round record tracks the training-data-pipeline ops too.
+round record tracks the training-data-pipeline ops too, and the bench
+rungs of the generated-data STRESS rows, whose ladder rungs
+tools/scale_probe.py runs.
 """
 
 from __future__ import annotations
@@ -75,28 +77,63 @@ def _steal_pct(
     return round(100.0 * (after[0] - before[0]) / d_total, 2) if d_total > 0 else 0.0
 
 
-def _stage_bytes(spark) -> tuple[int, int]:
-    """Cumulative (shuffle_write_bytes, input_bytes) over completed stages,
-    from the UI REST API. Per-workload deltas of these are the numbers
-    that carry to 100 TB (broadcast saves shuffle; bloom cuts probe
-    bytes) — local seconds don't."""
-    import json as _json
+def read_stages(spark, path: str = "?status=complete"):
+    """The parsed UI REST stage endpoint ``.../stages{path}`` of this
+    application. It is the one reader of stage metrics, and it raises when
+    the UI is off or the call fails: a lost measurement must never be
+    recorded as "nothing shuffled"."""
     import urllib.request
 
     sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        return 0, 0
-    try:
-        url = f"{base}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=10) as resp:
-            stages = _json.load(resp)
-        return (
-            sum(s.get("shuffleWriteBytes", 0) for s in stages),
-            sum(s.get("inputBytes", 0) for s in stages),
+    if not sc.uiWebUrl:
+        raise RuntimeError("stage metrics unavailable: spark.ui.enabled is false")
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages{path}"
+    with urllib.request.urlopen(url, timeout=10) as resp:
+        return json.load(resp)
+
+
+def _stage_bytes(spark) -> tuple[int, int]:
+    """Cumulative (shuffle_write_bytes, input_bytes) over completed stages.
+    Per-workload deltas of these are the numbers that carry to 100 TB
+    (broadcast saves shuffle; bloom cuts probe bytes) — local seconds
+    don't."""
+    stages = read_stages(spark)
+    return (
+        sum(s.get("shuffleWriteBytes", 0) for s in stages),
+        sum(s.get("inputBytes", 0) for s in stages),
+    )
+
+
+def measure(spark, fn, runs: int = 1) -> dict:
+    """Run ``fn`` ``runs`` times back to back. Returns the first run's
+    result, every run's wall, the first run's shuffle-write and input
+    bytes (deterministic, so one run carries them) and the /proc/stat
+    steal% over all runs. Byte sums that went down mean the UI store
+    evicted stages mid-run: that raises instead of recording a wrong
+    delta."""
+    st0 = _steal_ticks()
+    sw0, ib0 = _stage_bytes(spark)
+    t = time.time()
+    result = fn()
+    walls = [time.time() - t]
+    sw1, ib1 = _stage_bytes(spark)
+    for _ in range(runs - 1):
+        t = time.time()
+        fn()
+        walls.append(time.time() - t)
+    if sw1 < sw0 or ib1 < ib0:
+        raise RuntimeError(
+            f"stage byte sums went down (shuffle {sw0}->{sw1}, input "
+            f"{ib0}->{ib1}): the UI store evicted stages; raise "
+            "spark.ui.retainedStages"
         )
-    except Exception:
-        return 0, 0
+    return {
+        "result": result,
+        "walls": walls,
+        "shuffle_b": sw1 - sw0,
+        "input_b": ib1 - ib0,
+        "steal": _steal_pct(st0, _steal_ticks()),
+    }
 
 
 def bench_terasort(spark, n: int = 1_000_000) -> None:
@@ -127,140 +164,70 @@ def bench_terasort(spark, n: int = 1_000_000) -> None:
         assert a["hi"] <= b["lo"], f"partition boundary out of order: {a['hi']!r} > {b['lo']!r}"
 
 
-def bench_skew_join(spark, timings, shuffle_b, input_b) -> None:
-    """Hot-key join: 70% of lineitem rows collapse onto one key (a Zipf-1
-    head far beyond AQE's skew threshold), dim side = orders. Broadcast is
-    disabled for the workload — it simulates the cluster regime where the
-    dim is 10^9 rows and broadcast-ineligible, which is exactly when the
-    salted rewrite matters; both variants then shuffle. Records plain
-    (AQE skew-split) vs skew.salted_join so BENCH tracks the measured
-    delta, with row-count equality asserted."""
-    from hadoop_0_20_2_ljx_spark.operators import skew
-
-    fact = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        F.when(F.pmod(F.col("l_orderkey"), F.lit(10)) < 7, F.lit(1))
-        .otherwise(F.col("l_orderkey"))
-        .alias("k"),
-        "l_quantity",
-    )
-    dim = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        F.col("o_orderkey").alias("k"), "o_totalprice"
-    )
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        counts = {}
-        for label, df in (
-            ("skew_join_plain", fact.join(dim, "k")),
-            ("skew_join_salted", skew.salted_join(fact, dim, "k", buckets=16)),
-        ):
-            sw0, ib0 = _stage_bytes(spark)
-            t = time.time()
-            counts[label] = df.count()
-            timings[label] = time.time() - t
-            sw1, ib1 = _stage_bytes(spark)
-            shuffle_b[label], input_b[label] = sw1 - sw0, ib1 - ib0
-        assert counts["skew_join_plain"] == counts["skew_join_salted"], counts
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+# ---------------------------------------------------- generated stress data
 
 
-def bench_skew_groupby(spark, timings, shuffle_b, input_b) -> None:
-    """Hot-key aggregation: same 70%-hot key as bench_skew_join, plain
-    groupBy-sum vs the two-phase skew.salted_sum rewrite. Unlike join
-    skew, AQE cannot split a single groupBy key's aggregation state —
-    salting is the only rewrite. NOTE on the local reading: map-side
-    partial agg (HashAggregate) already collapses the hot key to one row
-    per map partition for an ALGEBRAIC sum, so at local[32] the two are
-    expected close; the rewrite's win regime is holistic/large per-key
-    state (collect-type, large-cardinality maps) and map-side hash
-    spill, which local parquet scale can't reproduce. The bench records
-    the measured pair + asserts value equality; SCALE.md cites the
-    numbers and the regime. Reference anchor: the 337-872 MB reduce-skew
-    observation (examples/.../terasort/package.html:108-110)."""
-    from hadoop_0_20_2_ljx_spark.operators import skew
-
-    fact = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        F.when(F.pmod(F.col("l_orderkey"), F.lit(10)) < 7, F.lit(1))
-        .otherwise(F.col("l_orderkey"))
-        .alias("k"),
-        (F.col("l_quantity").cast("long")).alias("v"),
-    )
-    results = {}
-    for label, df in (
-        ("skew_groupby_plain", fact.groupBy("k").agg(F.sum("v").alias("sum_value"))),
-        ("skew_groupby_salted", skew.salted_sum(fact, "k", "v", buckets=16)),
-    ):
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        results[label] = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("sum_value").alias("s")
-        ).first()
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label], input_b[label] = sw1 - sw0, ib1 - ib0
-    assert tuple(results["skew_groupby_plain"]) == tuple(
-        results["skew_groupby_salted"]
-    ), results
-
-
-def bench_diff_sparse(spark, timings, shuffle_b, input_b) -> None:
-    """Incremental-diff win regime: a 0.1%-change snapshot pair. The
-    registry fixture (q_audit_diff_incremental) changes ~30% of keys, so
-    locally every bucket is dirty and incremental pays the fingerprint
-    passes for nothing; THIS pair measures the regime the operator is
-    for — sparse drift between replicas — where the dirty-bucket
-    semi-join keeps ~96% of both snapshots out of the full-outer
-    shuffle. Records full vs incremental with result equality asserted;
-    SCALE.md cites the shuffle-byte ratio."""
-    from hadoop_0_20_2_ljx_spark.extensions import audit
-
-    base = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    new = base.withColumn(
-        "cents",
-        F.col("cents")
-        + F.when(F.pmod(F.col("k"), F.lit(1000)) == 0, 1).otherwise(0),
-    )
-    results = {}
-    for label, df in (
-        (
-            "diff_full_sparse",
-            audit.snapshot_diff(base, new, ["k"], ["status", "cents"]),
+def md5_long(salt: str):
+    """A deterministic pseudo-random long per row id: the first 12 hex
+    digits of md5("<salt>-<id>")."""
+    return F.conv(
+        F.substring(
+            F.md5(F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))), 1, 12
         ),
-        (
-            "diff_incr_sparse",
-            audit.incremental_snapshot_diff(
-                base, new, ["k"], ["status", "cents"], n_buckets=4096
-            ),
-        ),
-    ):
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        results[label] = {r["diff_kind"]: r["n"] for r in df.collect()}
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label], input_b[label] = sw1 - sw0, ib1 - ib0
-    assert results["diff_full_sparse"] == results["diff_incr_sparse"], results
+        16,
+        10,
+    ).cast("long")
 
 
-def bench_minhash_10x(spark, timings, shuffle_b, input_b) -> None:
-    """10x stress row for the shuffle-heavy candidate-pair path (the
-    terasort_10m methodology applied to dedup): ~50k generated docs
-    (10x sf0.1's 5000 documents) with a planted 20% exact-duplicate rate
-    (ids 40000..49999 clone ids 0..9999), through the full MinHash(16) +
-    LSH(4 bands) candidate generator. Expected scaling: the signature
-    build (explode shingles -> groupBy doc) is LINEAR in corpus tokens;
-    the pair stage is bounded by bucket collisions, not corpus size —
-    random docs essentially never collide, so candidates ~= the 10,000
-    planted pairs. The assert pins LSH's recall-1.0-on-exact-dups
-    contract at this scale; wall + shuffle bytes land in the artifact
-    next to the sf0.1 `dedup_minhash` row for the delta note."""
-    from hadoop_0_20_2_ljx_spark.extensions import dedup
+def pagerank_edge_stream(spark, n_edges: int):
+    """Uniform random edges, average out-degree ~10 (node count =
+    edges/10)."""
+    nodes = n_edges // 10
+    return spark.range(n_edges).select(
+        (md5_long("s") % F.lit(nodes)).alias("src"),
+        (md5_long("d") % F.lit(nodes)).alias("dst"),
+    )
 
+
+def hub_edges(spark, n_edges: int, cols=("src", "dst"), offset: int = 0):
+    """Hub-heavy random edges: 1/16 of endpoint draws land on one of 10
+    hub nodes (hub degree ~ m/80: the case degree orientation exists for,
+    where id-ordering would emit O(deg^2) wedges), the rest are uniform
+    over m/10 nodes (average degree ~20). ``offset`` shifts every node
+    id, to keep the id space apart from another graph's."""
+    nodes = n_edges // 10
+
+    def node(salt: str):
+        h = md5_long(salt)
+        # selection bit (h % 16) and value bits (h >> 4) are disjoint
+        picked = F.when(h % 16 == 0, F.shiftright(h, 4) % 10).otherwise(
+            F.shiftright(h, 4) % F.lit(nodes)
+        )
+        return picked + F.lit(offset) if offset else picked
+
+    return spark.range(n_edges).select(
+        node("s").alias(cols[0]), node("d").alias(cols[1])
+    )
+
+
+def temporal_event_stream(spark, n_rows: int):
+    """Fixed-density event stream, 1 event/sec overall: users and time
+    span both scale with the data ("more days, more users"; a fixed span
+    would grow range-join OUTPUT quadratically, a property of the
+    question, not the plan)."""
+    users = max(n_rows // 20, 1)
+    span_us = n_rows * 1_000_000
+    return spark.range(n_rows).select(
+        F.col("id").alias("event_id"),
+        (md5_long("u") % users).alias("user_id"),
+        (md5_long("t") % span_us).alias("t_us"),
+        (F.col("id") % 2 == 0).alias("is_click"),
+    )
+
+
+def planted_dup_docs(spark, n_docs: int):
+    """n_docs 33-token docs with a planted 20% exact-duplicate rate: ids
+    from 4n/5 up clone the ids from 0 up, n/5 planted pairs."""
     words = F.array_join(
         F.transform(
             F.sequence(F.lit(0), F.lit(32)),
@@ -268,7 +235,7 @@ def bench_minhash_10x(spark, timings, shuffle_b, input_b) -> None:
                 F.md5(
                     F.concat_ws(
                         "-",
-                        F.pmod(F.col("id"), F.lit(40_000)).cast("string"),
+                        F.pmod(F.col("id"), F.lit(n_docs * 4 // 5)).cast("string"),
                         i.cast("string"),
                     )
                 ),
@@ -278,513 +245,243 @@ def bench_minhash_10x(spark, timings, shuffle_b, input_b) -> None:
         ),
         " ",
     )
-    docs = spark.range(50_000).select(F.col("id").alias("doc_id"), words.alias("text"))
-    sw0, ib0 = _stage_bytes(spark)
-    t = time.time()
-    n_pairs = dedup.minhash_lsh_candidates(docs, "doc_id", "text").count()
-    timings["minhash_dedup_10x"] = time.time() - t
-    sw1, ib1 = _stage_bytes(spark)
-    shuffle_b["minhash_dedup_10x"] = sw1 - sw0
-    input_b["minhash_dedup_10x"] = ib1 - ib0
-    assert n_pairs >= 10_000, f"planted duplicate pairs missed: {n_pairs}"
+    return spark.range(n_docs).select(F.col("id").alias("doc_id"), words.alias("text"))
 
 
-def pagerank_edge_stream(spark, n_edges: int):
-    """Deterministic md5-derived random edge stream (average out-degree
-    ~10; node count = edges/10) shared by bench_pagerank_10x and
-    tools/scale_probe.py's pagerank ladder — hoisted so the ladder rides
-    the same data as the bench pair (the temporal_event_stream pattern)."""
-    nodes = n_edges // 10
-
-    def node(salt: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(nodes)
-        )
-
-    return spark.range(n_edges).select(node("s").alias("src"), node("d").alias("dst"))
+def longdoc_corpus(spark, n_tokens: int):
+    """2,000 docs of n_tokens tokens each: ~200 is the parquet fixture
+    documents' shape, ~2,000 real web-page length."""
+    words = F.array_join(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_tokens - 1)),
+            lambda i: F.concat(F.lit("w"), ((F.col("id") * 31 + i) % 9973).cast("string")),
+        ),
+        " ",
+    )
+    return spark.range(2_000).select(F.col("id").alias("doc_id"), words.alias("text"))
 
 
-def bench_pagerank_10x(spark, timings, shuffle_b, input_b) -> None:
-    """10x stress pair for the iterative-join family (the last family
-    without measured scaling evidence; same methodology as
-    minhash_dedup_10x / ivfpq_10x). Deterministic md5-derived random
-    graphs at 150k and 1.5M edges, average out-degree ~10 (node count =
-    edges/10), PageRank at the registry's 3 rounds. The scaling claims
-    for the delta note: per-round shuffle ∝ edges (each round is one
-    rank equi-join + one partial-agg over the pinned edge table — no
-    stage touches more than the edge count), setup ∝ edges (the
-    distinct + two pins), and round wall stays flat ACROSS rounds at
-    both sizes (the O(log n)-free fixed-round workload; plan trees are
-    lineage-truncated by the per-round pin, so round 2 costs what round
-    0 costs). Edge generation is outside the timed window.
-
-    Auto-broadcast is DISABLED for this pair: at 150k edges the 15k-row
-    rank table broadcasts and the round join ships ~0 edge bytes, at
-    1.5M it flips to a shuffle join — measured 96x round bytes across
-    the boundary, a regime change, not a scaling law. At 100 TB the
-    rank table is itself corpus-scale and never broadcasts, so the
-    shuffle-join regime at BOTH sizes is the curve that extrapolates
-    (small-graph broadcasting stays the default engine behavior and is
-    separately exercised by the registry pagerank row)."""
-    from hadoop_0_20_2_ljx_spark.extensions.graph import pagerank_int
-
-    def gen(n_edges: int):
-        return pagerank_edge_stream(spark, n_edges)
-
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for label, n in (("pagerank_gen_1x", 150_000), ("pagerank_10x", 1_500_000)):
-            edges = gen(n).localCheckpoint()
-            sw0, ib0 = _stage_bytes(spark)
-            t = time.time()
-            n_nodes = pagerank_int(edges, iterations=3).count()
-            timings[label] = time.time() - t
-            sw1, ib1 = _stage_bytes(spark)
-            shuffle_b[label] = sw1 - sw0
-            input_b[label] = ib1 - ib0
-            # every node id in [0, n/10) appears w.h.p. at ~10 draws per id
-            assert n_nodes >= (n // 10) * 99 // 100, f"{label}: {n_nodes} nodes"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-
-
-def bench_ivfpq_10x(spark, timings, shuffle_b, input_b) -> None:
-    """10x stress row for the IVF probe's candidate growth (r7 verdict
-    task 3 — minhash_dedup_10x proved LSH pair scaling; this is the same
-    methodology on the IVF-PQ probe path). Deterministic md5-derived
-    64-dim corpora at 1x (2,000 = sf0.1's embeddings count) and 10x
-    (20,000) at fixed nlist=8 / nprobe=1 / k=5 / 1,000 queries; corpus
-    materialization and pq_train are OUTSIDE the timed window, so the
-    row times the PROBE (assign -> codes-only equi-join -> ADC top-5)
-    whose candidate count is the cost that scales: queries x docs/nlist
-    = 250k ADC pairs at 1x, 2.5M at 10x. Expected curve for the delta
-    note: per-query candidates grow ∝ docs/nlist (wall ~linear once
-    candidates dominate task overhead), while shuffle stays FLAT in
-    corpus size — the probe is an equi-join against the broadcast query
-    assignments, so PQ codes stream map-side and never shuffle; only
-    the O(queries x k) top-k aggregation exchanges rows. That flatness
-    is the 100 TB point of the codes-only probe design. The 1x
-    generated row (not the fixture embed_ivfpq row) is the comparison
-    base so the generator is held constant across the pair."""
-    from hadoop_0_20_2_ljx_spark.extensions import clustering, similarity
-
-    def gen(n: int):
-        vec = F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda i: F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("-", F.col("id").cast("string"), i.cast("string"))
-                    ),
-                    1,
-                    6,
-                ),
-                16,
-                10,
-            ).cast("double")
-            / F.lit(16777216.0)
-            - F.lit(0.5),
-        )
-        return spark.range(n).select(
-            F.col("id").cast("int").alias("vec_id"), vec.alias("embedding")
-        )
-
-    for label, n in (("ivfpq_gen_1x", 2_000), ("ivfpq_10x", 20_000)):
-        # corpus materialized and codebooks trained OUTSIDE the timed
-        # window: the row measures the PROBE path (assign -> codes-only
-        # equi-join -> ADC top-k), the part whose candidate growth is the
-        # scaling claim — not pq_train's fixed cost or the generator.
-        corpus = gen(n).localCheckpoint()
-        books = clustering.pq_train(corpus, "vec_id", "embedding", 8, 8, iters=1)
-        res = similarity.ivfpq_ann(
-            corpus,
-            corpus.filter(F.col("vec_id") < 1000),
-            nlist_ids=list(range(8)),
-            books=books,
-            k=5,
-        )
-        _force(res)  # codegen warm (compile differs per trained codebook)
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        n_rows = res.count()
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label] = sw1 - sw0
-        input_b[label] = ib1 - ib0
-        assert n_rows == 5_000, f"{label}: expected 1000 queries x top-5, got {n_rows}"
-
-
-def bench_text_longdoc(spark, timings, shuffle_b, input_b) -> None:
-    """Doc-LENGTH stress pair for the text family (r8 verdict task 3):
-    the O(tokens^2)->O(tokens) gram-build fix is pinned by a unit growth
-    guard (tests/test_hof_binding.py), this row makes it a permanent
-    bench tripwire at web-page document lengths. 2,000 generated docs of
-    ~200 tokens (1x — the parquet fixture documents' shape) and ~2,000
-    tokens (10x — real web-page length), each corpus through (a) the
-    relational MinHash(16) signature build and (b) the lang-ID +
-    quality-score projection aggregated to a per-language summary.
-    Expected curve for the delta note: wall ~linear in doc length for
-    both stages (the pre-r8 quadratic gram form measured 57x at 2000
-    tokens; the pre-r8.2 lang/quality form stamped 24 tokenizations);
-    minhash shuffle ~linear in doc length (its one exchange carries doc
-    TEXT), lang/quality shuffle FLAT (per-doc scores partial-agg to a
-    constant-width per-language summary). Generation is outside the
-    timed window (localCheckpoint), the terasort_10m methodology."""
-    from hadoop_0_20_2_ljx_spark.extensions import dedup, textstats
-
-    def corpus(n_tokens: int):
-        words = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_tokens - 1)),
-                lambda i: F.concat(
-                    F.lit("w"), ((F.col("id") * 31 + i) % 9973).cast("string")
-                ),
-            ),
-            " ",
-        )
-        return spark.range(2_000).select(
-            F.col("id").alias("doc_id"), words.alias("text")
-        )
-
-    # warm codegen/JIT on a tiny corpus so the 1x row doesn't carry the
-    # first-compile cost (the 1x/10x RATIO is this pair's whole point)
-    warm = corpus(50).localCheckpoint()
-    dedup.minhash_signatures_relational(warm, "doc_id", "text", 16, 3).count()
-    warm.select(
-        textstats.lang_pred_expr("text").alias("lang"),
-        textstats.quality_expr("text").alias("q"),
-    ).groupBy("lang").count().count()
-
-    for label, n_tokens in (("text_longdoc_1x", 200), ("text_longdoc_10x", 2_000)):
-        docs = corpus(n_tokens).localCheckpoint()
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        n_sigs = dedup.minhash_signatures_relational(
-            docs, "doc_id", "text", 16, 3
-        ).count()
-        n_langs = (
-            docs.select(
-                textstats.lang_pred_expr("text").alias("lang"),
-                textstats.quality_expr("text").alias("q"),
-            )
-            .groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("q").alias("avg_q"))
-            .count()
-        )
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label] = sw1 - sw0
-        input_b[label] = ib1 - ib0
-        assert n_sigs == 2_000, f"{label}: {n_sigs} signatures"
-        assert n_langs >= 1, label
-    # regression tripwire: 10x tokens must stay ~linear (10x work, well
-    # under job overhead + 3x headroom); the quadratic form is 100x work
-    assert timings["text_longdoc_10x"] < 30 * max(
-        timings["text_longdoc_1x"], 0.2
-    ), (
-        f"long-doc text stage grew "
-        f"{timings['text_longdoc_10x'] / max(timings['text_longdoc_1x'], 1e-9):.0f}x "
-        f"for 10x tokens: quadratic regression?"
+def hot_key():
+    """Key 0 for 70% of row ids, else one of 1,000 hashed keys."""
+    return F.when(F.pmod(F.col("id"), F.lit(10)) < 7, F.lit(0)).otherwise(
+        F.pmod(F.xxhash64("id"), F.lit(1000)) + 1
     )
 
 
-def bench_simhash_longdoc(spark, timings, shuffle_b, input_b) -> None:
-    """Doc-LENGTH stress pair for the simhash family (r9 verdict task 2:
-    the family's r8->r9 wall moves had only the ambient label and no
-    length-stress row of its own). Same corpus/methodology as
-    bench_text_longdoc: 2,000 generated docs at ~200 tokens (1x) and
-    ~2,000 tokens (10x) through the relational explode->vote
-    simhash_signatures(60). Expected curve: wall ~linear in doc length
-    (tokenize once per doc after the r10 pad_empty_sql fix — the naive
-    padding was a 2x constant, the quadratic HOF class would be 100x);
-    shuffle ~linear in text bytes (the one exchange carries doc TEXT,
-    explode+vote run partition-local). Generation outside the timed
-    window (localCheckpoint)."""
-    from hadoop_0_20_2_ljx_spark.extensions import dedup
-
-    def corpus(n_tokens: int):
-        words = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_tokens - 1)),
-                lambda i: F.concat(
-                    F.lit("w"), ((F.col("id") * 31 + i) % 9973).cast("string")
-                ),
-            ),
-            " ",
-        )
-        return spark.range(2_000).select(
-            F.col("id").alias("doc_id"), words.alias("text")
-        )
-
-    warm = corpus(50).localCheckpoint()
-    dedup.simhash_signatures(warm, "doc_id", "text").count()
-
-    for label, n_tokens in (("simhash_longdoc_1x", 200), ("simhash_longdoc_10x", 2_000)):
-        docs = corpus(n_tokens).localCheckpoint()
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        n_sigs = dedup.simhash_signatures(docs, "doc_id", "text").count()
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label] = sw1 - sw0
-        input_b[label] = ib1 - ib0
-        assert n_sigs == 2_000, f"{label}: {n_sigs} signatures"
-    # regression tripwire: 10x tokens must stay ~linear (10x work + 3x
-    # headroom over job overhead); a quadratic form would be ~100x work
-    assert timings["simhash_longdoc_10x"] < 30 * max(
-        timings["simhash_longdoc_1x"], 0.2
-    ), (
-        f"long-doc simhash stage grew "
-        f"{timings['simhash_longdoc_10x'] / max(timings['simhash_longdoc_1x'], 1e-9):.0f}x "
-        f"for 10x tokens: quadratic regression?"
+def hot_join_fact(spark, n: int):
+    """n join-fact rows on the hot key, with an incompressible payload."""
+    return spark.range(n).select(
+        hot_key().alias("k"), F.md5(F.col("id").cast("string")).alias("payload")
     )
 
 
-def bench_graph_10x(spark, timings, shuffle_b, input_b) -> None:
-    """1x/10x stress pairs for the non-iterative graph family (r8
-    verdict task 4: pagerank has its scaling pair; triangles claims
-    O(m^1.5) via degree orientation and k-core claims bounded peeling —
-    neither had a measured curve). Deterministic md5-derived graphs at
-    100k and 1M edges with a HUB-HEAVY endpoint mix: 1/16 of endpoint
-    draws collapse onto one of 10 hub nodes (hub degree ~ m/80 — the
-    exact case degree orientation exists for: id-ordering would emit
-    O(deg^2) ≈ 1.6e8 wedges across the hubs at 10x, the (degree, id)
-    orientation bounds every node's out-degree at O(sqrt m)); the
-    remaining draws are uniform over m/10 nodes (avg degree ~20).
-    k-core peels the same graphs at k=12 (the ~19-mean Poisson tail:
-    ~4% of nodes start below k, enough to drive a real cascade each
-    round without collapsing the graph — k=15 measured a full collapse
-    to 0 survivors at 100k edges), 6 rounds.
-
-    Auto-broadcast is DISABLED, as in bench_pagerank_10x: at these sizes
-    the node-sized degree/alive tables broadcast locally, but at 100 TB
-    they are corpus-sized and never broadcast — the shuffle-join regime
-    at BOTH sizes is the curve that extrapolates (the registry rows keep
-    default broadcasting). Expected curves for the delta note: triangle
-    wall/shuffle ~ wedge count (~m * avg oriented out-degree here, the
-    O(m^1.5) bound far from tight on this mix); k-core per-round shuffle
-    ∝ surviving edges, so ~linear in m at fixed peel depth."""
-    from hadoop_0_20_2_ljx_spark.extensions.graph import kcore_peel, triangle_counts
-
-    def gen(n_edges: int):
-        nodes = n_edges // 10
-
-        def node(salt: str):
-            h = F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long")
-            # selection bit (h % 16) and value bits (h >> 4) are disjoint
-            return F.when(
-                h % 16 == 0, F.shiftright(h, 4) % 10
-            ).otherwise(F.shiftright(h, 4) % F.lit(nodes))
-
-        return spark.range(n_edges).select(
-            node("s").alias("src"), node("d").alias("dst")
-        )
-
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # Warm the triangle/k-core plans on a tiny graph first — the same
-        # warm pass bench_text_longdoc/bench_simhash_longdoc already run,
-        # adopted here in r14 as a measurement fix (disclosed in
-        # OPTIMIZATION_r14.md with the old numbers): the 1x rung
-        # otherwise pays the section's whole-plan Janino compile inside
-        # its timed window — measured 6.05 s at 1x vs 4.56 s at 10x in an
-        # isolated session (the 1x wall EXCEEDED the 10x wall, a
-        # plan-compile artifact, not graph work; the r14 full-bench
-        # baseline recorded 9.04 s for the 1x rung at 0.1% steal). The
-        # pair's scaling claim stays anchored on shuffle bytes either
-        # way; the walls now measure the graphs.
-        warm_edges = gen(10_000).localCheckpoint()
-        triangle_counts(warm_edges).count()
-        kcore_peel(warm_edges, k=12, rounds=6).count()
-        for label, n in (("triangles_gen_1x", 100_000), ("triangles_10x", 1_000_000)):
-            edges = gen(n).localCheckpoint()
-            sw0, ib0 = _stage_bytes(spark)
-            t = time.time()
-            n_tri_nodes = triangle_counts(edges).count()
-            timings[label] = time.time() - t
-            sw1, ib1 = _stage_bytes(spark)
-            shuffle_b[label] = sw1 - sw0
-            input_b[label] = ib1 - ib0
-            # the hub mix guarantees a dense hub core: hubs close
-            # triangles through shared neighbors at both sizes
-            assert n_tri_nodes > 100, f"{label}: {n_tri_nodes} triangle nodes"
-        for label, n in (("kcore_gen_1x", 100_000), ("kcore_10x", 1_000_000)):
-            edges = gen(n).localCheckpoint()
-            sw0, ib0 = _stage_bytes(spark)
-            t = time.time()
-            survivors = kcore_peel(edges, k=12, rounds=6)
-            n_core = survivors.count()
-            timings[label] = time.time() - t
-            sw1, ib1 = _stage_bytes(spark)
-            shuffle_b[label] = sw1 - sw0
-            input_b[label] = ib1 - ib0
-            # k=12 sits ~2 sigma under the ~19 mean: a core must survive
-            assert n_core > 100, f"{label}: {n_core} core nodes"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+def hot_join_dim(spark):
+    """The 1,001-key dimension of hot_join_fact."""
+    return spark.range(1001).select(
+        F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("attr")
+    )
 
 
-def temporal_event_stream(spark, n_rows: int):
-    """Fixed-density generated event stream (1 event/sec overall; users
-    and time span scale with the data) shared by bench_temporal_10x and
-    tools/scale_probe.py's as-of ladder — identical expressions to the
-    r9 in-function generator, hoisted so the ladder rides the same data."""
-    users = max(n_rows // 20, 1)
-    span_us = n_rows * 1_000_000
+def hot_window_fact(spark, n: int):
+    """n (u, t, v) rows for a running sum of v per u in t order, u on the
+    hot key."""
+    return spark.range(n).select(
+        hot_key().alias("u"),
+        F.col("id").alias("t"),
+        F.pmod(F.col("id"), F.lit(97)).alias("v"),
+    )
 
-    def h(salt: str):
-        return F.conv(
+
+def direct_running_sum(fact):
+    """hot_window_fact's running sum as column rs through the DIRECT keyed
+    window: the hot key's rows all pass one task's window sorter."""
+    from pyspark.sql.window import Window
+
+    frame = Window.partitionBy("u").orderBy("t").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return fact.withColumn("rs", F.sum("v").over(frame))
+
+
+def consume(df, total, *hashed) -> tuple:
+    """(row count, sum of ``total``, decimal sum of xxhash64(``hashed``)).
+    The aggregate reads every column, so Catalyst cannot prune a payload
+    out of the exchanges as a bare count() would (7M identical hot keys
+    alone lz4-compress to ~nothing), and it doubles as value parity
+    between two plans. Decimal, because a BIGINT sum of 64-bit hashes
+    overflows under ANSI."""
+    return tuple(
+        df.agg(
+            F.count(F.lit(1)),
+            F.sum(total),
+            F.sum(F.xxhash64(*hashed).cast("decimal(38,0)")),
+        ).first()
+    )
+
+
+# ------------------------------------------------------------- stress rows
+
+
+def _pkg(name: str):
+    """An engine module, imported on first use."""
+    import importlib
+
+    return importlib.import_module(f"hadoop_0_20_2_ljx_spark.{name}")
+
+
+def _same(ms: dict) -> None:
+    """Cross-variant check: every variant returned the same result."""
+    results = {label: m["result"] for label, m in ms.items()}
+    first = next(iter(results.values()))
+    assert all(r == first for r in results.values()), results
+
+
+def _linear_in_tokens(ms: dict) -> None:
+    """Cross-rung tripwire: the last rung (10x tokens) must stay ~linear
+    over the first (10x work, well under job overhead plus 3x headroom);
+    a quadratic form is 100x work."""
+    labels = list(ms)
+    lo, hi = labels[0], labels[-1]
+    w_lo, w_hi = ms[lo]["walls"][0], ms[hi]["walls"][0]
+    assert w_hi < 30 * max(w_lo, 0.2), (
+        f"{hi} grew {w_hi / max(w_lo, 1e-9):.0f}x over {lo} for 10x tokens: "
+        "quadratic regression?"
+    )
+
+
+def _lineitem_hot(spark, value):
+    """lineitem with 70% of rows on key 1 (a Zipf-1 head far beyond AQE's
+    skew threshold), next to ``value``."""
+    return spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
+        F.when(F.pmod(F.col("l_orderkey"), F.lit(10)) < 7, F.lit(1))
+        .otherwise(F.col("l_orderkey"))
+        .alias("k"),
+        value,
+    )
+
+
+def _snapshots(spark, _n):
+    """orders as (k, status, cents), and a copy where 0.1% of keys drift."""
+    base = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderstatus").alias("status"),
+        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
+    )
+    new = base.withColumn(
+        "cents",
+        F.col("cents") + F.when(F.pmod(F.col("k"), F.lit(1000)) == 0, 1).otherwise(0),
+    )
+    return base, new
+
+
+def _diff_kinds(spark, diff, _n) -> dict:
+    return {r["diff_kind"]: r["n"] for r in diff.collect()}
+
+
+def _ivf_corpus(spark, n: int):
+    """n 64-dim md5-derived vectors."""
+    vec = F.transform(
+        F.sequence(F.lit(0), F.lit(63)),
+        lambda i: F.conv(
             F.substring(
-                F.md5(F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))),
+                F.md5(F.concat_ws("-", F.col("id").cast("string"), i.cast("string"))),
                 1,
-                12,
+                6,
             ),
             16,
             10,
-        ).cast("long")
-
-    return spark.range(n_rows).select(
-        F.col("id").alias("event_id"),
-        (h("u") % users).alias("user_id"),
-        (h("t") % span_us).alias("t_us"),
-        (F.col("id") % 2 == 0).alias("is_click"),
+        ).cast("double")
+        / F.lit(16777216.0)
+        - F.lit(0.5),
+    )
+    return spark.range(n).select(
+        F.col("id").cast("int").alias("vec_id"), vec.alias("embedding")
     )
 
 
-def bench_temporal_10x(spark, timings, shuffle_b, input_b) -> None:
-    """1x/10x stress pair for the temporal-join family — the last
-    operator family without measured scaling evidence (asof/range claim
-    one-shuffle-sweep / bin-equi-join shapes in SCALE.md). Generated
-    event streams at 100k and 1M rows with FIXED density: users and the
-    covered time span both scale 10x (the "more days, more users" model
-    — fixed-span growth would grow range-join OUTPUT quadratically,
-    which is a property of the question, not the plan). Workloads:
-    (a) backward as-of join of the click half against the deduped
-    purchase half — one union exchange on user_id, output = clicks, so
-    wall and shuffle should scale ~linearly; (b) binned range join of
-    purchases into 1-hour windows opened by every ~50th event —
-    bin_width = window length, so each interval explodes to <= 2 bins
-    and shuffle stays ~linear at fixed density (the no-cross-product
-    claim under load)."""
-    from hadoop_0_20_2_ljx_spark.extensions import temporal
+def _ivf_probe(spark, corpus, _n):
+    """Train the codebooks and build the probe of the first 1,000 vectors,
+    then run it once: the codegen compile differs per trained codebook."""
+    books = _pkg("extensions.clustering").pq_train(
+        corpus, "vec_id", "embedding", 8, 8, iters=1
+    )
+    res = _pkg("extensions.similarity").ivfpq_ann(
+        corpus,
+        corpus.filter(F.col("vec_id") < 1000),
+        nlist_ids=list(range(8)),
+        books=books,
+        k=5,
+    )
+    _force(res)
+    return res
 
-    def gen(n_rows: int):
-        return temporal_event_stream(spark, n_rows)
 
-    # warm codegen on a tiny stream (the 1x/10x RATIO is the point)
-    warm = gen(2_000).localCheckpoint()
-    temporal.asof_join(
-        warm.where("is_click").select("event_id", "user_id", "t_us"),
-        warm.where(~F.col("is_click"))
+def _text_stages(spark, docs, _n) -> tuple:
+    """(signatures, languages): the relational MinHash(16) signature build,
+    then the lang-ID + quality projection aggregated per language."""
+    dedup, textstats = _pkg("extensions.dedup"), _pkg("extensions.textstats")
+    n_sigs = dedup.minhash_signatures_relational(docs, "doc_id", "text", 16, 3).count()
+    n_langs = (
+        docs.select(
+            textstats.lang_pred_expr("text").alias("lang"),
+            textstats.quality_expr("text").alias("q"),
+        )
+        .groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("n"), F.avg("q").alias("avg_q"))
+        .count()
+    )
+    return n_sigs, n_langs
+
+
+def _pagerank(spark, edges, _n) -> tuple:
+    """(node count, per-phase walls) of 3 PageRank rounds."""
+    phases: dict[str, float] = {}
+    graph = _pkg("extensions.graph")
+    return graph.pagerank_int(edges, iterations=3, phase_seconds=phases).count(), phases
+
+
+def _asof_inputs(spark, ev, _n):
+    """Clicks, and purchases deduped per (user, time)."""
+    clicks = ev.where("is_click").select("event_id", "user_id", "t_us")
+    purchases = (
+        ev.where(~F.col("is_click"))
         .groupBy("user_id", "t_us")
-        .agg(F.count(F.lit(1)).cast("double").alias("pval")),
-        on=["user_id"], left_ts="t_us", right_ts="t_us", value_cols=["pval"],
-    ).agg(F.count("pval")).first()
-
-    # the asof aggregate must CONSUME the matched values: a bare count()
-    # lets Catalyst prune the whole window sweep (the markers feed no
-    # output column) and the "asof" row would time a filter
-    for label, n in (("asof_gen_1x", 100_000), ("asof_10x", 1_000_000)):
-        ev = gen(n).localCheckpoint()
-        clicks = ev.where("is_click").select("event_id", "user_id", "t_us")
-        purchases = (
-            ev.where(~F.col("is_click"))
-            .groupBy("user_id", "t_us")
-            .agg(F.count(F.lit(1)).cast("double").alias("pval"))
-        )
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        row = (
-            temporal.asof_join(
-                clicks, purchases, on=["user_id"], left_ts="t_us",
-                right_ts="t_us", value_cols=["pval"],
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_out"),
-                F.count("pval").alias("n_matched"),
-            )
-            .first()
-        )
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label] = sw1 - sw0
-        input_b[label] = ib1 - ib0
-        assert row["n_out"] == n // 2, f"{label}: asof must keep every click"
-        # ~20 purchases/user: all but the earliest-click sliver match
-        assert row["n_matched"] > n // 4, f"{label}: {row['n_matched']} matched"
-
-    # shuffle-join regime for the range pair, as in bench_pagerank_10x /
-    # bench_graph_10x: the interval side broadcasts at these sizes but is
-    # corpus-sized at 100 TB
-    HOUR_US = 3_600_000_000
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for label, n in (("range_gen_1x", 100_000), ("range_10x", 1_000_000)):
-            ev = gen(n).localCheckpoint()
-            points = ev.where(~F.col("is_click")).select("event_id", "t_us")
-            intervals = ev.where(F.col("event_id") % 50 == 0).select(
-                F.col("event_id").alias("win_id"),
-                F.col("t_us").alias("w_s"),
-                (F.col("t_us") + HOUR_US).alias("w_e"),
-            )
-            sw0, ib0 = _stage_bytes(spark)
-            t = time.time()
-            n_pairs = temporal.range_join_binned(
-                points, intervals, "t_us", "w_s", "w_e", bin_width=HOUR_US
-            ).count()
-            timings[label] = time.time() - t
-            sw1, ib1 = _stage_bytes(spark)
-            shuffle_b[label] = sw1 - sw0
-            input_b[label] = ib1 - ib0
-            # fixed density: ~n/100 windows x ~1800 in-window points
-            assert n_pairs > n * 10, f"{label}: suspiciously few pairs ({n_pairs})"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+        .agg(F.count(F.lit(1)).cast("double").alias("pval"))
+    )
+    return clicks, purchases
 
 
-def bench_source_sim_cap(spark, timings, shuffle_b, input_b) -> None:
-    """max_shingle_freq measured in its WIN regime (r7 verdict task 5 —
-    the r7 non-result stands on fixture text, which shares no boilerplate
-    across sources; this synthesizes the regime the knob exists for).
-    Corpus: 1,000 sources x 4 docs; every doc carries the SAME
-    1,000-token template block (~1k distinct shingles each present in
-    all 1,000 sources — the exact side's quadratic driver: ~1k shingles
-    x 10^6 group-pairs ≈ 10^9 intersection-join rows) plus 8 doc-unique
-    md5 tokens (group-frequency 1 — the discrimination signal). Rows:
-    `source_sim_uncapped` vs `source_sim_cap100` (max_shingle_freq=100 —
-    boilerplate shingles leave the intersection JOIN, unique ones stay).
-    Materialization is localCheckpoint, NOT count(): inter enters the
-    final plan as a unique-key LEFT join, which Catalyst correctly
-    eliminates under count()'s column pruning — a count-timed "bench"
-    would skip the very stage being measured. The contract assert
-    re-proves the tests/test_dedup_cap.py property at bench scale,
-    distributed (no row collect): same 499,500 pairs, est_bp
-    bit-identical (signatures never see the cap), capped jaccard_bp <=
-    uncapped everywhere."""
-    from hadoop_0_20_2_ljx_spark.extensions import dedup
+def _asof(spark, inputs, _n):
+    # the aggregate must CONSUME the matched values: a bare count() lets
+    # Catalyst prune the whole window sweep (the markers feed no output
+    # column) and the row would time a filter
+    joined = _pkg("extensions.temporal").asof_join(
+        *inputs, on=["user_id"], left_ts="t_us", right_ts="t_us", value_cols=["pval"]
+    )
+    return joined.agg(
+        F.count(F.lit(1)).alias("n_out"), F.count("pval").alias("n_matched")
+    ).first()
 
+
+HOUR_US = 3_600_000_000
+
+
+def _range_inputs(spark, ev, _n):
+    """Purchase points, and 1-hour windows opened by every 50th event."""
+    points = ev.where(~F.col("is_click")).select("event_id", "t_us")
+    intervals = ev.where(F.col("event_id") % 50 == 0).select(
+        F.col("event_id").alias("win_id"),
+        F.col("t_us").alias("w_s"),
+        (F.col("t_us") + HOUR_US).alias("w_e"),
+    )
+    return points, intervals
+
+
+def _boilerplate_docs(spark, n_sources: int):
+    """4 docs per source. Every doc carries the SAME 1,000-token template
+    block (~1k shingles present in every source: the exact side's
+    quadratic driver) plus 8 doc-unique md5 tokens (group frequency 1:
+    the discrimination signal)."""
     bp_block = F.array_join(
         F.transform(
             F.sequence(F.lit(0), F.lit(999)),
@@ -796,113 +493,464 @@ def bench_source_sim_cap(spark, timings, shuffle_b, input_b) -> None:
         F.transform(
             F.sequence(F.lit(0), F.lit(7)),
             lambda i: F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "u", F.col("id").cast("string"), i.cast("string")
-                    )
-                ),
+                F.md5(F.concat_ws("u", F.col("id").cast("string"), i.cast("string"))),
                 1,
                 10,
             ),
         ),
         " ",
     )
-    docs = spark.range(4_000).select(
-        F.concat(F.lit("src"), F.pmod(F.col("id"), F.lit(1000)).cast("string")).alias(
-            "source"
-        ),
+    return spark.range(4 * n_sources).select(
+        F.concat(
+            F.lit("src"), F.pmod(F.col("id"), F.lit(n_sources)).cast("string")
+        ).alias("source"),
         F.concat_ws(" ", bp_block, uniq).alias("text"),
     )
-    results = {}
-    for label, cap in (("source_sim_uncapped", None), ("source_sim_cap100", 100)):
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        res = dedup.group_similarity_matrix(
+
+
+def _source_sim(cap):
+    def run(spark, docs, _n):
+        res = _pkg("extensions.dedup").group_similarity_matrix(
             docs, "source", "text", num_hashes=16, shingle_k=3, max_shingle_freq=cap
         )
-        res = res.localCheckpoint()  # materialize inside the timed window
-        timings[label] = time.time() - t
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label] = sw1 - sw0
-        input_b[label] = ib1 - ib0
-        results[label] = res
-    unc, cap = results["source_sim_uncapped"], results["source_sim_cap100"]
-    joined = unc.select(
-        "source_a",
-        "source_b",
-        F.col("est_bp").alias("e_u"),
-        F.col("jaccard_bp").alias("j_u"),
-    ).join(
-        cap.select(
+        # materialized by localCheckpoint INSIDE the timed window, not by
+        # count(): the capped intersection enters the final plan as a
+        # unique-key LEFT join that count()'s column pruning eliminates,
+        # so a count-timed row would skip the very stage it measures
+        return res.localCheckpoint()
+
+    return run
+
+
+def _cap_contract(ms: dict) -> None:
+    """Signatures never see the cap: every pair is kept with a
+    bit-identical est_bp, and the capped jaccard_bp never exceeds the
+    uncapped one (the tests/test_dedup_cap.py property, distributed)."""
+    unc = ms["source_sim_uncapped"]["result"]
+    cap = ms["source_sim_cap100"]["result"]
+
+    def side(df, tag):
+        return df.select(
             "source_a",
             "source_b",
-            F.col("est_bp").alias("e_c"),
-            F.col("jaccard_bp").alias("j_c"),
-        ),
-        ["source_a", "source_b"],
-        "full_outer",
-    )
-    bad = joined.filter(
-        F.col("e_u").isNull()
-        | F.col("e_c").isNull()
-        | (F.col("e_u") != F.col("e_c"))
-        | (F.col("j_c") > F.col("j_u"))
-    ).count()
-    n_pairs = unc.count()
-    assert bad == 0 and n_pairs == 499_500, f"cap contract violated: {bad}/{n_pairs}"
-
-
-def bench_window_hotkey(spark, timings, shuffle_b, input_b) -> None:
-    """Window hot-key taxonomy pair (r13, SCALE.md row): per-key running
-    sum where one key owns 70% of 2M rows. The DIRECT keyed window pushes
-    the hot key's 1.4M rows through ONE task's window sorter; the
-    decomposed form (skew.chunked_running_sum) spreads them over 256
-    (key, chunk) windows + an O(keys x chunks) offset table. The claim is
-    value equality + the per-plan byte shape, tracked every round; walls
-    are single-shot like the other stress pairs (ratio claims). The
-    consuming aggregate touches u/t/rs so Catalyst cannot prune the
-    payload out of the exchanges (the r12 probe lesson)."""
-    from pyspark.sql.window import Window
-
-    from hadoop_0_20_2_ljx_spark.operators import skew
-
-    n = 2_000_000
-    fact = spark.range(n).select(
-        F.when(F.pmod("id", F.lit(10)) < 7, F.lit(0))
-        .otherwise(F.pmod(F.xxhash64("id"), F.lit(1000)) + 1)
-        .alias("u"),
-        F.col("id").alias("t"),
-        F.pmod("id", F.lit(97)).alias("v"),
-    ).localCheckpoint()
-    direct = fact.withColumn(
-        "rs",
-        F.sum("v").over(
-            Window.partitionBy("u")
-            .orderBy("t")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    chunked = skew.chunked_running_sum(
-        fact, "u", [F.col("t")], "v", F.expr(f"t div {n // 256}"), "rs"
-    )
-    results = {}
-    for label, df in (
-        ("window_hotkey_direct", direct),
-        ("window_hotkey_chunked", chunked),
-    ):
-        sw0, ib0 = _stage_bytes(spark)
-        t0 = time.time()
-        results[label] = tuple(
-            df.agg(
-                F.count(F.lit(1)),
-                F.sum("rs"),
-                F.sum(F.xxhash64("u", "t", "rs").cast("decimal(38,0)")),
-            ).first()
+            F.col("est_bp").alias(f"e_{tag}"),
+            F.col("jaccard_bp").alias(f"j_{tag}"),
         )
-        timings[label] = time.time() - t0
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label], input_b[label] = sw1 - sw0, ib1 - ib0
-    assert results["window_hotkey_direct"] == results["window_hotkey_chunked"], results
+
+    bad = (
+        side(unc, "u")
+        .join(side(cap, "c"), ["source_a", "source_b"], "full_outer")
+        .filter(
+            F.col("e_u").isNull()
+            | F.col("e_c").isNull()
+            | (F.col("e_u") != F.col("e_c"))
+            | (F.col("j_c") > F.col("j_u"))
+        )
+        .count()
+    )
+    assert bad == 0, f"cap contract violated on {bad} pairs"
+
+
+# Broadcast off: at these sizes the node-, rank-, dim- and interval-sized
+# tables broadcast locally, but at 100 TB they are corpus-sized and never
+# do, so the shuffle-join regime at every size is the curve that
+# extrapolates (the registry rows keep default broadcasting). pagerank
+# measured the difference: a 96x round-byte jump where 150k edges
+# broadcast and 1.5M do not, a strategy switch, not a scaling law.
+NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+# The generated-data stress families, one row each, named after the bench
+# section (the cpu_steal_pct "section:<name>" key) they record. Each
+# variant's bench rungs are the labels bench.py records; the ladder rungs
+# run one decade past them in tools/scale_probe.py (``<variant>`` names the
+# ladder there, ``<variant>_xl`` adds the opt-in rung). A new rung is one
+# entry here. Row keys:
+#   variants  name -> {run, bench, ladder, xl, check, prep, confs, report}:
+#             run(spark, source, n) is the timed call; prep(spark, source,
+#             n) builds its input outside the timer; check(result, n) must
+#             hold at every rung; report(result) adds scale_probe keys
+#   gen       (spark, n) -> the rung's source, generated outside the timer
+#   pin       localCheckpoint the source before the timer (default True;
+#             scale_probe pins every row)
+#   warm      size of one untimed pass of each variant before its rungs,
+#             so the first rung does not pay the plans' codegen compile
+#   confs     session confs for the whole row, restored afterwards
+#   cross     check over every rung's measure() record
+STRESS = {
+    # TeraGen -> total-order sort -> TeraValidate. bench.py records these
+    # two rungs median-of-3 as headline rows, not as a stress section. The
+    # 10x rung is the range-partition and spill path past the parquet
+    # fixtures' sf0.1 (~17 MB lineitem): 10^7 100-byte rows ~= 1 GB.
+    "bench_terasort": {
+        "warm": 100_000,
+        "variants": {
+            "terasort": {
+                "run": lambda spark, _src, n: bench_terasort(spark, n),
+                "bench": (("terasort_1m", 1_000_000), ("terasort_10m", 10_000_000)),
+                "ladder": (
+                    ("terasort_1m", 1_000_000),
+                    ("terasort_10m", 10_000_000),
+                    ("terasort_100m", 100_000_000),
+                ),
+                "xl": (("terasort_1000m", 1_000_000_000),),
+            }
+        },
+    },
+    # Incremental diff in its win regime: 0.1% drift between replicas,
+    # where the dirty-bucket semi-join keeps ~96% of both snapshots out of
+    # the full-outer shuffle (the registry fixture changes ~30% of keys,
+    # so there every bucket is dirty).
+    "bench_diff_sparse": {
+        "gen": _snapshots,
+        "pin": False,
+        "variants": {
+            "diff_full_sparse": {
+                "prep": lambda spark, s, _n: _pkg("extensions.audit").snapshot_diff(
+                    *s, ["k"], ["status", "cents"]
+                ),
+                "run": _diff_kinds,
+                "bench": (("diff_full_sparse", None),),
+            },
+            "diff_incr_sparse": {
+                "prep": lambda spark, s, _n: _pkg(
+                    "extensions.audit"
+                ).incremental_snapshot_diff(*s, ["k"], ["status", "cents"], n_buckets=4096),
+                "run": _diff_kinds,
+                "bench": (("diff_incr_sparse", None),),
+            },
+        },
+        "cross": _same,
+    },
+    # Hot-key join against orders, AQE skew split vs skew.salted_join.
+    # Broadcast off: the dim is 10^9 rows and broadcast-ineligible in the
+    # regime the salted rewrite exists for, so both variants shuffle.
+    "bench_skew_join": {
+        "gen": lambda spark, _n: (
+            _lineitem_hot(spark, "l_quantity"),
+            spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
+                F.col("o_orderkey").alias("k"), "o_totalprice"
+            ),
+        ),
+        "pin": False,
+        "confs": NO_BROADCAST,
+        "variants": {
+            "skew_join_plain": {
+                "prep": lambda spark, fd, _n: fd[0].join(fd[1], "k"),
+                "run": lambda spark, df, _n: df.count(),
+                "bench": (("skew_join_plain", None),),
+            },
+            "skew_join_salted": {
+                "prep": lambda spark, fd, _n: _pkg("operators.skew").salted_join(
+                    *fd, "k", buckets=16
+                ),
+                "run": lambda spark, df, _n: df.count(),
+                "bench": (("skew_join_salted", None),),
+            },
+        },
+        "cross": _same,
+    },
+    # Hot-key aggregation, plain groupBy-sum vs the two-phase
+    # skew.salted_sum. AQE cannot split one groupBy key's state, so salting
+    # is the only rewrite; map-side partial agg already collapses an
+    # ALGEBRAIC sum per map partition, so locally the two are expected
+    # close (the win regime is holistic per-key state and map-side spill).
+    "bench_skew_groupby": {
+        "gen": lambda spark, _n: _lineitem_hot(
+            spark, F.col("l_quantity").cast("long").alias("v")
+        ),
+        "pin": False,
+        "variants": {
+            "skew_groupby_plain": {
+                "prep": lambda spark, fact, _n: fact.groupBy("k").agg(
+                    F.sum("v").alias("sum_value")
+                ),
+                "run": lambda spark, df, _n: df.agg(
+                    F.count(F.lit(1)).alias("n"), F.sum("sum_value").alias("s")
+                ).first(),
+                "bench": (("skew_groupby_plain", None),),
+            },
+            "skew_groupby_salted": {
+                "prep": lambda spark, fact, _n: _pkg("operators.skew").salted_sum(
+                    fact, "k", "v", buckets=16
+                ),
+                "run": lambda spark, df, _n: df.agg(
+                    F.count(F.lit(1)).alias("n"), F.sum("sum_value").alias("s")
+                ).first(),
+                "bench": (("skew_groupby_salted", None),),
+            },
+        },
+        "cross": _same,
+    },
+    # MinHash(16) + LSH(4 bands) candidates: the signature build is linear
+    # in corpus tokens, the pair stage is bounded by bucket collisions
+    # (random docs essentially never collide, so candidates ~= the planted
+    # pairs). The check pins LSH's recall 1.0 on exact duplicates. The
+    # bench rung times generation too (its byte record has no pin).
+    "bench_minhash_10x": {
+        "gen": planted_dup_docs,
+        "pin": False,
+        "warm": 1_000,
+        "variants": {
+            "minhash": {
+                "run": lambda spark, docs, _n: _pkg(
+                    "extensions.dedup"
+                ).minhash_lsh_candidates(docs, "doc_id", "text").count(),
+                "check": lambda pairs, n: pairs >= n // 5,
+                "bench": (("minhash_dedup_10x", 50_000),),
+                "ladder": (
+                    ("minhash_5k", 5_000),
+                    ("minhash_50k", 50_000),
+                    ("minhash_500k", 500_000),
+                ),
+                "xl": (("minhash_5000k", 5_000_000),),
+            }
+        },
+    },
+    # PageRank at the registry's 3 rounds: per-round shuffle ∝ edges (one
+    # rank equi-join + one partial agg over the pinned edge table), setup ∝
+    # edges, and round walls flat across rounds (the per-round pin
+    # truncates lineage); scale_probe records the phase walls.
+    "bench_pagerank_10x": {
+        "gen": pagerank_edge_stream,
+        "warm": 10_000,
+        "confs": NO_BROADCAST,
+        "variants": {
+            "pagerank": {
+                "run": _pagerank,
+                # every node id in [0, n/10) appears w.h.p. (~20 draws per id)
+                "check": lambda r, n: r[0] >= (n // 10) * 99 // 100,
+                "report": lambda r: {f"phase_{k}_s": round(v, 2) for k, v in r[1].items()},
+                "bench": (("pagerank_gen_1x", 150_000), ("pagerank_10x", 1_500_000)),
+                "ladder": (
+                    ("pagerank_150k", 150_000),
+                    ("pagerank_1500k", 1_500_000),
+                    ("pagerank_15000k", 15_000_000),
+                ),
+                "xl": (("pagerank_150000k", 150_000_000),),
+            }
+        },
+    },
+    # The IVF-PQ PROBE (assign -> codes-only equi-join -> ADC top-5) at
+    # nlist=8 / nprobe=1 over 1,000 queries: candidates grow ∝ docs/nlist,
+    # while shuffle stays FLAT in corpus size (PQ codes stream map-side
+    # against the broadcast query assignments; only the O(queries x k)
+    # top-k exchanges rows). pq_train and the compile are outside the timer.
+    "bench_ivfpq_10x": {
+        "gen": _ivf_corpus,
+        "variants": {
+            "ivfpq": {
+                "prep": _ivf_probe,
+                "run": lambda spark, res, _n: res.count(),
+                # top-5 of each of the 1,000 queries (all vectors when fewer)
+                "check": lambda rows, n: rows == 5 * min(n, 1_000),
+                "bench": (("ivfpq_gen_1x", 2_000), ("ivfpq_10x", 20_000)),
+            }
+        },
+    },
+    # Doc-LENGTH tripwire for the O(tokens^2) -> O(tokens) gram-build fix
+    # (the unit growth guard is tests/test_hof_binding.py): wall ~linear in
+    # doc length; minhash shuffle ~linear (its one exchange carries doc
+    # TEXT), lang/quality shuffle flat (per-language partial agg).
+    "bench_text_longdoc": {
+        "gen": longdoc_corpus,
+        "warm": 50,
+        "variants": {
+            "text_longdoc": {
+                "run": _text_stages,
+                "check": lambda r, n: r[0] == 2_000 and r[1] >= 1,
+                "bench": (("text_longdoc_1x", 200), ("text_longdoc_10x", 2_000)),
+            }
+        },
+        "cross": _linear_in_tokens,
+    },
+    # The same tripwire for the relational explode -> vote simhash(60):
+    # tokenize once per doc (dedup.pad_empty_sql), shuffle ~linear in text.
+    "bench_simhash_longdoc": {
+        "gen": longdoc_corpus,
+        "warm": 50,
+        "variants": {
+            "simhash_longdoc": {
+                "run": lambda spark, docs, _n: _pkg("extensions.dedup")
+                .simhash_signatures(docs, "doc_id", "text")
+                .count(),
+                "check": lambda sigs, n: sigs == 2_000,
+                "bench": (("simhash_longdoc_1x", 200), ("simhash_longdoc_10x", 2_000)),
+            }
+        },
+        "cross": _linear_in_tokens,
+    },
+    # Triangles (wedge work bounded by the (degree, id) orientation) and
+    # the k-core peel at k=12 x 6 rounds on hub-heavy graphs. k=12 sits ~2
+    # sigma under the ~19 mean degree: ~4% of nodes start below k, a real
+    # cascade each round without collapsing the graph (k=15 collapsed to 0
+    # survivors at 100k edges). Per-round k-core shuffle ∝ surviving edges.
+    "bench_graph_10x": {
+        "gen": hub_edges,
+        "warm": 10_000,
+        "confs": NO_BROADCAST,
+        "variants": {
+            "triangles": {
+                "run": lambda spark, edges, _n: _pkg("extensions.graph")
+                .triangle_counts(edges)
+                .count(),
+                # hubs close triangles through shared neighbors
+                "check": lambda nodes, n: nodes > 100,
+                "bench": (("triangles_gen_1x", 100_000), ("triangles_10x", 1_000_000)),
+                "ladder": (
+                    ("triangles_100k", 100_000),
+                    ("triangles_1000k", 1_000_000),
+                    ("triangles_10000k", 10_000_000),
+                ),
+                "xl": (("triangles_100000k", 100_000_000),),
+            },
+            "kcore": {
+                "run": lambda spark, edges, _n: _pkg("extensions.graph")
+                .kcore_peel(edges, k=12, rounds=6)
+                .count(),
+                "check": lambda core, n: core > 100,
+                "bench": (("kcore_gen_1x", 100_000), ("kcore_10x", 1_000_000)),
+                "ladder": (
+                    ("kcore_100k", 100_000),
+                    ("kcore_1000k", 1_000_000),
+                    ("kcore_10000k", 10_000_000),
+                ),
+                "xl": (("kcore_100000k", 100_000_000),),
+            },
+        },
+    },
+    # (a) backward as-of join of clicks against deduped purchases: one
+    # union exchange on user_id, output = clicks, so wall and shuffle
+    # ~linear; (b) binned range join of purchases into 1-hour windows:
+    # bin width = window length, so each interval explodes to <= 2 bins
+    # and shuffle stays ~linear at fixed density (no cross product).
+    "bench_temporal_10x": {
+        "gen": temporal_event_stream,
+        "warm": 2_000,
+        "variants": {
+            "asof": {
+                "prep": _asof_inputs,
+                "run": _asof,
+                # ~20 purchases per user: all but the earliest-click sliver match
+                "check": lambda r, n: r["n_out"] == n // 2 and r["n_matched"] > n // 4,
+                "bench": (("asof_gen_1x", 100_000), ("asof_10x", 1_000_000)),
+                "ladder": (
+                    ("asof_100k", 100_000),
+                    ("asof_1000k", 1_000_000),
+                    ("asof_10000k", 10_000_000),
+                ),
+                "xl": (("asof_100000k", 100_000_000),),
+            },
+            "range": {
+                "confs": NO_BROADCAST,
+                "prep": _range_inputs,
+                "run": lambda spark, pi, _n: _pkg("extensions.temporal")
+                .range_join_binned(*pi, "t_us", "w_s", "w_e", bin_width=HOUR_US)
+                .count(),
+                # ~n/100 windows x ~1,800 in-window points
+                "check": lambda pairs, n: pairs > n * 10,
+                "bench": (("range_gen_1x", 100_000), ("range_10x", 1_000_000)),
+            },
+        },
+    },
+    # max_shingle_freq in its win regime: 1,000 sources sharing one
+    # boilerplate block (~1k shingles x 10^6 group pairs ≈ 10^9
+    # intersection-join rows uncapped); cap 100 drops the boilerplate
+    # shingles from the intersection JOIN and keeps the unique ones.
+    "bench_source_sim_cap": {
+        "gen": _boilerplate_docs,
+        "pin": False,
+        "variants": {
+            "source_sim_uncapped": {
+                "run": _source_sim(None),
+                "check": lambda res, n: res.count() == n * (n - 1) // 2,
+                "bench": (("source_sim_uncapped", 1_000),),
+            },
+            "source_sim_cap100": {
+                "run": _source_sim(100),
+                "bench": (("source_sim_cap100", 1_000),),
+            },
+        },
+        "cross": _cap_contract,
+    },
+    # Per-key running sum where one key owns 70% of 2M rows: the DIRECT
+    # window pushes 1.4M rows through one task's sorter, the decomposed
+    # skew.chunked_running_sum spreads them over 256 (key, chunk) windows
+    # plus an O(keys x chunks) offset table.
+    "bench_window_hotkey": {
+        "gen": hot_window_fact,
+        "variants": {
+            "window_hotkey_direct": {
+                "prep": lambda spark, fact, _n: direct_running_sum(fact),
+                "run": lambda spark, df, _n: consume(df, "rs", "u", "t", "rs"),
+                "bench": (("window_hotkey_direct", 2_000_000),),
+            },
+            "window_hotkey_chunked": {
+                "prep": lambda spark, fact, n: _pkg("operators.skew").chunked_running_sum(
+                    fact, "u", [F.col("t")], "v", F.expr(f"t div {n // 256}"), "rs"
+                ),
+                "run": lambda spark, df, _n: consume(df, "rs", "u", "t", "rs"),
+                "bench": (("window_hotkey_chunked", 2_000_000),),
+            },
+        },
+        "cross": _same,
+    },
+}
+
+
+def _set_confs(spark, confs: dict) -> None:
+    for key, value in confs.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+def run_row(spark, row: dict, plan: dict | None = None, runs: int = 1) -> dict:
+    """Run one STRESS row and return {label: measure() record}.
+
+    ``plan`` maps variant names to the (label, n) rungs to run, the bench
+    rungs by default. Each variant runs once untimed at the warm size,
+    then its rungs through measure(); a rung's source is generated before
+    the timer and reused while consecutive rungs share a size."""
+    if plan is None:
+        plan = {name: v["bench"] for name, v in row["variants"].items()}
+    row_confs = row.get("confs", {})
+    keys = set(row_confs).union(*(row["variants"][k].get("confs", {}) for k in plan))
+    prior = {key: spark.conf.get(key, None) for key in keys}
+
+    def source(n):
+        if "gen" not in row:
+            return None
+        src = row["gen"](spark, n)
+        return src.localCheckpoint() if row.get("pin", True) else src
+
+    out: dict[str, dict] = {}
+    src, last_n = None, object()
+    try:
+        _set_confs(spark, row_confs)
+        for name, rungs in plan.items():
+            v = row["variants"][name]
+            prep = v.get("prep", lambda spark, s, n: s)
+            _set_confs(spark, v.get("confs", {}))
+            if "warm" in row:
+                w = row["warm"]
+                v["run"](spark, prep(spark, source(w), w), w)
+            for label, n in rungs:
+                if n != last_n:
+                    src, last_n = source(n), n
+                arg = prep(spark, src, n)
+                m = measure(spark, lambda: v["run"](spark, arg, n), runs)
+                check = v.get("check")
+                assert check is None or check(m["result"], n), (
+                    f"{label}: check failed on {m['result']!r}"
+                )
+                out[label] = m
+            _set_confs(spark, {k: row_confs.get(k, prior[k]) for k in v.get("confs", {})})
+        if row.get("cross"):
+            row["cross"](out)
+    finally:
+        _set_confs(spark, prior)
+    return out
 
 
 def bench_pagerank_phases(spark) -> dict:
@@ -969,11 +1017,75 @@ def dump_local_artifact(full: dict, here: str, explicit: str | None) -> str | No
     return target
 
 
-def main() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # UI on so the REST stage metrics (shuffle/input bytes) are readable.
-    spark = get_spark(
-        app_name="ljx-bench",
+# bench label -> registry query, each timed median-of-3 at SF_DIR
+REGISTRY_WORKLOADS = {
+    "tpch_q1": "q_agg_tpch_q1",
+    "join_3way": "q_join_3way",
+    "wordcount": "q_agg_wordcount",
+    "dedup_minhash": "q_dedup_minhash",
+    "embed_knn": "q_embed_knn",
+    "dedup_simhash": "q_dedup_simhash",
+    "dedup_simhash_pairs": "q_dedup_simhash_pairs",
+    "sort_fingerprint": "q_sort_total_order",
+    "window_rank": "q_agg_window_rank",
+    "bloom_join": "q_join_bloom",
+    "contamination": "q_text_contamination",
+    "pipeline_training": "q_pipeline_training",
+    "asof_join": "q_join_asof",
+    "range_join": "q_join_range",
+    "bm25": "q_text_bm25",
+    "embed_ivfpq": "q_embed_ivfpq",
+    "text_chunk": "q_text_chunk",
+    "keep_latest": "q_dedup_keep_latest",
+    "tfile_roundtrip": "q_sink_tfile_roundtrip",
+    "dedup_incremental": "q_dedup_incremental",
+    "dedup_paragraph": "q_dedup_paragraph",
+    "pagerank": "q_graph_pagerank",
+    "tpch_q2": "q_agg_tpch_q2",
+    "tpch_q3": "q_agg_tpch_q3",
+    "tpch_q4": "q_agg_tpch_q4",
+    "tpch_q6": "q_agg_tpch_q6",
+    "tpch_q10": "q_agg_tpch_q10",
+    "tpch_q8": "q_agg_tpch_q8",
+    "tpch_q9": "q_agg_tpch_q9",
+    "tpch_q13": "q_agg_tpch_q13",
+    "tpch_q14": "q_agg_tpch_q14",
+    "tpch_q16": "q_agg_tpch_q16",
+    "tpch_q17": "q_agg_tpch_q17",
+    "tpch_q19": "q_agg_tpch_q19",
+    "tpch_q21": "q_agg_tpch_q21",
+    "tpch_q22": "q_agg_tpch_q22",
+    "group_split": "q_sample_group_split",
+    "table_diff": "q_audit_table_diff",
+    "fingerprint": "q_audit_fingerprint",
+    "diff_incremental": "q_audit_diff_incremental",
+    "winsorize": "q_agg_winsorize",
+    "interval_merge": "q_agg_interval_merge",
+    "deciles": "q_agg_deciles",
+    "triangles": "q_graph_triangles",
+    "audit_constraints": "q_audit_constraints",
+    "copurchase": "q_agg_copurchase",
+    "kcore": "q_graph_kcore",
+    "domain_cap": "q_sample_domain_cap",
+    "token_budget": "q_sample_token_budget",
+    "source_sim": "q_corpus_source_sim",
+    "embed_ivfpq_nprobe": "q_embed_ivfpq_nprobe",
+    "decontaminate": "q_text_decontaminate",
+    "dataset_card": "q_corpus_dataset_card",
+    "domain_reweight": "q_sample_domain_reweight",
+    "drift_ks": "q_agg_drift_ks",
+    "embed_ivfpq_rerank": "q_embed_ivfpq_rerank",
+    "embed_kmeans_ivf": "q_embed_kmeans_ivf",
+    "embed_ivf_bcast": "q_embed_ivf_bcast",
+    "embed_kmeans_ivf_bcast": "q_embed_kmeans_ivf_bcast",
+}
+
+
+def open_session(app_name: str, cpus: str):
+    """The engine session with the UI on, so the REST stage metrics
+    (shuffle/input bytes) are readable."""
+    return get_spark(
+        app_name=app_name,
         master=f"local[{cpus}]",
         extra_conf={
             "spark.ui.enabled": "true",
@@ -985,159 +1097,90 @@ def main() -> int:
             "spark.ui.retainedStages": "100000",
         },
     )
-    sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
 
-    registry_workloads = {
-        "tpch_q1": "q_agg_tpch_q1",
-        "join_3way": "q_join_3way",
-        "wordcount": "q_agg_wordcount",
-        "dedup_minhash": "q_dedup_minhash",
-        "embed_knn": "q_embed_knn",
-        "dedup_simhash": "q_dedup_simhash",
-        "dedup_simhash_pairs": "q_dedup_simhash_pairs",
-        "sort_fingerprint": "q_sort_total_order",
-        "window_rank": "q_agg_window_rank",
-        "bloom_join": "q_join_bloom",
-        "contamination": "q_text_contamination",
-        "pipeline_training": "q_pipeline_training",
-        "asof_join": "q_join_asof",
-        "range_join": "q_join_range",
-        "bm25": "q_text_bm25",
-        "embed_ivfpq": "q_embed_ivfpq",
-        "text_chunk": "q_text_chunk",
-        "keep_latest": "q_dedup_keep_latest",
-        "tfile_roundtrip": "q_sink_tfile_roundtrip",
-        "dedup_incremental": "q_dedup_incremental",
-        "dedup_paragraph": "q_dedup_paragraph",
-        "pagerank": "q_graph_pagerank",
-        "tpch_q2": "q_agg_tpch_q2",
-        "tpch_q3": "q_agg_tpch_q3",
-        "tpch_q4": "q_agg_tpch_q4",
-        "tpch_q6": "q_agg_tpch_q6",
-        "tpch_q10": "q_agg_tpch_q10",
-        "tpch_q8": "q_agg_tpch_q8",
-        "tpch_q9": "q_agg_tpch_q9",
-        "tpch_q13": "q_agg_tpch_q13",
-        "tpch_q14": "q_agg_tpch_q14",
-        "tpch_q16": "q_agg_tpch_q16",
-        "tpch_q17": "q_agg_tpch_q17",
-        "tpch_q19": "q_agg_tpch_q19",
-        "tpch_q21": "q_agg_tpch_q21",
-        "tpch_q22": "q_agg_tpch_q22",
-        "group_split": "q_sample_group_split",
-        "table_diff": "q_audit_table_diff",
-        "fingerprint": "q_audit_fingerprint",
-        "diff_incremental": "q_audit_diff_incremental",
-        "winsorize": "q_agg_winsorize",
-        "interval_merge": "q_agg_interval_merge",
-        "deciles": "q_agg_deciles",
-        "triangles": "q_graph_triangles",
-        "audit_constraints": "q_audit_constraints",
-        "copurchase": "q_agg_copurchase",
-        "kcore": "q_graph_kcore",
-        "domain_cap": "q_sample_domain_cap",
-        "token_budget": "q_sample_token_budget",
-        "source_sim": "q_corpus_source_sim",
-        "embed_ivfpq_nprobe": "q_embed_ivfpq_nprobe",
-        "decontaminate": "q_text_decontaminate",
-        "dataset_card": "q_corpus_dataset_card",
-        "domain_reweight": "q_sample_domain_reweight",
-        "drift_ks": "q_agg_drift_ks",
-        "embed_ivfpq_rerank": "q_embed_ivfpq_rerank",
-        "embed_kmeans_ivf": "q_embed_kmeans_ivf",
-        "embed_ivf_bcast": "q_embed_ivf_bcast",
-        "embed_kmeans_ivf_bcast": "q_embed_kmeans_ivf_bcast",
-    }
 
-    # Warm the JVM/codegen AND the Python/Arrow worker pool once so
-    # timings measure the plans, not process startup (both amortize to
-    # zero on a long-lived cluster).
+def warm_up(spark, cpus: str, qnames) -> None:
+    """Warm the JVM/codegen AND the Python/Arrow worker pool once so
+    timings measure the plans, not process startup (both amortize to
+    zero on a long-lived cluster). Then compile each named registry plan
+    at the smallest sf, so the timed runs measure the plan in steady state
+    (codegen compile is a one-time cost on a real cluster, but 1-3 s of
+    the measurement at local bench scale)."""
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
     F_pd = F.pandas_udf(lambda s: s, "long")
     spark.range(int(cpus) * 4, numPartitions=int(cpus)).select(
         F_pd(F.col("id"))
     ).write.format("noop").mode("overwrite").save()
-    # Per-plan warmup at the smallest sf: compiles each workload's
-    # whole-stage-codegen classes once, so the sf0.1 timings measure the
-    # plan in steady state (codegen compile is a one-time cost on a real
-    # cluster, but 1-3 s of the measurement at local bench scale).
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
-        for qname in registry_workloads.values():
+        for qname in qnames:
             try:
                 _force(REGISTRY[qname].spark(spark, warm_dir))
             except Exception:
                 pass
 
-    timings: dict[str, float] = {}
-    shuffle_b: dict[str, int] = {}
-    input_b: dict[str, int] = {}
-    wall_runs: dict[str, list[float]] = {}
-    steal_pct: dict[str, float] = {}
-    steal_bench0 = _steal_ticks()
-    t0 = time.time()
 
-    def timed_runs(label: str, fn, n_runs: int = 3) -> None:
+class Bench:
+    """The per-label record of one bench session: median wall, first-run
+    bytes, and for median-of-3 rows the per-run walls and steal%."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.timings: dict[str, float] = {}
+        self.shuffle_b: dict[str, int] = {}
+        self.input_b: dict[str, int] = {}
+        self.wall_runs: dict[str, list[float]] = {}
+        self.steal_pct: dict[str, float | None] = {}
+
+    def record(self, label: str, m: dict) -> None:
+        self.timings[label] = statistics.median(m["walls"])
+        self.shuffle_b[label], self.input_b[label] = m["shuffle_b"], m["input_b"]
+        if len(m["walls"]) > 1:
+            self.wall_runs[label] = [round(w, 3) for w in m["walls"]]
+            self.steal_pct[label] = m["steal"]
+
+    def timed_runs(self, label: str, fn) -> None:
         # median-of-3 graded walls (r10 verdict task 3): the r10 session
         # measured 186-280 s same-HEAD spread across three full runs with
         # bit-identical shuffle bytes and DISJOINT >±25% spike sets —
         # single-shot (and best-of-2) walls on this shared host are
-        # noise-bound. Every committed wall is now the MEDIAN of three
+        # noise-bound. Every committed wall is the MEDIAN of three
         # back-to-back runs, with the per-run walls (wall_runs) and the
         # /proc/stat steal% over the three-run window (cpu_steal_pct)
         # recorded beside it so the delta note's host-noise diagnosis is
         # reproducible from the artifact alone. The >±25% delta watch
-        # rule keys to this median. Bytes come from the first run only
-        # (they are deterministic — bit-identical every run).
+        # rule keys to this median.
+        self.record(label, measure(self.spark, fn, runs=3))
+
+    def section(self, name: str) -> None:
+        """One STRESS row's bench rungs. They stay single-shot: their
+        claims are RATIOS (both rungs ride the same ambient noise)
+        anchored on deterministic shuffle bytes, not absolute walls. Each
+        section records its own steal% window so a noisy section is
+        identifiable in the artifact."""
         st0 = _steal_ticks()
-        sw0, ib0 = _stage_bytes(spark)
-        t = time.time()
-        fn()
-        runs = [time.time() - t]
-        sw1, ib1 = _stage_bytes(spark)
-        shuffle_b[label], input_b[label] = sw1 - sw0, ib1 - ib0
-        for _ in range(n_runs - 1):
-            t = time.time()
-            fn()
-            runs.append(time.time() - t)
-        steal_pct[label] = _steal_pct(st0, _steal_ticks())
-        wall_runs[label] = [round(r, 3) for r in runs]
-        timings[label] = statistics.median(runs)
+        for label, m in run_row(self.spark, STRESS[name]).items():
+            self.record(label, m)
+        self.steal_pct["section:" + name] = _steal_pct(st0, _steal_ticks())
 
-    timed_runs("terasort_1m", lambda: bench_terasort(spark))
 
-    # 10x generated-data stress row: the parquet fixtures stop at sf0.1
-    # (~17 MB lineitem), so range-partitioning/spill behavior beyond that
-    # was unmeasured. 10^7 100-byte rows ~= 1 GB through the full
-    # TeraGen -> total-order sort -> TeraValidate path; linear scaling
-    # from the ~1.6 s 1m row predicts ~16 s, and the BASELINE envelope
-    # scaled the same way budgets ~17 s.
-    timed_runs("terasort_10m", lambda: bench_terasort(spark, n=10_000_000))
+def main() -> int:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = open_session("ljx-bench", cpus)
+    sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
+    warm_up(spark, cpus, REGISTRY_WORKLOADS.values())
 
-    for label, qname in registry_workloads.items():
-        timed_runs(label, lambda qn=qname: _force(REGISTRY[qn].spark(spark, SF_DIR)))
-
-    # The 1x/10x stress pairs stay single-shot: their claims are RATIOS
-    # (both rungs ride the same ambient noise) anchored on deterministic
-    # shuffle bytes, not absolute walls. Each section records its own
-    # steal% window so a noisy section is identifiable in the artifact.
-    for stress_fn in (
-        bench_diff_sparse,
-        bench_skew_join,
-        bench_skew_groupby,
-        bench_minhash_10x,
-        bench_pagerank_10x,
-        bench_ivfpq_10x,
-        bench_text_longdoc,
-        bench_simhash_longdoc,
-        bench_graph_10x,
-        bench_temporal_10x,
-        bench_source_sim_cap,
-        bench_window_hotkey,
-    ):
-        st0 = _steal_ticks()
-        stress_fn(spark, timings, shuffle_b, input_b)
-        steal_pct["section:" + stress_fn.__name__] = _steal_pct(st0, _steal_ticks())
+    b = Bench(spark)
+    steal_bench0 = _steal_ticks()
+    t0 = time.time()
+    # terasort's bench rungs are median-of-3 headline rows
+    for label, m in run_row(spark, STRESS["bench_terasort"], runs=3).items():
+        b.record(label, m)
+    for label, qname in REGISTRY_WORKLOADS.items():
+        b.timed_runs(label, lambda qn=qname: _force(REGISTRY[qn].spark(spark, SF_DIR)))
+    for name in STRESS:
+        if name != "bench_terasort":
+            b.section(name)
     pagerank_phases = bench_pagerank_phases(spark)
 
     # Durable-pin posture cost: re-run bm25 (pin()-materialized df/avgdl
@@ -1149,7 +1192,7 @@ def main() -> int:
 
     spark.conf.set(PIN_MODE_CONF, "durable")
     try:
-        timed_runs(
+        b.timed_runs(
             "bm25_durable_pin",
             lambda: _force(REGISTRY["q_text_bm25"].spark(spark, SF_DIR)),
         )
@@ -1160,26 +1203,24 @@ def main() -> int:
     # registry/anchor rows; single-shot for the byte-anchored stress
     # pairs), so the graded number is the workloads' cost, not the
     # triple-run wall time; wall_total records the actual elapsed.
-    total = sum(timings.values())
+    total = sum(b.timings.values())
     full = {
         "metric": "headline_total",
         "value": round(total, 2),
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        # clamped: a negative delta can only mean stage-store eviction
-        # (metric artifact), never negative bytes
-        "shuffle_write_bytes": {k: max(0, v) for k, v in shuffle_b.items()},
-        "input_bytes": {k: max(0, v) for k, v in input_b.items()},
+        "queries": {k: round(v, 2) for k, v in b.timings.items()},
+        "shuffle_write_bytes": b.shuffle_b,
+        "input_bytes": b.input_b,
         # noise-diagnosis fields (r10 verdict task 3): per-run walls for
         # every median-of-3 row, the (max-min)/median spread, and the
         # /proc/stat steal% per three-run window / per stress section /
         # whole bench — the delta note cites these instead of re-running.
-        "wall_runs": wall_runs,
+        "wall_runs": b.wall_runs,
         "wall_spread_pct": {
             k: round(100.0 * (max(v) - min(v)) / max(statistics.median(v), 1e-9), 1)
-            for k, v in wall_runs.items()
+            for k, v in b.wall_runs.items()
         },
-        "cpu_steal_pct": steal_pct,
+        "cpu_steal_pct": b.steal_pct,
         "cpu_steal_pct_overall": _steal_pct(steal_bench0, _steal_ticks()),
         # self-describing steal metric (r12 ADVICE): the denominator
         # definition changed in r12 from all /proc/stat cpu fields to the
@@ -1224,14 +1265,14 @@ def main() -> int:
         "metric": "headline_total",
         "value": round(total, 2),
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "n_workloads": len(timings),
+        "queries": {k: round(v, 2) for k, v in b.timings.items()},
+        "n_workloads": len(b.timings),
         "wall_total": round(time.time() - t0, 2),
         "sf": sf,
     }
     line = json.dumps(summary, separators=(",", ":"))
     if len(line) > 1950:
-        summary["queries"] = {k: round(v, 1) for k, v in timings.items()}
+        summary["queries"] = {k: round(v, 1) for k, v in b.timings.items()}
         line = json.dumps(summary, separators=(",", ":"))
     assert len(line) <= 1950, f"summary line too long ({len(line)} chars)"
     print(line)

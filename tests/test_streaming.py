@@ -40,6 +40,9 @@ def _run_stream(spark, make_stream, name, mode=None):
         .start()
     )
     q.awaitTermination(120)
+    # a stateful query can keep running no-data state-cleanup batches past
+    # the wait; left running, it holds the session's cores for later tests
+    q.stop()
     return spark.table(name)
 
 

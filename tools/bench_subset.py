@@ -10,8 +10,8 @@ JSON line {label: {"wall": median_sec, "runs": [...], "shuffle_mb": x,
         source_sim stress:bench_source_sim_cap
 
 Arguments are bench registry labels (e.g. ``tpch_q9``) and/or
-``stress:<fn-name>`` stress-section names.  Registry labels run
-median-of-3 like the real bench; stress sections are single-shot (their
+``stress:<row>`` names of bench.STRESS rows.  Registry labels run
+median-of-3 like the real bench; stress rows are single-shot (their
 claims are byte ratios).  This is an iteration tool only — the graded
 artifact always comes from a full ``python bench.py`` run.
 """
@@ -20,83 +20,49 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 from hadoop_0_20_2_ljx_spark.queries import REGISTRY  # noqa: E402
-from hadoop_0_20_2_ljx_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
     labels = sys.argv[1:]
     if not labels:
-        print("usage: bench_subset.py <label|stress:fn> ...", file=sys.stderr)
+        print("usage: bench_subset.py <label|stress:row> ...", file=sys.stderr)
         return 2
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="ljx-bench-subset",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4951",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    sf_dir = bench.SF_DIR
-    # same warmup as bench.main
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    F_pd = F.pandas_udf(lambda s: s, "long")
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).select(
-        F_pd(F.col("id"))
-    ).write.format("noop").mode("overwrite").save()
-    warm_dir = "/root/testdata/sf0.001"
-
-    # label -> registry query name (the same map bench.main builds inline)
-    reg_map = {}
-    src = open(bench.__file__).read()
-    import re
-
-    m = re.search(r"registry_workloads = \{(.*?)\}", src, re.S)
-    for k, v in re.findall(r'"([a-z0-9_]+)": "(q_[a-z0-9_]+)"', m.group(1)):
-        reg_map[k] = v
-
-    out: dict[str, dict] = {}
-    timings: dict[str, float] = {}
-    shuffle_b: dict[str, int] = {}
-    input_b: dict[str, int] = {}
+    spark = bench.open_session("ljx-bench-subset", cpus)
+    qnames = {
+        label: bench.REGISTRY_WORKLOADS[label]
+        for label in labels
+        if not label.startswith("stress:")
+    }
+    bench.warm_up(spark, cpus, qnames.values())
+    b = bench.Bench(spark)
     for label in labels:
         if label.startswith("stress:"):
-            fn = getattr(bench, label.split(":", 1)[1])
-            fn(spark, timings, shuffle_b, input_b)
+            b.section(label.split(":", 1)[1])
         else:
-            qname = reg_map[label]
-            if os.path.isdir(warm_dir):
-                try:
-                    bench._force(REGISTRY[qname].spark(spark, warm_dir))
-                except Exception:
-                    pass
-            sw0, ib0 = bench._stage_bytes(spark)
-            t = time.time()
-            bench._force(REGISTRY[qname].spark(spark, sf_dir))
-            runs = [time.time() - t]
-            sw1, ib1 = bench._stage_bytes(spark)
-            shuffle_b[label], input_b[label] = sw1 - sw0, ib1 - ib0
-            for _ in range(2):
-                t = time.time()
-                bench._force(REGISTRY[qname].spark(spark, sf_dir))
-                runs.append(time.time() - t)
-            timings[label] = statistics.median(runs)
-            out.setdefault(label, {})["runs"] = [round(r, 3) for r in runs]
-    for k, v in timings.items():
-        out.setdefault(k, {})["wall"] = round(v, 3)
-        out[k]["shuffle_mb"] = round(shuffle_b.get(k, 0) / 1e6, 2)
-        out[k]["input_mb"] = round(input_b.get(k, 0) / 1e6, 2)
+            b.timed_runs(
+                label,
+                lambda qn=qnames[label]: bench._force(
+                    REGISTRY[qn].spark(spark, bench.SF_DIR)
+                ),
+            )
+    out = {
+        k: {
+            "wall": round(v, 3),
+            "shuffle_mb": round(b.shuffle_b[k] / 1e6, 2),
+            "input_mb": round(b.input_b[k] / 1e6, 2),
+        }
+        for k, v in b.timings.items()
+    }
+    for k, runs in b.wall_runs.items():
+        out[k]["runs"] = runs
     print(json.dumps(out, indent=1, sort_keys=True))
     return 0
 

@@ -2,7 +2,9 @@
 
 Usage: python tools/plan_dump.py [sf_dir] [suffix] [only ...]
 
-The round directory defaults to r13 and is overridden with
+The round directory defaults to the round after the newest
+CORRECTNESS_r<N>.json artifact (the round being worked; the same
+artifacts tools/refresh_survey.py reads) and is overridden with
 SPARK_GRAFT_PLAN_ROUND (e.g. SPARK_GRAFT_PLAN_ROUND=r14).
 
 Writes plans/<round>/<query>_<suffix>.txt (suffix default "before") and prints
@@ -23,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_0_20_2_ljx_spark.queries import REGISTRY
 from hadoop_0_20_2_ljx_spark.session import get_spark
+from refresh_survey import latest_artifact_round
 
 
 def main() -> int:
@@ -32,7 +35,8 @@ def main() -> int:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r13"),
+        os.environ.get("SPARK_GRAFT_PLAN_ROUND")
+        or f"r{(latest_artifact_round() or 0) + 1}",
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan-dump")

@@ -47,21 +47,19 @@ payloads are high-entropy hex (~2:1), so expect a few GB on disk per op.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _stage_spill(spark) -> tuple[float, float, int]:
     """(disk_spill_mb, mem_spill_mb, n_spilling_stages) over all
     completed stages so far — callers take deltas per op."""
-    import urllib.request
+    import bench
 
-    sc = spark.sparkContext
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as resp:
-        stages = json.load(resp)
+    stages = bench.read_stages(spark)
     return (
         round(sum(s.get("diskBytesSpilled", 0) for s in stages) / 1e6, 1),
         round(sum(s.get("memoryBytesSpilled", 0) for s in stages) / 1e6, 1),

@@ -37,13 +37,12 @@ FAILS the vacuity assert rather than passing silently).
 
 from __future__ import annotations
 
-import json
+import os
 import sys
 import threading
 import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_ROWS = 12_000_000
 MD5_CHAIN = 6  # per-row md5 iterations in the interior projection
@@ -78,13 +77,10 @@ def _plan(spark):
     )
 
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(f"{base}{path}", timeout=10) as r:
-        return json.load(r)
-
-
 def main() -> int:
     from pyspark.sql import SparkSession
+
+    from bench import read_stages
 
     spark = (
         SparkSession.builder.master("local[32, 4]")
@@ -101,7 +97,6 @@ def main() -> int:
     )
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
-    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
 
     clean = tuple(_plan(spark).first())
     print(f"clean run: groups={clean[0]} rows={clean[1]}")
@@ -117,7 +112,7 @@ def main() -> int:
     interior_sid = None
     while t.is_alive():
         try:
-            active = _rest(base, "/stages?status=active")
+            active = read_stages(spark, "?status=active")
         except Exception:
             time.sleep(0.1)
             continue
@@ -130,9 +125,8 @@ def main() -> int:
                 # of the repartition stage is an accepted early marker)
                 sid = s["stageId"]
                 try:
-                    tasks = _rest(
-                        base,
-                        f"/stages/{sid}/0/taskList?length=500&status=RUNNING",
+                    tasks = read_stages(
+                        spark, f"/{sid}/0/taskList?length=500&status=RUNNING"
                     )
                 except Exception:
                     continue
@@ -153,7 +147,7 @@ def main() -> int:
         "be killed — raise N_ROWS/MD5_CHAIN so the interior stage is wide "
         "enough to hit"
     )
-    stage = _rest(base, f"/stages/{interior_sid}")
+    stage = read_stages(spark, f"/{interior_sid}")
     killed_recorded = sum(a.get("numKilledTasks", 0) for a in stage)
     assert killed_recorded > 0, (
         f"kill calls returned true but stage {interior_sid} records no "

@@ -3,75 +3,34 @@ decade PAST their per-round bench sizes and print the wall/shuffle
 ladder as one JSON line. One-off evidence (too slow for the per-round
 bench); results are recorded in SCALE.md with this command:
 
-    python tools/scale_probe.py                  # all ladders, ~15 min
+    python tools/scale_probe.py                  # default ladders, ~15 min
     python tools/scale_probe.py asof triangles   # just the named ones
 
-Ladders:
-  - terasort 1M -> 10M -> 100M 100-byte rows (10 MB -> 1 GB -> 10 GB
-    through TeraGen -> total-order sort -> TeraValidate) — the
-    range-partition + spill path.
-  - minhash LSH dedup 5k -> 50k -> 500k generated docs (20% planted
-    exact-duplicate rate, the bench_minhash_10x generator) — signature
-    build linear in corpus tokens, pair stage bounded by bucket
-    collisions; the planted-pair recall assert runs at every rung.
-  - triangles 100k -> 1M -> 10M edges (r10, the r9 verdict's task 6:
-    the graph family had only a 1x/10x pair and the highest remaining
-    superlinear risk — hub wedges). Hub-heavy mix exactly as
-    bench_graph_10x (1/16 of endpoint draws on 10 hubs, the case
-    degree orientation exists for), auto-broadcast disabled so the
-    shuffle-join regime's curve is the one that extrapolates, the
-    triangle-node assert at every rung.
-  - as-of join 100k -> 1M -> 10M fixed-density event rows (r10, the
-    task-6 alternative, added after triangles): bench_temporal_10x's
-    generator one decade further — the one-union-exchange claim at 5M
-    output rows, with the every-click-kept and matched-fraction
-    asserts at every rung.
-  - k-core 100k -> 1M -> 10M edges (r10, completing the graph family:
-    the iterative peel is the one remaining superlinear risk — a
-    cascade that deepens with graph size would multiply per-round
-    alive-join shuffle). Same hub-heavy generator and k=12/6-round
-    peel as bench_graph_10x, shuffle-join regime forced, the
-    surviving-core assert at every rung.
-  - minhash_xl: a FOURTH minhash rung at 5M docs (r11, opt-in by name —
-    not in the default set so the default probe stays ~15 min), same
-    generator and planted-pair recall assert as the 5k/50k/500k ladder.
-    The dedup candidate path is the flagship training-pipeline op; this
-    extends its no-knee evidence one more decade (~1.5 GB of raw text
-    through signature build + LSH banding).
-  - asof_xl / triangles_xl / kcore_xl / pagerank_xl: the same opt-in
-    fourth-rung pattern for the as-of join (100M fixed-density event
-    rows — 50M output matches), the triangle count (100M hub-heavy
-    edges), the k-core peel (100M edges, k=12 x 6 rounds), and pagerank
-    (150M edges, 3 rounds with the phase breakdown), r11. Same
-    generators and asserts as their three-rung ladders.
-  - terasort_xl: 10^9 generated 100-byte rows (~100 GB of records —
-    the reference's record run at 1/10 scale on one node) through
-    TeraGen -> total-order sort -> TeraValidate, r11. The records
-    exceed execution memory ~3:1, so this rung is also a natural-spill
-    stress (the pressure_probe regime at ladder scale).
-  - pagerank 150k -> 1.5M -> 15M edges (r11, the r10 verdict's task 4:
-    the last expensive family without three-rung evidence — the
-    iterative-join + per-round pin interaction). bench_pagerank_10x's
-    generator (pagerank_edge_stream, avg out-degree ~10) one decade
-    further, 3 rounds, shuffle-join regime forced, with the per-phase
-    wall breakdown (setup / each round / drain) recorded at every rung
-    so a superlinear per-round checkpoint cost would be visible
-    directly; the all-nodes-present assert at every rung.
-  - clusters 100k -> 1M -> 10M edges (r12, the r11 verdict's task 4:
-    connected components is the one iterative family whose ROUND COUNT
-    grows with input — component diameter — unlike pagerank's fixed 3
-    or kcore's bounded peel, so the rounds x per-round-pin interaction
-    is the risk the ladder exists to test). Graph = half long chains
-    (10 chains whose length grows 10x per rung, so diameter grows a
-    decade per decade and rounds must grow ~log) + half hub-heavy
+The claim under test: one decade of growth costs ~one decade of wall
+and ~one decade of shuffle (no superlinear knee hiding just past the
+bench sizes).
+
+Ladders from bench.STRESS: every variant there with ladder rungs is a
+ladder here under its variant name — terasort, minhash, triangles,
+kcore, pagerank and asof — with the same generator, warm pass, confs and
+per-rung checks as its bench rungs, the generated source always
+localCheckpointed outside the timer. ``<name>_xl`` adds the opt-in
+fourth rung (alone, or with ``<name>`` for all four); pagerank also
+records its per-phase walls at every rung.
+
+Ladders with their own logic here:
+  - clusters 100k -> 1M -> 10M edges (clusters_xl: 100M): connected
+    components is the one iterative family whose ROUND COUNT grows with
+    input — component diameter — so the rounds x per-round-pin
+    interaction is the risk the ladder exists to test. Graph = half long
+    chains (10 chains whose length grows 10x per rung, so diameter grows
+    a decade per decade and rounds must grow ~log) + half hub-heavy
     random edges (the minhash candidate-graph shape), node id spaces
-    disjoint. Per rung: exact chain membership asserted row-by-row
-    (every chain node's component must equal its chain minimum),
+    disjoint. Per rung: exact chain membership asserted row-by-row,
     hub giant-component coverage >= 95%, full node coverage, the
     convergence round count recorded and asserted under the cap, and
     an order-independent membership checksum recorded.
-  - skew 100k -> 1M -> 10M fact rows (r12, the r11 verdict's task 6:
-    the salted-join stress pair is single-scale). Fixed 70% hot-key
+  - skew 100k -> 1M -> 10M fact rows (skew_xl: 100M): fixed 70% hot-key
     share, dim fixed at 1001 keys; per rung BOTH plans run with
     broadcast AND AQE off (AQE skew-split is the first defense in
     production — session.py enables it — but it would split the plain
@@ -83,74 +42,120 @@ Ladders:
     decides wall-clock at 100 TB. Claim: the plain join's hot task
     grows ~10x/decade no matter how many reducers exist (the hot key
     is ONE shuffle partition), while the salted plan's max task stays
-    ~flat because salting lets per-task work track rows/partitions.
-    Row-count equality plain==salted asserted at every rung (value
-    parity is the externally-proven q_join_salted oracle).
-  - clusters_xl / skew_xl: the opt-in fourth-rung pattern for both new
-    ladders (100M edges / 100M fact rows; pass together with the base
-    name, e.g. `scale_probe skew skew_xl`, so the growth/flatness
-    asserts span all four rungs).
+    ~flat. Value parity plain==salted asserted at every rung.
   - skew_aqe (opt-in modifier for skew/skew_xl): runs the SAME plain
     join a third time per rung with AQE skew-split active (runtime
-    broadcast still off). This measures the production first-defense
-    path AND pins the r12 finding — AQE's skew detection reads map
-    output statistics, and past 2000 reduce partitions
+    broadcast still off). AQE's skew detection reads map output
+    statistics, and past 2000 reduce partitions
     (spark.shuffle.minNumPartitionsToHighlyCompress) those are
     HighlyCompressed: per-block sizes under accurateBlockThreshold
-    (100 MB) are AVERAGED, so when each map contributes ~hot/maps MB
-    (the normal cluster shape: blocks shrink as maps x reducers grow),
-    a multi-GB hot partition is INVISIBLE to AQE and stays unsplit.
-    Below 2000 reducers the sizes are exact and AQE splits once the
-    hot partition passes its 256 MB threshold. Both regimes are
-    asserted; the mitigations (accurateBlockSkewedFactor=5.0 or a
-    lower accurateBlockThreshold — static confs, measured in separate
-    sessions: 722.5 -> 44.6 MB max task at 30M rows x 3200 reducers)
-    are recorded in SCALE.md. Salting is immune — it rewrites the key
-    space BEFORE the shuffle, needing no size statistics at all.
-  - winsum / winsum_xl (opt-in; r13): the WINDOW analog of the skew
-    ladder — 70%-hot-key running sum, direct keyed window vs the
-    decomposed skew.chunked_running_sum, same per-MAX-TASK shuffle-read
-    metric. Direct's hot key is ONE window partition (grows
-    10x/decade; AQE skew split is join-only and cannot reach it);
-    chunked's max task tracks rows/partitions (~flat). AQE off for the
-    ladder (its coalescing packs the chunked plan's small partitions
-    toward the 64 MB advisory target, masking the layout curve — same
-    rationale as the skew ladder). Value parity per rung. winsum_xl
-    adds the 100M rung (direct = a 70M-row one-task window sort —
-    minutes + natural spill).
-  - skew_aqe_engine (standalone; run it ALONE — it builds the ENGINE
-    session via hadoop_0_20_2_ljx_spark.session.get_spark instead of
-    this probe's bare builder, and accurateBlockSkewedFactor is a
-    static core conf that must land at context creation):
-    re-runs the r12 blindness scenario (30M rows, 3200 reducers —
-    HighlyCompressed map statuses) and asserts the engine session's
-    accurateBlockSkewedFactor=5.0 default actually restores the AQE
-    skew split. This closes the conf-boundary loop: a future
-    session.py refactor that drops the mitigation fails THIS assert,
-    not just a grep. `python tools/scale_probe.py skew_aqe_engine`
-
-The claim under test: one decade of growth costs ~one decade of wall
-and ~one decade of shuffle (no superlinear knee hiding just past the
-bench sizes).
+    (100 MB) are AVERAGED, so when each map contributes ~hot/maps MB a
+    multi-GB hot partition is INVISIBLE to AQE and stays unsplit. Below
+    2000 reducers the sizes are exact and AQE splits once the hot
+    partition passes its 256 MB threshold. Both regimes are asserted;
+    the mitigations are recorded in SCALE.md.
+  - winsum 1M -> 10M rows (winsum_xl: 100M): the WINDOW analog of the
+    skew ladder — 70%-hot-key running sum, direct keyed window vs the
+    decomposed skew.chunked_running_sum, same per-MAX-TASK metric.
+    Direct's hot key is ONE window partition (AQE skew split is
+    join-only and cannot reach it); chunked's max task tracks
+    rows/partitions. AQE off, as for skew. Value parity per rung.
+  - winsum_width: the chunk-WIDTH law of the decomposed window at 10M
+    rows (a U-shaped max-task curve, value parity at every width).
+  - skew_aqe_engine (run it ALONE): builds the ENGINE session through
+    hadoop_0_20_2_ljx_spark.session.get_spark instead of this probe's
+    bare builder (accurateBlockSkewedFactor is a static core conf that
+    must land at context creation), re-runs the blindness scenario (30M
+    rows, 3200 reducers) and asserts the engine default restores the
+    AQE skew split, so a session.py refactor that drops the mitigation
+    fails an assert, not a grep.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
+
+# the ladders with their own logic below
+OWN = {
+    "clusters", "clusters_xl", "skew", "skew_xl", "skew_aqe", "skew_aqe_engine",
+    "winsum", "winsum_xl", "winsum_width",
+}
+
+
+def ladders() -> tuple[set[str], set[str]]:
+    """(every ladder name the probe accepts, the ladders run by default)."""
+    folded = {
+        name
+        for row in bench.STRESS.values()
+        for name, v in row["variants"].items()
+        if "ladder" in v
+    }
+    return folded | {f"{name}_xl" for name in folded} | OWN, folded | {
+        "clusters",
+        "skew",
+    }
+
+
+def _max_task_shuffle_read_mb(spark, prev_stage_ids: set[int]) -> float:
+    """Max per-task shuffle-read bytes over stages completed since
+    prev_stage_ids — UI REST taskSummary at quantile 1.0. The straggler
+    task is the number that decides wall-clock at 100 TB; stage totals
+    can look identical while one task carries 70%."""
+    mx = 0.0
+    skipped: list[int] = []
+    for s in bench.read_stages(spark):
+        sid = s["stageId"]
+        if sid in prev_stage_ids or s.get("shuffleReadBytes", 0) == 0:
+            continue
+        try:
+            summ = bench.read_stages(spark, f"/{sid}/0/taskSummary?quantiles=1.0")
+        except Exception:
+            # stage evicted from the UI store between calls — if the HOT
+            # stage is the one skipped, the returned max silently reads
+            # low and the growth/AQE asserts fire with misleading
+            # messages; refuse to measure instead
+            skipped.append(sid)
+            continue
+        mx = max(mx, summ["shuffleReadMetrics"]["readBytes"][0])
+    if skipped:
+        raise RuntimeError(
+            f"max-task measurement gap: {len(skipped)} shuffle-read "
+            f"stage(s) {skipped} could not be summarized (evicted from "
+            f"the UI store) — raise spark.ui.retainedStages"
+        )
+    return round(mx / 1e6, 2)
+
+
+def _completed_stage_ids(spark) -> set[int]:
+    return {s["stageId"] for s in bench.read_stages(spark)}
+
+
+def _rung(m: dict, **extra) -> dict:
+    return {
+        "wall_s": round(m["walls"][0], 2),
+        "shuffle_mb": round(m["shuffle_b"] / 1e6, 1),
+        **extra,
+    }
 
 
 def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    import bench
-    from hadoop_0_20_2_ljx_spark.extensions import dedup
+    known, default = ladders()
+    pick = set(sys.argv[1:]) or default
+    unknown = pick - known
+    if unknown:
+        print(f"unknown ladder(s): {sorted(unknown)}", file=sys.stderr)
+        return 2
 
-    if "skew_aqe_engine" in sys.argv[1:]:
+    if "skew_aqe_engine" in pick:
         # the conf-boundary variant runs in the ENGINE session — the whole
         # point is asserting get_spark's own static-conf defaults
         # (accurateBlockSkewedFactor lands at context creation, so this
@@ -175,228 +180,28 @@ def main() -> int:
             .getOrCreate()
         )
     spark.sparkContext.setLogLevel("ERROR")
-    out: dict[str, dict[str, float]] = {}
-    # optional argv selector: name the ladders to run (default: all six;
-    # minhash_xl is opt-in only — a single ~10-min rung)
-    ladders = {
-        "terasort", "minhash", "triangles", "asof", "kcore", "pagerank",
-        "clusters", "skew",
-    }
-    pick = set(sys.argv[1:]) or ladders
-    unknown = pick - ladders - {
-        "minhash_xl", "asof_xl", "triangles_xl", "kcore_xl", "pagerank_xl",
-        "terasort_xl", "clusters_xl", "skew_xl", "skew_aqe", "skew_aqe_engine",
-        "winsum", "winsum_xl", "winsum_width",
-    }
-    if unknown:
-        print(f"unknown ladder(s): {sorted(unknown)}", file=sys.stderr)
-        return 2
+    out: dict[str, dict] = {}
 
-    if pick & {"terasort", "terasort_xl"}:
-        bench.bench_terasort(spark, n=100_000)  # warm codegen off the ladder
-    tera_rungs = (1_000_000, 10_000_000, 100_000_000) if "terasort" in pick else ()
-    if "terasort_xl" in pick:
-        tera_rungs = tera_rungs + (1_000_000_000,)
-    for n in tera_rungs:
-        sw0, ib0 = bench._stage_bytes(spark)
-        t = time.time()
-        bench.bench_terasort(spark, n=n)
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
-        out[f"terasort_{n//1_000_000}m"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
+    for row in bench.STRESS.values():
+        plan = {
+            name: (v["ladder"] if name in pick else ())
+            + (v["xl"] if f"{name}_xl" in pick else ())
+            for name, v in row["variants"].items()
+            if "ladder" in v
         }
-
-    def docs(n_docs: int):
-        words = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(32)),
-                lambda i: F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "-",
-                            F.pmod(F.col("id"), F.lit(n_docs * 4 // 5)).cast("string"),
-                            i.cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-            ),
-            " ",
-        )
-        return spark.range(n_docs).select(
-            F.col("id").alias("doc_id"), words.alias("text")
-        )
-
-    # warm the dedup codepath off the ladder (the r9 run's 5k wall
-    # carried first-compile cost; bytes were unaffected)
-    if pick & {"minhash", "minhash_xl"}:
-        dedup.minhash_lsh_candidates(
-            docs(1_000).localCheckpoint(), "doc_id", "text"
-        ).count()
-    rungs = (5_000, 50_000, 500_000) if "minhash" in pick else ()
-    if "minhash_xl" in pick:
-        rungs = rungs + (5_000_000,)
-    for n in rungs:
-        d = docs(n).localCheckpoint()
-        sw0, _ = bench._stage_bytes(spark)
-        t = time.time()
-        n_pairs = dedup.minhash_lsh_candidates(d, "doc_id", "text").count()
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
-        assert n_pairs >= n // 5, f"minhash_{n}: planted pairs missed ({n_pairs})"
-        out[f"minhash_{n // 1000}k"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-        }
-
-    from hadoop_0_20_2_ljx_spark.extensions.graph import triangle_counts
-
-    def edges(n_edges: int):
-        nodes = n_edges // 10
-
-        def node(salt: str):
-            h = F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long")
-            return F.when(h % 16 == 0, F.shiftright(h, 4) % 10).otherwise(
-                F.shiftright(h, 4) % F.lit(nodes)
-            )
-
-        return spark.range(n_edges).select(node("s").alias("src"), node("d").alias("dst"))
-
-    # shuffle-join regime, as in bench_graph_10x: node-sized tables
-    # broadcast locally but are corpus-sized at 100 TB — the shuffle
-    # curve is the one that extrapolates
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    if pick & {"triangles", "triangles_xl"}:
-        triangle_counts(edges(10_000).localCheckpoint()).count()  # warm off-ladder
-    tri_rungs = (100_000, 1_000_000, 10_000_000) if "triangles" in pick else ()
-    if "triangles_xl" in pick:
-        tri_rungs = tri_rungs + (100_000_000,)
-    for n in tri_rungs:
-        e = edges(n).localCheckpoint()
-        sw0, _ = bench._stage_bytes(spark)
-        t = time.time()
-        n_tri_nodes = triangle_counts(e).count()
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
-        assert n_tri_nodes > 100, f"triangles_{n}: {n_tri_nodes} triangle nodes"
-        out[f"triangles_{n // 1000}k"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-        }
-
-    from hadoop_0_20_2_ljx_spark.extensions.graph import kcore_peel
-
-    # same shuffle-join regime as triangles (the broadcast-off conf set
-    # above is still active here): alive/degree tables are node-sized
-    # locally but corpus-sized at 100 TB
-    if pick & {"kcore", "kcore_xl"}:
-        kcore_peel(edges(10_000).localCheckpoint(), k=12, rounds=6).count()
-    kcore_rungs = (100_000, 1_000_000, 10_000_000) if "kcore" in pick else ()
-    if "kcore_xl" in pick:
-        kcore_rungs = kcore_rungs + (100_000_000,)
-    for n in kcore_rungs:
-        e = edges(n).localCheckpoint()
-        sw0, _ = bench._stage_bytes(spark)
-        t = time.time()
-        n_core = kcore_peel(e, k=12, rounds=6).count()
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
-        # k=12 sits ~2 sigma under the ~19-mean degree: a core survives
-        assert n_core > 100, f"kcore_{n}: {n_core} core nodes"
-        out[f"kcore_{n // 1000}k"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-        }
-    from hadoop_0_20_2_ljx_spark.extensions.graph import pagerank_int
-
-    # same forced shuffle-join regime (broadcast-off conf still active):
-    # the rank table broadcasts at ladder sizes but is corpus-sized at
-    # 100 TB — bench_pagerank_10x measured the 96x round-byte regime
-    # change across that boundary, so only the shuffle curve extrapolates
-    if pick & {"pagerank", "pagerank_xl"}:
-        pagerank_int(
-            bench.pagerank_edge_stream(spark, 10_000).localCheckpoint(), iterations=3
-        ).count()  # warm off-ladder
-    pr_rungs = (150_000, 1_500_000, 15_000_000) if "pagerank" in pick else ()
-    if "pagerank_xl" in pick:
-        pr_rungs = pr_rungs + (150_000_000,)
-    for n in pr_rungs:
-        e = bench.pagerank_edge_stream(spark, n).localCheckpoint()
-        phases: dict[str, float] = {}
-        sw0, _ = bench._stage_bytes(spark)
-        t = time.time()
-        n_nodes = pagerank_int(e, iterations=3, phase_seconds=phases).count()
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
-        # every node id in [0, n/10) appears w.h.p. at ~20 draws per id
-        # (n edges x 2 endpoints over n/10 ids; r11 ADVICE)
-        assert n_nodes >= (n // 10) * 99 // 100, f"pagerank_{n}: {n_nodes} nodes"
-        out[f"pagerank_{n // 1000}k"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-            **{f"phase_{k}_s": round(v, 2) for k, v in phases.items()},
-        }
-
-    spark.conf.set(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760"
-    )  # back to default for the asof ladder (bench's asof regime)
-
-    from hadoop_0_20_2_ljx_spark.extensions import temporal
-
-    if pick & {"asof", "asof_xl"}:
-        warm = bench.temporal_event_stream(spark, 2_000).localCheckpoint()
-        temporal.asof_join(
-            warm.where("is_click").select("event_id", "user_id", "t_us"),
-            warm.where(~F.col("is_click"))
-            .groupBy("user_id", "t_us")
-            .agg(F.count(F.lit(1)).cast("double").alias("pval")),
-            on=["user_id"], left_ts="t_us", right_ts="t_us", value_cols=["pval"],
-        ).agg(F.count("pval")).first()
-    asof_rungs = (100_000, 1_000_000, 10_000_000) if "asof" in pick else ()
-    if "asof_xl" in pick:
-        asof_rungs = asof_rungs + (100_000_000,)
-    for n in asof_rungs:
-        ev = bench.temporal_event_stream(spark, n).localCheckpoint()
-        clicks = ev.where("is_click").select("event_id", "user_id", "t_us")
-        purchases = (
-            ev.where(~F.col("is_click"))
-            .groupBy("user_id", "t_us")
-            .agg(F.count(F.lit(1)).cast("double").alias("pval"))
-        )
-        sw0, _ = bench._stage_bytes(spark)
-        t = time.time()
-        row = (
-            temporal.asof_join(
-                clicks, purchases, on=["user_id"], left_ts="t_us",
-                right_ts="t_us", value_cols=["pval"],
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_out"),
-                F.count("pval").alias("n_matched"),
-            )
-            .first()
-        )
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
-        assert row["n_out"] == n // 2, f"asof_{n}: every click must be kept"
-        assert row["n_matched"] > n // 4, f"asof_{n}: {row['n_matched']} matched"
-        out[f"asof_{n // 1000}k"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-        }
+        plan = {name: rungs for name, rungs in plan.items() if rungs}
+        if not plan:
+            continue
+        # every ladder pins its source outside the timer, including
+        # minhash, whose bench rung times generation too
+        ms = bench.run_row(spark, {**row, "pin": True}, plan)
+        for name, rungs in plan.items():
+            report = row["variants"][name].get("report", lambda r: {})
+            for label, _ in rungs:
+                out[label] = _rung(ms[label], **report(ms[label]["result"]))
 
     from hadoop_0_20_2_ljx_spark.extensions.dedup import connected_components
+    from hadoop_0_20_2_ljx_spark.operators import skew
 
     def cc_edges(n_edges: int):
         """Half long chains + half hub-heavy random edges, disjoint id
@@ -404,8 +209,8 @@ def main() -> int:
         DIAMETER grows a full decade per rung, so the star rounds must
         grow ~log (the property pagerank's fixed 3 rounds and kcore's
         bounded peel never exercise). Hubs: the triangles/kcore
-        generator shape offset past the chain ids — a realistic
-        near-dup candidate graph with a giant component.
+        generator offset past the chain ids — a realistic near-dup
+        candidate graph with a giant component.
         Returns (edges, chain_len_edges, chain_id_span)."""
         n_chain = n_edges // 2
         ch_len = n_chain // 10  # edges per chain; nodes per chain = ch_len+1
@@ -413,31 +218,9 @@ def main() -> int:
         u = (F.col("id") / ch_len).cast("long") * ch_nodes + F.pmod(
             F.col("id"), F.lit(ch_len)
         )
-        chains = spark.range(n_chain).select(
-            u.alias("u"), (u + 1).alias("v")
-        )
+        chains = spark.range(n_chain).select(u.alias("u"), (u + 1).alias("v"))
         ch_span = 10 * ch_nodes
-        n_hub = n_edges - n_chain
-        hub_nodes = n_hub // 10
-
-        def hub_node(salt: str):
-            h = F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long")
-            picked = F.when(h % 16 == 0, F.shiftright(h, 4) % 10).otherwise(
-                F.shiftright(h, 4) % F.lit(hub_nodes)
-            )
-            return picked + F.lit(ch_span)
-
-        hubs = spark.range(n_hub).select(
-            hub_node("s").alias("u"), hub_node("d").alias("v")
-        )
+        hubs = bench.hub_edges(spark, n_edges - n_chain, ("u", "v"), ch_span)
         return chains.union(hubs), ch_len, ch_span
 
     if pick & {"clusters", "clusters_xl"}:
@@ -461,13 +244,14 @@ def main() -> int:
             .count()
         )
         st: dict[str, int] = {}
-        sw0, _ = bench._stage_bytes(spark)
-        t = time.time()
-        cc = connected_components(e, "u", "v", max_iter=40, stats=st)
-        cc = cc.localCheckpoint()
-        n_assigned = cc.count()
-        wall = time.time() - t
-        sw1, _ = bench._stage_bytes(spark)
+
+        def run_cc():
+            cc = connected_components(e, "u", "v", max_iter=40, stats=st)
+            cc = cc.localCheckpoint()
+            return cc, cc.count()
+
+        m = bench.measure(spark, run_cc)
+        cc, n_assigned = m["result"]
         rounds = st["rounds"]
         assert rounds < 40, f"clusters_{n}: hit the round cap ({rounds})"
         assert n_assigned == n_nodes, f"clusters_{n}: {n_assigned} != {n_nodes} nodes"
@@ -495,65 +279,27 @@ def main() -> int:
         assert hub_row["giant"] * 100 >= hub_row["total"] * 95, (
             f"clusters_{n}: giant component {hub_row['giant']}/{hub_row['total']}"
         )
-        # order-independent membership checksum (decimal — BIGINT sum of
-        # 64-bit hashes overflows under ANSI), recorded for rerun compare
+        # order-independent membership checksum, recorded for rerun compare
         chk = cc.agg(
             F.sum(F.xxhash64("node", "comp").cast("decimal(38,0)")).alias("c")
         ).first()["c"]
-        out[f"clusters_{n // 1000}k"] = {
-            "wall_s": round(wall, 2),
-            "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-            "rounds": rounds,
-            "n_components": int(hub_row["n_comp"]) + 10,
-            "membership_checksum": str(chk),
-        }
+        out[f"clusters_{n // 1000}k"] = _rung(
+            m,
+            rounds=rounds,
+            n_components=int(hub_row["n_comp"]) + 10,
+            membership_checksum=str(chk),
+        )
 
-    from hadoop_0_20_2_ljx_spark.operators import skew
+    # what bench.consume reads of a hot-key join and of a running sum
+    join_cols = (F.length("payload"), "k", "payload", "attr")
+    window_cols = ("rs", "u", "t", "rs")
 
-    def _max_task_shuffle_read_mb(prev_stage_ids: set[int]) -> float:
-        """Max per-task shuffle-read bytes over stages completed since
-        prev_stage_ids — UI REST taskSummary at quantile 1.0. The
-        straggler task is the number that decides wall-clock at 100 TB;
-        stage totals can look identical while one task carries 70%."""
-        import urllib.request
-
-        sc = spark.sparkContext
-        base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-        with urllib.request.urlopen(f"{base}/stages?status=complete", timeout=10) as r:
-            stages = json.load(r)
-        mx = 0.0
-        skipped: list[int] = []
-        for s in stages:
-            sid = s["stageId"]
-            if sid in prev_stage_ids or s.get("shuffleReadBytes", 0) == 0:
-                continue
-            url = f"{base}/stages/{sid}/0/taskSummary?quantiles=1.0"
-            try:
-                with urllib.request.urlopen(url, timeout=10) as r:
-                    summ = json.load(r)
-            except Exception:
-                # stage evicted from the UI store between calls — if the
-                # HOT stage is the one skipped, the returned max silently
-                # reads low and the downstream growth/AQE asserts fire
-                # with misleading messages; refuse to measure instead
-                skipped.append(sid)
-                continue
-            mx = max(mx, summ["shuffleReadMetrics"]["readBytes"][0])
-        if skipped:
-            raise RuntimeError(
-                f"max-task measurement gap: {len(skipped)} shuffle-read "
-                f"stage(s) {skipped} could not be summarized (evicted from "
-                f"the UI store) — raise spark.ui.retainedStages"
-            )
-        return round(mx / 1e6, 2)
-
-    def _completed_stage_ids() -> set[int]:
-        import urllib.request
-
-        sc = spark.sparkContext
-        url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return {s["stageId"] for s in json.load(r)}
+    def timed_max_task(df, total, *hashed) -> tuple[dict, float]:
+        """measure() of bench.consume over df, and the max task shuffle
+        read of the stages it ran."""
+        ids0 = _completed_stage_ids(spark)
+        m = bench.measure(spark, lambda: bench.consume(df, total, *hashed))
+        return m, _max_task_shuffle_read_mb(spark, ids0)
 
     if pick & {"skew", "skew_xl"}:
         # Fixed regime for the whole ladder: no broadcast (the dim is
@@ -566,9 +312,7 @@ def main() -> int:
         old_part = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        dim = spark.range(1001).select(
-            F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("attr")
-        ).localCheckpoint()
+        dim = bench.hot_join_dim(spark).localCheckpoint()
         salted_flat: list[float] = []
         sk_rungs = [100_000, 1_000_000, 10_000_000] if "skew" in pick else []
         if "skew_xl" in pick:
@@ -581,12 +325,7 @@ def main() -> int:
                 n_part = max(4, n // 31_250)
                 buckets = 8 * n_part
                 spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-                fact = spark.range(n).select(
-                    F.when(F.pmod(F.col("id"), F.lit(10)) < 7, F.lit(0))
-                    .otherwise(F.pmod(F.xxhash64("id"), F.lit(1000)) + 1)
-                    .alias("k"),
-                    F.md5(F.col("id").cast("string")).alias("payload"),
-                ).localCheckpoint()
+                fact = bench.hot_join_fact(spark, n).localCheckpoint()
                 counts = {}
                 variants = [
                     ("plain", fact.join(dim, "k")),
@@ -609,37 +348,14 @@ def main() -> int:
                         spark.conf.set(
                             "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
                         )
-                    ids0 = _completed_stage_ids()
-                    sw0, _ = bench._stage_bytes(spark)
-                    t = time.time()
-                    # the probe aggregate must CONSUME every column —
-                    # a bare count() lets Catalyst prune payload+attr
-                    # out of the exchanges, and 7M identical hot keys
-                    # alone lz4-compress to ~nothing, hiding the hot
-                    # task (measured: 0.8 MB vs the real ~150 MB). The
-                    # decimal hash-sum doubles as value-level parity
-                    # between the two plans, not just row-count parity.
-                    counts[label] = tuple(
-                        df.agg(
-                            F.count(F.lit(1)),
-                            F.sum(F.length("payload")),
-                            F.sum(
-                                F.xxhash64("k", "payload", "attr").cast(
-                                    "decimal(38,0)"
-                                )
-                            ),
-                        ).first()
-                    )
-                    wall = time.time() - t
-                    sw1, _ = bench._stage_bytes(spark)
-                    mx = _max_task_shuffle_read_mb(ids0)
-                    out[f"skew_{label}_{n // 1000}k"] = {
-                        "wall_s": round(wall, 2),
-                        "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-                        "max_task_shuffle_read_mb": mx,
-                        "n_reducers": n_part,
+                    m, mx = timed_max_task(df, *join_cols)
+                    counts[label] = m["result"]
+                    out[f"skew_{label}_{n // 1000}k"] = _rung(
+                        m,
+                        max_task_shuffle_read_mb=mx,
+                        n_reducers=n_part,
                         **({"buckets": buckets} if label == "salted" else {}),
-                    }
+                    )
                     if label == "salted":
                         salted_flat.append(mx)
                     if label == "aqe":
@@ -693,81 +409,47 @@ def main() -> int:
             spark.conf.set("spark.sql.shuffle.partitions", old_part)
 
     if pick & {"winsum", "winsum_xl"}:
-        # The WINDOW analog of the skew ladder (opt-in; r13): per-key
-        # running sum with a 70%-hot key, DIRECT keyed window vs the
-        # decomposed skew.chunked_running_sum. Same per-MAX-TASK metric:
-        # the direct plan's hot key is ONE window partition no matter how
-        # many reducers exist (its task's shuffle-read grows 10x/decade,
-        # and past executor memory it becomes the pressure-probe window
-        # rung's spill-and-exact posture), while the chunked plan's max
-        # task tracks rows/partitions (~flat). Value parity asserted per
-        # rung via count + sum + decimal hash-sum. AQE is OFF for the
-        # ladder, same reason as the skew ladder: its partition
-        # COALESCING deliberately packs the chunked plan's many small
-        # partitions toward the 64 MB advisory size (measured: a 49 MB
-        # packed task at the 100M rung — healthy behavior that is not a
-        # hot partition), which masks the per-task layout curve under
-        # test; AQE's skew split could not help the DIRECT variant
+        # Same per-MAX-TASK metric as the skew ladder: the direct plan's
+        # hot key is ONE window partition no matter how many reducers
+        # exist (its task's shuffle-read grows 10x/decade, and past
+        # executor memory it becomes the pressure-probe window rung's
+        # spill-and-exact posture), while the chunked plan's max task
+        # tracks rows/partitions (~flat). AQE is OFF for the ladder: its
+        # partition COALESCING deliberately packs the chunked plan's many
+        # small partitions toward the 64 MB advisory size (measured: a
+        # 49 MB packed task at the 100M rung — healthy behavior that is
+        # not a hot partition), which masks the per-task layout curve
+        # under test; AQE's skew split could not help the DIRECT variant
         # anyway (it is join-only — a window partition is unsplittable).
-        # winsum_xl adds the 100M rung (the direct variant sorts a
-        # 70M-row partition in one task — minutes + GB of natural
-        # spill).
+        # winsum_xl's 100M rung sorts a 70M-row partition in one task —
+        # minutes + GB of natural spill.
         old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         old_part = spark.conf.get("spark.sql.shuffle.partitions")
         ws_rungs = [1_000_000, 10_000_000] if "winsum" in pick else []
         if "winsum_xl" in pick:
             ws_rungs = ws_rungs + [100_000_000]
-        from pyspark.sql.window import Window
-
         direct_tasks: list[float] = []
         chunked_tasks: list[float] = []
         try:
             for n in ws_rungs:
                 n_part = max(4, n // 31_250)
                 spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-                fact = spark.range(n).select(
-                    F.when(F.pmod(F.col("id"), F.lit(10)) < 7, F.lit(0))
-                    .otherwise(F.pmod(F.xxhash64("id"), F.lit(1000)) + 1)
-                    .alias("u"),
-                    F.col("id").alias("t"),
-                    F.pmod(F.col("id"), F.lit(97)).alias("v"),
-                ).localCheckpoint()
+                fact = bench.hot_window_fact(spark, n).localCheckpoint()
                 width = max(1, n // (8 * n_part))  # ~8 chunks per reducer
-                direct = fact.withColumn(
-                    "rs",
-                    F.sum("v").over(
-                        Window.partitionBy("u")
-                        .orderBy("t")
-                        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                    ),
-                )
                 chunked = skew.chunked_running_sum(
                     fact, "u", [F.col("t")], "v", F.expr(f"t div {width}"), "rs"
                 )
                 vals = {}
-                for label, df in (("direct", direct), ("chunked", chunked)):
-                    ids0 = _completed_stage_ids()
-                    sw0, _ = bench._stage_bytes(spark)
-                    t0 = time.time()
-                    vals[label] = tuple(
-                        df.agg(
-                            F.count(F.lit(1)),
-                            F.sum("rs"),
-                            F.sum(
-                                F.xxhash64("u", "t", "rs").cast("decimal(38,0)")
-                            ),
-                        ).first()
+                for label, df in (
+                    ("direct", bench.direct_running_sum(fact)),
+                    ("chunked", chunked),
+                ):
+                    m, mx = timed_max_task(df, *window_cols)
+                    vals[label] = m["result"]
+                    out[f"winsum_{label}_{n // 1000}k"] = _rung(
+                        m, max_task_shuffle_read_mb=mx, n_reducers=n_part
                     )
-                    wall = time.time() - t0
-                    sw1, _ = bench._stage_bytes(spark)
-                    mx = _max_task_shuffle_read_mb(ids0)
-                    out[f"winsum_{label}_{n // 1000}k"] = {
-                        "wall_s": round(wall, 2),
-                        "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-                        "max_task_shuffle_read_mb": mx,
-                        "n_reducers": n_part,
-                    }
                     (direct_tasks if label == "direct" else chunked_tasks).append(mx)
                 assert vals["direct"] == vals["chunked"], vals
             for lo, hi in zip(direct_tasks, direct_tasks[1:]):
@@ -782,52 +464,29 @@ def main() -> int:
             spark.conf.set("spark.sql.shuffle.partitions", old_part)
 
     if "winsum_width" in pick:
-        # Chunk-WIDTH tuning law for the decomposed hot-key window
-        # (r13): correctness is width-invariant (pinned in
-        # tests/test_skew.py at widths 1/37/1e9), but the max-task curve
-        # is U-shaped. Too-WIDE chunks under-spread the hot key (the
-        # intra-chunk window re-concentrates: max task ~ 0.7*width *
-        # row_bytes); too-NARROW chunks turn the OFFSET window into the
-        # hot partition (partitionBy(key) orderBy(chunk) puts all of a
-        # key's ~n/width offset rows in ONE task). The ~8-chunks-per-
-        # reducer default sits on the wide plateau between the cliffs:
-        # max_task ~ max(0.7*width*row_B, (n/width)*offset_B), minimized
-        # near width* = sqrt(n*offset_B/(0.7*row_B)) — but the flat
-        # bottom spans ~3 decades, which is why the knob is safe to set
-        # by rule of thumb. Value parity vs the DIRECT window asserted
-        # at every width. Same AQE-off rationale as winsum.
+        # Chunk-WIDTH tuning law for the decomposed hot-key window:
+        # correctness is width-invariant (pinned in tests/test_skew.py at
+        # widths 1/37/1e9), but the max-task curve is U-shaped. Too-WIDE
+        # chunks under-spread the hot key (the intra-chunk window
+        # re-concentrates: max task ~ 0.7*width * row_bytes); too-NARROW
+        # chunks turn the OFFSET window into the hot partition
+        # (partitionBy(key) orderBy(chunk) puts all of a key's ~n/width
+        # offset rows in ONE task). The ~8-chunks-per-reducer default
+        # sits on the wide plateau between the cliffs: max_task ~
+        # max(0.7*width*row_B, (n/width)*offset_B), minimized near
+        # width* = sqrt(n*offset_B/(0.7*row_B)) — but the flat bottom
+        # spans ~3 decades, which is why the knob is safe to set by rule
+        # of thumb. Value parity vs the DIRECT window asserted at every
+        # width. Same AQE-off rationale as winsum.
         old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         old_part = spark.conf.get("spark.sql.shuffle.partitions")
-        from pyspark.sql.window import Window
-
         n = 10_000_000
         n_part = max(4, n // 31_250)
         spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
         try:
-            fact = spark.range(n).select(
-                F.when(F.pmod(F.col("id"), F.lit(10)) < 7, F.lit(0))
-                .otherwise(F.pmod(F.xxhash64("id"), F.lit(1000)) + 1)
-                .alias("u"),
-                F.col("id").alias("t"),
-                F.pmod(F.col("id"), F.lit(97)).alias("v"),
-            ).localCheckpoint()
-            expected = tuple(
-                fact.withColumn(
-                    "rs",
-                    F.sum("v").over(
-                        Window.partitionBy("u")
-                        .orderBy("t")
-                        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                    ),
-                )
-                .agg(
-                    F.count(F.lit(1)),
-                    F.sum("rs"),
-                    F.sum(F.xxhash64("u", "t", "rs").cast("decimal(38,0)")),
-                )
-                .first()
-            )
+            fact = bench.hot_window_fact(spark, n).localCheckpoint()
+            expected = bench.consume(bench.direct_running_sum(fact), *window_cols)
             default_w = max(1, n // (8 * n_part))
             widths = [n // 4, n // 64, default_w, 64, 4]
             curve: dict[int, float] = {}
@@ -835,28 +494,15 @@ def main() -> int:
                 chunked = skew.chunked_running_sum(
                     fact, "u", [F.col("t")], "v", F.expr(f"t div {w}"), "rs"
                 )
-                ids0 = _completed_stage_ids()
-                sw0, _ = bench._stage_bytes(spark)
-                t0 = time.time()
-                got = tuple(
-                    chunked.agg(
-                        F.count(F.lit(1)),
-                        F.sum("rs"),
-                        F.sum(F.xxhash64("u", "t", "rs").cast("decimal(38,0)")),
-                    ).first()
-                )
-                wall = time.time() - t0
-                sw1, _ = bench._stage_bytes(spark)
-                mx = _max_task_shuffle_read_mb(ids0)
-                assert got == expected, (w, got, expected)
+                m, mx = timed_max_task(chunked, *window_cols)
+                assert m["result"] == expected, (w, m["result"], expected)
                 curve[w] = mx
-                out[f"winsum_width_{w}"] = {
-                    "wall_s": round(wall, 2),
-                    "shuffle_mb": round((sw1 - sw0) / 1e6, 1),
-                    "max_task_shuffle_read_mb": mx,
-                    "chunks_per_key": n // w,
-                    "n_reducers": n_part,
-                }
+                out[f"winsum_width_{w}"] = _rung(
+                    m,
+                    max_task_shuffle_read_mb=mx,
+                    chunks_per_key=n // w,
+                    n_reducers=n_part,
+                )
             # the U shape: both extremes concentrate >3x over the default
             assert curve[widths[0]] > 3 * curve[default_w], curve
             assert curve[4] > 3 * curve[default_w], curve
@@ -885,34 +531,15 @@ def main() -> int:
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.shuffle.partitions", "3200")
         try:
-            n = 30_000_000
-            dim = spark.range(1001).select(
-                F.col("id").alias("k"),
-                F.md5(F.col("id").cast("string")).alias("attr"),
-            ).localCheckpoint()
-            fact = spark.range(n).select(
-                F.when(F.pmod(F.col("id"), F.lit(10)) < 7, F.lit(0))
-                .otherwise(F.pmod(F.xxhash64("id"), F.lit(1000)) + 1)
-                .alias("k"),
-                F.md5(F.col("id").cast("string")).alias("payload"),
-            ).localCheckpoint()
+            dim = bench.hot_join_dim(spark).localCheckpoint()
+            fact = bench.hot_join_fact(spark, 30_000_000).localCheckpoint()
             counts = {}
             for label, aqe in (("plain", "false"), ("engine_aqe", "true")):
                 spark.conf.set("spark.sql.adaptive.enabled", aqe)
-                ids0 = _completed_stage_ids()
-                t = time.time()
-                # consume every column (a bare count() lets Catalyst prune
-                # the payload out of the exchanges — the r12 probe lesson)
-                counts[label] = tuple(
-                    fact.join(dim, "k").agg(
-                        F.count(F.lit(1)),
-                        F.sum(F.length("payload")),
-                        F.sum(F.xxhash64("k", "payload", "attr").cast("decimal(38,0)")),
-                    ).first()
-                )
-                mx = _max_task_shuffle_read_mb(ids0)
+                m, mx = timed_max_task(fact.join(dim, "k"), *join_cols)
+                counts[label] = m["result"]
                 out[f"skew_aqe_engine_{label}"] = {
-                    "wall_s": round(time.time() - t, 2),
+                    "wall_s": round(m["walls"][0], 2),
                     "max_task_shuffle_read_mb": mx,
                     "n_reducers": 3200,
                 }

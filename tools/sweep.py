@@ -223,12 +223,9 @@ def _spill_threshold(data: str) -> str:
 
 def _check_spilled(spark, data):
     """Fail unless the replay spilled to disk (REST stage metrics)."""
-    import urllib.request
+    import bench
 
-    sc = spark.sparkContext
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as resp:
-        stages = json.load(resp)
+    stages = bench.read_stages(spark)
     disk = sum(s.get("diskBytesSpilled", 0) for s in stages)
     mem = sum(s.get("memoryBytesSpilled", 0) for s in stages)
     n = sum(1 for s in stages if s.get("diskBytesSpilled", 0) > 0)
