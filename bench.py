@@ -1081,6 +1081,49 @@ REGISTRY_WORKLOADS = {
 }
 
 
+# The driver records only the LAST ~2000 chars of output; the full JSON
+# has outgrown that (r3's artifact lost headline_total and the first
+# workloads' timings), so the bench ends on a compact summary line.
+SUMMARY_LIMIT = 1950
+# The four sub-second rows the summary named before it carried every
+# median (r13 VERDICT task 2: the driver's per-query PERF table reads the
+# summary's `queries` dict).
+SUMMARY_ANCHORS = ("join_3way", "terasort_1m", "tpch_q1", "wordcount")
+
+
+def summary_line(total: float, timings: dict[str, float], wall_total: float, sf: float) -> str:
+    """The bench's final stdout line: the headline plus every per-workload
+    median, in at most SUMMARY_LIMIT characters so that the driver's tail
+    capture always holds parseable JSON. Past the limit the medians are
+    rounded to one decimal, and past it again only the four anchor
+    entries are kept (with a warning naming how many were dropped); the
+    assert then only fails if the headline fields alone do not fit."""
+    summary = {
+        "metric": "headline_total",
+        "value": round(total, 2),
+        "unit": "sec",
+        "queries": {k: round(v, 2) for k, v in timings.items()},
+        "n_workloads": len(timings),
+        "wall_total": wall_total,
+        "sf": sf,
+    }
+    line = json.dumps(summary, separators=(",", ":"))
+    if len(line) > SUMMARY_LIMIT:
+        summary["queries"] = {k: round(v, 1) for k, v in timings.items()}
+        line = json.dumps(summary, separators=(",", ":"))
+    if len(line) > SUMMARY_LIMIT:
+        summary["queries"] = {k: round(timings[k], 2) for k in SUMMARY_ANCHORS if k in timings}
+        line = json.dumps(summary, separators=(",", ":"))
+        print(
+            f"summary line: kept the {len(summary['queries'])} anchor medians, "
+            f"dropped {len(timings) - len(summary['queries'])} entries "
+            f"(the full record is in the JSON above)",
+            file=sys.stderr,
+        )
+    assert len(line) <= SUMMARY_LIMIT, f"summary line too long ({len(line)} chars)"
+    return line
+
+
 def open_session(app_name: str, cpus: str):
     """The engine session with the UI on, so the REST stage metrics
     (shuffle/input bytes) are readable."""
@@ -1105,7 +1148,11 @@ def warm_up(spark, cpus: str, qnames) -> None:
     zero on a long-lived cluster). Then compile each named registry plan
     at the smallest sf, so the timed runs measure the plan in steady state
     (codegen compile is a one-time cost on a real cluster, but 1-3 s of
-    the measurement at local bench scale)."""
+    the measurement at local bench scale). That holds only while the
+    session's generated-class cache outlives the warm-up: with Spark's
+    default of 100 classes the warm-up's later plans evict the earlier
+    ones (the registry needs about 2,100), so the timed runs recompile
+    them; session.py sizes the cache for the whole registry."""
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
     F_pd = F.pandas_udf(lambda s: s, "long")
     spark.range(int(cpus) * 4, numPartitions=int(cpus)).select(
@@ -1245,37 +1292,7 @@ def main() -> int:
         dump_local_artifact(full, here, explicit)
     except Exception as e:  # never fail the bench over bookkeeping
         print(f"bench-local dump skipped: {e}", file=sys.stderr)
-    # The driver records only the LAST ~2000 chars of output; the full
-    # JSON above has outgrown that (r3's artifact lost headline_total and
-    # the first workloads' timings). Emit a compact summary as the FINAL
-    # line so the tail capture always holds the graded numbers; the full
-    # JSON stays above for local use.
-    #
-    # r13 VERDICT task 2: the driver's per-query PERF table reads THIS
-    # line's `queries` dict — while it named only the four sub-second
-    # anchor rows, no optimized path was ever visible to PERF. Emit
-    # EVERY per-workload median (additions only: the four anchor entries
-    # keep their exact names and values; headline metric unchanged).
-    # Compact separators keep the line inside the ~2000-char tail
-    # capture (89 workloads ~= 1910 chars); if a future workload pushes
-    # past the guard, the 1-decimal fallback shaves ~1 char per entry
-    # before the hard assert fails the bench LOUDLY rather than letting
-    # the driver tail-truncate the line into unparseable JSON.
-    summary = {
-        "metric": "headline_total",
-        "value": round(total, 2),
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in b.timings.items()},
-        "n_workloads": len(b.timings),
-        "wall_total": round(time.time() - t0, 2),
-        "sf": sf,
-    }
-    line = json.dumps(summary, separators=(",", ":"))
-    if len(line) > 1950:
-        summary["queries"] = {k: round(v, 1) for k, v in b.timings.items()}
-        line = json.dumps(summary, separators=(",", ":"))
-    assert len(line) <= 1950, f"summary line too long ({len(line)} chars)"
-    print(line)
+    print(summary_line(total, b.timings, round(time.time() - t0, 2), sf))
     return 0
 
 

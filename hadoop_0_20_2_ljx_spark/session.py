@@ -78,6 +78,18 @@ def get_spark(
         # reducers). Records blocks >= 5x the median size exactly —
         # negligible map-status memory, inert below 2000 partitions.
         .config("spark.shuffle.accurateBlockSkewedFactor", "5.0")
+        # Keep the session's generated classes cached across queries and
+        # passes. Spark's codegen cache is one JVM-wide LRU keyed by the
+        # generated source, 100 classes by default. The 8 perfbench
+        # tpch_sql queries need 121 classes and the 188-query registry
+        # about 2,100 at sf0.001, and an LRU that cycles through more
+        # entries than it holds misses on every access: at 100 every warm
+        # tpch_sql pass recompiled 69-112 of its 121 classes, and a second
+        # registry replay in one session 2,610 (measured r15). At 4096,
+        # about twice the registry's set, that replay compiles 41-45 (queries
+        # whose generated source differs per build) for 15 MB more
+        # Metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

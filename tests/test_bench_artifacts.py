@@ -7,7 +7,9 @@ from __future__ import annotations
 import json
 import os
 
-from bench import dump_local_artifact
+import pytest
+
+from bench import SUMMARY_ANCHORS, SUMMARY_LIMIT, dump_local_artifact, summary_line
 
 FULL = {"metric": "headline_total", "value": 1.0}
 
@@ -99,3 +101,26 @@ def test_steal_ticks_reads_proc_stat():
     steal, total = _steal_ticks()
     assert 0 <= steal <= total
     assert total > 0
+
+
+def _labels(n: int) -> dict[str, float]:
+    """The four anchors plus n - 4 synthetic labels as wide as the real
+    ones (89 real medians made a 1,910-character line)."""
+    timings = {k: 0.42 for k in SUMMARY_ANCHORS}
+    for i in range(n - len(timings)):
+        timings[f"workload_{i:03d}"] = 1.0 + i * 0.137
+    return timings
+
+
+@pytest.mark.parametrize("n, kept", [(89, 89), (200, 4)])
+def test_summary_line_parses_within_the_tail_limit(n, kept, capsys):
+    timings = _labels(n)
+    line = summary_line(sum(timings.values()), timings, 1234.56, 0.1)
+    assert len(line) <= SUMMARY_LIMIT
+    summary = json.loads(line)
+    assert summary["value"] == round(sum(timings.values()), 2)
+    assert summary["n_workloads"] == n
+    assert len(summary["queries"]) == kept
+    assert set(SUMMARY_ANCHORS) <= set(summary["queries"])
+    err = capsys.readouterr().err
+    assert (f"dropped {n - kept} entries" in err) == (kept < n)

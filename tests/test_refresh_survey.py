@@ -100,3 +100,15 @@ def test_check_still_fails_on_real_drift(sandbox, monkeypatch, capsys):
     }
     (tmp / "CORRECTNESS_r98.json").write_text(json.dumps(fresh))
     assert _run(mod, monkeypatch, "--check") == 1
+
+
+@pytest.mark.parametrize("argv", [["--chek"], ["--check", "extra"], ["--round", "x"]])
+def test_bad_arguments_exit_2_and_leave_survey_untouched(sandbox, monkeypatch, argv):
+    """A typo must not take the write path: argparse exits 2 before
+    SURVEY.md is read or written."""
+    mod, tmp = sandbox
+    before = (tmp / "SURVEY.md").read_bytes()
+    with pytest.raises(SystemExit) as exc:
+        _run(mod, monkeypatch, *argv)
+    assert exc.value.code == 2
+    assert (tmp / "SURVEY.md").read_bytes() == before

@@ -26,6 +26,7 @@ being recorded; pass --round N to advance it.
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -129,20 +130,21 @@ def render(tag: str, changed: dict[str, str], exclude_round: int | None = None) 
 
 
 def main() -> int:
-    check = "--check" in sys.argv
-    rnd = None
-    if "--round" in sys.argv:
-        try:
-            rnd = int(sys.argv[sys.argv.index("--round") + 1])
-        except (IndexError, ValueError):
-            raise SystemExit("--round needs an integer argument") from None
+    p = argparse.ArgumentParser(
+        description="Regenerate (or verify) SURVEY.md §8's registry-status table."
+    )
+    p.add_argument(
+        "--check", action="store_true", help="verify the table instead of rewriting it"
+    )
+    p.add_argument("--round", type=int, help="the round the window column header names")
+    args = p.parse_args()
     surv = open(SURVEY).read()
     tag, changed, start, end = parse_existing(surv)
-    if rnd is not None:
-        tag = f"r{rnd}-50"
+    if args.round is not None:
+        tag = f"r{args.round}-50"
     table = render(tag, changed)
     current = surv[start:end]
-    if check:
+    if args.check:
         if current.rstrip("\n") + "\n" == table:
             print("SURVEY §8 table matches the artifacts")
             return 0
