@@ -28,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from hadoop_0_20_2_ljx_spark import catalog
 from hadoop_0_20_2_ljx_spark.operators.generators import tera_gen
 from hadoop_0_20_2_ljx_spark.operators.sorts import total_order_sort
 from hadoop_0_20_2_ljx_spark.queries import REGISTRY
@@ -352,7 +353,7 @@ def _linear_in_tokens(ms: dict) -> None:
 def _lineitem_hot(spark, value):
     """lineitem with 70% of rows on key 1 (a Zipf-1 head far beyond AQE's
     skew threshold), next to ``value``."""
-    return spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
+    return catalog.load(spark, SF_DIR, "lineitem").select(
         F.when(F.pmod(F.col("l_orderkey"), F.lit(10)) < 7, F.lit(1))
         .otherwise(F.col("l_orderkey"))
         .alias("k"),
@@ -362,7 +363,7 @@ def _lineitem_hot(spark, value):
 
 def _snapshots(spark, _n):
     """orders as (k, status, cents), and a copy where 0.1% of keys drift."""
-    base = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
+    base = catalog.load(spark, SF_DIR, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderstatus").alias("status"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
@@ -627,7 +628,7 @@ STRESS = {
     "bench_skew_join": {
         "gen": lambda spark, _n: (
             _lineitem_hot(spark, "l_quantity"),
-            spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
+            catalog.load(spark, SF_DIR, "orders").select(
                 F.col("o_orderkey").alias("k"), "o_totalprice"
             ),
         ),
@@ -1153,7 +1154,7 @@ def warm_up(spark, cpus: str, qnames) -> None:
     default of 100 classes the warm-up's later plans evict the earlier
     ones (the registry needs about 2,100), so the timed runs recompile
     them; session.py sizes the cache for the whole registry."""
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
+    catalog.load(spark, SF_DIR, "region").count()
     F_pd = F.pandas_udf(lambda s: s, "long")
     spark.range(int(cpus) * 4, numPartitions=int(cpus)).select(
         F_pd(F.col("id"))

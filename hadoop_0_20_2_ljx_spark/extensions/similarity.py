@@ -62,10 +62,14 @@ def brute_force_knn(
     and is never shuffled, but every executor holds all queries. The guard
     below makes that precondition explicit instead of letting a 10 M-row
     query side OOM executors (or silently degrade to a nested-loop join).
-    The probe is bounded — limit(max_queries+1).count() scans at most
-    one row past the cap, never the full query side.
+    The probe is bounded — take(max_queries+1) fetches at most one row
+    past the cap, never the full query side. It is not
+    limit(max_queries+1).count(): a limit inside whole-stage codegen names
+    its counter from a JVM-wide sequence, so that plan's generated source,
+    the codegen cache key, differed per call and recompiled 2 classes on
+    every call.
     """
-    if queries.limit(max_queries + 1).count() > max_queries:
+    if len(queries.select(F.lit(1)).take(max_queries + 1)) > max_queries:
         raise ValueError(
             f"brute_force_knn: query side exceeds max_queries={max_queries}; "
             "the query set must be broadcast-small. For large query sets "

@@ -15,9 +15,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 import zipfile
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+R = TypeVar("R")
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -45,6 +50,27 @@ def ship_package(spark: SparkSession) -> None:
                     zf.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
     sc._ljx_pkg_shipped = True
+
+
+def count_jobs(spark: SparkSession, fn: Callable[[], R]) -> tuple[R, int]:
+    """``fn()`` and the number of Spark jobs it ran from this thread.
+
+    The jobs are counted under a job group of their own; the thread's
+    previous group comes back afterwards. The status store is fed by the
+    listener bus, which trails the jobs, so it is drained before the count.
+    """
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    prior = [sc.getLocalProperty(k) for k in keys]
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        for k, v in zip(keys, prior):
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def get_spark(

@@ -40,3 +40,28 @@ def test_codegen_cache_outlives_a_tpch_pass(spark, monkeypatch):
         deltas.append(_compiles(spark) - before)
     first, second = deltas
     assert second <= 0.05 * first, f"compiles per pass: {deltas}"
+
+
+def test_knn_guard_compiles_once(spark):
+    """brute_force_knn's bounded query-side probe compiles its classes once
+    per session: a whole-stage ``limit`` names its counter from a JVM-wide
+    sequence, so the old ``limit(max_queries + 1).count()`` probe generated
+    new source, and recompiled 2 classes, on every call. The probe must
+    still refuse a query side over the cap."""
+    import pytest
+
+    from hadoop_0_20_2_ljx_spark import catalog
+    from hadoop_0_20_2_ljx_spark.extensions import similarity
+
+    def knn(max_queries: int = 100_000):
+        emb = catalog.load(spark, SF_SMOKE, "embeddings")
+        queries = emb.filter("vec_id < 5")
+        return similarity.brute_force_knn(emb, queries, k=10, max_queries=max_queries)
+
+    knn()
+    before = _compiles(spark)
+    knn()
+    assert _compiles(spark) - before == 0
+    with pytest.raises(ValueError, match="max_queries=4"):
+        knn(max_queries=4)
+    knn(max_queries=5)

@@ -70,6 +70,11 @@ _ACCEPTED: dict[str, tuple[int, str]] = {
         "O(shards) manifest tuples (name, members, bytes) from "
         "mapPartitions writers — payload stays executor-side",
     ),
+    "extensions/similarity.py::brute_force_knn::take": (
+        1,
+        "query-side broadcast guard: at most max_queries + 1 one-column "
+        "rows of lit(1), bounded by the cap, never the query side",
+    ),
     "extensions/similarity.py::ivf_ann::collect": (
         1,
         "nlist designated-centroid rows (<=LITERAL_NLIST_MAX or ridden "

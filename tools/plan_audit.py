@@ -25,16 +25,26 @@ produced real r8 scale bugs; run after adding or reshaping queries.
    in one select or by pinning the shared table (extensions/dedup.py
    ngram_jaccard_pairs / duplicate_substring_spans).
 
+3. BUILD-JOB LEDGER (the eager-job layer): the Spark jobs each query
+   runs while it is built, before any action — pins, sizing counts,
+   training and iteration loops. Every fixture table is loaded once
+   first, so the ledger counts no schema inference (catalog.load caches
+   it per session). The counts are locked in tools/job_ledger.json; a
+   count above its entry fails the audit, a count below it asks for a
+   refresh.
+
 Usage:  python tools/plan_audit.py [sf_dir] [--snapshot]   (default sf0.001)
 A gate: exits 1 when a query raises while building, when a flag has no
 reviewed reason in _ACCEPTED (known-intentional shapes are listed there
-with the reason the audit keeps showing them), or when a plan shape
-differs from tools/plan_shapes.json. --snapshot rewrites the snapshot, so
-shape diffs are then the intended refresh and do not fail the run.
+with the reason the audit keeps showing them), when a plan shape differs
+from tools/plan_shapes.json, or when a query runs more build jobs than
+tools/job_ledger.json records. --snapshot rewrites both files, so shape
+and job diffs are then the intended refresh and do not fail the run.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -90,6 +100,20 @@ EXPENSIVE = re.compile(
 
 
 _SNAPSHOT = __file__.replace("plan_audit.py", "plan_shapes.json")
+_LEDGER = __file__.replace("plan_audit.py", "job_ledger.json")
+
+# name -> why its build-job count varies between builds; --snapshot builds
+# these _VARY_BUILDS times and records the maximum.
+_JOBS_VARY = {
+    "q_graph_kcore": "AQE runs each pinned join's shuffle stages as jobs of "
+    "their own and re-plans as each one finishes, so the stage-completion "
+    "order decides how many run (45-48 jobs with AQE on, 18 in every build "
+    "with it off)",
+    "q_dedup_clusters": "varied by one job between builds while every load "
+    "still inferred its schema (21 in each of 20 builds since); its "
+    "connected-components rounds pin under AQE like kcore's",
+}
+_VARY_BUILDS = 10
 
 # Logical-plan node/call counts that are deterministic at any fixture
 # size (AQE and broadcast thresholds act on the PHYSICAL plan, so these
@@ -103,11 +127,25 @@ def _shape(plan: str) -> dict[str, int]:
     return {k: plan.count(k) for k in _SHAPE_KEYS}
 
 
-def main() -> int:
-    import json
+def _load(path: str) -> dict:
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except OSError:
+        return {}
+    except ValueError as e:
+        # corrupt/truncated snapshot: audit against an empty baseline
+        # (every entry reported as new) instead of aborting (r8 ADVICE)
+        print(f"WARN {os.path.basename(path)} unreadable ({e}); auditing against empty baseline")
+        return {}
 
+
+def main() -> int:
     import __spark_entry__ as entry_mod
     from pyspark.sql import SparkSession
+
+    from hadoop_0_20_2_ljx_spark import catalog
+    from hadoop_0_20_2_ljx_spark.session import count_jobs
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     snapshot_mode = "--snapshot" in sys.argv
@@ -118,27 +156,35 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    try:
-        with open(_SNAPSHOT) as fh:
-            prior = json.load(fh)
-    except OSError:
-        prior = {}
-    except ValueError as e:
-        # corrupt/truncated snapshot: audit against an empty baseline
-        # (every shape reported as new) instead of aborting (r8 ADVICE)
-        print(f"WARN snapshot unreadable ({e}); auditing against empty baseline")
-        prior = {}
+    prior = _load(_SNAPSHOT)
+    prior_jobs = _load(_LEDGER)
+    # the registry's wrappers set the session's confs on every call; set
+    # them first, so these loads infer each schema under the confs the
+    # queries load with and no query's count includes an inference job
+    entry_mod._configure(spark)
+    for table in catalog.TABLES:
+        catalog.load(spark, sf, table)
     errors = 0
     flagged = 0
     shape_diffs = 0
+    job_rises = 0
     shapes: dict[str, dict[str, int]] = {}
+    ledger: dict[str, int] = {}
     for name, fn in sorted(entry_mod.queries().items()):
+        builds = _VARY_BUILDS if snapshot_mode and name in _JOBS_VARY else 1
         try:
-            plan = fn(spark, sf)._jdf.queryExecution().optimizedPlan().toString()
+            for _ in range(builds):
+                df, jobs = count_jobs(spark, lambda fn=fn: fn(spark, sf))
+                ledger[name] = max(jobs, ledger.get(name, 0))
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name}: {str(e)[:100]}")
             errors += 1
             continue
+        if name in prior_jobs and prior_jobs[name] != ledger[name]:
+            rise = ledger[name] > prior_jobs[name]
+            job_rises += rise
+            print(f"JOBS {name}: {prior_jobs[name]}->{ledger[name]}" + ("" if rise else " (fewer)"))
         shapes[name] = _shape(plan)
         if name in prior and prior[name] != shapes[name]:
             shape_diffs += 1
@@ -174,12 +220,18 @@ def main() -> int:
             f"plan-shape diffs vs snapshot: {shape_diffs} "
             "(each needs an explanation or a refreshed snapshot)"
         )
+    if prior_jobs:
+        print(
+            f"build-job increases vs ledger: {job_rises} "
+            f"(build jobs: {sum(ledger.values())} now, {sum(prior_jobs.values())} in the ledger)"
+        )
     if snapshot_mode:
-        with open(_SNAPSHOT, "w") as fh:
-            json.dump(shapes, fh, indent=0, sort_keys=True)
-        print(f"snapshot written: {_SNAPSHOT} ({len(shapes)} queries)")
+        for path, data in ((_SNAPSHOT, shapes), (_LEDGER, ledger)):
+            with open(path, "w") as fh:
+                json.dump(data, fh, indent=0, sort_keys=True)
+            print(f"snapshot written: {path} ({len(data)} queries)")
     spark.stop()
-    failed = errors or flagged or (shape_diffs and not snapshot_mode)
+    failed = errors or flagged or ((shape_diffs or job_rises) and not snapshot_mode)
     print("PLAN AUDIT: FAIL" if failed else "PLAN AUDIT: OK")
     return 1 if failed else 0
 
