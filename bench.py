@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark import catalog
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.operators.generators import tera_gen
 from hadoop_0_20_2_ljx_spark.operators.sorts import total_order_sort
 from hadoop_0_20_2_ljx_spark.queries import REGISTRY
@@ -168,16 +169,10 @@ def bench_terasort(spark, n: int = 1_000_000) -> None:
 # ---------------------------------------------------- generated stress data
 
 
-def md5_long(salt: str):
+def _id_hash(salt: str):
     """A deterministic pseudo-random long per row id: the first 12 hex
     digits of md5("<salt>-<id>")."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws("-", F.lit(salt), F.col("id").cast("string"))), 1, 12
-        ),
-        16,
-        10,
-    ).cast("long")
+    return F.expr(md5_int_sql(f"concat_ws('-', '{salt}', CAST(id AS STRING))", 12))
 
 
 def pagerank_edge_stream(spark, n_edges: int):
@@ -185,8 +180,8 @@ def pagerank_edge_stream(spark, n_edges: int):
     edges/10)."""
     nodes = n_edges // 10
     return spark.range(n_edges).select(
-        (md5_long("s") % F.lit(nodes)).alias("src"),
-        (md5_long("d") % F.lit(nodes)).alias("dst"),
+        (_id_hash("s") % F.lit(nodes)).alias("src"),
+        (_id_hash("d") % F.lit(nodes)).alias("dst"),
     )
 
 
@@ -199,7 +194,7 @@ def hub_edges(spark, n_edges: int, cols=("src", "dst"), offset: int = 0):
     nodes = n_edges // 10
 
     def node(salt: str):
-        h = md5_long(salt)
+        h = _id_hash(salt)
         # selection bit (h % 16) and value bits (h >> 4) are disjoint
         picked = F.when(h % 16 == 0, F.shiftright(h, 4) % 10).otherwise(
             F.shiftright(h, 4) % F.lit(nodes)
@@ -220,8 +215,8 @@ def temporal_event_stream(spark, n_rows: int):
     span_us = n_rows * 1_000_000
     return spark.range(n_rows).select(
         F.col("id").alias("event_id"),
-        (md5_long("u") % users).alias("user_id"),
-        (md5_long("t") % span_us).alias("t_us"),
+        (_id_hash("u") % users).alias("user_id"),
+        (_id_hash("t") % span_us).alias("t_us"),
         (F.col("id") % 2 == 0).alias("is_click"),
     )
 
@@ -381,19 +376,9 @@ def _diff_kinds(spark, diff, _n) -> dict:
 
 def _ivf_corpus(spark, n: int):
     """n 64-dim md5-derived vectors."""
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.conv(
-            F.substring(
-                F.md5(F.concat_ws("-", F.col("id").cast("string"), i.cast("string"))),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(16777216.0)
-        - F.lit(0.5),
+    h = md5_int_sql("concat_ws('-', CAST(id AS STRING), CAST(i AS STRING))", 6)
+    vec = F.expr(
+        f"transform(sequence(0, 63), i -> CAST({h} AS DOUBLE) / 16777216.0D - 0.5D)"
     )
     return spark.range(n).select(
         F.col("id").cast("int").alias("vec_id"), vec.alias("embedding")

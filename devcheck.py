@@ -15,10 +15,12 @@ from hadoop_0_20_2_ljx_spark.session import get_spark
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    args = sys.argv[1:]
     sf = "/root/testdata/sf0.001"
-    if "--sf" in sys.argv:
-        sf = sys.argv[sys.argv.index("--sf") + 1]
+    if "--sf" in args:
+        i = args.index("--sf")
+        sf = args[i + 1]
+        del args[i : i + 2]
     names = [n for n in REGISTRY if not args or any(n.startswith(p) for p in args)]
     spark = get_spark(shuffle_partitions=8)
     failures = 0

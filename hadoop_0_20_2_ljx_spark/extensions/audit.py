@@ -385,15 +385,17 @@ def bucket_fingerprint(
     hex string per row, the dominant per-row CPU of a 100 TB
     anti-entropy scan).
     """
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash64
+    from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 
-    if hash64 is None:
-        hash64 = portable_hash64
-    h = hash64(row_repr).cast("decimal(38,0)")
+    # the row rendering is aliased so the SQL-text hash can name it; the
+    # optimizer collapses the two projections into the one it replaces
+    rows = df.select(bucket.alias("_b"), row_repr.alias("_r"))
+    h = F.expr(md5_int_sql("_r", 15)) if hash64 is None else hash64(F.col("_r"))
     m63 = F.lit("9223372036854775808").cast("decimal(38,0)")  # 2^63
     return (
-        df.select(
-            F.pmod(bucket.cast("long"), F.lit(n_buckets)).alias("bucket"), h.alias("_h")
+        rows.select(
+            F.pmod(F.col("_b").cast("long"), F.lit(n_buckets)).alias("bucket"),
+            h.cast("decimal(38,0)").alias("_h"),
         )
         .groupBy("bucket")
         .agg(

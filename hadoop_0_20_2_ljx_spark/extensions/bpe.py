@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens_sql
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
@@ -55,7 +57,7 @@ def learn_bpe(
     driver, the O(k) pattern of kmeans/clustering.py).
     """
     spark = df.sparkSession
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    words = F.expr(tokens_sql(f"`{text_col}`"))
     vocab = (
         df.select(F.explode(words).alias("w"))
         .groupBy("w")

@@ -25,35 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _dlit(x: float) -> str:
-    """SQL double literal; repr round-trips the exact IEEE value."""
-    return repr(float(x)) + "D"
-
-
-def _sq_dist_sql(vec_sql: str, cent: list[float]) -> str:
-    """Squared L2 distance of a vector SQL expression against a literal
-    centroid, as the same left-to-right aggregate/zip_with fold the Column
-    form builds (index order — matches DuckDB's list_sum of a
-    list_transform, keeping the replayed-chain oracles bitwise-equal).
-
-    Why SQL text instead of Column operators: a k-centroid argmin is
-    O(k·dim) literal nodes, and every Column operator is a py4j
-    round-trip — building the tree in Python costs seconds per query
-    while one F.expr parse is milliseconds. The parsed tree is
-    IDENTICAL."""
-    arr = "array(" + ", ".join(_dlit(x) for x in cent) + ")"
-    return (
-        f"aggregate(zip_with({vec_sql}, {arr}, (x, c) -> (x - c) * (x - c)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
+from hadoop_0_20_2_ljx_spark.functions.portable import double_array_sql, sq_dist_sql
 
 
 def _argmin_sql(vec_sql: str, book: dict[int, list[float]]) -> str:
     """least(struct(dist, id)) over a codebook: min distance, ties to the
     smaller cluster id — identical to the Column-form argmin."""
     pairs = ", ".join(
-        f"struct({_sq_dist_sql(vec_sql, c)} AS d, {int(ci)} AS c)"
+        f"struct({sq_dist_sql(vec_sql, double_array_sql(c))} AS d, {int(ci)} AS c)"
         for ci, c in sorted(book.items())
     )
     return f"least({pairs})"
@@ -64,7 +43,7 @@ def assign_clusters(
 ) -> DataFrame:
     """Nearest-centroid assignment as one projection: `least` over
     (distance, cluster_id) structs = argmin with lowest-id tie-break.
-    Built as one parsed SQL expression (see _sq_dist_sql)."""
+    Built as one parsed SQL expression (see _argmin_sql)."""
     vec_sql = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     return df.withColumn(
         out_col, F.expr(_argmin_sql(vec_sql, centroids)).getField("c")

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens_sql
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
@@ -48,7 +49,7 @@ def word_shingles_sql(text_sql: str, k: int = 3) -> str:
     """Distinct word k-grams of a text expression (the shingle set).
     Tokenization is the ONE shared corpus tokenizer (textstats.tokens_sql)
     — every text family (dedup, contamination, BM25, logprob) and the
-    _WORDS SQL rendering in queries/ext.py must stay bit-identical.
+    DuckDB rendering queries/base.words_sql must stay bit-identical.
 
     The token array is bound ONCE as a lambda variable (wrap in a
     1-element array, transform over it): Catalyst performs no common-
@@ -85,15 +86,6 @@ def pad_empty_sql(arr_sql: str) -> str:
     )
 
 
-def md5_base_sql(x_sql: str, hex_digits: int = 15) -> str:
-    """md5-derived non-negative BIGINT of a string expression: its first
-    `hex_digits` md5 hex digits. 15 digits (60 bits) is the base hash of
-    the minhash family and of the simhash token votes; 8 digits (32 bits)
-    is the LSH band bucket. md5 hex is bit-identical in DuckDB, so the
-    oracles reproduce every value."""
-    return f"CAST(conv(substring(md5({x_sql}), 1, {hex_digits}), 16, 10) AS BIGINT)"
-
-
 # Double-hashing (Kirsch-Mitzenmacher) minhash family: ONE md5 per shingle,
 # split into two 30-bit halves (h1 = v >> 30, h2 = v & (2^30-1) from the
 # 60-bit md5 prefix), seed s's hash = (h1 + s*h2) mod 2^30. Affine combos of
@@ -106,7 +98,7 @@ _MH_MOD = 1 << 30
 
 def mh_hash_sql(v_sql: str, s: int | str) -> str:
     """Seed-`s` member of the double-hash family from the shared base
-    value `v_sql` (md5_base_sql); `s` is a seed constant or the name of
+    value `v_sql` (md5_int_sql); `s` is a seed constant or the name of
     an integer lambda variable."""
     return (
         f"((shiftright({v_sql}, 30) + {s} * ({v_sql} & {_MH_MOD - 1})) % {_MH_MOD})"
@@ -126,7 +118,7 @@ def minhash_signature(text_col: str, num_hashes: int = 16, shingle_k: int = 3) -
     per-seed lambda re-built it num_hashes times per document).
     """
     padded = pad_empty_sql(word_shingles_sql(f"`{text_col}`", shingle_k))
-    h = mh_hash_sql(md5_base_sql("g"), "s")
+    h = mh_hash_sql(md5_int_sql("g", 15), "s")
     return F.expr(
         f"element_at(transform(array({padded}), sh -> transform("
         f"sequence(0, {num_hashes - 1}), s -> array_min(transform(sh, g -> {h})))), 1)"
@@ -170,7 +162,7 @@ def minhash_signatures_relational(
     # share it.
     padded_sql = pad_empty_sql(word_shingles_sql("_text", shingle_k))
     hashed = spread.selectExpr("doc", f"explode({padded_sql}) AS g").selectExpr(
-        "doc", f"{md5_base_sql('g')} AS v"
+        "doc", f"{md5_int_sql('g', 15)} AS v"
     )
     return hashed.groupBy("doc").agg(
         *[F.expr(f"min({mh_hash_sql('v', s)}) AS h{s}") for s in range(num_hashes)]
@@ -193,7 +185,7 @@ def band_buckets_from_signatures(
         cols = ", ".join(
             f"CAST(h{b * rows_per_band + i} AS STRING)" for i in range(rows_per_band)
         )
-        return md5_base_sql(f"concat_ws(',', {cols})", 8)
+        return md5_int_sql(f"concat_ws(',', {cols})", 8)
 
     structs = ", ".join(
         f"struct({b} AS band, {_bucket(b)} AS bucket)" for b in range(bands)
@@ -362,7 +354,7 @@ def group_similarity_matrix(
     # (2x sa/sb + 2x na/nb); now the vocabulary is aggregated once and
     # the O(groups)-row result replays from the pin (r13 optimization).
     stats = pin(
-        gs.selectExpr("grp", f"{md5_base_sql('g')} AS v")
+        gs.selectExpr("grp", f"{md5_int_sql('g', 15)} AS v")
         .groupBy("grp")
         .agg(
             *[F.expr(f"min({mh_hash_sql('v', s)}) AS h{s}") for s in range(num_hashes)],
@@ -436,7 +428,7 @@ def simhash64(text_col: str, bits: int = 60) -> Column:
     per bit (60x per document).
     """
     padded = pad_empty_sql(tokens_sql(f"`{text_col}`"))
-    hashed = f"transform({padded}, w -> {md5_base_sql('w')})"
+    hashed = f"transform({padded}, w -> {md5_int_sql('w', 15)})"
     votes = " + ".join(
         "CASE WHEN (aggregate(hs, CAST(0 AS BIGINT), (acc, h) -> acc + "
         f"CASE WHEN ((h & {1 << j}) != 0) THEN 1 ELSE -1 END) > 0) "
@@ -491,7 +483,7 @@ def simhash_signatures(
     tok = (
         ids.repartition(sc.defaultParallelism, id_col)
         .selectExpr(f"`{id_col}`", f"explode({padded_sql}) AS w")
-        .selectExpr(f"`{id_col}`", f"{md5_base_sql('w')} AS h")
+        .selectExpr(f"`{id_col}`", f"{md5_int_sql('w', 15)} AS h")
     )
     # Per-bit +1/-1 vote sum v_j = 2*s_j - n where s_j = count of set bits.
     # Bit-sliced lane packing (r14): the previous form kept one SUM buffer
@@ -837,7 +829,6 @@ def duplicate_substring_spans(
     (functions/portable.py) for cross-engine oracle parity.
     """
     from hadoop_0_20_2_ljx_spark.extensions.pipeline_ops import word_ngrams
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash64
 
     toks = F.expr(tokens_sql(f"lower(`{text_col}`)"))
     grams = word_ngrams(text_col, n)
@@ -850,7 +841,7 @@ def duplicate_substring_spans(
         F.col(id_col).alias("doc"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.posexplode(grams).alias("pos", "gram"),
-    ).select("doc", "n_tokens", "pos", portable_hash64(F.col("gram")).alias("gh")).transform(pin)
+    ).selectExpr("doc", "n_tokens", "pos", f"{md5_int_sql('gram', 15)} AS gh").transform(pin)
     dup_vocab = (
         windows.select("doc", "gh")
         .distinct()
@@ -956,7 +947,7 @@ def chunk_first_occurrence_dedup(
         ),
     )
     chunk = f"array_join(slice(_toks, ((pos * {chunk_tokens}) + 1), {chunk_tokens}), ' ')"
-    chunks = exploded.selectExpr("doc", "pos", f"{md5_base_sql(chunk)} AS ch")
+    chunks = exploded.selectExpr("doc", "pos", f"{md5_int_sql(chunk, 15)} AS ch")
     winners = chunks.groupBy("ch").agg(
         F.min(F.struct(F.col("doc"), F.col("pos"))).alias("w")
     )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hadoop_0_20_2_ljx_spark.extensions.textstats import tokens_sql
-from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
@@ -189,7 +189,7 @@ def stratified_sample(
             for x in (F.lit(g), F.lit(int(round(rate * 10000))))
         ]
     )
-    bucket = portable_hash32(F.col(key_col)) % 10000
+    bucket = F.expr(md5_int_sql(f"`{key_col}`", 8)) % 10000
     return df.filter(bucket < F.coalesce(bps[F.col(group_col)], F.lit(0)))
 
 
@@ -213,10 +213,9 @@ def global_shuffle(df: DataFrame, key_col: str, pos_col: str = "shuffle_pos") ->
     position = rank under (md5-derived hash of key, key). Reproducible
     across runs/engines/retries (portable hash, not rand()), and the rank
     uses the two-pass range-partition shape — no single-partition window."""
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash64
     from hadoop_0_20_2_ljx_spark.operators.sorts import with_global_row_number
 
-    h = portable_hash64(F.col(key_col))
+    h = F.expr(md5_int_sql(f"`{key_col}`", 15))
     out = with_global_row_number(
         df.withColumn("_h", h), [F.col("_h"), F.col(key_col)], pos_col
     )
@@ -370,7 +369,7 @@ def temperature_sample(
         .cast("long")
         .alias("_tbps"),
     )
-    bucket = portable_hash32(F.col(key_col)) % 10000
+    bucket = F.expr(md5_int_sql(f"`{key_col}`", 8)) % 10000
     return (
         df.join(F.broadcast(rates), df[group_col] == rates["_tg"])
         .where(bucket < F.col("_tbps"))
@@ -490,7 +489,7 @@ def domain_reweight(
         f"{group_col} AS _rg",
         f"least(10000L, (10000L * ({tgt_sql})) DIV _cur) AS {rate_col}",
     )
-    bucket = portable_hash32(F.col(key_col)) % 10000
+    bucket = F.expr(md5_int_sql(f"`{key_col}`", 8)) % 10000
     return (
         df.join(rates, df[group_col] == rates["_rg"])
         .where(bucket < F.col(rate_col))

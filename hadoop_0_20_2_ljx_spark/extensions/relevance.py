@@ -24,7 +24,7 @@ from hadoop_0_20_2_ljx_spark.pinning import pin
 def _words(col: str):
     # the ONE corpus tokenizer (textstats.tokens_sql) — BM25/logprob must
     # stay bit-identical with the dedup/contamination family and the
-    # _WORDS SQL rendering in queries/ext.py
+    # DuckDB rendering queries/base.words_sql
     return F.expr(tokens_sql(f"`{col}`"))
 
 

@@ -12,8 +12,12 @@ Two tiers:
     At 100 TB you'd write the corpus partitioned by bucket so the probe
     prunes partitions; semantics here are identical.
 
-Dot products use double-precision aggregate over zip_with — JVM-side,
-deterministic left-to-right summation (matches the DuckDB oracle's
+Every score is one of the fold builders of functions/portable.py —
+cos_sql for cosine (dot_sql under it), sq_dist_sql for the PQ
+asymmetric and exact squared-L2 distances, with double_array_sql /
+double_sql rendering the literal centroids and codebooks. They are
+double-precision aggregate-over-zip_with folds — JVM-side, deterministic
+left-to-right summation (matches the DuckDB oracle's
 list_inner_product on DOUBLE[] exactly).
 """
 
@@ -24,24 +28,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from hadoop_0_20_2_ljx_spark.functions.portable import (
+    cos_sql,
+    double_array_sql,
+    double_sql,
+    sq_dist_sql,
+)
 from hadoop_0_20_2_ljx_spark.operators.scans import spread as _spread
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Double-precision dot product of two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def brute_force_knn(
@@ -79,7 +72,7 @@ def brute_force_knn(
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
     c = _spread(corpus).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
     scored = c.crossJoin(broadcast(q)).filter(F.col("q_id") != F.col("neighbor_id")).select(
-        "q_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
+        "q_id", "neighbor_id", F.expr(cos_sql("q_vec", "c_vec")).alias("cos")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -130,7 +123,7 @@ def embedding_neardup_pairs(
     ).select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
-        cosine(F.col("a.vec"), F.col("b.vec")).alias("cos"),
+        F.expr(cos_sql("a.vec", "b.vec")).alias("cos"),
     )
     return pairs.filter(F.col("cos") >= threshold).select(
         "id_a", "id_b", F.round("cos", 6).alias("cos")
@@ -155,38 +148,21 @@ LITERAL_NLIST_MAX = 64
 _CENTS_COL = "__ljx_cents__"
 
 
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _cos_sql(vec_col: str, cvec_sql: str, cnorm_sql: str) -> str:
-    """Cosine of the row's vector against one centroid, as SQL text — the
-    scoring core shared by BOTH routing paths (literal and array-column)
-    of ivf_assign and ivf_probe_lists. The nprobe=1 parity contract (and
-    the DuckDB oracle chains) require the fold to stay bitwise-identical
-    everywhere; sharing the builder makes a one-sided edit impossible."""
-    v_sql = f"`{vec_col}`"
-    return f"{_dot_sql(v_sql, cvec_sql)} / (sqrt({_dot_sql(v_sql, v_sql)}) * {cnorm_sql})"
-
-
 def _centroid_cos_sqls(
     centroids: list[tuple[int, list[float]]], vec_col: str
 ) -> list[tuple[int, str]]:
     """Per-centroid cosine as SQL TEXT (the literal path). Built as SQL
     text, not Column trees: a k-centroid scorer is O(k·dim) literal nodes
     and each Column operator is a py4j round-trip — one F.expr parse is
-    milliseconds for the identical tree."""
-    from hadoop_0_20_2_ljx_spark.extensions.clustering import _dlit
-
+    milliseconds for the identical tree. Both routing paths (literal and
+    array-column) of ivf_assign and ivf_probe_lists score with cos_sql,
+    so the nprobe=1 parity contract cannot break on a one-sided edit."""
     out = []
     for cid, cvec in centroids:
-        arr = "array(" + ", ".join(_dlit(x) for x in cvec) + ")"
         cnorm = float(sum(x * x for x in cvec)) ** 0.5
-        out.append((int(cid), _cos_sql(vec_col, arr, _dlit(cnorm))))
+        out.append(
+            (int(cid), cos_sql(f"`{vec_col}`", double_array_sql(cvec), double_sql(cnorm)))
+        )
     return out
 
 
@@ -234,6 +210,21 @@ def _centroid_array_frame(spark, centroids: list[tuple[int, list[float]]]):
     return spark.createDataFrame(rows, schema)
 
 
+def _fetch_centroids(
+    corpus: DataFrame, nlist_ids: list[int], id_col: str, vec_col: str
+) -> list[tuple[int, list[float]]]:
+    """The embeddings of the designated ``nlist_ids`` as an id-ordered
+    codebook — the deterministic, oracle-reproducible stand-in for a
+    k-means training job that ivf_ann and ivfpq_ann route by."""
+    return [
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in corpus.filter(F.col(id_col).isin(nlist_ids))
+        .select(id_col, vec_col)
+        .orderBy(id_col)
+        .collect()
+    ]
+
+
 def _use_literal(centroids, literal: bool | None) -> bool:
     return len(centroids) <= LITERAL_NLIST_MAX if literal is None else literal
 
@@ -253,7 +244,7 @@ def ivf_assign(
     structs. Large nlist (or ``literal=False``): the same argmax runs over
     a broadcast array COLUMN of centroid structs (one-row crossJoin), so
     expression size stays O(1) — the two paths use one shared cosine fold
-    (_cos_sql) and are bitwise-identical (tests/test_ann_quality.py). At
+    (cos_sql) and are bitwise-identical (tests/test_ann_quality.py). At
     100 TB the assignment writes `partitionBy(list_id)` so probes prune
     partitions.
 
@@ -287,7 +278,7 @@ def ivf_assign(
     if _CENTS_COL in corpus.columns:
         raise ValueError(f"input may not carry the reserved column {_CENTS_COL}")
     cents_df = _centroid_array_frame(corpus.sparkSession, centroids)
-    cos = _cos_sql(vec_col, "c.cvec", "c.cnorm")
+    cos = cos_sql(f"`{vec_col}`", "c.cvec", "c.cnorm")
     best = F.expr(
         f"array_max(transform({_CENTS_COL}, c -> struct({cos} AS cos, -c.cid AS ncid)))"
     )
@@ -363,7 +354,7 @@ def ivf_probe_lists(
     if _CENTS_COL in df.columns:
         raise ValueError(f"input may not carry the reserved column {_CENTS_COL}")
     cents_df = _centroid_array_frame(df.sparkSession, centroids)
-    inner = ranked_struct(_cos_sql(vec_col, "c.cvec", "c.cnorm"), "c.cid")
+    inner = ranked_struct(cos_sql(f"`{vec_col}`", "c.cvec", "c.cnorm"), "c.cid")
     probes = F.expr(
         f"transform(slice(array_sort(transform({_CENTS_COL}, c -> {inner})), "
         f"1, {nprobe}), s -> CAST(s.cid AS INT))"
@@ -415,13 +406,7 @@ def ivf_ann(
             (int(c), [float(x) for x in v]) for c, v in sorted(centroids.items())
         ]
     else:
-        cents = [
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in corpus.filter(F.col(id_col).isin(nlist_ids))
-            .select(id_col, vec_col)
-            .orderBy(id_col)
-            .collect()
-        ]
+        cents = _fetch_centroids(corpus, nlist_ids, id_col, vec_col)
     c = ivf_assign(_spread(corpus), cents, vec_col, literal=literal).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "list_id"
     )
@@ -436,7 +421,7 @@ def ivf_ann(
     scored = (
         c.join(broadcast(q), on="list_id")
         .filter(F.col("q_id") != F.col("neighbor_id"))
-        .select("q_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"))
+        .select("q_id", "neighbor_id", F.expr(cos_sql("q_vec", "c_vec")).alias("cos"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -474,14 +459,8 @@ def ivfpq_ann(
     the probe's shuffle/IO is dim/ (m·1 byte) smaller than exact scoring.
     Ranking is (adc asc, neighbor_id) so ties are deterministic.
     """
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in corpus.filter(F.col(id_col).isin(nlist_ids))
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
-    from hadoop_0_20_2_ljx_spark.extensions.clustering import _dlit, pq_code_exprs
+    cents = _fetch_centroids(corpus, nlist_ids, id_col, vec_col)
+    from hadoop_0_20_2_ljx_spark.extensions.clustering import pq_code_exprs
 
     code_cols, sub = pq_code_exprs(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)", books)
     for book in books:
@@ -506,20 +485,9 @@ def ivfpq_ann(
     # same per-subspace fold order as before — oracle doubles unchanged
     terms = []
     for j, book in enumerate(books):
-        arr = (
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(_dlit(x) for x in book[c]) + ")"
-                for c in sorted(book)
-            )
-            + ")"
-        )
+        arr = "array(" + ", ".join(double_array_sql(book[c]) for c in sorted(book)) + ")"
         cent = f"element_at({arr}, code_{j} + 1)"
-        qsub = f"slice(q_vec, {j * sub + 1}, {sub})"
-        terms.append(
-            f"aggregate(zip_with({qsub}, {cent}, (x, c) -> (x - c) * (x - c)), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
+        terms.append(sq_dist_sql(f"slice(q_vec, {j * sub + 1}, {sub})", cent))
     adc = F.expr("0.0D + " + " + ".join(terms))
     scored = (
         cand.join(broadcast(q), on="list_id")
@@ -558,7 +526,7 @@ def bucketed_ann(
         sign_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
     )
     scored = c.join(broadcast(q), on="bucket").filter(F.col("q_id") != F.col("neighbor_id")).select(
-        "q_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
+        "q_id", "neighbor_id", F.expr(cos_sql("q_vec", "c_vec")).alias("cos")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -603,10 +571,7 @@ def ivfpq_rerank(
     qvec = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("_qv")
     )
-    dist = F.expr(
-        "aggregate(zip_with(_qv, _nv, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
+    dist = F.expr(sq_dist_sql("_qv", "_nv"))
     ex = (
         short.join(cvec, "neighbor_id")
         .join(broadcast(qvec), "q_id")

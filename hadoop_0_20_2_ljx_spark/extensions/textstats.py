@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
+
 # tiny per-language stopword anchors for the n-gram/stopword heuristic
 STOPWORDS = {
     "en": ("the", "a", "of", "and"),
@@ -25,8 +27,8 @@ def tokens_sql(text_sql: str) -> str:
     """The ONE corpus tokenizer, as SQL text: whitespace tokens of the
     SQL expression `text_sql`, empties dropped. Every text family (dedup,
     contamination, BM25, logprob, lang/quality) tokenizes through here —
-    Column callers wrap it in F.expr — and the _WORDS DuckDB rendering in
-    queries/ext.py mirrors it bit-for-bit.
+    Column callers wrap it in F.expr — and its DuckDB rendering,
+    queries/base.words_sql, mirrors it bit-for-bit.
 
     The regex \\s+ is a SQL string literal written for the ACTIVE
     session's parser. The default parser unescapes backslashes, so the
@@ -171,8 +173,6 @@ def doc_fingerprint(df: DataFrame, id_col: str, text_col: str, window_k: int = 5
     """Winnowing-style rolling fingerprint: min md5-hash over word
     `window_k`-grams of the lowercased text — robust to whitespace-only
     edits; equal fingerprints flag near-identical prefixes/contents."""
-    from hadoop_0_20_2_ljx_spark.extensions.dedup import md5_base_sql
-
     # token array bound once as `ws` (the dedup.word_shingles_sql pattern:
     # no CSE inside HOF lambdas — a direct token reference in the
     # per-index lambda re-ran the regexp split per gram, O(tokens^2) per
@@ -184,7 +184,7 @@ def doc_fingerprint(df: DataFrame, id_col: str, text_col: str, window_k: int = 5
     )
     h = F.expr(
         f"element_at(transform(array({toks}), "
-        f"ws -> array_min(transform({grams}, g -> {md5_base_sql('g')}))), 1)"
+        f"ws -> array_min(transform({grams}, g -> {md5_int_sql('g', 15)}))), 1)"
     )
     return df.select(
         F.col(id_col), F.coalesce(h, F.lit(-1).cast("long")).alias("fingerprint")
@@ -232,7 +232,7 @@ def hashed_linear_classifier(
     integer weight, score = sum of weights over token OCCURRENCES.
 
     This is the Spark-side plumbing of the standard quality-filter stage
-    (a linear model scoring every document): swap ``_weight`` for a
+    (a linear model scoring every document): swap the hashed ``weight`` for a
     broadcast array of trained weights in production. Here weights are a
     deterministic keyed hash of the bucket id so the whole chain — and
     the ship/no-ship decision — is reproducible and cross-engine
@@ -251,26 +251,18 @@ def hashed_linear_classifier(
     oracle's coalesce(list_sum(...), 0) already said 0; the Spark side
     coalesces the token array so both engines agree bit-for-bit.
     """
-    toks = F.coalesce(
-        F.expr(tokens_sql(f"lower(`{text_col}`)")), F.array().cast("array<string>")
+    toks = (
+        f"coalesce({tokens_sql(f'lower(`{text_col}`)')}, "
+        "CAST(array() AS ARRAY<STRING>))"
     )
-
-    def _weight(tok: Column) -> Column:
-        # bucket = hash(token) % dim; weight = hash("w:" + bucket) mapped
-        # onto [-weight_scale, weight_scale] — both md5-derived so DuckDB
-        # reproduces them bit-for-bit.
-        from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
-
-        bucket = portable_hash32(tok) % dim
-        return (
-            portable_hash32(F.concat(F.lit("w:"), bucket.cast("string")))
-            % (2 * weight_scale + 1)
-        ) - weight_scale
-
-    score = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + _weight(t)
-    )
-    n_tok = F.size(toks).cast("long")
+    # bucket = hash(token) % dim; weight = hash("w:" + bucket) mapped
+    # onto [-weight_scale, weight_scale] — both md5-derived so DuckDB
+    # reproduces them bit-for-bit.
+    bucket = f"CAST(({md5_int_sql('t', 8)} % {dim}) AS STRING)"
+    w_hash = md5_int_sql(f"concat('w:', {bucket})", 8)
+    weight = f"(({w_hash} % {2 * weight_scale + 1}) - {weight_scale})"
+    score = F.expr(f"aggregate({toks}, CAST(0 AS BIGINT), (acc, t) -> acc + {weight})")
+    n_tok = F.size(F.expr(toks)).cast("long")
     # normalized score in integer parts-per-million (score / (n_tok *
     # weight_scale) * 1e6, truncated): Spark `div` and DuckDB `//` both
     # truncate toward zero, so the norm is bit-exact cross-engine — a

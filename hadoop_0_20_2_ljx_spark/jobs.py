@@ -18,7 +18,7 @@ import sys
 import time
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark import catalog
@@ -257,7 +257,7 @@ def gridmix(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Data
     Sampling uses the deterministic portable hash (never rand()), so the
     whole mix is reproducible. Output: (workload, rows_out, checksum).
     """
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
+    from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
     from hadoop_0_20_2_ljx_spark.operators.sorts import total_order_sort
     from hadoop_0_20_2_ljx_spark.plans.jobcontrol import Job, JobControl
 
@@ -265,11 +265,14 @@ def gridmix(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Data
         F.col("doc_id").cast("string").alias("key"), F.col("text").alias("value")
     )
 
+    def h32(c: str) -> Column:
+        return F.expr(md5_int_sql(f"`{c}`", 8))
+
     def chk(df: DataFrame, *cols: str) -> tuple[int, int]:
         row = df.agg(
             F.count("*").alias("n"),
             F.coalesce(
-                F.sum(sum((portable_hash32(F.col(c)) for c in cols), F.lit(0)) % 1000003),
+                F.sum(sum((h32(c) for c in cols), F.lit(0)) % 1000003),
                 F.lit(0),
             ).alias("h"),
         ).collect()[0]
@@ -279,7 +282,7 @@ def gridmix(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Data
         return chk(total_order_sort(docs, "key"), "key", "value")
 
     def webdata_scan(_: dict) -> DataFrame:
-        return docs.filter(portable_hash32(F.col("key")) % 1000 < 2)
+        return docs.filter(h32("key") % 1000 < 2)
 
     def combiner(_: dict) -> tuple[int, int]:
         words = docs.select(F.explode(F.split("value", r"\s+")).alias("w")).filter(
@@ -290,10 +293,10 @@ def gridmix(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Data
     def mq_pass(i: int):
         def run(deps: dict) -> DataFrame:
             src = docs if i == 0 else deps[f"mq_{i - 1}"]
-            kept = src.filter((portable_hash32(F.col("key")) + i) % 100 < 10)
+            kept = src.filter((h32("key") + i) % 100 < 10)
             # reduce phase: group by key, keep 40% of groups
             grouped = kept.groupBy("key").agg(F.min("value").alias("value"))
-            return grouped.filter((portable_hash32(F.col("key")) + 7 * i) % 100 < 40)
+            return grouped.filter((h32("key") + 7 * i) % 100 < 40)
 
         return run
 

@@ -110,12 +110,13 @@ def count_min_estimates(
     Returns (key, exact, cms_est); cms_est >= exact always (the CMS
     guarantee), equality when none of the key's depth buckets collide.
     """
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
+    from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 
     k = F.col(key_col).cast("string")
 
     def bucket(j: int) -> Column:
-        return portable_hash32(F.concat(F.lit(f"cms{j}:"), k)) % width
+        cms_key = f"concat('cms{j}:', CAST(`{key_col}` AS STRING))"
+        return F.expr(f"{md5_int_sql(cms_key, 8)} % {width}")
 
     rows = df.select(
         k.alias("k"), *[bucket(j).alias(f"b{j}") for j in range(depth)]

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 
 
 def tera_gen(spark: SparkSession, n: int, num_partitions: int | None = None) -> DataFrame:
@@ -63,7 +63,7 @@ def gen_fingerprint(df: DataFrame, key_col: str = "key") -> DataFrame:
         F.count("*").alias("n"),
         F.min(key_col).alias("min_key"),
         F.max(key_col).alias("max_key"),
-        F.sum(portable_hash32(F.col(key_col)) % 1000003).alias("hash_sum"),
+        F.sum(F.expr(md5_int_sql(f"`{key_col}`", 8)) % 1000003).alias("hash_sum"),
     )
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 
 
 def text_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -58,7 +58,7 @@ def md5_filter(df: DataFrame, col: str, freq: int) -> DataFrame:
     """SequenceFileInputFilter.MD5Filter (:195): keep records whose
     MD5(key) % freq == 0. Bit-identical to the DuckDB oracle via the
     md5-derived portable hash."""
-    return df.filter(portable_hash32(F.col(col)) % freq == 0)
+    return df.filter(F.expr(md5_int_sql(f"`{col}`", 8)) % freq == 0)
 
 
 def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.operators import aggregates
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T
+from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, words_sql
 from hadoop_0_20_2_ljx_spark.pinning import pin
 
 
@@ -542,8 +542,6 @@ def _cms_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _cms_oracle() -> str:
-    from hadoop_0_20_2_ljx_spark.queries.base import h32_sql
-
     def b(j: int) -> str:
         inner = h32_sql(f"'cms{j}:' || k")
         return f"{inner} % 64"
@@ -575,7 +573,7 @@ QUERIES: dict[str, QueryDef] = {
     "q_agg_wordcount": QueryDef(
         _wordcount,
         "SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM ("
-        "SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')) AS word "
+        f"SELECT unnest({words_sql('text')}) AS word "
         "FROM documents) GROUP BY word",
         "Q-agg-1 WordCount w/ combiner (examples/.../WordCount.java:61, mapred/lib/LongSumReducer.java:36)",
     ),

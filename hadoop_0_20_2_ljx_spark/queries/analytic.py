@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.extensions import relevance, temporal
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T
+from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, words_sql
 
 _HOUR_US = 3_600_000_000
 
@@ -225,9 +225,8 @@ def _text_bm25(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_BM25_SQL = """
-WITH base AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '') AS ws
+_BM25_SQL = f"""WITH base AS (
+  SELECT doc_id, {words_sql('text')} AS ws
   FROM documents
 ), gstats AS (
   SELECT count(*) AS n_docs, avg(len(ws)) AS avgdl FROM base
@@ -263,10 +262,9 @@ def _text_inverted_index(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_INVERTED_SQL = """
-WITH tok AS (
+_INVERTED_SQL = f"""WITH tok AS (
   SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')) AS term
+         unnest({words_sql('text')}) AS term
   FROM documents
 ), tf AS (
   SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2

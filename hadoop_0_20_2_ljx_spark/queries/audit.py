@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.extensions import audit
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h64_sql
+from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h64_sql, words_sql
 
 
 # --- Deequ-style constraint suite -------------------------------------------
@@ -299,10 +299,9 @@ def _text_entropy(spark: SparkSession, sf: str) -> DataFrame:
     return token_entropy(T(spark, sf, "documents"), "source", "text")
 
 
-_ENTROPY_SQL = """
-WITH tok AS (
+_ENTROPY_SQL = f"""WITH tok AS (
   SELECT source,
-         unnest(list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')) AS tok
+         unnest({words_sql('text')}) AS tok
   FROM documents
 ), c AS (
   SELECT source, tok, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2
@@ -441,9 +440,10 @@ def _audit_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 _ROW_REPR = ("concat_ws('|', CAST(o_orderkey AS VARCHAR), o_orderstatus, "
              "CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT) AS VARCHAR), "
              "o_orderpriority)")
-# h64_sql keeps the md5->BIGINT rendering in ONE place (the DuckDB twin
-# of functions/portable.portable_hash64, which the Spark side calls) so
-# a hash-scheme change cannot silently drift the two apart
+# h64_sql keeps the md5->BIGINT rendering in ONE place (the DuckDB
+# rendering of functions/portable.md5_int_sql(x, 15), which the Spark
+# side's extensions/audit.bucket_fingerprint calls) so a hash-scheme
+# change cannot silently drift the two apart
 _FINGERPRINT_SQL = f"""
 WITH r AS (
   SELECT o_orderkey % 64 AS bucket,

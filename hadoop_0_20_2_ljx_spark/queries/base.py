@@ -153,11 +153,73 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load(spark, sf_dir, name)
 
 
+# DuckDB renderings of the cross-engine expressions, one each; every
+# oracle renders through these, in lockstep with the Spark builders.
+
+
 def h32_sql(expr: str) -> str:
-    """DuckDB rendering of functions.portable.portable_hash32."""
+    """DuckDB rendering of functions.portable.md5_int_sql(expr, 8)."""
     return f"CAST(('0x' || substring(md5(CAST(({expr}) AS VARCHAR)), 1, 8)) AS BIGINT)"
 
 
 def h64_sql(expr: str) -> str:
-    """DuckDB rendering of functions.portable.portable_hash64."""
+    """DuckDB rendering of functions.portable.md5_int_sql(expr, 15)."""
     return f"CAST(('0x' || substring(md5(CAST(({expr}) AS VARCHAR)), 1, 15)) AS BIGINT)"
+
+
+def words_sql(col: str) -> str:
+    """DuckDB rendering of extensions.textstats.tokens_sql: whitespace
+    tokens of `col`, empties dropped."""
+    return f"list_filter(regexp_split_to_array({col}, '\\s+'), w -> w <> '')"
+
+
+def shingles_sql(words: str, k: int) -> str:
+    """DuckDB rendering of extensions.dedup.word_shingles_sql over a
+    token list: distinct word k-grams, empty below k tokens."""
+    return (
+        f"CASE WHEN len({words}) >= {k} THEN list_distinct(list_transform("
+        f"range(len({words}) - {k} + 1), "
+        f"i -> array_to_string(({words})[i+1:i+{k}], ' '))) "
+        f"ELSE [] END"
+    )
+
+
+def ngrams_sql(words: str, n: int) -> str:
+    """DuckDB rendering of extensions.pipeline_ops.word_ngrams
+    (non-distinct, ordered)."""
+    return (
+        f"CASE WHEN len({words}) >= {n} THEN list_transform("
+        f"generate_series(0, len({words}) - {n}), "
+        f"i -> array_to_string(({words})[i+1:i+{n}], ' ')) "
+        f"ELSE [] END"
+    )
+
+
+def minhash_sig_elem_sql() -> str:
+    """DuckDB rendering of dedup.mh_hash_sql over md5_int_sql(g, 15):
+    the double-hash minhash family ((v>>30) + s*(v & 2^30-1)) % 2^30
+    from one 60-bit md5-derived base value per shingle, for seed `s` over
+    the shingle list `sh`. Shingle-less docs hash the sentinel empty gram
+    (matching minhash_band_buckets' padding)."""
+    v = h64_sql("g")
+    return (
+        "list_min(list_transform(CASE WHEN len(sh) = 0 THEN [''] ELSE sh END, g -> "
+        f"(({v} >> 30) + s * ({v} & 1073741823)) % 1073741824"
+        "))"
+    )
+
+
+def quality_expr_sql() -> str:
+    """DuckDB rendering of textstats.quality_expr's rounded score over
+    `text` — shared by the quality query and the token-budget curation
+    oracle (the SAME text must render on both or their orderings
+    diverge)."""
+    toks = words_sql("text")
+    return f"""round(
+  0.25 * (CASE WHEN length(text) >= 50 AND length(text) <= 10000 THEN 1.0 ELSE 0.0 END)
++ 0.25 * (CASE WHEN (list_sum(list_transform({toks}, w -> length(w))) / greatest(len({toks}), 1)) >= 2.0
+               AND (list_sum(list_transform({toks}, w -> length(w))) / greatest(len({toks}), 1)) <= 12.0
+          THEN 1.0 ELSE 0.0 END)
++ 0.25 * (1.0 - len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) / greatest(length(text), 1))
++ 0.25 * least(1.0, 10.0 * (len(list_filter({toks}, w -> lower(w) IN ('the','a','of','and')))
+                            / greatest(len({toks}), 1))), 6)"""

@@ -10,10 +10,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.operators import scans, sorts, transforms
 from hadoop_0_20_2_ljx_spark.operators.generators import gen_fingerprint, random_text, tera_gen
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql
+from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, words_sql
 
 
 # --- Q-scan-1: TextInputFormat line count ------------------------------------
@@ -50,7 +50,7 @@ def _gen_random_writer(spark: SparkSession, sf: str) -> DataFrame:
         F.count("*").alias("n"),
         F.min(F.substring("text", 1, 8)).alias("min_tok"),
         F.max(F.substring("text", 1, 8)).alias("max_tok"),
-        F.sum(portable_hash32(F.col("text")) % 1000003).alias("hash_sum"),
+        F.sum(F.expr(md5_int_sql("text", 8)) % 1000003).alias("hash_sum"),
     )
 
 
@@ -119,7 +119,7 @@ def _gen_terasort(spark: SparkSession, sf: str) -> DataFrame:
             "boolean"
         ).alias("sorted_ok"),
     )
-    checksum = recs.agg(F.sum(portable_hash32(F.col("key")) % 1000003).alias("hash_sum"))
+    checksum = recs.agg(F.sum(F.expr(md5_int_sql("key", 8)) % 1000003).alias("hash_sum"))
     return checks.crossJoin(checksum)
 
 
@@ -181,7 +181,7 @@ def _sort_keyfield(spark: SparkSession, sf: str) -> DataFrame:
     )
     return rn.agg(
         F.count("*").alias("n"),
-        F.sum(F.col("rn") * (portable_hash32(F.col("o_orderkey")) % 97)).alias("ordered_checksum"),
+        F.sum(F.col("rn") * (F.expr(md5_int_sql("o_orderkey", 8)) % 97)).alias("ordered_checksum"),
     )
 
 
@@ -439,7 +439,7 @@ QUERIES: dict[str, QueryDef] = {
     "q_top_tokens": QueryDef(
         _top_tokens,
         "SELECT word, cnt FROM (SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM ("
-        "SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')) AS word "
+        f"SELECT unnest({words_sql('text')}) AS word "
         "FROM documents) GROUP BY word) ORDER BY cnt DESC, word ASC LIMIT 10",
         "Q-top-1 Grep job 2 top-k (examples/.../Grep.java:71-84)",
     ),

@@ -15,11 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.extensions import dedup
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, h64_sql
+from hadoop_0_20_2_ljx_spark.extensions import dedup, textstats
+from hadoop_0_20_2_ljx_spark.functions.portable import cos_sql, md5_int_sql, zip_sum_sql
+from hadoop_0_20_2_ljx_spark.queries.base import (
+    QueryDef,
+    T,
+    h32_sql,
+    h64_sql,
+    minhash_sig_elem_sql,
+    ngrams_sql,
+    quality_expr_sql,
+    shingles_sql,
+    words_sql,
+)
 from hadoop_0_20_2_ljx_spark.pinning import pin
-
-_WORDS = "list_filter(regexp_split_to_array({col}, '\\s+'), w -> w <> '')"
 
 
 # --- canonical keep-best dedup ----------------------------------------------
@@ -67,7 +76,7 @@ def _dedup_paragraph(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _paragraph_sql() -> str:
-    ws = _WORDS.format(col="text")
+    ws = words_sql("text")
     ch = h64_sql("array_to_string(ws[i*10+1:i*10+10], ' ')")
     return f"""
 WITH toks AS (
@@ -114,15 +123,9 @@ def _dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
 def _incremental_sql() -> str:
     # Same signature derivation as queries/ext.py's _minhash_oracle, with
     # the corpus split into new (doc_id%10=0) and index sides.
-    from hadoop_0_20_2_ljx_spark.queries.ext import (
-        _minhash_sig_elem_sql,
-        _shingles_sql,
-    )
-    from hadoop_0_20_2_ljx_spark.queries.base import h32_sql
-
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 3)
-    sig_elem = _minhash_sig_elem_sql()
+    words = words_sql("text")
+    sh = shingles_sql(words, 3)
+    sig_elem = minhash_sig_elem_sql()
     bucket = h32_sql(
         "array_to_string(list_transform(sig[b*4+1:b*4+4], v -> CAST(v AS VARCHAR)), ',')"
     )
@@ -159,7 +162,7 @@ def _filter_blocklist(spark: SparkSession, sf: str) -> DataFrame:
     bl = spark.createDataFrame(
         [(s,) for s in _BLOCKED_SOURCES], "source string"
     )
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    toks = F.expr(textstats.tokens_sql("text"))
     has_term = F.arrays_overlap(
         toks, F.array(*[F.lit(t) for t in _BLOCKED_TERMS])
     )
@@ -187,7 +190,7 @@ def _filter_blocklist(spark: SparkSession, sf: str) -> DataFrame:
 _BLOCKLIST_SQL = f"""
 WITH t AS (
   SELECT source,
-         list_has_any({_WORDS.format(col="text")},
+         list_has_any({words_sql("text")},
                       ['{_BLOCKED_TERMS[0]}', '{_BLOCKED_TERMS[1]}']) AS hit
   FROM documents
 )
@@ -296,7 +299,7 @@ def _text_bpe(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _bpe_sql(n: int = _BPE_MERGES) -> str:
-    words = _WORDS.format(col="text")
+    words = words_sql("text")
     chars = "list_transform(range(1, length(w) + 1), i -> substring(w, i, 1))"
     parts = [
         f"""v0 AS (
@@ -341,7 +344,7 @@ def _text_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = T(spark, sf, "documents")
     _, merges = learn_bpe(docs, "text", n_merges=_BPE_MERGES)
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    words = F.expr(textstats.tokens_sql("text"))
     vocab = (
         docs.select(F.explode(words).alias("w"))
         .groupBy("w")
@@ -557,7 +560,7 @@ def _dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     per-cluster pair cost n²/k stays bounded — the published SemDeDup
     recipe; the sign-LSH variant (q_dedup_embed) is the alternative
     blocking for the same job."""
-    from hadoop_0_20_2_ljx_spark.extensions import clustering, similarity
+    from hadoop_0_20_2_ljx_spark.extensions import clustering
 
     emb = T(spark, sf, "embeddings")
     init_rows = emb.filter(F.col("vec_id") < _SEM_K).select("vec_id", "embedding").collect()
@@ -567,7 +570,7 @@ def _dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id"), F.col("cluster"), F.col("embedding").cast("array<double>").alias("v")
     )
     l, r = a.alias("l"), a.alias("r")
-    cos = similarity.cosine(F.col("l.v"), F.col("r.v"))
+    cos = F.expr(cos_sql("l.v", "r.v"))
     return (
         l.join(
             r,
@@ -638,7 +641,7 @@ def _pipeline_funnel(spark: SparkSession, sf: str) -> DataFrame:
         doc_grams.join(bench_grams, "gram").select("doc_id").distinct()
         .withColumn("_cont", F.lit(1))
     )
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    toks = F.expr(textstats.tokens_sql("text"))
     flags = (
         docs.withColumn("_k", F.md5("text"))
         .join(winners, "_k")
@@ -670,9 +673,7 @@ def _pipeline_funnel(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _funnel_sql() -> str:
-    from hadoop_0_20_2_ljx_spark.queries.ext import _ngrams_sql
-
-    grams = _ngrams_sql(_WORDS.format(col="lower(text)"), 8)
+    grams = ngrams_sql(words_sql("lower(text)"), 8)
     return f"""
 WITH winners AS (SELECT md5(text) AS k, min(doc_id) AS w_id FROM documents GROUP BY 1),
 bg AS (
@@ -686,7 +687,7 @@ flags AS (
   SELECT (d.doc_id = w.w_id) AS is_winner,
          length(d.text) BETWEEN 60 AND 10000 AS len_ok,
          (d.source NOT IN ('{_BLOCKED_SOURCES[0]}', '{_BLOCKED_SOURCES[1]}')
-          AND NOT list_has_any({_WORDS.format(col="d.text")},
+          AND NOT list_has_any({words_sql("d.text")},
                                ['{_BLOCKED_TERMS[0]}', '{_BLOCKED_TERMS[1]}'])) AS block_ok,
          (c.doc_id IS NULL) AS clean
   FROM documents d JOIN winners w ON md5(d.text) = w.k
@@ -730,10 +731,8 @@ def _dedup_jaccard_est(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"), F.col("sh").alias("sh_b")
     )
     j = pairs.join(a, "doc_a").join(b, "doc_b")
-    matches = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
+    matches = F.expr(
+        zip_sum_sql("sig_a", "sig_b", "CASE WHEN x = y THEN 1 ELSE 0 END", "0")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     uni = F.size(F.array_union("sh_a", "sh_b"))
@@ -749,12 +748,9 @@ def _dedup_jaccard_est(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _jaccard_est_sql() -> str:
-    from hadoop_0_20_2_ljx_spark.queries.base import h32_sql
-    from hadoop_0_20_2_ljx_spark.queries.ext import _minhash_sig_elem_sql, _shingles_sql
-
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 3)
-    sig_elem = _minhash_sig_elem_sql()
+    words = words_sql("text")
+    sh = shingles_sql(words, 3)
+    sig_elem = minhash_sig_elem_sql()
     bucket = h32_sql(
         "array_to_string(list_transform(sig[b*4+1:b*4+4], v -> CAST(v AS VARCHAR)), ',')"
     )
@@ -1004,11 +1000,9 @@ def _sample_weighted(spark: SparkSession, sf: str) -> DataFrame:
     orderings would rank it first (Spark) vs last (DuckDB). A NULL
     source keeps its own partition (GROUP BY/PARTITION BY keep null
     groups on both engines)."""
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash64
-
     docs = T(spark, sf, "documents").where(F.col("n_chars").isNotNull())
-    pri = portable_hash64(
-        F.concat(F.lit("ws:"), F.col("doc_id").cast("string"))
+    pri = F.expr(
+        md5_int_sql("concat('ws:', CAST(doc_id AS STRING))", 15)
     ).cast("double") / F.col("n_chars")
     w = Window.partitionBy("source").orderBy(F.col("_pri").asc(), F.col("doc_id").asc())
     return (
@@ -1118,10 +1112,8 @@ def _sample_group_split(spark: SparkSession, sf: str) -> DataFrame:
     countDistinct is per split (3 groups). Reference analog: the MD5
     sampling filter (mapred/SequenceFileInputFilter.java:195) applied
     per-key rather than per-record."""
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
-
     ev = T(spark, sf, "events")
-    bucket = portable_hash32(F.col("user_id")) % 100
+    bucket = F.expr(md5_int_sql("user_id", 8)) % 100
     split = (
         F.when(bucket < 80, F.lit("train"))
         .when(bucket < 90, F.lit("val"))
@@ -1141,11 +1133,11 @@ def _sample_group_split(spark: SparkSession, sf: str) -> DataFrame:
     return per_split.join(F.broadcast(straddle))
 
 
-_GROUP_SPLIT_SQL = """
+_GROUP_SPLIT_SQL = f"""
 WITH tagged AS (
   SELECT user_id, event_id,
-         CASE WHEN CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 80 THEN 'train'
-              WHEN CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 90 THEN 'val'
+         CASE WHEN {h32_sql("user_id")} % 100 < 80 THEN 'train'
+              WHEN {h32_sql("user_id")} % 100 < 90 THEN 'val'
               ELSE 'test' END AS split
   FROM events
 ), per_split AS (
@@ -1219,7 +1211,7 @@ def _sample_token_budget(spark: SparkSession, sf: str) -> DataFrame:
     prefix-sum pass (two-pass offsets, driver sees O(partitions) rows);
     the ordering key is the ROUNDED quality score, which q_text_quality
     already proves bit-identical cross-engine."""
-    from hadoop_0_20_2_ljx_spark.extensions import pipeline_ops, textstats
+    from hadoop_0_20_2_ljx_spark.extensions import pipeline_ops
 
     # ONE projection computes both features — never a per-feature
     # self-join back on doc_id (that costs a second corpus scan + an
@@ -1239,13 +1231,11 @@ def _sample_token_budget(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _token_budget_sql() -> str:
-    from hadoop_0_20_2_ljx_spark.queries.ext import _quality_expr_sql
-
-    words = _WORDS.format(col="text")
+    words = words_sql("text")
     return f"""
 WITH scored AS (
   SELECT doc_id, CAST(len({words}) AS BIGINT) AS n_tokens,
-         {_quality_expr_sql()} AS q
+         {quality_expr_sql()} AS q
   FROM documents
 ),
 c AS (
@@ -1278,10 +1268,8 @@ def _corpus_source_sim(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _source_sim_sql() -> str:
-    from hadoop_0_20_2_ljx_spark.queries.ext import _shingles_sql
-
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 3)
+    words = words_sql("text")
+    sh = shingles_sql(words, 3)
     v = h64_sql("g")
     return f"""
 WITH gs AS (
@@ -1350,7 +1338,7 @@ _DECON_N = 4  # 8-gram overlap vanishes below sf0.1; 4-grams hit at every SF
 
 
 def _decontaminate_sql(n: int = 4) -> str:
-    w = _WORDS.format(col="lower(text)")
+    w = words_sql("lower(text)")
     return f"""
 WITH docs AS (SELECT doc_id, {w} AS w FROM documents),
 tg AS (
@@ -1405,7 +1393,6 @@ def _corpus_dataset_card(spark: SparkSession, sf: str) -> DataFrame:
     (never a per-feature self-join) and one partial-agg shuffle of
     O(sources) groups rolls it up; ratio fields are integer basis points
     (BIGINT DIV) so the card is bit-stable cross-engine."""
-    from hadoop_0_20_2_ljx_spark.extensions import textstats
 
     t = F.col("text")
     toks = F.expr(textstats.tokens_sql("text"))
@@ -1436,7 +1423,7 @@ def _corpus_dataset_card(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dataset_card_sql() -> str:
-    w = _WORDS.format(col="text")
+    w = words_sql("text")
     return f"""
 WITH per AS (
   SELECT source, lang,
@@ -1477,7 +1464,7 @@ def _sample_domain_reweight(spark: SparkSession, sf: str) -> DataFrame:
     its 1-row roll-up, re-entering unhinted), unlike q_sample_stratified's
     handed-in rates; every rate is BIGINT arithmetic and each doc's fate
     a deterministic hash threshold."""
-    from hadoop_0_20_2_ljx_spark.extensions import pipeline_ops, textstats
+    from hadoop_0_20_2_ljx_spark.extensions import pipeline_ops
 
     tok = T(spark, sf, "documents").select(
         "source",
@@ -1494,7 +1481,7 @@ def _sample_domain_reweight(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _domain_reweight_sql() -> str:
-    w = _WORDS.format(col="text")
+    w = words_sql("text")
     bucket = h32_sql("doc_id") + " % 10000"
     return f"""
 WITH tok AS (

@@ -19,21 +19,18 @@ from hadoop_0_20_2_ljx_spark.extensions import (
     similarity,
     textstats,
 )
-from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, h64_sql
-
-# DuckDB renderings of the shared text primitives (word list / shingles),
-# kept in lockstep with textstats.tokens_sql / dedup.word_shingles_sql.
-_WORDS = "list_filter(regexp_split_to_array({col}, '\\s+'), w -> w <> '')"
-
-
-def _shingles_sql(words: str, k: int) -> str:
-    return (
-        f"CASE WHEN len({words}) >= {k} THEN list_distinct(list_transform("
-        f"range(len({words}) - {k} + 1), "
-        f"i -> array_to_string(({words})[i+1:i+{k}], ' '))) "
-        f"ELSE [] END"
-    )
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
+from hadoop_0_20_2_ljx_spark.queries.base import (
+    QueryDef,
+    T,
+    h32_sql,
+    h64_sql,
+    minhash_sig_elem_sql,
+    ngrams_sql,
+    quality_expr_sql,
+    shingles_sql,
+    words_sql,
+)
 
 
 # --- dedup: exact ------------------------------------------------------------
@@ -41,7 +38,7 @@ def _dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     d = dedup.exact_dedup(T(spark, sf, "documents"), ["text"])
     return d.agg(
         F.count("*").alias("n_unique"),
-        F.sum(portable_hash32(F.col("text")) % 1000003).alias("text_hash_sum"),
+        F.sum(F.expr(md5_int_sql("text", 8)) % 1000003).alias("text_hash_sum"),
     )
 
 
@@ -52,23 +49,10 @@ def _dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _minhash_sig_elem_sql() -> str:
-    """DuckDB rendering of dedup.mh_hash_sql over dedup.md5_base_sql: the
-    double-hash minhash family ((v>>30) + s*(v & 2^30-1)) % 2^30 from one
-    60-bit md5-derived base value per shingle. Shingle-less docs hash the
-    sentinel empty gram (matching minhash_band_buckets' padding)."""
-    v = h64_sql("g")
-    return (
-        "list_min(list_transform(CASE WHEN len(sh) = 0 THEN [''] ELSE sh END, g -> "
-        f"(({v} >> 30) + s * ({v} & 1073741823)) % 1073741824"
-        "))"
-    )
-
-
 def _minhash_oracle() -> str:
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 3)
-    sig_elem = _minhash_sig_elem_sql()
+    words = words_sql("text")
+    sh = shingles_sql(words, 3)
+    sig_elem = minhash_sig_elem_sql()
     bucket = h32_sql(
         "array_to_string(list_transform(sig[b*4+1:b*4+4], v -> CAST(v AS VARCHAR)), ',')"
     )
@@ -99,7 +83,7 @@ def _simhash_oracle() -> str:
     # docstring), never a 0 signature. coalesce before the len() test:
     # len(NULL) is NULL in DuckDB, so the bare CASE fell through to the
     # NULL token list and folded the whole signature to 0.
-    words = "coalesce(" + _WORDS.format(col="text") + ", [])"
+    words = "coalesce(" + words_sql("text") + ", [])"
     h = h64_sql("w")
     return f"""
 WITH hashed AS (
@@ -122,7 +106,7 @@ def _dedup_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 def _simhash_pairs_oracle() -> str:
     # same null-text-is-empty-doc pin as _simhash_oracle
-    words = "coalesce(" + _WORDS.format(col="text") + ", [])"
+    words = "coalesce(" + words_sql("text") + ", [])"
     h = h64_sql("w")
     sig = f"""
 WITH hashed AS (
@@ -161,9 +145,9 @@ def _dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 def _clusters_oracle() -> str:
     # same minhash-LSH pair derivation as _minhash_oracle, then min
     # reachable id per node via a recursive CTE (undirected reachability).
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 3)
-    sig_elem = _minhash_sig_elem_sql()
+    words = words_sql("text")
+    sh = shingles_sql(words, 3)
+    sig_elem = minhash_sig_elem_sql()
     bucket = h32_sql(
         "array_to_string(list_transform(sig[b*4+1:b*4+4], v -> CAST(v AS VARCHAR)), ',')"
     )
@@ -201,8 +185,8 @@ def _dedup_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _jaccard_oracle() -> str:
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 3)
+    words = words_sql("text")
+    sh = shingles_sql(words, 3)
     return f"""
 WITH sh AS (SELECT doc_id, unnest({sh}) AS g FROM documents),
 sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
@@ -405,7 +389,7 @@ def _text_langid(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _langid_oracle() -> str:
-    toks = _WORDS.format(col="lower(text)")
+    toks = words_sql("lower(text)")
     score = {}
     for lang, words in sorted(textstats.STOPWORDS.items()):
         inlist = ", ".join(f"'{w}'" for w in words)
@@ -429,24 +413,9 @@ def _text_quality(spark: SparkSession, sf: str) -> DataFrame:
     return textstats.quality_score(T(spark, sf, "documents"), "doc_id", "text")
 
 
-def _quality_expr_sql() -> str:
-    """DuckDB rendering of textstats.quality_score's rounded score —
-    shared by the quality query and the token-budget curation oracle
-    (the SAME text must render on both or their orderings diverge)."""
-    toks = _WORDS.format(col="text")
-    return f"""round(
-  0.25 * (CASE WHEN length(text) >= 50 AND length(text) <= 10000 THEN 1.0 ELSE 0.0 END)
-+ 0.25 * (CASE WHEN (list_sum(list_transform({toks}, w -> length(w))) / greatest(len({toks}), 1)) >= 2.0
-               AND (list_sum(list_transform({toks}, w -> length(w))) / greatest(len({toks}), 1)) <= 12.0
-          THEN 1.0 ELSE 0.0 END)
-+ 0.25 * (1.0 - len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) / greatest(length(text), 1))
-+ 0.25 * least(1.0, 10.0 * (len(list_filter({toks}, w -> lower(w) IN ('the','a','of','and')))
-                            / greatest(len({toks}), 1))), 6)"""
-
-
 def _quality_oracle() -> str:
     return f"""
-SELECT doc_id, {_quality_expr_sql()} AS quality
+SELECT doc_id, {quality_expr_sql()} AS quality
 FROM documents
 """
 
@@ -470,7 +439,7 @@ def _text_tokens(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _tokens_oracle() -> str:
-    toks = _WORDS.format(col="text")
+    toks = words_sql("text")
     return f"""
 SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
   CAST(sum(len({toks})) AS BIGINT) AS words,
@@ -490,7 +459,7 @@ def _text_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _fingerprint_oracle() -> str:
-    toks = _WORDS.format(col="lower(text)")
+    toks = words_sql("lower(text)")
     gram = f"array_to_string(({toks})[i+1:i+5], ' ')"
     return f"""
 SELECT doc_id, CAST(coalesce(list_min(list_transform(
@@ -521,7 +490,7 @@ def _text_redact(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(F.col("red").contains("<EMAIL>"), 1).otherwise(0)).alias("n_email"),
         F.sum(F.when(F.col("red").contains("<IP>"), 1).otherwise(0)).alias("n_ip"),
         F.sum(F.when(F.col("red").contains("<PHONE>"), 1).otherwise(0)).alias("n_phone"),
-        F.sum(portable_hash32(F.col("red")) % 1000003).alias("red_hash"),
+        F.sum(F.expr(md5_int_sql("red", 8)) % 1000003).alias("red_hash"),
     )
 
 
@@ -574,7 +543,7 @@ def _pipeline_training(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _pipeline_oracle() -> str:
-    toks = _WORDS.format(col="lower(text)")
+    toks = words_sql("lower(text)")
     score = {}
     for lang, words in sorted(textstats.STOPWORDS.items()):
         inlist = ", ".join(f"'{w}'" for w in words)
@@ -586,7 +555,7 @@ def _pipeline_oracle() -> str:
         f"WHEN {score[lang]} >= 0.01 AND {score[lang]} = {best} THEN '{lang}'"
         for lang in sorted(score)
     )
-    wtoks = _WORDS.format(col="text")
+    wtoks = words_sql("text")
     quality = (
         "round(0.25 * (CASE WHEN length(text) >= 50 AND length(text) <= 10000 THEN 1.0 ELSE 0.0 END) "
         f"+ 0.25 * (CASE WHEN (list_sum(list_transform({wtoks}, w -> length(w))) / greatest(len({wtoks}), 1)) >= 2.0 "
@@ -610,16 +579,6 @@ FROM scored WHERE lang_pred <> 'und' AND quality >= 0.5 GROUP BY 1
 
 
 # --- pipeline: intra-doc repetition -------------------------------------------
-def _ngrams_sql(words: str, n: int) -> str:
-    """DuckDB rendering of pipeline_ops.word_ngrams (non-distinct, ordered)."""
-    return (
-        f"CASE WHEN len({words}) >= {n} THEN list_transform("
-        f"generate_series(0, len({words}) - {n}), "
-        f"i -> array_to_string(({words})[i+1:i+{n}], ' ')) "
-        f"ELSE [] END"
-    )
-
-
 def _text_repetition(spark: SparkSession, sf: str) -> DataFrame:
     """Integer-exact corpus roll-up of repetition_score: duplicate and total
     3-gram counts plus how many docs exceed the 20% repetition gate (the
@@ -636,7 +595,7 @@ def _text_repetition(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _repetition_oracle() -> str:
-    tg = _ngrams_sql(_WORDS.format(col="lower(text)"), 3)
+    tg = ngrams_sql(words_sql("lower(text)"), 3)
     return f"""
 WITH per AS (
   SELECT CAST(len(tg) AS BIGINT) AS total,
@@ -668,7 +627,7 @@ def _text_contamination(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _contamination_oracle() -> str:
-    tg = _ngrams_sql(_WORDS.format(col="lower(text)"), 8)
+    tg = ngrams_sql(words_sql("lower(text)"), 8)
     return f"""
 WITH grams AS (SELECT doc_id, unnest({tg}) AS gram FROM documents),
 bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0),
@@ -730,7 +689,7 @@ def _pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _packing_oracle() -> str:
-    words = _WORDS.format(col="text")
+    words = words_sql("text")
     return f"""
 WITH tok AS (SELECT doc_id, CAST(len({words}) AS BIGINT) AS n_tokens FROM documents),
 cum AS (
@@ -1266,7 +1225,7 @@ def _text_logprob(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _logprob_oracle() -> str:
-    words = _WORDS.format(col="text")
+    words = words_sql("text")
     return f"""
 WITH toks AS (SELECT doc_id, unnest({words}) AS tok FROM documents),
 vocab AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1),
@@ -1340,8 +1299,8 @@ def _text_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _boilerplate_oracle() -> str:
-    words = _WORDS.format(col="text")
-    sh = _shingles_sql(words, 2)
+    words = words_sql("text")
+    sh = shingles_sql(words, 2)
     return f"""
 WITH g AS (SELECT unnest({sh}) AS gram FROM documents),
 d AS (SELECT gram, CAST(count(*) AS BIGINT) AS df FROM g GROUP BY 1),
@@ -1375,7 +1334,7 @@ def _text_bigram_lm(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _bigram_lm_oracle() -> str:
-    bg = _ngrams_sql(_WORDS.format(col="lower(text)"), 2)
+    bg = ngrams_sql(words_sql("lower(text)"), 2)
     return f"""
 WITH g AS (SELECT unnest({bg}) AS g FROM documents),
 bi AS (SELECT split_part(g, ' ', 1) AS w1, split_part(g, ' ', 2) AS w2 FROM g),
@@ -1403,7 +1362,7 @@ def _text_chunk(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _chunk_oracle() -> str:
-    words = _WORDS.format(col="text")
+    words = words_sql("text")
     return f"""
 WITH d AS (SELECT doc_id, {words} AS w FROM documents),
 c AS (
@@ -1475,7 +1434,7 @@ def _agg_domain_mix(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _domain_mix_oracle() -> str:
-    words = _WORDS.format(col="text")
+    words = words_sql("text")
     return f"""
 WITH per AS (SELECT source, lang, len({words}) AS nw FROM documents),
 g AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1505,7 +1464,7 @@ def _dedup_substring(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _substring_oracle() -> str:
-    w = _WORDS.format(col="lower(text)")
+    w = words_sql("lower(text)")
     gh = h64_sql("array_to_string(w[pos+1:pos+8], ' ')")
     return f"""
 WITH toks AS (SELECT doc_id, {w} AS w FROM documents),
@@ -1543,7 +1502,7 @@ def _classifier_oracle() -> str:
     # NULL contract (r10 pin): null text scores as an EMPTY doc on both
     # sides (textstats.hashed_linear_classifier docstring) — coalesce the
     # token list so len()/list_sum() see [] rather than NULL.
-    w = "coalesce(" + _WORDS.format(col="lower(text)") + ", [])"
+    w = "coalesce(" + words_sql("lower(text)") + ", [])"
     tok_h = h32_sql("t")
     bucket = f"({tok_h} % 4096)"
     weight_h = h32_sql(f"'w:' || CAST({bucket} AS VARCHAR)")

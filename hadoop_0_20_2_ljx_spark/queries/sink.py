@@ -12,8 +12,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.operators import sinks
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, scratch_dir
+from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, scratch_dir
 
 
 def _tmp(name: str) -> str:
@@ -130,7 +131,6 @@ def _sink_tar_shards(spark: SparkSession, sf: str) -> DataFrame:
     them back with a stock tar decoder, and prove the export lossless
     with content hashes the oracle recomputes from parquet."""
     from hadoop_0_20_2_ljx_spark.extensions import shards
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
 
     docs = T(spark, sf, "documents").select("doc_id", "text")
     path = _tmp("q_sink_tar")
@@ -141,7 +141,7 @@ def _sink_tar_shards(spark: SparkSession, sf: str) -> DataFrame:
     back = shards.read_tar_shards(spark, path)
     return back.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(portable_hash32(F.col("text")) % 1000003).cast("long").alias("text_hash_sum"),
+        F.sum(F.expr(md5_int_sql("text", 8)) % 1000003).cast("long").alias("text_hash_sum"),
         F.sum(F.length("text")).cast("long").alias("total_chars"),
     )
 
@@ -183,7 +183,6 @@ def _sink_har_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     reference's HarFileSystem opens, fs/HarFileSystem.java:35-43), read
     it back, and exercise the masterindex point lookup. Content proven
     lossless by hashes the oracle recomputes from parquet."""
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash32
     from hadoop_0_20_2_ljx_spark.sources import har
 
     docs = T(spark, sf, "documents").select(
@@ -195,16 +194,15 @@ def _sink_har_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     looked = har.har_lookup(path, "doc-7")
     return back.agg(
         F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum(portable_hash32(F.col("payload")) % 1000003).cast("long").alias("text_hash_sum"),
+        F.sum(F.expr(md5_int_sql("payload", 8)) % 1000003).cast("long").alias("text_hash_sum"),
         F.sum(F.length("payload")).cast("long").alias("total_chars"),
         F.lit(looked is not None).alias("lookup_hit"),
     )
 
 
-_HAR_SQL = """
+_HAR_SQL = f"""
 SELECT CAST(count(*) AS BIGINT) AS n_files,
-       CAST(sum(CAST(('0x' || substring(md5(CAST(text AS VARCHAR)), 1, 8)) AS BIGINT)
-                % 1000003) AS BIGINT) AS text_hash_sum,
+       CAST(sum({h32_sql("text")} % 1000003) AS BIGINT) AS text_hash_sum,
        CAST(sum(length(text)) AS BIGINT) AS total_chars,
        TRUE AS lookup_hit
 FROM documents
@@ -443,8 +441,7 @@ QUERIES: dict[str, QueryDef] = {
     "q_sink_tar_shards": QueryDef(
         _sink_tar_shards,
         "SELECT CAST(count(*) AS BIGINT) AS n_docs, "
-        "CAST(sum(CAST(('0x' || substring(md5(CAST(text AS VARCHAR)), 1, 8)) AS BIGINT) "
-        "% 1000003) AS BIGINT) AS text_hash_sum, "
+        f"CAST(sum({h32_sql('text')} % 1000003) AS BIGINT) AS text_hash_sum, "
         "CAST(sum(length(text)) AS BIGINT) AS total_chars FROM documents",
         "Q-sink-8 (engine extra) size-budgeted tar training shards "
         "(WebDataset layout; MultipleOutputFormat file routing with a byte "

@@ -14,7 +14,7 @@ from pyspark.sql.functions import pandas_udf
 
 from hadoop_0_20_2_ljx_spark.operators.generators import halton_pi_exact, pi_estimate
 from hadoop_0_20_2_ljx_spark.queries.agg import _HISTOGRAM_SQL
-from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, scratch_dir
+from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, scratch_dir, words_sql
 from hadoop_0_20_2_ljx_spark.streaming.windows import sessionize, tumbling_counts
 
 
@@ -215,11 +215,10 @@ def _udf_tokenize_udtf(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_UDTF_SQL = """
-WITH toks AS (
+_UDTF_SQL = f"""WITH toks AS (
   SELECT unnest(w) AS token,
          unnest(generate_series(1, len(w))) - 1 AS pos
-  FROM (SELECT list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS w
+  FROM (SELECT {words_sql('text')} AS w
         FROM documents)
 )
 SELECT token, CAST(count(*) AS BIGINT) AS n, CAST(sum(pos) AS BIGINT) AS pos_sum

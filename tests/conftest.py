@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 import pytest
@@ -28,3 +29,16 @@ def parser_escapes(spark, escaped: bool = True):
         yield
     finally:
         spark.conf.unset(key)
+
+
+def norm_plan(df) -> str:
+    """The optimized plan as text with expression ids and lambda
+    variable names normalized. Both are arbitrary (the Column API mints
+    x_<counter>, SQL text uses the source names), so two builds of one
+    expression compare equal iff their trees have the same shape and
+    operators; row-equality tests pin the semantics."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    s = re.sub(r"#\d+L?", "#X", s)
+    s = re.sub(r"lambda [A-Za-z_]\w*#X", "lambda VAR#X", s)
+    s = re.sub(r"x_\d+", "x_N", s)
+    return s

@@ -240,7 +240,7 @@ def test_ivf_probe_nan_cosine_routes_like_assign(spark):
 def test_centroid_array_path_parity_and_large_nlist(spark):
     """The two centroid-scoring paths (literal expression text vs the
     broadcast array-column carrier) must be bitwise-identical routers —
-    they share one cosine fold (_cos_sql), so assignment and multi-probe
+    they share one cosine fold (portable.cos_sql), so assignment and multi-probe
     routing agree row-for-row at nlist=8 (the oracle-pinned fixture
     shape). And the array path must survive the regime the literal path
     cannot: nlist=256 centroids, where O(nlist*dim) expression text

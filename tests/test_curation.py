@@ -71,7 +71,7 @@ def test_blocklist_plan_is_broadcast_anti_join(spark):
 
 def test_minhash_double_hash_family_matches_array_form(spark):
     """The relational min-agg path and the array-expression path must
-    produce identical signatures (shared md5_base_sql/mh_hash_sql family)."""
+    produce identical signatures (shared md5_int_sql/mh_hash_sql family)."""
     df = spark.createDataFrame(
         [(1, "a b c d e f g h"), (2, "x y")], "doc_id long, text string"
     )

@@ -17,14 +17,11 @@ to match bitwise.
 
 from __future__ import annotations
 
-import re
-
+from conftest import SF_SMOKE, norm_plan
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.extensions import dedup
-
-SF_SMOKE = "/root/testdata/sf0.001"
 
 
 # --- the Column helpers the old forms used, kept verbatim --------------------
@@ -149,17 +146,6 @@ def _new_group_signatures(monkeypatch, df, group_col, text_col):
     return pinned[1]
 
 
-def _norm_plan(df) -> str:
-    s = df._jdf.queryExecution().optimizedPlan().toString()
-    s = re.sub(r"#\d+L?", "#X", s)  # expression ids
-    # lambda variable NAMES are arbitrary (Column API mints x_<counter>,
-    # SQL text uses the source names ws/i/a/w); semantics ride the
-    # row-equality tests, this normalization compares tree SHAPE
-    s = re.sub(r"lambda [A-Za-z_]\w*#X", "lambda VAR#X", s)
-    s = re.sub(r"x_\d+", "x_N", s)
-    return s
-
-
 def _pairs(spark, monkeypatch):
     """(old, new) frame pairs that must match: the band buckets and the
     per-group signature aggregate behind q_corpus_source_sim."""
@@ -178,7 +164,7 @@ def _pairs(spark, monkeypatch):
 
 def test_sqltext_build_plans_are_identical(spark, monkeypatch):
     for old, new in _pairs(spark, monkeypatch):
-        assert _norm_plan(old) == _norm_plan(new)
+        assert norm_plan(old) == norm_plan(new)
 
 
 def test_sqltext_build_rows_are_identical(spark, monkeypatch):

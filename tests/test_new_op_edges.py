@@ -44,13 +44,13 @@ def test_kcore_clique_survives_intact(spark):
 def test_weighted_sample_takes_all_when_group_small(spark):
     # groups smaller than k: every row survives with a dense 1..n rank
     from hadoop_0_20_2_ljx_spark.queries import REGISTRY  # noqa: F401
-    from hadoop_0_20_2_ljx_spark.functions.portable import portable_hash64
+    from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 
     docs = spark.createDataFrame(
         [(1, "s", 10), (2, "s", 20)], "doc_id long, source string, n_chars long"
     )
-    pri = portable_hash64(
-        F.concat(F.lit("ws:"), F.col("doc_id").cast("string"))
+    pri = F.expr(
+        md5_int_sql("concat('ws:', CAST(doc_id AS STRING))", 15)
     ).cast("double") / F.col("n_chars")
     from pyspark.sql.window import Window
 

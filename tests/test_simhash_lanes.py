@@ -19,6 +19,7 @@ fixture docs); this file pins the NEW mechanics at their boundary:
 from __future__ import annotations
 
 import pytest
+from conftest import norm_plan
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.extensions import dedup
@@ -147,16 +148,6 @@ def _column_form_lane_signatures(df, id_col, text_col, bits=60):
     return votes.select(id_col, sig.cast("long").alias("simhash"))
 
 
-def _norm_plan(df) -> str:
-    import re
-
-    s = df._jdf.queryExecution().optimizedPlan().toString()
-    s = re.sub(r"#\d+L?", "#X", s)
-    s = re.sub(r"lambda [A-Za-z_]\w*#X", "lambda VAR#X", s)
-    s = re.sub(r"x_\d+", "x_N", s)
-    return s
-
-
 def test_sqltext_builder_plan_and_rows_match_column_form(spark):
     """The SQL-text builder (one selectExpr/F.expr parse per block, r14:
     the Column form cost 8,815 py4j sends ~= 1.5 s of driver build per
@@ -164,6 +155,6 @@ def test_sqltext_builder_plan_and_rows_match_column_form(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     old = _column_form_lane_signatures(docs, "doc_id", "text")
     new = dedup.simhash_signatures(docs, "doc_id", "text")
-    assert _norm_plan(old) == _norm_plan(new)
+    assert norm_plan(old) == norm_plan(new)
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0

@@ -75,14 +75,11 @@ _ACCEPTED: dict[str, tuple[int, str]] = {
         "query-side broadcast guard: at most max_queries + 1 one-column "
         "rows of lit(1), bounded by the cap, never the query side",
     ),
-    "extensions/similarity.py::ivf_ann::collect": (
+    "extensions/similarity.py::_fetch_centroids::collect": (
         1,
-        "nlist designated-centroid rows (<=LITERAL_NLIST_MAX or ridden "
-        "as broadcast data) — O(nlist*dim), corpus-independent",
-    ),
-    "extensions/similarity.py::ivfpq_ann::collect": (
-        1,
-        "nlist centroid rows for the coarse quantizer, as ivf_ann",
+        "nlist designated-centroid rows for ivf_ann / ivfpq_ann's coarse "
+        "quantizer (<=LITERAL_NLIST_MAX or ridden as broadcast data) — "
+        "O(nlist*dim), corpus-independent",
     ),
     "jobs.py::dbcount_jdbc::collect": (
         1,
