@@ -177,19 +177,31 @@ def kcore_peel(
     k: int = 2,
     rounds: int = 6,
 ) -> DataFrame:
-    """`rounds` iterations of k-core peeling (repeatedly drop nodes of
-    degree < k) over the undirected simple graph of `edges`. Returns
-    (node, deg, converged): the surviving nodes with their degree among
-    survivors, and whether the peel reached its fixed point within
+    """At most `rounds` iterations of k-core peeling (repeatedly drop
+    nodes of degree < k) over the undirected simple graph of `edges`.
+    Returns (node, deg, converged): the surviving nodes with their degree
+    among survivors, and whether the peel reached its fixed point within
     `rounds` (converged is identical in the oracle's replay — a bounded
     round count keeps the cross-engine oracle a finite CTE chain; an
     unconverged result is still a well-defined, deterministic state).
 
     Shape per round: two equi-joins filtering edges to surviving
-    endpoints + one degree groupBy (map-side partials); edge set
-    checkpointed per round (lineage truncation, as pagerank). Rounds are
-    O(peel depth); production k-core uses the same loop with a
-    convergence probe.
+    endpoints + one degree groupBy (map-side partials); edge set and
+    degree table checkpointed per round (lineage truncation, as
+    pagerank).
+
+    Fixed-point exit: after each pinned degree table (round 0's too),
+    one one-row aggregate reads (nodes, alive = nodes with deg >= k),
+    and the loop stops, converged, while a round remains if no node is
+    below k or the last round dropped none. Both exits are exact: alive
+    sets are nested (round r+1's nodes are round r's alive ones, with
+    degrees no larger), so an equal count means an equal set, and once
+    the alive set stops changing every later edge set (cur ∩ alive²) and
+    degree table is the same. After the last round the flag compares
+    alive with the round before it, as without the exit: a star whose
+    hub drops out in that round leaves nodes == alive, yet the round
+    changed the alive count, so converged is False. A peel that does
+    not converge within `rounds` runs rounds + 1 probes.
     """
     e = (
         edges.select(
@@ -209,10 +221,20 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         )
 
+    def probe(deg: DataFrame) -> tuple[int, int]:
+        return tuple(
+            deg.agg(F.count(F.lit(1)), F.count(F.when(F.col("deg") >= k, 1))).first()
+        )
+
     cur = e
     d = degrees(cur).transform(pin)
-    d_prev = None
+    nodes, n_alive = probe(d)
+    prev_alive = -1
     for _ in range(rounds):
+        if n_alive in (nodes, prev_alive):
+            # fixed point: every later round would be a no-op
+            prev_alive = n_alive
+            break
         alive = d.where(F.col("deg") >= k).select("n")
         cur = (
             cur.join(alive.withColumnRenamed("n", "u"), "u")
@@ -220,17 +242,11 @@ def kcore_peel(
             .select("u", "v")
             .transform(pin)
         )
-        d_prev = d
         d = degrees(cur).transform(pin)
+        prev_alive = n_alive
+        nodes, n_alive = probe(d)
+    converged = n_alive == prev_alive
     survivors = d.where(F.col("deg") >= k)
-    n_final = survivors.count()
-    # convergence only compares the FINAL round's alive count with the
-    # one before it, so count once after the loop (d_prev is pinned) —
-    # counting inside the loop ran a redundant O(1)-row job per round.
-    prev_alive = (
-        -1 if d_prev is None else d_prev.where(F.col("deg") >= k).count()
-    )
-    converged = n_final == prev_alive
     return survivors.select(
         F.col("n").alias("node"), "deg", F.lit(converged).alias("converged")
     )

@@ -53,6 +53,12 @@ _NEEDS_FRESH_EVIDENCE = [
     # q_text_classifier, q_text_entropy, q_udf_cogroup, q_udf_pipes,
     # q_udf_scalar spill to the r15 window head (committed block below).
     #
+    # (head) changed after the r14 window: q_graph_kcore (kcore_peel
+    # stops at its fixed point — one (nodes, alive) probe per pinned
+    # degree table; output identical to the fixed-round loop, oracle
+    # untouched). It moved here from the fill cohort below, which now
+    # holds 30 names.
+    "q_graph_kcore",
     # (head) changed this round:
     "q_dedup_simhash",
     "q_dedup_simhash_pairs",
@@ -91,7 +97,6 @@ _NEEDS_FRESH_EVIDENCE = [
     "q_dedup_fuzzy",
     "q_dedup_keep_latest",
     "q_fn_pentomino",
-    "q_graph_kcore",
     "q_graph_pagerank",
     "q_join_3way",
     "q_join_broadcast",

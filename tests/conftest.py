@@ -36,8 +36,13 @@ def norm_plan(df) -> str:
     variable names normalized. Both are arbitrary (the Column API mints
     x_<counter>, SQL text uses the source names), so two builds of one
     expression compare equal iff their trees have the same shape and
-    operators; row-equality tests pin the semantics."""
-    s = df._jdf.queryExecution().optimizedPlan().toString()
+    operators; row-equality tests pin the semantics. The tree is
+    rendered in full: toString() cuts a projection off past
+    spark.sql.debug.maxToStringFields (25) fields. The arguments are
+    Spark 4's (verbose, addSuffix, maxFields, printOperatorIds,
+    printOutputColumns)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    s = plan.treeString(True, False, 2**31 - 1, False, False)
     s = re.sub(r"#\d+L?", "#X", s)
     s = re.sub(r"lambda [A-Za-z_]\w*#X", "lambda VAR#X", s)
     s = re.sub(r"x_\d+", "x_N", s)

@@ -110,48 +110,89 @@ def test_pagerank_int_matches_integer_reference(spark):
         assert got == rank
 
 
+def _serial_kcore(raw, k, rounds):
+    """The fixed-round peel replayed serially: every round is run, with
+    no early exit. Spark's least/greatest skip NULLs, so an edge with a
+    NULL endpoint becomes a self-loop, and self-loops are dropped."""
+    edges = {
+        (min(a, b), max(a, b))
+        for a, b in raw
+        if a is not None and b is not None and a != b
+    }
+
+    def degs(es):
+        d = {}
+        for u, v in es:
+            d[u] = d.get(u, 0) + 1
+            d[v] = d.get(v, 0) + 1
+        return d
+
+    cur = set(edges)
+    d = degs(cur)
+    d_prev = None
+    for _ in range(rounds):
+        alive = {x for x, dg in d.items() if dg >= k}
+        cur = {(u, v) for u, v in cur if u in alive and v in alive}
+        d_prev = d
+        d = degs(cur)
+    survivors = {x: dg for x, dg in d.items() if dg >= k}
+    prev_alive = -1 if d_prev is None else sum(1 for dg in d_prev.values() if dg >= k)
+    return survivors, len(survivors) == prev_alive
+
+
 def test_kcore_peel_matches_serial_reference(spark):
-    """Random undirected graphs, bounded-round peeling replayed serially:
+    """Bounded-round peeling against a serial replay of every round:
     after R rounds of 'drop nodes with degree < k', the surviving
     (node, degree) table and the converged flag (final alive count equals
     the previous round's) must match exactly — including runs where R is
-    too small to reach the fixed point."""
+    too small to reach the fixed point, R = 0 and 1, an input that is
+    already a k-core (the peel stops at round 0), NULL endpoints and
+    self-loops."""
     from hadoop_0_20_2_ljx_spark.extensions.graph import kcore_peel
 
     rng = random.Random(6)
-    for k, rounds in ((2, 1), (2, 4), (3, 6)):
+    cases = []
+    for k, rounds in ((2, 1), (2, 4), (3, 6), (2, 0)):
         n = 16
         raw = [(rng.randrange(n), rng.randrange(n)) for _ in range(34)]
+        cases.append(("random", raw, k, rounds))
+    cycle = [(i, (i + 1) % 6) for i in range(6)] + [(0, 3)]
+    cases += [("cycle", cycle, k, r) for k in (1, 2) for r in (0, 1, 6)]
+    star_triangle = [(0, i) for i in range(1, 6)] + [(10, 11), (11, 12), (10, 12)]
+    cases += [("star+triangle", star_triangle, 2, r) for r in (0, 1, 2, 6)]
+    nulls = [(1, None), (None, None), (2, 2), (1, 2), (2, 3), (3, 1), (3, None), (4, 3)]
+    cases += [("nulls+loops", nulls, k, r) for k in (1, 2) for r in (1, 3)]
+    for label, raw, k, rounds in cases:
         df = spark.createDataFrame(raw, "src long, dst long")
         out = kcore_peel(df, k=k, rounds=rounds).collect()
         got = {r["node"]: r["deg"] for r in out}
         got_conv = {r["converged"] for r in out}
-
-        edges = {(min(a, b), max(a, b)) for a, b in raw if a != b}
-
-        def degs(es):
-            d = {}
-            for u, v in es:
-                d[u] = d.get(u, 0) + 1
-                d[v] = d.get(v, 0) + 1
-            return d
-
-        cur = set(edges)
-        d = degs(cur)
-        d_prev = None
-        for _ in range(rounds):
-            alive = {x for x, dg in d.items() if dg >= k}
-            cur = {(u, v) for u, v in cur if u in alive and v in alive}
-            d_prev = d
-            d = degs(cur)
-        survivors = {x: dg for x, dg in d.items() if dg >= k}
-        prev_alive = (
-            -1 if d_prev is None else sum(1 for dg in d_prev.values() if dg >= k)
-        )
-        conv = len(survivors) == prev_alive
-        assert got == survivors, (k, rounds)
+        survivors, conv = _serial_kcore(raw, k, rounds)
+        if label == "star+triangle" and rounds in (1, 2):
+            # the hub drops out in round 1, leaving every node alive; the
+            # alive count changed in that round, so the flag is False
+            # when it is the last round
+            assert conv == (rounds == 2) and set(survivors) == {10, 11, 12}
+        assert got == survivors, (label, k, rounds)
         if survivors:
-            assert got_conv == {conv}, (k, rounds)
+            assert got_conv == {conv}, (label, k, rounds)
+
+
+def test_kcore_peel_stops_at_a_k_core(spark):
+    """An input that is already a 2-core is at its fixed point before
+    round 1: the peel pins the edge set and one degree table, probes it
+    once and stops, so its build runs a handful of jobs however many
+    rounds it is allowed."""
+    from hadoop_0_20_2_ljx_spark.extensions.graph import kcore_peel
+    from hadoop_0_20_2_ljx_spark.session import count_jobs
+
+    cycle = [(i, (i + 1) % 8) for i in range(8)]
+    df = spark.createDataFrame(cycle, "src long, dst long")
+    out, jobs = count_jobs(spark, lambda: kcore_peel(df, k=2, rounds=6))
+    assert jobs <= 8, jobs
+    rows = out.collect()
+    assert {r["node"]: r["deg"] for r in rows} == {i: 2 for i in range(8)}
+    assert {r["converged"] for r in rows} == {True}
 
 
 def _uf_components(edges: list[tuple[int, int]], nodes: set[int]) -> dict[int, int]:

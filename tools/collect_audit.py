@@ -60,6 +60,11 @@ _ACCEPTED: dict[str, tuple[int, str]] = {
         "1-row multiset-signature aggregate per large/small-star round "
         "(count + 3 checksums) — the convergence test, O(log n) rounds",
     ),
+    "extensions/graph.py::probe::first": (
+        1,
+        "1-row (nodes, alive) aggregate per pinned k-core degree table — "
+        "the fixed-point probe, at most rounds + 1 per peel",
+    ),
     "extensions/pipeline_ops.py::global_running_total::collect": (
         1,
         "O(partitions) per-range sums for the two-pass prefix sum — same "

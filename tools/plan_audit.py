@@ -105,13 +105,10 @@ _LEDGER = __file__.replace("plan_audit.py", "job_ledger.json")
 # name -> why its build-job count varies between builds; --snapshot builds
 # these _VARY_BUILDS times and records the maximum.
 _JOBS_VARY = {
-    "q_graph_kcore": "AQE runs each pinned join's shuffle stages as jobs of "
-    "their own and re-plans as each one finishes, so the stage-completion "
-    "order decides how many run (45-48 jobs with AQE on, 18 in every build "
-    "with it off)",
     "q_dedup_clusters": "varied by one job between builds while every load "
     "still inferred its schema (21 in each of 20 builds since); its "
-    "connected-components rounds pin under AQE like kcore's",
+    "connected-components rounds pin under AQE, where the stage-completion "
+    "order can decide how many of a pin's per-stage jobs run",
 }
 _VARY_BUILDS = 10
 
@@ -154,6 +151,9 @@ def main() -> int:
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
+        # plan text past the 25th field of a projection would print as
+        # "... N more fields" and hide its calls from the counts below
+        .config("spark.sql.debug.maxToStringFields", str(2**31 - 1))
         .getOrCreate()
     )
     prior = _load(_SNAPSHOT)
