@@ -92,13 +92,6 @@ def lang_pred_expr(text_col: str, min_ratio: float = 0.01) -> Column:
     return F.element_at(F.transform(F.array(scores), _pred), 1)
 
 
-def lang_id(df: DataFrame, id_col: str, text_col: str, min_ratio: float = 0.01) -> DataFrame:
-    """lang_pred_expr projected to (id, lang_pred)."""
-    return df.select(
-        F.col(id_col), lang_pred_expr(text_col, min_ratio).alias("lang_pred")
-    )
-
-
 def quality_expr(text_col: str) -> Column:
     """Heuristic document quality in [0,1] as a COLUMN expression (so
     callers can compute it alongside other per-doc features in one

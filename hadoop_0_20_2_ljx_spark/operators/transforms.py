@@ -1,7 +1,8 @@
 """Row transforms — the reference's Mapper library re-expressed.
 
 Reference counterparts (SURVEY.md §2.3):
-  - InverseMapper                (mapred/lib/InverseMapper.java:33)
+  - InverseMapper                (mapred/lib/InverseMapper.java:33):
+    an inline select(v, k), no helper
   - RegexMapper                  (mapred/lib/RegexMapper.java:35)
   - TokenCountMapper             (mapred/lib/TokenCountMapper.java:38)
   - FieldSelectionMapReduce      (mapred/lib/FieldSelectionMapReduce.java:25-60)
@@ -19,13 +20,6 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def inverse(df: DataFrame) -> DataFrame:
-    """InverseMapper: (k, v) -> (v, k). Expects 2-column input."""
-    a, b = df.columns
-    return df.select(F.col(b).alias(a + "_v"), F.col(a).alias(b + "_k")) \
-        .toDF(b, a)
 
 
 def regex_matches(df: DataFrame, col: str, pattern: str) -> DataFrame:

@@ -81,16 +81,21 @@ Cross-engine ground rules used throughout:
     sentinel), and SQL aggregate semantics in pandas UDFs (cogroup:
     null-skipping sums, NULL total_cents for a NULL price — int(NaN)
     raised before).
-  - NON-FINITE floats (measured r9 by replaying the registry against a
-    fixture with ~10% NaN/+-Inf salted into every double column):
-    111/187 hash-match unchanged (+1 denominator r13:
-    q_window_hotkey_runsum). 74 of the 76 divergent fail LOUDLY
-    and identically on both engines — the integer-cents determinism
-    contract (round(x*100) -> BIGINT) raises CAST_OVERFLOW /
-    CAST_INVALID_INPUT under ANSI on Inf/NaN rather than silently
-    folding them; a pipeline ingesting non-finite measurements must
-    gate them explicitly (the outliers/winsorize family's job), and a
-    loud error is the correct posture for a determinism-first engine.
+  - NON-FINITE floats (tools/sweep.py's nonfinite axis: the registry
+    replayed at sf0.001 with ~10% NaN/+-Inf salted into every double
+    column and into embedding vectors; NaN/+-Inf render as explicit
+    tokens in the oracle check): 146/188 match their oracle. Of the 42
+    divergent (each with its error in sweep.NONFINITE_DIVERGENT), 28
+    fail LOUDLY in Spark — the integer-cents determinism contract
+    (round(x*100) -> BIGINT) raises CAST_OVERFLOW / ARITHMETIC_OVERFLOW
+    under ANSI on Inf/NaN rather than silently folding them; a pipeline
+    ingesting non-finite measurements must gate them explicitly (the
+    outliers/winsorize family's job), and a loud error is the correct
+    posture for a determinism-first engine. The other 14: one pandas
+    UDF raises OverflowError (q_udf_cogroup), 7 trainers render a NaN
+    centroid as the SQL literal `nanD` (an unresolved column), 5 run
+    in Spark while their DuckDB oracles raise, and q_agg_approx_quantile
+    differs in its approx_ok flag.
     The r9-era two "genuine semantics" divergences were PINNED in r10
     with exactly the isnan/isinf recipe: q_agg_profile renders
     non-finite min/max as explicit 'NaN'/'Infinity'/'-Infinity' tokens

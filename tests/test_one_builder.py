@@ -2,10 +2,12 @@
 
 The md5-prefix hash, the whitespace tokenizer and the embedding folds
 must evaluate bit-for-bit alike in Spark and in the DuckDB oracles, so
-each has exactly one Spark builder and one DuckDB rendering. A copy
-written elsewhere could drift from the builder unnoticed; this test
-fails on any such copy in the package or bench.py. Like
-tools/collect_audit.py it only reads source, so it runs instantly.
+each has exactly one Spark builder and one DuckDB rendering, and the
+DuckDB fixture views that oracles run over are registered only by the
+one oracle check (oracle.py). A copy written elsewhere could drift from
+its owner unnoticed; this test fails on any such copy in the package,
+bench.py or tools/. Like tools/collect_audit.py it only reads source, so
+it runs instantly.
 
 Whitespace is stripped before matching, so a copy split over lines is
 still found.
@@ -32,6 +34,8 @@ _BUILDERS = {
     # DuckDB renderings: queries/base.words_sql and h32_sql / h64_sql
     "list_filter(regexp_split_to_array(": f"{PKG}/queries/base.py",
     "('0x'||substring(md5(": f"{PKG}/queries/base.py",
+    # DuckDB fixture views: oracle.duckdb_connect, for the one comparator
+    "ASSELECT*FROMread_parquet(": f"{PKG}/oracle.py",
 }
 
 # each builder module must itself hold its pattern, or the guard would
@@ -41,16 +45,18 @@ _MUST_HOLD = [
     "aggregate(zip_with(",
     "list_filter(regexp_split_to_array(",
     "('0x'||substring(md5(",
+    "ASSELECT*FROMread_parquet(",
 ]
 
 
 def _sources() -> dict[str, str]:
     out = {"bench.py": open(os.path.join(ROOT, "bench.py")).read()}
-    for d, _, files in os.walk(os.path.join(ROOT, PKG)):
-        for f in files:
-            if f.endswith(".py"):
-                path = os.path.join(d, f)
-                out[os.path.relpath(path, ROOT)] = open(path).read()
+    for top in (PKG, "tools"):
+        for d, _, files in os.walk(os.path.join(ROOT, top)):
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(d, f)
+                    out[os.path.relpath(path, ROOT)] = open(path).read()
     return {rel: re.sub(r"\s+", "", text) for rel, text in out.items()}
 
 

@@ -6,15 +6,18 @@ from __future__ import annotations
 
 import pytest
 
-from hadoop_0_20_2_ljx_spark.oracle import run_query
+from hadoop_0_20_2_ljx_spark.oracle import replay
 from hadoop_0_20_2_ljx_spark.queries import REGISTRY
 from tests.conftest import SF_SMOKE
+
+QUERIES = {name: qd.spark for name, qd in REGISTRY.items()}
+ORACLES = {name: qd.oracle for name, qd in REGISTRY.items() if qd.oracle is not None}
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(spark, name):
-    ok, msg = run_query(name, spark, SF_SMOKE)
-    assert ok, f"{name}: {msg}"
+    why = replay(spark, SF_SMOKE, QUERIES, ORACLES, only={name})[name]
+    assert why is None, f"{name}: {why}"
 
 
 def test_registry_covers_survey_sections():

@@ -13,6 +13,7 @@ import sys
 
 import pytest
 
+from hadoop_0_20_2_ljx_spark.catalog import TABLES
 from tests.conftest import SF_SMOKE, SF_T2
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -119,7 +120,7 @@ def test_fixture_builder_deterministic_schema_keeping_and_applied(sweep, axis, t
     for d in dirs:
         d.mkdir()
         sweep.build_fixture(row.fixture, SF_SMOKE, str(d))
-    for t in sweep.driver_sim.TABLES:
+    for t in TABLES:
         a, b = ((d / f"{t}.parquet").read_bytes() for d in dirs)
         assert a == b, f"{axis}: {t} differs between two builds"
         src = pq.read_schema(f"{SF_SMOKE}/{t}.parquet")
@@ -136,7 +137,7 @@ def test_split_fixture_keeps_rows_in_many_row_groups(sweep, tmp_path):
     for d in dirs:
         d.mkdir()
         sweep.build_fixture(row.fixture, SF_T2, str(d), row.row_group_rows)
-    for t in sweep.driver_sim.TABLES:
+    for t in TABLES:
         a, b = ((d / f"{t}.parquet").read_bytes() for d in dirs)
         assert a == b, f"{t} differs between two builds"
         src = pq.read_table(f"{SF_T2}/{t}.parquet")

@@ -13,8 +13,8 @@ HEAD and Spark version. Exit code 0 means every axis held.
 Each axis runs in its own spawned child process, because static confs
 (spark.driver.memory, the force-spill threshold, default.parallelism)
 only take effect when the JVM starts. The child replays through
-tools/driver_sim.py's ``replay``, the same loop and oracle compare as the
-driver gate, so an axis differs from the gate only by its row.
+``oracle.replay``, the same loop and oracle compare as the driver gate
+(tools/driver_sim.py), so an axis differs from the gate only by its row.
 
 An axis fails when its child exits non-zero or replays zero queries, when
 a conf of its row does not read back from the live session, when its
@@ -45,11 +45,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-TOOLS = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(TOOLS)
-sys.path[:0] = [REPO, TOOLS]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-import driver_sim  # noqa: E402 — needs TOOLS on sys.path
+from hadoop_0_20_2_ljx_spark import catalog, oracle  # noqa: E402 — needs REPO on sys.path
 from hadoop_0_20_2_ljx_spark.jobs import DEFAULT_SF  # noqa: E402 — sf0.001
 
 # the driver gate's scale: the conf axes' default fixture
@@ -68,7 +67,7 @@ class Axis(NamedTuple):
     expected: Collection[str] = frozenset()
     # (spark, replayed dir) -> None, or why the axis tested nothing
     check: Callable | None = None
-    # replaces driver_sim.replay (the two-pass retry axis)
+    # replaces the plain registry replay (the two-pass retry axis)
     replay: Callable | None = None
     # default fixture dir (--sf overrides it)
     sf: str = GATE_SF
@@ -91,7 +90,7 @@ def _replace(tab, name: str, arr):
 def build_fixture(fixture: Callable, src: str, dst: str,
                   row_group_rows: int | None = None) -> None:
     """Write every fixture table of ``src`` to ``dst`` through ``fixture``."""
-    for t in driver_sim.TABLES:
+    for t in catalog.TABLES:
         out = fixture(t, pq.read_table(f"{src}/{t}.parquet"))
         if out is None:
             shutil.copyfile(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
@@ -247,10 +246,8 @@ def _check_split(spark, data):
     as one non-empty split whatever maxPartitionBytes says."""
     from pyspark.sql import functions as F
 
-    from hadoop_0_20_2_ljx_spark import catalog
-
     splits = {t: catalog.load(spark, data, t).select(F.spark_partition_id())
-              .distinct().count() for t in driver_sim.TABLES}
+              .distinct().count() for t in catalog.TABLES}
     print("split check: non-empty scan splits per table: "
           + ", ".join(f"{t} {n}" for t, n in splits.items()))
     if sum(splits.values()) > len(splits):
@@ -259,8 +256,19 @@ def _check_split(spark, data):
 
 
 def _check_empty(spark, data):
-    rows = sum(pq.read_metadata(f"{data}/{t}.parquet").num_rows for t in driver_sim.TABLES)
+    rows = sum(pq.read_metadata(f"{data}/{t}.parquet").num_rows for t in catalog.TABLES)
     return f"fixture is not empty ({rows} rows)" if rows else None
+
+
+# ------------------------------------------------------------- replay
+
+
+def _replay(spark, data, only, collect=None) -> dict:
+    """The driver contract's queries replayed against their oracles."""
+    import __spark_entry__
+
+    return oracle.replay(spark, data, __spark_entry__.queries(),
+                         __spark_entry__.oracle_sql(), only, collect)
 
 
 # ------------------------------------------------------------- retry axis
@@ -316,8 +324,6 @@ def _retry_pass(spark, data, only, acc, fail: bool):
     """One replay with every table scan and every result collection
     wrapped in the injector. Returns (outcomes, strict fingerprints,
     retried task counts), the last two per query."""
-    from hadoop_0_20_2_ljx_spark import catalog
-
     injector = _make_injector(acc, fail)
     strict: dict[str, str] = {}
     retried: dict[str, int] = {}
@@ -336,7 +342,7 @@ def _retry_pass(spark, data, only, acc, fail: bool):
 
     catalog.load = load
     try:
-        return driver_sim.replay(spark, data, only, collect), strict, retried
+        return _replay(spark, data, only, collect), strict, retried
     finally:
         catalog.load = orig_load
 
@@ -387,36 +393,33 @@ NULL_DIVERGENT = {
 }
 
 NONFINITE_DIVERGENT = {
-    # loud ANSI cast errors on both engines (integer-cents boundary) or
-    # non-finite arithmetic reaching an integer/struct contract
-    "q_agg_approx_quantile", "q_agg_cube", "q_agg_daily", "q_agg_deciles",
-    "q_agg_drift_js", "q_agg_drift_ks", "q_agg_gapfill",
-    "q_agg_grouping_sets", "q_agg_minmax", "q_agg_multi",
-    "q_agg_numeric_hist", "q_agg_outliers", "q_agg_rolling",
-    "q_agg_rollup", "q_agg_scd2", "q_agg_stats", "q_agg_tpch_q1",
-    "q_agg_tpch_q10", "q_agg_tpch_q11", "q_agg_tpch_q14",
-    "q_agg_tpch_q15", "q_agg_tpch_q17", "q_agg_tpch_q18",
-    "q_agg_tpch_q19", "q_agg_tpch_q2", "q_agg_tpch_q20",
+    # Spark raises CAST_OVERFLOW under ANSI: a NaN/±Inf reaches the
+    # integer-cents contract (floor(x*100) -> BIGINT), by design
+    "q_agg_deciles", "q_agg_gapfill", "q_agg_outliers", "q_agg_tpch_q10",
+    "q_agg_tpch_q11", "q_agg_tpch_q14", "q_agg_tpch_q15", "q_agg_tpch_q17",
+    "q_agg_tpch_q18", "q_agg_tpch_q19", "q_agg_tpch_q2", "q_agg_tpch_q20",
     "q_agg_tpch_q22", "q_agg_tpch_q3", "q_agg_tpch_q5", "q_agg_tpch_q6",
-    "q_agg_tpch_q8", "q_agg_tpch_q9", "q_agg_window_rank",
-    "q_agg_winsorize", "q_audit_diff_incremental", "q_audit_fingerprint",
-    "q_audit_table_diff", "q_dedup_embed", "q_dedup_keep_latest",
-    "q_embed_ann", "q_embed_ivf", "q_embed_ivf_bcast",
-    "q_embed_ivf_nprobe", "q_embed_ivfpq", "q_embed_ivfpq_nprobe",
-    "q_embed_ivfpq_rerank", "q_embed_kmeans", "q_embed_kmeans_ivf",
-    "q_embed_kmeans_ivf_bcast", "q_embed_knn", "q_embed_pq",
-    "q_embed_quantize", "q_fn_recordio", "q_join_3way", "q_join_asof",
-    "q_join_asof_fwd", "q_join_broadcast", "q_join_inner",
-    "q_join_range", "q_join_salted", "q_proj_chain", "q_proj_unpivot",
-    "q_sink_compaction", "q_sink_csv_json_roundtrip",
-    "q_sink_orc_roundtrip", "q_sink_parquet_roundtrip",
-    "q_sink_partitioned", "q_sink_schema_evolution",
-    "q_sink_sorted_lookup", "q_sink_zorder", "q_udf_cogroup",
-    "q_dedup_semantic", "q_join_bloom",
-    # same integer-cents contract: floor(value*100) -> BIGINT raises
-    # loudly on both engines (runmax keeps NULL values in-stream but
-    # rejects non-finite ones; the null axis proves it must PASS there)
-    "q_window_hotkey_runsum", "q_window_hotkey_runmax",
+    "q_agg_tpch_q8", "q_agg_tpch_q9", "q_agg_winsorize",
+    "q_audit_diff_incremental", "q_audit_fingerprint", "q_audit_table_diff",
+    "q_proj_unpivot", "q_sink_zorder",
+    # Spark raises ARITHMETIC_OVERFLOW (long overflow) on the same contract;
+    # runmax keeps NULL values in-stream but rejects non-finite ones (the
+    # null axis proves it must PASS there)
+    "q_agg_drift_ks", "q_agg_rolling", "q_window_hotkey_runmax",
+    "q_window_hotkey_runsum",
+    # the pandas UDF raises OverflowError on int(floor(inf))
+    "q_udf_cogroup",
+    # the trainers render a NaN centroid as the literal `nanD`, which Spark
+    # resolves as a column (UNRESOLVED_COLUMN)
+    "q_embed_ivfpq", "q_embed_ivfpq_nprobe", "q_embed_ivfpq_rerank",
+    "q_embed_kmeans", "q_embed_kmeans_ivf", "q_embed_kmeans_ivf_bcast",
+    "q_embed_pq",
+    # Spark answers; the DuckDB oracle raises: a DOUBLE NaN/inf cast to
+    # INT64 (ConversionException), STDDEV_POP out of range (q_agg_stats)
+    "q_agg_drift_js", "q_agg_numeric_hist", "q_agg_scd2", "q_agg_stats",
+    "q_embed_quantize",
+    # rows differ: Spark's approx_ok is F where the oracle pins T on a NaN q95
+    "q_agg_approx_quantile",
 }
 
 # every tokenizing query diverges on the \x0b salt only (removing it
@@ -642,10 +645,11 @@ AXES: dict[str, Axis] = {
         "local[32]",
         {"spark.sql.shuffle.partitions": "32"},
         why="NaN/+Inf/-Inf salted into every double column and into embedding "
-        "vectors. Most expected names fail LOUDLY on both engines: the "
-        "integer-cents contract raises CAST_OVERFLOW/CAST_INVALID_INPUT "
+        "vectors. Most expected names fail LOUDLY in Spark: the "
+        "integer-cents contract raises CAST_OVERFLOW/ARITHMETIC_OVERFLOW "
         "under ANSI on non-finite input, by design (never fold NaN into a "
-        "sum silently). q_agg_profile renders non-finite min/max as explicit "
+        "sum silently). NONFINITE_DIVERGENT names each one's error. "
+        "q_agg_profile renders non-finite min/max as explicit "
         "tokens and q_sort_secondary ranks NaN greatest, on both sides.",
         fixture=_nonfinite,
         sf=DEFAULT_SF,
@@ -776,7 +780,7 @@ def _child(name: str, sf: str, only, conn) -> None:
                             f"{spark.sparkContext.master}")
         outcomes = {}
         if not problems:
-            outcomes = (axis.replay or driver_sim.replay)(spark, data, only)
+            outcomes = (axis.replay or _replay)(spark, data, only)
             problem = run_check(axis, spark, data)
             if problem:
                 problems.append(problem)
