@@ -39,8 +39,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Fixture parquet stores TIMESTAMP(NANOS,false). Depending on the Spark
 # build these arrive either as long nanos (spark.sql.legacy.parquet.
 # nanosAsLong, pre-4.1) or natively as TIMESTAMP_NTZ truncated to micros
@@ -128,36 +126,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # epoch value; unix_micros/window functions need LTZ TIMESTAMP
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def listing(sf_dir: str = DEFAULT_SF_DIR) -> list[dict]:
-    """FsShell-style thin catalog listing (the `ls/du/count` subset of
-    core/fs/FsShell.java:1424-1472 that a catalog needs): per table, file
-    count, total bytes, and row count.
-
-    Row counts come from parquet FOOTER metadata (pyarrow), not a scan —
-    the same O(files) metadata-only cost at any data scale, no Spark job.
-    """
-    import pyarrow.parquet as pq
-
-    out: list[dict] = []
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        files: list[str] = []
-        if os.path.isdir(path):
-            for root, _dirs, fnames in os.walk(path):
-                files.extend(
-                    os.path.join(root, f)
-                    for f in fnames
-                    if f.endswith(".parquet") or f.startswith("part-")
-                )
-        elif os.path.exists(path):
-            files = [path]
-        else:
-            continue
-        n_bytes = sum(os.path.getsize(f) for f in files)
-        n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        out.append(
-            {"table": name, "n_files": len(files), "n_bytes": n_bytes, "n_rows": n_rows}
-        )
-    return out

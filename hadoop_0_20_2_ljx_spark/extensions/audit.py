@@ -34,33 +34,6 @@ def _ppm(num: F.Column, den: F.Column) -> F.Column:
     return F.floor(F.lit(PPM) * num / den).cast("long")
 
 
-def completeness_check(df: DataFrame, col: str, min_ppm: int = PPM) -> DataFrame:
-    """Deequ-style completeness: fraction of non-null values, in ppm."""
-    agg = df.agg(
-        F.count(F.lit(1)).alias("_n"), F.count(F.col(col)).alias("_nn")
-    )
-    metric = _ppm(F.col("_nn"), F.col("_n"))
-    return agg.select(
-        F.lit(f"complete:{col}").alias("check_name"),
-        metric.alias("metric_ppm"),
-        (metric >= min_ppm).alias("passed"),
-    )
-
-
-def uniqueness_check(df: DataFrame, col: str, min_ppm: int = PPM) -> DataFrame:
-    """Key-uniqueness: distinct/total in ppm. countDistinct is the exact
-    two-phase distinct aggregate (partials per partition, no collect)."""
-    agg = df.agg(
-        F.count(F.lit(1)).alias("_n"), F.countDistinct(F.col(col)).alias("_d")
-    )
-    metric = _ppm(F.col("_d"), F.col("_n"))
-    return agg.select(
-        F.lit(f"unique:{col}").alias("check_name"),
-        metric.alias("metric_ppm"),
-        (metric >= min_ppm).alias("passed"),
-    )
-
-
 def referential_check(
     child: DataFrame, child_col: str, parent: DataFrame, parent_col: str
 ) -> DataFrame:
@@ -290,8 +263,9 @@ def snapshot_diff(
     reconciliation contract). Under duplicate keys the full-outer join
     multiplies matches (m x n rows per key), so counts become
     join-multiplicities, and incremental_snapshot_diff — which counts
-    clean-bucket ROWS — would disagree with this function; run
-    uniqueness_check first when the source is untrusted.
+    clean-bucket ROWS — would disagree with this function; check key
+    uniqueness first when the source is untrusted (q_audit_constraints'
+    unique metric).
     """
     o = old.select(
         *keys,

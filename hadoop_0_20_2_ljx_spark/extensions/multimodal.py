@@ -26,17 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, payload binary, "
-    "meta struct<n_bytes: long, mime: string, checksum: string>"
-)
-
-
 def attach_binary_payload(df: DataFrame, id_col: str, text_col: str, media_type: str = "image") -> DataFrame:
     """Build a multimodal frame from a text fixture: payload =
     utf-8 bytes of the text standing in for encoded media, plus typed
     metadata (size / mime / md5 checksum). The schema is the engine's
-    multimodal contract (MEDIA_SCHEMA)."""
+    multimodal contract."""
     payload = F.encode(F.col(text_col), "utf-8")
     return df.select(
         F.col(id_col).alias("doc_id"),
@@ -179,7 +173,7 @@ def decode_features(df: DataFrame, fake: bool = True, batch_size_hint: int | Non
 
 
 def decode_media(df: DataFrame) -> DataFrame:
-    """REAL decode stage over the MEDIA_SCHEMA frame: parse each payload
+    """REAL decode stage over an attach_binary_payload frame: parse each payload
     with the numpy/stdlib decoders and emit typed media facts. Payloads in
     formats needing external codecs come back as kind='unsupported'
     rather than failing the job (per-row tolerance, the SkipBadRecords
@@ -232,79 +226,10 @@ def decode_media(df: DataFrame) -> DataFrame:
     )
 
 
-def resize_media(df: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
-    """REAL image resize for the numpy-decodable tier: decode (PPM/PGM/
-    BMP), nearest-neighbor sample to (target_h, target_w), re-encode as
-    binary PPM/PGM. Non-image or unsupported payloads pass through
-    unchanged with resized=false. Binary->binary mapInPandas, the same
-    contract as resize_payload's schema-demo path.
-
-    Output: (doc_id, media_type, payload, width, height, resized).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "media_type", "payload", "width", "height", "resized",
-            )}
-            for doc_id, mt, payload in zip(pdf["doc_id"], pdf["media_type"], pdf["payload"]):
-                out["doc_id"].append(doc_id)
-                out["media_type"].append(mt)
-                try:
-                    d = _decode_real(payload, mt)
-                    is_img = d["kind"] == "image"
-                except (NotImplementedError, ValueError):
-                    is_img = False
-                if not is_img:
-                    out["payload"].append(bytes(payload))
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["resized"].append(False)
-                    continue
-                arr = d["array"]
-                h, w = arr.shape[:2]
-                yi = np.minimum((np.arange(target_h) * h) // target_h, h - 1)
-                xi = np.minimum((np.arange(target_w) * w) // target_w, w - 1)
-                small = arr[yi][:, xi]
-                if small.ndim == 3:
-                    enc = f"P6\n{target_w} {target_h}\n255\n".encode() + small.astype(
-                        np.uint8
-                    ).tobytes()
-                else:
-                    enc = f"P5\n{target_w} {target_h}\n255\n".encode() + small.astype(
-                        np.uint8
-                    ).tobytes()
-                out["payload"].append(enc)
-                out["width"].append(target_w)
-                out["height"].append(target_h)
-                out["resized"].append(True)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, media_type string, payload binary, "
-            "width int, height int, resized boolean"
-        ),
-    )
-
-
 # --- deterministic synthetic payloads (tests / demos) ------------------------
 def synth_ppm(w: int, h: int, seed: int = 0) -> bytes:
     px = (np.arange(w * h * 3, dtype=np.int64) * 31 + seed * 7) % 256
     return f"P6\n{w} {h}\n255\n".encode() + px.astype(np.uint8).tobytes()
-
-
-def synth_bmp(w: int, h: int, seed: int = 0) -> bytes:
-    stride = (w * 3 + 3) & ~3
-    img = ((np.arange(h * w * 3, dtype=np.int64) * 17 + seed) % 256).astype(np.uint8)
-    rows = img.reshape(h, w * 3)
-    padded = np.zeros((h, stride), dtype=np.uint8)
-    padded[:, : w * 3] = rows
-    pixel_bytes = padded[::-1].tobytes()  # bottom-up storage
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(pixel_bytes), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixel_bytes), 2835, 2835, 0, 0)
-    return header + dib + pixel_bytes
 
 
 def synth_wav(n: int, rate: int = 8000, seed: int = 0) -> bytes:
@@ -316,70 +241,3 @@ def synth_wav(n: int, rate: int = 8000, seed: int = 0) -> bytes:
         wf.setframerate(rate)
         wf.writeframes(samples.tobytes())
     return buf.getvalue()
-
-
-def resize_payload(
-    df: DataFrame, target_w: int = 64, target_h: int = 64, fake: bool = True
-) -> DataFrame:
-    """Resize stage: binary payload in -> binary payload out plus updated
-    typed metadata (target dims, new checksum).
-
-    fake=True derives a deterministic stand-in 'resized' payload (a
-    truncation/repetition to exactly target_w*target_h bytes) so the
-    schema, batch shape and downstream contract are real and testable;
-    fake=False raises from the decode stub (no imaging libs here). The
-    real implementation swaps ONLY the body of ``shrink`` for a
-    PIL/cv2 call — the Spark-side topology is unchanged.
-    """
-    import hashlib
-
-    n_out = target_w * target_h
-
-    def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                for _, row in pdf.iterrows():
-                    _decode_real(row["payload"], row["media_type"])
-            out = []
-            for b in pdf["payload"]:
-                rep = (bytes(b) * (n_out // max(len(b), 1) + 1))[:n_out]
-                out.append(rep)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": out,
-                    "width": target_w,
-                    "height": target_h,
-                    "checksum": [hashlib.md5(p).hexdigest() for p in out],
-                }
-            )
-
-    return df.mapInPandas(
-        shrink,
-        schema=(
-            "doc_id long, media_type string, payload binary, "
-            "width int, height int, checksum string"
-        ),
-    )
-
-
-def frame_sample(df: DataFrame, every_n_bytes: int = 16, fake: bool = True) -> DataFrame:
-    """Frame-sampling stage shape (video -> every Nth frame): emits one
-    row per sampled offset with a per-frame checksum byte. 1->n row
-    explosion through mapInPandas, the real streaming-decode topology."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_off, out_val = [], [], []
-            for _, row in pdf.iterrows():
-                if not fake:
-                    _decode_real(row["payload"], row["media_type"])
-                b = row["payload"]
-                for off in range(0, len(b), every_n_bytes):
-                    out_id.append(row["doc_id"])
-                    out_off.append(off)
-                    out_val.append(b[off])
-            yield pd.DataFrame({"doc_id": out_id, "frame_off": out_off, "frame_val": out_val})
-
-    return df.mapInPandas(sample, schema="doc_id long, frame_off long, frame_val int")

@@ -1,26 +1,24 @@
-"""Bloom filters: membership pre-filtering and parquet storage-level blooms.
+"""Bloom filters: membership pre-filtering.
 
 Reference counterparts:
-  - util/bloom/BloomFilter.java (+ DynamicBloomFilter, CountingBloomFilter)
-  - BloomMapFile (io/BloomMapFile.java) — MapFile plus a bloom of its keys,
-    consulted before the index seek.
+  - util/bloom/BloomFilter.java
+  - BloomMapFile (io/BloomMapFile.java) — MapFile plus a DynamicBloomFilter
+    of its keys, consulted before the index seek. Its wire-compatible
+    sidecar is sources/bloomfile.py (q_sink_bloommap_roundtrip).
 
-Two Spark-native renderings:
-  1. ``write_parquet_with_bloom`` — parquet's own column bloom filters
-     (row-group pruning on point predicates), the direct BloomMapFile
-     analog: the bloom lives WITH the data file.
-  2. ``bloom_prefilter`` — the classic semi-join reducer: build a bloom
-     over the small side's keys, drop big-side rows that cannot match
-     before the join shuffle. The build is distributed (bit positions
-     computed JVM-side, only the <= m distinct set positions ever reach
-     the driver — bounded by the bitmap size, not the data size); the
-     probe is a pure JVM expression (element_at + getbit) over the
-     packed-word bitmap carried as a single array literal — no
-     JVM->Python hop on the big side's scan.
-     Spark's own runtime bloom join (spark.sql.optimizer.runtime.
-     bloomFilter.enabled) does this automatically inside one query;
-     this operator is for when the filter must cross a materialization
-     boundary (build once, apply to many queries), which Catalyst can't.
+``bloom_prefilter`` is the classic semi-join reducer: build a bloom over
+the small side's keys, drop big-side rows that cannot match before the
+join shuffle. The build is distributed (bit positions computed JVM-side,
+only the <= m distinct set positions ever reach the driver — bounded by
+the bitmap size, not the data size); the probe is a pure JVM expression
+(element_at + getbit) over the packed-word bitmap carried as a single
+array literal — no JVM->Python hop on the big side's scan. Spark's own
+runtime bloom join (spark.sql.optimizer.runtime.bloomFilter.enabled)
+does this automatically inside one query; this operator is for when the
+filter must cross a materialization boundary (build once, apply to many
+queries), which Catalyst can't. Parquet's own column blooms (row-group
+pruning on point predicates) are a writer option,
+``parquet.bloom.filter.enabled#<col>``, not an operator.
 
 Position hashing is xxhash64-derived (engine-internal — no oracle ever
 sees bloom bits) and computed JVM-side for both build and probe (one
@@ -232,158 +230,3 @@ def bloom_prefilter(
         _position_parts(F.col(key), k, m_bits, normalize),
     )
     return big.filter(F.col(key).isNotNull() & cond)
-
-
-class DynamicBloom:
-    """Growable bloom: util/bloom/DynamicBloomFilter.java:88 (the INFOCOM'06
-    dynamic bloom filter backing BloomMapFile's key bloom,
-    io/BloomMapFile.java:38) — an s x m bit matrix where each row is a
-    standard bloom recording at most ~``nr`` keys; a key belongs to the
-    filter iff some row reports it. Per-row FP stays bounded as the set
-    grows because new rows are added instead of saturating one vector.
-
-    Batch rendering of the per-key insert loop: each ``add_frame`` seals
-    the active row when it would overflow, and a batch larger than ``nr``
-    is hash-bucketed into ceil(n/nr) fresh rows (deterministic xxhash64
-    routing — retry-safe where insertion order is not; rows stay ~<= nr
-    keys, which is the invariant the FP bound needs). Each row build is
-    the collect-free ``build_bloom`` (mapInArrow + treeReduce).
-    """
-
-    def __init__(self, nr: int, fpp: float = 0.01) -> None:
-        self.nr = int(nr)
-        self.fpp = fpp
-        self.m_bits, self.k = optimal_params(self.nr, fpp)
-        # sealed rows: packed uint8 bitmaps; active row may keep growing
-        self._rows: list[np.ndarray] = []
-        self._active_count = 0
-
-    @property
-    def num_rows(self) -> int:
-        return len(self._rows)
-
-    def add_frame(self, df: DataFrame, key_col: str) -> "DynamicBloom":
-        n = df.count()
-        if n == 0:
-            return self
-        if self._rows and self._active_count + n <= self.nr:
-            # fits in the active row: OR the batch's bitmap into it
-            bits = build_bloom(df, key_col, self.m_bits, self.k)
-            self._rows[-1] = np.bitwise_or(self._rows[-1], np.packbits(bits))
-            self._active_count += n
-            return self
-        n_buckets = max(1, -(-n // self.nr))  # ceil
-        if n_buckets == 1:
-            bits = build_bloom(df, key_col, self.m_bits, self.k)
-            self._rows.append(np.packbits(bits))
-            self._active_count = n
-            return self
-        bucket = F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-        for b in range(n_buckets):
-            part = df.filter(bucket == b)
-            bits = build_bloom(part, key_col, self.m_bits, self.k)
-            self._rows.append(np.packbits(bits))
-        self._active_count = self.nr  # hash buckets are ~full; seal them
-        return self
-
-    def prefilter(self, big: DataFrame, key: str) -> DataFrame:
-        """Keep rows whose key matches ANY matrix row (no false negatives
-        across every add_frame ever made). NULL keys are dropped (explicit
-        isNotNull — see _bitmap_member_cond's NULL note)."""
-        if not self._rows:
-            return big.filter(F.lit(False))
-        # matrix-row count is data-dependent (ceil(n/nr) rows), but each
-        # row is ONE array literal node, so the per-row OR adds O(s)
-        # nodes, not s x m (far from the r7 literal-count cliff for any
-        # sane batch count); a key belongs iff SOME row reports it.
-        cond = F.lit(False)
-        for packed in self._rows:
-            bm = _bitmap_literal(
-                _bitmap_words(np.unpackbits(packed)[: self.m_bits])
-            )
-            cond = cond | _bitmap_member_cond(
-                bm, _position_parts(F.col(key), self.k, self.m_bits)
-            )
-        return big.filter(F.col(key).isNotNull() & cond)
-
-
-class CountingBloom:
-    """util/bloom/CountingBloomFilter.java:48: bloom with per-position
-    counters so keys can be DELETED. Counters saturate at 15 (the 4-bit
-    bucket model, :86-96): a saturated counter never increments nor
-    decrements again — deletes under saturation must not create false
-    negatives.
-
-    Build is distributed: per-partition ``np.bincount`` of the JVM-computed
-    positions (mapInArrow), uint32 partials treeReduce-summed executor-side,
-    saturation applied once at the end (add beyond 15 is indistinguishable
-    from 15 in the 4-bit model, so post-hoc clipping matches the sticky
-    semantics for batch builds). Driver traffic O(m) counters, never rows.
-    """
-
-    def __init__(self, expected_items: int, fpp: float = 0.01) -> None:
-        self.m_bits, self.k = optimal_params(expected_items, fpp)
-        self.counters = np.zeros(self.m_bits, dtype=np.uint8)
-
-    def _position_counts(self, df: DataFrame, key_col: str) -> np.ndarray:
-        import pyarrow as pa
-
-        m_bits = self.m_bits
-
-        def _part_counts(batches):
-            counts = np.zeros(m_bits, dtype=np.uint32)
-            for b in batches:
-                p = b.column(0).to_numpy(zero_copy_only=False)
-                counts += np.bincount(p, minlength=m_bits).astype(np.uint32)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([counts.tobytes()], type=pa.binary())], ["c"]
-            )
-
-        pos_df = df.select(
-            F.explode(_positions_expr(F.col(key_col), self.k, m_bits)).alias("p")
-        )
-        partials = pos_df.mapInArrow(_part_counts, "c binary").rdd.map(
-            lambda r: np.frombuffer(r[0], dtype=np.uint32).copy()
-        )
-        try:
-            return partials.treeReduce(np.add)
-        except ValueError:  # empty RDD
-            return np.zeros(m_bits, dtype=np.uint32)
-
-    def add_frame(self, df: DataFrame, key_col: str) -> "CountingBloom":
-        total = self.counters.astype(np.uint32) + self._position_counts(df, key_col)
-        # sticky saturation: anything that ever reaches 15 pins there
-        self.counters = np.minimum(total, 15).astype(np.uint8)
-        return self
-
-    def remove_frame(self, df: DataFrame, key_col: str) -> "CountingBloom":
-        dec = self._position_counts(df, key_col)
-        at_max = self.counters == 15  # unknown true count: never decrement
-        dec_applied = np.minimum(dec, self.counters.astype(np.uint32))
-        out = self.counters.astype(np.int64) - np.where(at_max, 0, dec_applied)
-        self.counters = out.astype(np.uint8)
-        return self
-
-    def prefilter(self, big: DataFrame, key: str) -> DataFrame:
-        """Keep rows whose every position has counter > 0. NULL keys are
-        dropped (explicit isNotNull — see _bitmap_member_cond's NULL
-        note)."""
-        cond = _bitmap_member_cond(
-            _bitmap_literal(_bitmap_words(self.counters > 0)),
-            _position_parts(F.col(key), self.k, self.m_bits),
-        )
-        return big.filter(F.col(key).isNotNull() & cond)
-
-
-def write_parquet_with_bloom(
-    df: DataFrame, path: str, bloom_cols: list[str], expected_ndv: int = 100_000
-) -> None:
-    """Parquet with per-column bloom filters — the BloomMapFile analog:
-    point predicates on `bloom_cols` skip row groups whose bloom says the
-    value is absent, before any page decode."""
-    writer = df.write.mode("overwrite")
-    for c in bloom_cols:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
-        )
-    writer.parquet(path)

@@ -23,6 +23,8 @@ UDF).
 
 from __future__ import annotations
 
+import math
+
 
 def md5_int_sql(x_sql: str, digits: int) -> str:
     """Non-negative BIGINT from the first `digits` md5 hex digits of the
@@ -38,8 +40,16 @@ def md5_int_sql(x_sql: str, digits: int) -> str:
 
 
 def double_sql(x: float) -> str:
-    """SQL double literal; repr round-trips the exact IEEE value."""
-    return repr(float(x)) + "D"
+    """SQL double literal; repr round-trips the exact IEEE value. Vectors
+    are finite by contract: NaN/Inf have no literal (repr would render
+    `nanD`, which Spark resolves as a column name), so they raise."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(
+            f"non-finite value {x!r} in a double literal: vector math "
+            "requires finite vectors"
+        )
+    return repr(x) + "D"
 
 
 def double_array_sql(xs) -> str:

@@ -192,26 +192,6 @@ def from_csv_records(
     return df.select(F.from_csv(F.col(csv_col), schema_ddl, options or None).alias("record"))
 
 
-def to_json_records(df: DataFrame, record_col: str = "record") -> DataFrame:
-    return df.select(F.to_json(F.col(record_col)).alias("json"))
-
-
-def from_json_records(df: DataFrame, schema_ddl: str, json_col: str = "json") -> DataFrame:
-    return df.select(F.from_json(F.col(json_col), schema_ddl).alias("record"))
-
-
-def to_xml_records(df: DataFrame, record_col: str = "record", row_tag: str = "record") -> DataFrame:
-    return df.select(F.to_xml(F.col(record_col), {"rowTag": row_tag}).alias("xml"))
-
-
-def from_xml_records(
-    df: DataFrame, schema_ddl: str, xml_col: str = "xml", row_tag: str = "record"
-) -> DataFrame:
-    return df.select(
-        F.from_xml(F.col(xml_col), schema_ddl, {"rowTag": row_tag}).alias("record")
-    )
-
-
 def unpack(df: DataFrame, record_col: str = "record") -> DataFrame:
     """Flatten the record back to top-level columns."""
     return df.select(f"{record_col}.*")

@@ -56,17 +56,6 @@ def random_text(spark: SparkSession, n: int, words_per_row: int = 10) -> DataFra
     return rng.select(F.col("id").alias("row_id"), words.alias("text"))
 
 
-def gen_fingerprint(df: DataFrame, key_col: str = "key") -> DataFrame:
-    """Checksum a generated dataset: count, min/max key, hash-sum — the
-    RandomWriter 'checksum the output' verification pattern."""
-    return df.agg(
-        F.count("*").alias("n"),
-        F.min(key_col).alias("min_key"),
-        F.max(key_col).alias("max_key"),
-        F.sum(F.expr(md5_int_sql(f"`{key_col}`", 8)) % 1000003).alias("hash_sum"),
-    )
-
-
 def halton(index: int) -> tuple[float, float]:
     """2D Halton low-discrepancy point, as in PiEstimator.HaltonSequence
     (PiEstimator.java:154): bases (2, 3), offset indexing.

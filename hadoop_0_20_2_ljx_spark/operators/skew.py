@@ -1,4 +1,4 @@
-"""Skew mitigation: salting for hot keys, bucketing for co-located joins.
+"""Skew mitigation: salting for hot keys, skew diagnosis.
 
 Reference counterpart: none as an operator — the reference's skew story is
 documentation of the symptom (the 2008 TeraSort run's reduce outputs
@@ -295,25 +295,3 @@ def top_hot_keys(df: DataFrame, key: str, top_n: int = 20) -> DataFrame:
         .orderBy(F.desc("cnt"), F.col(key))
         .limit(top_n)
     )
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, num_buckets: int = 32, sort: bool = True
-) -> None:
-    """Persist a table bucketed (and sorted) by the join/group key —
-    the MapFile model (sorted + indexed, io/MapFile.java:219) generalized:
-    joins and groupBys on `key` between co-bucketed tables then need NO
-    shuffle (Catalyst sees the bucketing output partitioning).
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(spark, left_table: str, right_table: str, key: str) -> DataFrame:
-    """Join two co-bucketed saved tables on their bucket key — shuffle-free
-    (the CompositeInputFormat map-side merge join, done declaratively:
-    mapred/join/CompositeInputFormat.java:48 needed co-sorted co-partitioned
-    inputs; bucketed tables are exactly that contract)."""
-    return spark.table(left_table).join(spark.table(right_table), on=key)

@@ -136,13 +136,6 @@ def key_field_order_columns(line: Column, specs: list[str], sep: str = "\t") -> 
     return order
 
 
-def key_field_sort_spec(
-    df: DataFrame, text_col: str, specs: list[str], sep: str = "\t"
-) -> DataFrame:
-    """KeyFieldBasedComparator with full ``-k f.c,f.c[n][r]`` specs."""
-    return df.orderBy(*key_field_order_columns(F.col(text_col), specs, sep))
-
-
 def total_order_sort(df: DataFrame, *cols: str, num_partitions: int | None = None) -> DataFrame:
     """TotalOrderPartitioner + InputSampler + sort, in one declarative op.
 
@@ -217,31 +210,3 @@ def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     keeps a k-heap, the driver merges k*P rows. No single-reducer
     bottleneck at any scale."""
     return df.orderBy(*order_cols).limit(k)
-
-
-def top_k_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order: list[Column],
-    k: int,
-    rank_name: str = "rank",
-) -> DataFrame:
-    """Per-group top-k: the grouped form of the reference's top-k pattern
-    (Grep job 2's single-reducer head, examples/Grep.java:71-84, which can
-    only express a GLOBAL top-k — per-group requires the secondary-sort
-    idiom, JobConf.setOutputValueGroupingComparator:708, with a counting
-    reducer that stops emitting after k values).
-
-    Here: one row_number window on one shuffle (partitionBy group, ordered
-    within). ``order`` must be a TOTAL order (callers append a unique
-    tiebreak column — see CLAUDE.md determinism rules) so ranks are stable
-    across engines and retries. Scale: the window never materializes a
-    group list; rows stream through ranked, and AQE handles group skew.
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*group_cols).orderBy(*order)
-    return (
-        df.withColumn(rank_name, F.row_number().over(w))
-        .where(F.col(rank_name) <= k)
-    )

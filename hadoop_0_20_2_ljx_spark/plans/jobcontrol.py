@@ -84,11 +84,3 @@ class JobControl:
                 finally:
                     del remaining[j.name]
         return self.results
-
-
-def observed(df: DataFrame, name: str, *exprs) -> tuple[DataFrame, Observation]:
-    """Counters: attach observe() metrics (the MAP_INPUT_RECORDS-style
-    bookkeeping of Task.java:65-79) — computed during the existing action,
-    zero extra passes."""
-    obs = Observation(name)
-    return df.observe(obs, *exprs), obs

@@ -58,6 +58,15 @@ _NEEDS_FRESH_EVIDENCE = [
     # degree table; output identical to the fixed-round loop, oracle
     # untouched). It moved here from the fill cohort below, which now
     # holds 30 names.
+    #
+    # (head) new after the r14 window: the three Hadoop container
+    # round trips (SequenceFile + Sorter, MapFile/SetFile/ArrayFile,
+    # BloomMapFile), registered with DuckDB oracles; the fill cohort's
+    # last three names (q_sink_parquet_roundtrip, q_sink_partitioned,
+    # q_sink_sorted_lookup) spill below the cut line to keep 50.
+    "q_sink_seqfile_roundtrip",
+    "q_sink_mapfile_roundtrip",
+    "q_sink_bloommap_roundtrip",
     "q_graph_kcore",
     # (head) changed this round:
     "q_dedup_simhash",
@@ -108,10 +117,9 @@ _NEEDS_FRESH_EVIDENCE = [
     "q_set_distinct",
     "q_set_intersect_except",
     "q_set_union",
-    "q_sink_parquet_roundtrip",
-    "q_sink_partitioned",
-    "q_sink_sorted_lookup",
     # ---- 50-row cut line ----
+    # spilled from the fill cohort by the three container round trips:
+    # q_sink_parquet_roundtrip, q_sink_partitioned, q_sink_sorted_lookup.
     # committed r15 block: after this window lands, the oldest cohort is
     # the 8 r10 spill names (q_sink_text_roundtrip, q_sort_keyfield,
     # q_sort_secondary, q_text_classifier, q_text_entropy, q_udf_cogroup,

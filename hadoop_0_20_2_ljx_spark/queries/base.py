@@ -27,9 +27,9 @@ Cross-engine ground rules used throughout:
     on a unicode-salted differential replay (r8; every other salt —
     NBSP, CJK, combining marks, RTL, emoji, ZWJ, ideographic space —
     tokenizes identically, pinned token-by-token in
-    tests/test_unicode_boundary.py). The fixture text contract is
-    ASCII-with-single-spaces, so oracles are faithful twins there; the
-    engine's Java-\\s behavior is the declared product contract. Any
+    tests/test_unicode_boundary.py). The engine's Java-\\s behavior is
+    the declared product contract, so every oracle regex over
+    whitespace uses the class [{WS}] (WS below), which names \\x0B. Any
     Python-side tokenizer (UDTF/UDF) must use the explicit class
     [ \\t\\n\\x0b\\f\\r]+ — str.split() is UNICODE whitespace and
     silently diverges on NBSP et al. The r8 unicode replay reduced to
@@ -172,10 +172,16 @@ def h64_sql(expr: str) -> str:
     return f"CAST(('0x' || substring(md5(CAST(({expr}) AS VARCHAR)), 1, 15)) AS BIGINT)"
 
 
+# DuckDB whitespace, the inside of a regex class: Java's \s (the Spark
+# side's contract) includes the vertical tab \x0B, RE2's \s does not, so
+# every oracle regex over whitespace names it explicitly as [{WS}].
+WS = "\\s\\v"
+
+
 def words_sql(col: str) -> str:
     """DuckDB rendering of extensions.textstats.tokens_sql: whitespace
     tokens of `col`, empties dropped."""
-    return f"list_filter(regexp_split_to_array({col}, '\\s+'), w -> w <> '')"
+    return f"list_filter(regexp_split_to_array({col}, '[{WS}]+'), w -> w <> '')"
 
 
 def shingles_sql(words: str, k: int) -> str:
@@ -225,6 +231,6 @@ def quality_expr_sql() -> str:
 + 0.25 * (CASE WHEN (list_sum(list_transform({toks}, w -> length(w))) / greatest(len({toks}), 1)) >= 2.0
                AND (list_sum(list_transform({toks}, w -> length(w))) / greatest(len({toks}), 1)) <= 12.0
           THEN 1.0 ELSE 0.0 END)
-+ 0.25 * (1.0 - len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) / greatest(length(text), 1))
++ 0.25 * (1.0 - len(regexp_extract_all(text, '[^A-Za-z0-9{WS}]')) / greatest(length(text), 1))
 + 0.25 * least(1.0, 10.0 * (len(list_filter({toks}, w -> lower(w) IN ('the','a','of','and')))
                             / greatest(len({toks}), 1))), 6)"""

@@ -12,7 +12,7 @@ from pyspark.sql.window import Window
 
 from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.operators import scans, sorts, transforms
-from hadoop_0_20_2_ljx_spark.operators.generators import gen_fingerprint, random_text, tera_gen
+from hadoop_0_20_2_ljx_spark.operators.generators import random_text, tera_gen
 from hadoop_0_20_2_ljx_spark.queries.base import QueryDef, T, h32_sql, words_sql
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from hadoop_0_20_2_ljx_spark.extensions import dedup, textstats
 from hadoop_0_20_2_ljx_spark.functions.portable import cos_sql, md5_int_sql, zip_sum_sql
 from hadoop_0_20_2_ljx_spark.queries.base import (
+    WS,
     QueryDef,
     T,
     h32_sql,
@@ -50,9 +51,9 @@ def _dedup_canonical(spark: SparkSession, sf: str) -> DataFrame:
 # below every real score — explicit not-null flag leads the max(struct)
 # because engines disagree on null struct-field ordering; a NULL text
 # keys its own group (GROUP BY keeps null groups on both engines).
-_CANONICAL_SQL = """
+_CANONICAL_SQL = f"""
 WITH g AS (
-  SELECT md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS k,
+  SELECT md5(regexp_replace(trim(lower(text)), '[{WS}]+', ' ', 'g')) AS k,
          max(struct_pack(ok := CAST(n_chars IS NOT NULL AS INT),
                          s := coalesce(n_chars, 0), negid := -doc_id)) AS best,
          CAST(count(*) AS BIGINT) AS n_dups
@@ -1429,7 +1430,7 @@ WITH per AS (
   SELECT source, lang,
     CAST(len({w}) AS BIGINT) AS nw,
     CAST(length(text) AS BIGINT) AS nc,
-    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS BIGINT) AS np,
+    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9{WS}]')) AS BIGINT) AS np,
     CAST(len(list_filter({w}, x -> lower(x) IN ('the','a','of','and'))) AS BIGINT) AS ns,
     CASE WHEN length(text) >= 50 AND length(text) <= 10000 THEN 1 ELSE 0 END AS len_ok
   FROM documents

@@ -21,6 +21,7 @@ from hadoop_0_20_2_ljx_spark.extensions import (
 )
 from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.queries.base import (
+    WS,
     QueryDef,
     T,
     h32_sql,
@@ -443,7 +444,7 @@ def _tokens_oracle() -> str:
     return f"""
 SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
   CAST(sum(len({toks})) AS BIGINT) AS words,
-  CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT) AS tokens,
+  CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS}]'))) AS BIGINT) AS tokens,
   CAST(sum(length(text)) AS BIGINT) AS chars
 FROM documents GROUP BY lang
 """
@@ -556,15 +557,7 @@ def _pipeline_oracle() -> str:
         for lang in sorted(score)
     )
     wtoks = words_sql("text")
-    quality = (
-        "round(0.25 * (CASE WHEN length(text) >= 50 AND length(text) <= 10000 THEN 1.0 ELSE 0.0 END) "
-        f"+ 0.25 * (CASE WHEN (list_sum(list_transform({wtoks}, w -> length(w))) / greatest(len({wtoks}), 1)) >= 2.0 "
-        f"AND (list_sum(list_transform({wtoks}, w -> length(w))) / greatest(len({wtoks}), 1)) <= 12.0 "
-        "THEN 1.0 ELSE 0.0 END) "
-        "+ 0.25 * (1.0 - len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) / greatest(length(text), 1)) "
-        f"+ 0.25 * least(1.0, 10.0 * (len(list_filter({wtoks}, w -> lower(w) IN ('the','a','of','and'))) "
-        f"/ greatest(len({wtoks}), 1))), 6)"
-    )
+    quality = quality_expr_sql()
     return f"""
 WITH dd AS (SELECT text, min(doc_id) AS doc_id FROM documents GROUP BY text),
 scored AS (
@@ -1278,9 +1271,9 @@ def _dedup_fuzzy(spark: SparkSession, sf: str) -> DataFrame:
     return dedup.fuzzy_name_pairs(T(spark, sf, "part"), "p_name", max_dist=3)
 
 
-_FUZZY_SQL = """
+_FUZZY_SQL = f"""
 WITH names AS (SELECT DISTINCT p_name AS name FROM part),
-blocked AS (SELECT name, regexp_split_to_array(name, '\\s+')[1] AS blk FROM names)
+blocked AS (SELECT name, regexp_split_to_array(name, '[{WS}]+')[1] AS blk FROM names)
 SELECT a.name AS name_a, b.name AS name_b,
        CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
 FROM blocked a JOIN blocked b ON a.blk = b.blk AND a.name < b.name

@@ -8,9 +8,11 @@ from the source table — proving the sink lost/changed nothing.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
 from hadoop_0_20_2_ljx_spark.operators import sinks
@@ -206,6 +208,190 @@ SELECT CAST(count(*) AS BIGINT) AS n_files,
        CAST(sum(length(text)) AS BIGINT) AS total_chars,
        TRUE AS lookup_hit
 FROM documents
+"""
+
+
+# --- Q-sink-13..15: SequenceFile / MapFile / BloomMapFile containers --------
+_KV_SQL = "lpad(CAST(c_custkey AS VARCHAR), 12, '0') AS k, coalesce(c_name, '') AS v"
+
+
+def _customer_kv(spark: SparkSession, sf: str) -> DataFrame:
+    """customer as Text key/value pairs: the key zero-padded so memcmp
+    order is numeric order (the sorted-container contract), the value
+    NULL-free because a SequenceFile fixes its value class per file."""
+    return T(spark, sf, "customer").select(
+        F.lpad(F.col("c_custkey").cast("string"), 12, "0").alias("k"),
+        F.coalesce("c_name", F.lit("")).alias("v"),
+    )
+
+
+def _fresh(name: str) -> str:
+    # the Hadoop committer refuses an existing output dir, and a replay
+    # calls each query more than once per process
+    path = _tmp(name)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def _kv_hashes(key: str | None, value: str | None) -> dict[str, Column]:
+    def h(c: str | None) -> Column:
+        if c is None:
+            return F.lit(None).cast("long")
+        return F.expr(md5_int_sql(c, 8)) % 1000003
+
+    return {"n": F.lit(1), "key_hash_sum": h(key), "value_hash_sum": h(value)}
+
+
+def _sorted_parts(df: DataFrame, key: str, sums: dict[str, Column]) -> DataFrame:
+    """One row: each of `sums` summed over `df`, and `ordered` — every
+    input partition (one per part-file split, rows in file order) holds
+    strictly ascending keys and the partitions' key ranges are disjoint,
+    so in range order the parts concatenate into one strictly sorted
+    sequence. Both steps are partition-local or over one row per part."""
+    rows = df.select(
+        key,
+        *[c.alias(n) for n, c in sums.items()],
+        F.spark_partition_id().alias("_part"),
+        F.monotonically_increasing_id().alias("_pos"),
+    )
+    prev = F.lag(key).over(Window.partitionBy("_part").orderBy("_pos"))
+    parts = rows.withColumn("_prev", prev).groupBy("_part").agg(
+        F.min(key).alias("_lo"),
+        F.max(key).alias("_hi"),
+        F.bool_and(F.col("_prev").isNull() | (F.col("_prev") < F.col(key))).alias("_asc"),
+        *[F.sum(n).alias(n) for n in sums],
+    )
+    prev_hi = F.lag("_hi").over(Window.orderBy("_lo"))
+    return parts.withColumn("_prev_hi", prev_hi).agg(
+        *[F.sum(n).cast("long").alias(n) for n in sums],
+        F.bool_and(
+            F.col("_asc") & (F.col("_prev_hi").isNull() | (F.col("_prev_hi") < F.col("_lo")))
+        ).alias("ordered"),
+        F.min("_lo").alias("_lo"),
+        F.max("_hi").alias("_hi"),
+    )
+
+
+def _sink_seqfile_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
+    """SequenceFile write, Sorter merge and re-read (io/SequenceFile.java
+    Writer:779, Sorter:2211, Reader:1353): two halves of customer are
+    written as SequenceFiles, one plain and one block-compressed with the
+    reference's DefaultCodec (the reader dispatches on the header's codec
+    class), merge-sorted into one range-partitioned output, and read
+    back. Proven lossless by hashes the oracle recomputes from parquet,
+    and globally ordered (every part sorted, part key ranges disjoint)."""
+    from hadoop_0_20_2_ljx_spark.sources import sequencefile
+
+    src = _customer_kv(spark, sf)
+    base = _fresh("q_sink_seqfile")
+    even = F.col("k").cast("long") % 2 == 0
+    plain, packed, out = f"{base}/plain", f"{base}/zlib", f"{base}/sorted"
+    sequencefile.write_sequence_file(src.where(even).repartition(2, "k"), plain, "k", "v")
+    sequencefile.write_sequence_file(
+        src.where(~even).repartition(2, "k"), packed, "k", "v", codec="default"
+    )
+    sequencefile.sort_sequence_file(spark, [plain, packed], out)
+    back = sequencefile.read_sequence_file(spark, out, "k", "v")
+    return _sorted_parts(back, "k", _kv_hashes("k", "v")).drop("_lo", "_hi")
+
+
+_KV_HASHES_SQL = f"""CAST(count(*) AS BIGINT) AS n,
+       CAST(sum({h32_sql("k")} % 1000003) AS BIGINT) AS key_hash_sum,
+       CAST(sum({h32_sql("v")} % 1000003) AS BIGINT) AS value_hash_sum"""
+
+_SEQFILE_SQL = f"""
+SELECT {_KV_HASHES_SQL}, TRUE AS ordered
+FROM (SELECT {_KV_SQL} FROM customer)
+"""
+
+
+def _sink_mapfile_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
+    """The three MapFile layouts, written and read back (io/MapFile.java:92,
+    SetFile.java:27, ArrayFile.java:29), one row each: a MapFile of
+    customer's key/value pairs (data globally key-sorted); a SetFile of
+    its market segments (sorted and distinct: strictly ascending); an
+    ArrayFile of its names, whose keys are the dense positions 0..n-1.
+    Content proven by hashes the oracle recomputes from parquet."""
+    from hadoop_0_20_2_ljx_spark.sources import sequencefile
+
+    cust = T(spark, sf, "customer")
+    src = _customer_kv(spark, sf)
+    base = _fresh("q_sink_mapfile")
+    mpath, spath, apath = f"{base}/map", f"{base}/set", f"{base}/array"
+    sequencefile.write_map_file(src.repartition(4, "k"), mpath, "k", "v")
+    segments = cust.select(F.coalesce("c_mktsegment", F.lit("")).alias("seg"))
+    sequencefile.write_set_file(segments.repartition(4, "seg"), spath, "seg")
+    sequencefile.write_array_file(src.orderBy("k"), apath, "v")
+
+    def row(layout: str, summary: DataFrame, ok: Column) -> DataFrame:
+        return summary.select(
+            F.lit(layout).alias("layout"),
+            "n", "key_hash_sum", "value_hash_sum",
+            (F.col("ordered") & ok).alias("ok"),
+        )
+
+    mapped = _sorted_parts(sequencefile.read_map_file(spark, mpath, "k", "v"), "k",
+                           _kv_hashes("k", "v"))
+    members = _sorted_parts(sequencefile.read_set_file(spark, spath, "seg"), "seg",
+                            _kv_hashes("seg", None))
+    # strictly ascending positions from 0 to n-1 are exactly 0..n-1
+    positions = _sorted_parts(sequencefile.read_array_file(spark, apath, "v", "idx"), "idx",
+                              _kv_hashes(None, "v"))
+    dense = (F.col("_lo") == 0) & (F.col("_hi") == F.col("n") - 1)
+    return (
+        row("MapFile", mapped, F.lit(True))
+        .unionByName(row("SetFile", members, F.lit(True)))
+        .unionByName(row("ArrayFile", positions, dense))
+    )
+
+
+_MAPFILE_SQL = f"""
+SELECT 'MapFile' AS layout, {_KV_HASHES_SQL}, TRUE AS ok
+FROM (SELECT {_KV_SQL} FROM customer)
+UNION ALL
+SELECT 'SetFile', CAST(count(*) AS BIGINT),
+       CAST(sum({h32_sql("seg")} % 1000003) AS BIGINT), CAST(NULL AS BIGINT), TRUE
+FROM (SELECT DISTINCT coalesce(c_mktsegment, '') AS seg FROM customer)
+UNION ALL
+SELECT 'ArrayFile', CAST(count(*) AS BIGINT), CAST(NULL AS BIGINT),
+       CAST(sum({h32_sql("coalesce(c_name, '')")} % 1000003) AS BIGINT), TRUE
+FROM customer
+"""
+
+
+def _sink_bloommap_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
+    """BloomMapFile write, re-read and key fast-reject (io/BloomMapFile.java:
+    47, Reader.get:218 probablyHasKey before the index seek): customer's
+    pairs go to a MapFile dir with its reference-format DynamicBloomFilter
+    sidecar (1024 keys per matrix row, so the matrix grows past one row
+    from sf0.01 up); the written keys plus as many absent keys are
+    probed through the bloom, and the survivors join back to the stored
+    pairs. The join drops the false positives, so n and the hashes are
+    exact; the false-positive share of the absent probes stays under 10%."""
+    from hadoop_0_20_2_ljx_spark.sources import bloomfile, sequencefile
+
+    src = _customer_kv(spark, sf)
+    path = _fresh("q_sink_bloommap")
+    bloomfile.write_bloom_map_file(src.repartition(4, "k"), path, "k", "v", num_keys=1024)
+    stored = sequencefile.read_map_file(spark, path, "k", "v")
+    probe = stored.select("k").unionByName(
+        stored.select(F.concat(F.lit("absent-"), F.col("k")).alias("k"))
+    )
+    kept = bloomfile.bloom_prefilter_keys(probe, path, "k")
+    hits = kept.join(stored.withColumn("hit", F.lit(1)), "k", "left")
+    hashes = _kv_hashes("k", "v")
+    n = F.count("hit")
+    return hits.agg(
+        n.cast("long").alias("n"),
+        F.sum(F.when(F.col("hit") == 1, hashes["key_hash_sum"])).cast("long").alias("key_hash_sum"),
+        F.sum(hashes["value_hash_sum"]).cast("long").alias("value_hash_sum"),
+        ((F.count(F.lit(1)) - n) * 10 < F.greatest(n, F.lit(1))).alias("fp_under_10pct"),
+    )
+
+
+_BLOOMMAP_SQL = f"""
+SELECT {_KV_HASHES_SQL}, TRUE AS fp_under_10pct
+FROM (SELECT {_KV_SQL} FROM customer)
 """
 
 
@@ -487,6 +673,26 @@ QUERIES: dict[str, QueryDef] = {
         _ORC_SQL,
         "Q-sink-9 (engine extra) ORC(zlib) columnar round trip — the other "
         "columnar migration target off SequenceFile",
+    ),
+    "q_sink_seqfile_roundtrip": QueryDef(
+        _sink_seqfile_roundtrip,
+        _SEQFILE_SQL,
+        "Q-sink-13 SequenceFile write (plain + DefaultCodec block-compressed), "
+        "Sorter merge, re-read: lossless and globally ordered "
+        "(io/SequenceFile.java:779,1353,2211)",
+    ),
+    "q_sink_mapfile_roundtrip": QueryDef(
+        _sink_mapfile_roundtrip,
+        _MAPFILE_SQL,
+        "Q-sink-14 MapFile / SetFile / ArrayFile layouts round trip: sorted "
+        "data, sorted-distinct set, dense 0..n-1 positions "
+        "(io/MapFile.java:92, SetFile.java:27, ArrayFile.java:29)",
+    ),
+    "q_sink_bloommap_roundtrip": QueryDef(
+        _sink_bloommap_roundtrip,
+        _BLOOMMAP_SQL,
+        "Q-sink-15 BloomMapFile: MapFile + DynamicBloomFilter key sidecar, "
+        "probe fast-reject then exact join-back (io/BloomMapFile.java:47,218)",
     ),
     "q_sink_tfile_roundtrip": QueryDef(
         _sink_tfile_roundtrip,

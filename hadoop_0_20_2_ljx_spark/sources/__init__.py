@@ -1,28 +1,5 @@
 """Source connectors: container-file compat + partitioned external reads.
 
 Row-transform scan helpers live in operators/scans.py; this package holds
-the connectors with a real I/O format behind them.
+the connectors with a real I/O format behind them, one module each.
 """
-
-from hadoop_0_20_2_ljx_spark.sources.jdbc import read_jdbc_partitioned, write_jdbc_batched
-from hadoop_0_20_2_ljx_spark.sources.sequencefile import (
-    read_array_file,
-    read_sequence_file,
-    read_set_file,
-    sort_sequence_file,
-    write_array_file,
-    write_sequence_file,
-    write_set_file,
-)
-
-__all__ = [
-    "read_array_file",
-    "read_jdbc_partitioned",
-    "read_sequence_file",
-    "read_set_file",
-    "sort_sequence_file",
-    "write_array_file",
-    "write_jdbc_batched",
-    "write_sequence_file",
-    "write_set_file",
-]

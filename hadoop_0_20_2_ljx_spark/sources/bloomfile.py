@@ -178,11 +178,6 @@ def parse_dynamic_bloom(data: bytes):
     return rows, nb_hash, vector_size, nr, current_nb
 
 
-def membership_test(rows: list[np.ndarray], key: bytes, nb_hash: int, vector_size: int) -> bool:
-    pos = bloom_positions(key, nb_hash, vector_size)
-    return any(all(r[p] for p in pos) for r in rows)
-
-
 def write_bloom_map_file(
     df: DataFrame,
     path: str,

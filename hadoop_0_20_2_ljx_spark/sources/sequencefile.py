@@ -168,7 +168,6 @@ def sort_sequence_file(
     spark: SparkSession,
     in_paths: str | list[str],
     out_path: str,
-    reverse: bool = False,
 ) -> None:
     """SequenceFile.Sorter parity: sort (or merge) K/V files by key.
 
@@ -188,9 +187,6 @@ def sort_sequence_file(
         part = read_sequence_file(spark, p)
         df = part if df is None else df.unionByName(part)
     key = df.columns[0]
-    from pyspark.sql import functions as F
-
-    order = F.col(key).desc() if reverse else F.col(key).asc()
-    df.repartitionByRange(df.rdd.getNumPartitions(), order).sortWithinPartitions(
-        order
+    df.repartitionByRange(df.rdd.getNumPartitions(), key).sortWithinPartitions(
+        key
     ).rdd.map(tuple).saveAsSequenceFile(out_path)

@@ -58,43 +58,3 @@ def running_user_stats_stream(events_stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def dedup_first_seen_stream(events_stream: DataFrame, key_col: str = "event_id") -> DataFrame:
-    """Streaming exactly-once dedup: emit each key's FIRST occurrence only,
-    holding a seen-marker per key in the state store.
-
-    This is the streaming form of the reference's emit-key-once reduce
-    dedup (mapred/lib/aggregate/UniqValueCount.java:30). With processing-
-    time timeout the marker expires for idle keys, bounding state — the
-    trade the reference's maxNumItems cap makes (UniqValueCount.java:36).
-    """
-
-    def first_only(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # Timeout invocation (no data for this key): evict the marker so
-        # idle keys actually leave the state store. Re-arming here would
-        # keep every key's marker alive forever.
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            state.setTimeoutDuration(3600 * 1000)
-            return
-        state.update((True,))
-        state.setTimeoutDuration(3600 * 1000)
-        for pdf in pdfs:
-            if len(pdf):
-                yield pdf.iloc[:1][["event_id", "user_id", "event_type"]]
-                return
-
-    return events_stream.groupBy(key_col).applyInPandasWithState(
-        first_only,
-        outputStructType="event_id long, user_id long, event_type string",
-        stateStructType="seen boolean",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )

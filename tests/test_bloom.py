@@ -1,16 +1,12 @@
-"""Bloom membership: no false negatives, sane FP rate, parquet blooms."""
+"""Bloom membership: no false negatives, sane FP rate, JVM-only probe."""
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark import catalog
 from hadoop_0_20_2_ljx_spark.functions import bloom
 from tests.conftest import SF_SMOKE
-
-TMP = "/root/repo/.tmp/bloompq"
 
 
 def test_bloom_prefilter_superset_of_semi_join(spark):
@@ -43,95 +39,9 @@ def test_bloom_exactness_after_join(spark):
     assert tuple(plain.collect()[0]) == tuple(pre.collect()[0])
 
 
-def test_parquet_bloom_roundtrip(spark):
-    shutil.rmtree(TMP, ignore_errors=True)
-    orders = catalog.load(spark, SF_SMOKE, "orders")
-    bloom.write_parquet_with_bloom(orders, TMP, ["o_orderkey"], expected_ndv=10_000)
-    back = spark.read.parquet(TMP)
-    key = orders.select("o_orderkey").first()[0]
-    assert back.filter(F.col("o_orderkey") == key).count() >= 1
-    assert back.count() == orders.count()
-    shutil.rmtree(TMP, ignore_errors=True)
-
-
 def test_optimal_params_shape():
     m, k = bloom.optimal_params(10_000, 0.01)
     assert m > 10_000 and 5 <= k <= 10
-
-
-# --- DynamicBloomFilter (util/bloom/DynamicBloomFilter.java:88) --------------
-
-
-def test_dynamic_bloom_grows_rows_and_has_no_false_negatives(spark):
-    """nr=1000, three 1000-key batches -> 3 matrix rows; every inserted key
-    must be reported (no false negatives across rows)."""
-    dbf = bloom.DynamicBloom(nr=1000, fpp=0.01)
-    a = spark.range(0, 1000).withColumnRenamed("id", "k")
-    b = spark.range(1000, 2000).withColumnRenamed("id", "k")
-    c = spark.range(2000, 3000).withColumnRenamed("id", "k")
-    dbf.add_frame(a, "k")
-    assert dbf.num_rows == 1
-    dbf.add_frame(b, "k").add_frame(c, "k")
-    assert dbf.num_rows == 3  # grew one standard bloom per nr keys
-    probe = spark.range(0, 6000).withColumnRenamed("id", "k")
-    kept = dbf.prefilter(probe, "k")
-    inserted = kept.filter(F.col("k") < 3000).count()
-    assert inserted == 3000  # zero false negatives
-    extra = kept.count() - inserted
-    assert extra <= 3000 * 0.2  # FP bounded (3 rows x ~1% each, margin)
-
-
-def test_dynamic_bloom_oversized_batch_hash_buckets(spark):
-    dbf = bloom.DynamicBloom(nr=500, fpp=0.01)
-    dbf.add_frame(spark.range(0, 2300).withColumnRenamed("id", "k"), "k")
-    assert dbf.num_rows == 5  # ceil(2300/500)
-    kept = dbf.prefilter(spark.range(0, 2300).withColumnRenamed("id", "k"), "k")
-    assert kept.count() == 2300
-
-
-def test_dynamic_bloom_small_batches_fill_active_row(spark):
-    dbf = bloom.DynamicBloom(nr=1000, fpp=0.01)
-    for lo in range(0, 900, 300):
-        dbf.add_frame(
-            spark.range(lo, lo + 300).withColumnRenamed("id", "k"), "k"
-        )
-    assert dbf.num_rows == 1  # 3x300 keys share one row (capacity 1000)
-    assert dbf.prefilter(
-        spark.range(0, 900).withColumnRenamed("id", "k"), "k"
-    ).count() == 900
-
-
-# --- CountingBloomFilter (util/bloom/CountingBloomFilter.java:48) ------------
-
-
-def test_counting_bloom_delete_restores_absence(spark):
-    cbf = bloom.CountingBloom(expected_items=2000, fpp=0.01)
-    keep = spark.range(0, 1000).withColumnRenamed("id", "k")
-    gone = spark.range(1000, 2000).withColumnRenamed("id", "k")
-    cbf.add_frame(keep, "k").add_frame(gone, "k")
-    probe = spark.range(0, 2000).withColumnRenamed("id", "k")
-    assert cbf.prefilter(probe, "k").count() == 2000
-    cbf.remove_frame(gone, "k")
-    kept = cbf.prefilter(probe, "k")
-    assert kept.filter(F.col("k") < 1000).count() == 1000  # no false negative
-    # removed keys mostly gone (FP-rate leftovers only)
-    assert kept.filter(F.col("k") >= 1000).count() <= 1000 * 0.1
-
-
-def test_counting_bloom_saturation_never_decrements(spark):
-    """A counter pinned at 15 must survive deletes (no false negatives for
-    other keys sharing the position)."""
-    import numpy as np
-
-    cbf = bloom.CountingBloom(expected_items=10, fpp=0.5)  # tiny m -> collisions
-    one = spark.range(0, 1).withColumnRenamed("id", "k")
-    for _ in range(20):  # 20 adds of the same key -> counters pinned at 15
-        cbf.add_frame(one, "k")
-    assert cbf.counters.max() == 15
-    saturated = cbf.counters.copy()
-    cbf.remove_frame(one, "k")
-    assert np.array_equal(cbf.counters, saturated)  # sticky at 15
-    assert cbf.prefilter(one, "k").count() == 1
 
 
 def test_jvm_probe_bit_parity_and_python_free_plan(spark):
@@ -160,13 +70,9 @@ def test_jvm_probe_bit_parity_and_python_free_plan(spark):
 
     small = spark.range(0, 300).select((F.col("id") * 3).alias("k"))
     big = spark.range(0, 3000).select(F.col("id").alias("k"))
-    for filtered in (
-        bloom.bloom_prefilter(big, small, "k"),
-        bloom.DynamicBloom(nr=100).add_frame(small, "k").prefilter(big, "k"),
-        bloom.CountingBloom(expected_items=300).add_frame(small, "k").prefilter(big, "k"),
-    ):
-        plan = filtered._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan and "ArrowEval" not in plan
+    filtered = bloom.bloom_prefilter(big, small, "k")
+    plan = filtered._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "ArrowEval" not in plan
 
 
 def test_bitmap_literal_is_one_expression_node(spark):
@@ -189,8 +95,8 @@ def test_null_probe_keys_are_dropped_by_all_prefilters(spark):
     """r14 (r13 ADVICE item 1): xxhash64 is non-nullable, so without the
     explicit isNotNull conjunct a NULL probe key hashes to fixed
     positions and passes whenever the build side contained any NULL key.
-    All three prefilter entry points must drop NULL probe keys — the
-    join-prefilter semantics the md5-era hash gave for free."""
+    The prefilter must drop NULL probe keys — the join-prefilter
+    semantics the md5-era hash gave for free."""
     build = spark.createDataFrame(
         [(1,), (2,), (None,)], "k long"
     )  # NULL on the build side sets the seed positions
@@ -199,13 +105,3 @@ def test_null_probe_keys_are_dropped_by_all_prefilters(spark):
     filtered = bloom.bloom_prefilter(probe, build, "k")
     assert filtered.filter(F.col("k").isNull()).count() == 0
     assert filtered.filter(F.col("k") == 1).count() == 1  # no false negatives
-
-    dyn = bloom.DynamicBloom(nr=10).add_frame(build, "k")
-    dfiltered = dyn.prefilter(probe, "k")
-    assert dfiltered.filter(F.col("k").isNull()).count() == 0
-    assert dfiltered.filter(F.col("k") == 1).count() == 1
-
-    cb = bloom.CountingBloom(expected_items=10).add_frame(build, "k")
-    cfiltered = cb.prefilter(probe, "k")
-    assert cfiltered.filter(F.col("k").isNull()).count() == 0
-    assert cfiltered.filter(F.col("k") == 1).count() == 1

@@ -12,7 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.operators.sorts import key_field_sort_spec
+from hadoop_0_20_2_ljx_spark.operators.sorts import key_field_order_columns
 
 SEP = "\t"
 _SPEC = re.compile(
@@ -77,7 +77,7 @@ def _rand_lines(n: int, seed: int) -> list[str]:
 def test_keyfield_specs_match_python_model(spark, specs):
     lines = _rand_lines(300, seed=hash(tuple(specs)) % 10_000)
     df = spark.createDataFrame([(l,) for l in lines], "line string")
-    got = [r["line"] for r in key_field_sort_spec(df, "line", specs, SEP).collect()]
+    got = [r["line"] for r in df.orderBy(*key_field_order_columns(F.col("line"), specs, SEP)).collect()]
 
     def py_key(line: str):
         key = []

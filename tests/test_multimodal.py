@@ -1,8 +1,11 @@
-"""Multimodal plumbing: schema contract, stubbed decode behavior, 1->n
-frame sampling shape."""
+"""Multimodal plumbing: schema contract, stubbed decode behavior, the
+numpy/stdlib decoders."""
 
 from __future__ import annotations
 
+import struct
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
@@ -10,6 +13,18 @@ from pyspark.sql.utils import PythonException
 from hadoop_0_20_2_ljx_spark import catalog
 from hadoop_0_20_2_ljx_spark.extensions import multimodal
 from tests.conftest import SF_SMOKE
+
+
+def synth_bmp(w: int, h: int, seed: int = 0) -> bytes:
+    """Uncompressed 24-bit BMP with deterministic pixels."""
+    stride = (w * 3 + 3) & ~3
+    img = ((np.arange(h * w * 3, dtype=np.int64) * 17 + seed) % 256).astype(np.uint8)
+    padded = np.zeros((h, stride), dtype=np.uint8)
+    padded[:, : w * 3] = img.reshape(h, w * 3)
+    pixel_bytes = padded[::-1].tobytes()  # bottom-up storage
+    header = struct.pack("<2sIHHI", b"BM", 54 + len(pixel_bytes), 0, 0, 54)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixel_bytes), 2835, 2835, 0, 0)
+    return header + dib + pixel_bytes
 
 
 def _media(spark):
@@ -46,42 +61,8 @@ def test_fake_decode_features(spark):
         assert feats[doc_id].byte_sum64 == sum(b[:64])
 
 
-def test_frame_sample_explodes_rows(spark):
-    m = _media(spark).limit(3)
-    frames = multimodal.frame_sample(m, every_n_bytes=16).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r.doc_id, []).append(r.frame_off)
-    sizes = {r.doc_id: r.meta.n_bytes for r in m.collect()}
-    for doc_id, offs in by_doc.items():
-        expected = list(range(0, sizes[doc_id], 16))
-        assert sorted(offs) == expected
-
-
-def test_resize_payload_contract(spark):
-    import hashlib
-
-    m = _media(spark).limit(5)
-    out = multimodal.resize_payload(m, target_w=8, target_h=4, fake=True).collect()
-    assert len(out) == 5
-    for r in out:
-        assert len(r.payload) == 8 * 4
-        assert (r.width, r.height) == (8, 4)
-        assert r.checksum == hashlib.md5(bytes(r.payload)).hexdigest()
-
-
-def test_resize_real_decode_raises(spark):
-    import pytest as _pytest
-
-    m = _media(spark).limit(1)
-    with _pytest.raises(Exception, match="NotImplementedError|decode"):
-        multimodal.resize_payload(m, fake=False).collect()
-
-
 # --- real decoders (numpy/stdlib tier) ---------------------------------------
 def test_decode_pnm_known_pixels():
-    import numpy as np
-
     payload = b"P6\n# comment\n2 1\n255\n" + bytes([10, 20, 30, 40, 50, 60])
     arr = multimodal._decode_pnm(payload)
     assert arr.shape == (1, 2, 3)
@@ -92,12 +73,10 @@ def test_decode_pnm_known_pixels():
 
 
 def test_decode_bmp_known_pixels():
-    import struct as _struct
-
     # 1x1 24-bit BMP, pixel stored B,G,R = 1,2,3 -> RGB (3,2,1)
     pixel = bytes([1, 2, 3, 0])  # stride padded to 4
-    header = _struct.pack("<2sIHHI", b"BM", 54 + len(pixel), 0, 0, 54)
-    dib = _struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, len(pixel), 0, 0, 0, 0)
+    header = struct.pack("<2sIHHI", b"BM", 54 + len(pixel), 0, 0, 54)
+    dib = struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, len(pixel), 0, 0, 0, 0)
     arr = multimodal._decode_bmp(header + dib + pixel)
     assert arr.shape == (1, 1, 3)
     assert arr[0, 0].tolist() == [3, 2, 1]
@@ -106,7 +85,7 @@ def test_decode_bmp_known_pixels():
 def test_synth_roundtrips():
     arr = multimodal._decode_pnm(multimodal.synth_ppm(8, 4, seed=3))
     assert arr.shape == (4, 8, 3)
-    img = multimodal._decode_bmp(multimodal.synth_bmp(5, 3, seed=1))
+    img = multimodal._decode_bmp(synth_bmp(5, 3, seed=1))
     assert img.shape == (3, 5, 3)
     samples, rate = multimodal._decode_wav(multimodal.synth_wav(100, rate=8000))
     assert samples.shape == (100, 1)
@@ -116,7 +95,7 @@ def test_synth_roundtrips():
 def test_decode_media_mixed_formats(spark):
     rows = [
         (1, "image", bytearray(multimodal.synth_ppm(6, 2))),
-        (2, "image", bytearray(multimodal.synth_bmp(4, 4))),
+        (2, "image", bytearray(synth_bmp(4, 4))),
         (3, "audio", bytearray(multimodal.synth_wav(50, rate=16000))),
         (4, "image", bytearray(b"\x89PNG\r\n\x1a\nnotreally")),
         (5, "video", bytearray(b"random junk payload")),
@@ -129,16 +108,3 @@ def test_decode_media_mixed_formats(spark):
     assert got[4].kind == "unsupported" and got[4].width is None
     assert got[5].kind == "unsupported"
     assert got[1].mean is not None
-
-
-def test_resize_media_real(spark):
-    rows = [
-        (1, "image", bytearray(multimodal.synth_bmp(16, 8))),
-        (2, "video", bytearray(b"junk")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media_type string, payload binary")
-    got = {r.doc_id: r for r in multimodal.resize_media(df, 4, 4).collect()}
-    assert got[1].resized and (got[1].width, got[1].height) == (4, 4)
-    arr = multimodal._decode_pnm(bytes(got[1].payload))
-    assert arr.shape == (4, 4, 3)
-    assert got[2].resized is False and bytes(got[2].payload) == b"junk"

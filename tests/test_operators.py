@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.operators.generators import halton, halton_pi_exact
@@ -13,7 +14,7 @@ from hadoop_0_20_2_ljx_spark.operators.joins import override_join
 from hadoop_0_20_2_ljx_spark.operators.scans import kv_split
 from hadoop_0_20_2_ljx_spark.operators.sorts import secondary_sort_stream
 from hadoop_0_20_2_ljx_spark.operators.transforms import field_selection, parse_field_spec
-from hadoop_0_20_2_ljx_spark.plans.jobcontrol import Job, JobControl, observed
+from hadoop_0_20_2_ljx_spark.plans.jobcontrol import Job, JobControl
 
 
 class TestFieldSpec:
@@ -139,7 +140,10 @@ class TestJobControl:
 
     def test_observed_counters(self, spark):
         df = spark.range(100)
-        df2, obs = observed(df, "counts", F.count("*").alias("n"), F.sum("id").alias("s"))
+        # the reference's Counters as observe() metrics: computed during
+        # the existing action, no extra pass (Task.java:65-79)
+        obs = Observation("counts")
+        df2 = df.observe(obs, F.count("*").alias("n"), F.sum("id").alias("s"))
         df2.write.format("noop").mode("overwrite").save()
         assert obs.get == {"n": 100, "s": 4950}
 

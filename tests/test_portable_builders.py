@@ -11,6 +11,7 @@ normalization, same rows.
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_SMOKE, norm_plan
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -19,6 +20,8 @@ from hadoop_0_20_2_ljx_spark import catalog
 from hadoop_0_20_2_ljx_spark.extensions import audit, textstats
 from hadoop_0_20_2_ljx_spark.functions.portable import (
     cos_sql,
+    double_array_sql,
+    double_sql,
     md5_int_sql,
     sq_dist_sql,
     zip_sum_sql,
@@ -99,6 +102,17 @@ def test_folds_match_column_forms(spark):
         ),
     )
     _same(old, new)
+
+
+@pytest.mark.parametrize("x", [float("nan"), float("inf"), float("-inf")])
+def test_double_literal_rejects_non_finite(x):
+    """A NaN centroid must fail loudly by name, not render `nanD` (which
+    Spark parses as a column reference: UNRESOLVED_COLUMN)."""
+    assert double_sql(-0.5) == "-0.5D"
+    with pytest.raises(ValueError, match="non-finite value .* finite vectors"):
+        double_sql(x)
+    with pytest.raises(ValueError, match="non-finite"):
+        double_array_sql([1.0, x])
 
 
 def test_bucket_fingerprint_default_hash_plan_unchanged(spark):

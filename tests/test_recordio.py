@@ -20,6 +20,11 @@ def records(spark):
     return orders, recordio.pack(orders, ["o_orderkey", "o_orderpriority", "o_totalprice"])
 
 
+def _json_roundtrip(packed, ddl):
+    json = packed.select(F.to_json("record").alias("json"))
+    return json.select(F.from_json("json", ddl).alias("record"))
+
+
 def _assert_same(orders, unpacked):
     a = sorted(map(tuple, orders.collect()))
     b = sorted(map(tuple, unpacked.collect()))
@@ -37,13 +42,15 @@ def test_csv_roundtrip(spark, records):
 
 def test_json_roundtrip(spark, records):
     orders, packed = records
-    back = recordio.unpack(recordio.from_json_records(recordio.to_json_records(packed), DDL))
+    back = recordio.unpack(_json_roundtrip(packed, DDL))
     _assert_same(orders, back)
 
 
 def test_xml_roundtrip(spark, records):
     orders, packed = records
-    back = recordio.unpack(recordio.from_xml_records(recordio.to_xml_records(packed), DDL))
+    opts = {"rowTag": "record"}
+    xml = packed.select(F.to_xml("record", opts).alias("xml"))
+    back = recordio.unpack(xml.select(F.from_xml("xml", DDL, opts).alias("record")))
     _assert_same(orders, back)
 
 
@@ -186,7 +193,7 @@ def test_idl_schema_json_roundtrip(spark):
     df = spark.createDataFrame(rows, schema)
     packed = recordio.pack(df, [f.name for f in schema.fields])
     back = recordio.unpack(
-        recordio.from_json_records(recordio.to_json_records(packed), recordio.ddl(schema))
+        _json_roundtrip(packed, recordio.ddl(schema))
     )
     got = sorted(back.collect(), key=lambda r: r["url"])
     assert [r["url"] for r in got] == ["u1", "u2"]

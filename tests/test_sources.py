@@ -7,7 +7,17 @@ import shutil
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark import catalog
-from hadoop_0_20_2_ljx_spark.sources import read_sequence_file, write_sequence_file
+from hadoop_0_20_2_ljx_spark.sources.sequencefile import (
+    read_array_file,
+    read_map_file,
+    read_sequence_file,
+    read_set_file,
+    sort_sequence_file,
+    write_array_file,
+    write_map_file,
+    write_sequence_file,
+    write_set_file,
+)
 from tests.conftest import SF_SMOKE
 
 TMP = "/root/repo/.tmp/seqfile"
@@ -40,8 +50,6 @@ def test_sequence_file_roundtrip_numeric(spark):
 def test_map_file_directory_roundtrip(spark):
     """MapFile layout: sorted data SequenceFile in a directory; reading
     the directory == reading its data member (io/MapFile.java:92-98)."""
-    from hadoop_0_20_2_ljx_spark.sources.sequencefile import read_map_file, write_map_file
-
     shutil.rmtree(TMP, ignore_errors=True)
     cust = catalog.load(spark, SF_SMOKE, "customer").select(
         F.col("c_name").cast("string"), F.col("c_mktsegment").cast("string")
@@ -58,8 +66,6 @@ def test_map_file_directory_roundtrip(spark):
 def test_set_file_roundtrip(spark):
     """SetFile = MapFile with NullWritable values (io/SetFile.java:27):
     the data member is a sorted DISTINCT key sequence."""
-    from hadoop_0_20_2_ljx_spark.sources import read_set_file, write_set_file
-
     shutil.rmtree(TMP, ignore_errors=True)
     cust = catalog.load(spark, SF_SMOKE, "customer").select(
         F.col("c_mktsegment").cast("string")
@@ -78,8 +84,6 @@ def test_set_file_roundtrip(spark):
 def test_array_file_roundtrip(spark):
     """ArrayFile = MapFile keyed by the append counter 0..n-1
     (io/ArrayFile.java:53-56); get(n) is a pushed-down idx filter."""
-    from hadoop_0_20_2_ljx_spark.sources import read_array_file, write_array_file
-
     shutil.rmtree(TMP, ignore_errors=True)
     cust = catalog.load(spark, SF_SMOKE, "customer").orderBy("c_custkey").select(
         F.col("c_name").cast("string")
@@ -100,12 +104,6 @@ def test_sorter_sort_and_merge(spark):
     file; merge two pre-sorted files — output part files are ordered,
     non-overlapping key ranges (part order = global order)."""
     import glob
-
-    from hadoop_0_20_2_ljx_spark.sources import (
-        read_sequence_file,
-        sort_sequence_file,
-        write_sequence_file,
-    )
 
     for d in (f"{TMP}_in_a", f"{TMP}_in_b", f"{TMP}_out"):
         shutil.rmtree(d, ignore_errors=True)

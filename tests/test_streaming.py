@@ -106,19 +106,6 @@ def test_stateful_running_stats_matches_batch(spark):
     assert sorted(map(tuple, batch.collect())) == sorted(map(tuple, final.collect()))
 
 
-def test_stateful_dedup_first_seen(spark):
-    """Streaming first-seen dedup emits exactly one row per distinct key."""
-    from hadoop_0_20_2_ljx_spark.streaming.stateful import dedup_first_seen_stream
-
-    ev = _stage_events(spark)
-    # Duplicate the whole input once so every event_id occurs >= 2 times.
-    spark.read.parquet(TMP).write.mode("append").parquet(TMP)
-    streamed = _run_stream(spark, dedup_first_seen_stream, "dedup_stream", mode="update")
-    n_distinct = ev.select("event_id").distinct().count()
-    assert streamed.count() == n_distinct
-    assert streamed.select("event_id").distinct().count() == n_distinct
-
-
 def test_stream_cleanup():
     shutil.rmtree(TMP, ignore_errors=True)
     assert not os.path.exists(TMP)

@@ -30,6 +30,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from hadoop_0_20_2_ljx_spark.extensions import textstats
+from hadoop_0_20_2_ljx_spark.queries.base import words_sql
 
 SALTS = [
     "café",          # precomposed accent
@@ -72,6 +73,16 @@ def test_vtab_is_the_named_divergence(spark):
     # Spark (Java \s): vertical tab splits -> 4 tokens; DuckDB (RE2): kept
     assert spk == ["alpha", "x", "y", "omega"]
     assert dk == ["alpha", "x\x0by", "omega"]
+
+
+def test_oracle_whitespace_class_closes_the_vtab_gap(spark):
+    """The oracles tokenize through queries/base.WS, which names \\x0B:
+    they split where the engine's Java \\s does, vertical tab included."""
+    text = "alpha " + " ".join(SALTS) + f" {VTAB_TOKEN} omega"
+    with duckdb.connect() as con:
+        dk = con.execute(f"SELECT {words_sql('lower(?)')}", [text]).fetchone()[0]
+    assert dk == _spark_tokens(spark, text)
+    assert "x" in dk and "y" in dk
 
 
 def test_trim_divergence_is_named(spark):
