@@ -77,7 +77,8 @@ def _rand_lines(n: int, seed: int) -> list[str]:
 def test_keyfield_specs_match_python_model(spark, specs):
     lines = _rand_lines(300, seed=hash(tuple(specs)) % 10_000)
     df = spark.createDataFrame([(l,) for l in lines], "line string")
-    got = [r["line"] for r in df.orderBy(*key_field_order_columns(F.col("line"), specs, SEP)).collect()]
+    ordered = df.orderBy(*key_field_order_columns(F.col("line"), specs, SEP))
+    got = [r["line"] for r in ordered.collect()]
 
     def py_key(line: str):
         key = []
