@@ -19,8 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_0_20_2_ljx_spark.functions.portable import md5_int_sql
-
 
 def tera_gen(spark: SparkSession, n: int, num_partitions: int | None = None) -> DataFrame:
     """TeraGen-shaped rows: (key:10 chars, rowid:10 digits, filler:78).

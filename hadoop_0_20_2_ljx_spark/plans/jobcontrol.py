@@ -21,8 +21,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
-
 
 @dataclass
 class Job:
